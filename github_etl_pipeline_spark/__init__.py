@@ -27,7 +27,6 @@ from github_etl_pipeline_spark.session import get_spark
 from github_etl_pipeline_spark.sources.pol import (
     read_pol_lines,
     parse_pol_lines,
-    pol_file_inventory,
 )
 from github_etl_pipeline_spark.sources.lookup import load_game_lookup, prepare_dim
 from github_etl_pipeline_spark.operators.kpis import pool_kpis
@@ -38,7 +37,6 @@ __all__ = [
     "get_spark",
     "read_pol_lines",
     "parse_pol_lines",
-    "pol_file_inventory",
     "load_game_lookup",
     "prepare_dim",
     "pool_kpis",

@@ -1,4 +1,4 @@
 from github_etl_pipeline_spark.functions.keys import normalize_pool_id
-from github_etl_pipeline_spark.functions.rounding import bround2, bround4
+from github_etl_pipeline_spark.functions.rounding import rounder
 
-__all__ = ["normalize_pool_id", "bround2", "bround4"]
+__all__ = ["normalize_pool_id", "rounder"]

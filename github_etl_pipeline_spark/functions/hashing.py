@@ -41,11 +41,6 @@ def portable_hash32(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
-def portable_hash32_sql(expr: str) -> str:
-    """DuckDB SQL producing the same value as ``portable_hash32``."""
-    return f"CAST(('0x' || substr(md5({expr}), 1, 8)) AS BIGINT)"
-
-
 def portable_hash48(col: Column) -> Column:
     """48-bit variant (for SimHash bit sampling)."""
     return F.conv(F.substring(F.md5(col), 1, 12), 16, 10).cast("long")
@@ -58,18 +53,9 @@ def portable_hash52(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 13), 16, 10).cast("long")
 
 
-def portable_hash48_sql(expr: str) -> str:
-    return f"CAST(('0x' || substr(md5({expr}), 1, 12)) AS BIGINT)"
-
-
 def minhash_perm(h: Column, i: int, num_hashes: int = NUM_MINHASHES) -> Column:
     a, b = (MINHASH_A, MINHASH_B) if num_hashes == NUM_MINHASHES else minhash_coeffs(num_hashes)
     return (F.lit(a[i]) * h + F.lit(b[i])) % F.lit(MINHASH_P)
-
-
-def minhash_perm_sql(expr: str, i: int, num_hashes: int = NUM_MINHASHES) -> str:
-    a, b = (MINHASH_A, MINHASH_B) if num_hashes == NUM_MINHASHES else minhash_coeffs(num_hashes)
-    return f"(({a[i]} * {expr} + {b[i]}) % {MINHASH_P})"
 
 
 def split_bucket_hex(id_col: Column | str, seed: str) -> Column:

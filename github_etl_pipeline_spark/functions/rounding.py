@@ -1,4 +1,4 @@
-"""Rounding helpers (reference F3).
+"""Rounding-mode choice (reference F3).
 
 The reference rounds with numpy/pandas/python ``round`` — banker's
 rounding (half-to-even). Spark's ``F.round`` is HALF_UP; ``F.bround`` is
@@ -13,13 +13,14 @@ engines round identically.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def bround2(col: Column) -> Column:
-    return F.bround(col, 2)
-
-
-def bround4(col: Column) -> Column:
-    return F.bround(col, 4)
+def rounder(mode: str):
+    """The rounding function for ``mode``: 'bankers' or 'half_up'.
+    Any other value raises, so a typo cannot silently pick a mode."""
+    if mode == "bankers":
+        return F.bround  # parity with numpy/pandas half-even (golden tests)
+    if mode == "half_up":
+        return F.round  # parity with DuckDB round (oracle queries)
+    raise ValueError(f"unknown rounding mode: {mode}")

@@ -15,9 +15,6 @@ DuckDB (oracle) — no UDF, whole-stage-codegen friendly, O(bits) ops/row.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
 
 def zorder_sql(cols: list[str], bits: int = 16) -> str:
     """SQL expression interleaving the low ``bits`` bits of each (already
@@ -36,10 +33,3 @@ def zorder_sql(cols: list[str], bits: int = 16) -> str:
     ]
     return " + ".join(terms)
 
-
-def zorder_key(df: DataFrame, cols: list[str], bits: int = 16) -> Column:
-    """Z-order key column over ``cols``, each first clamped into
-    [0, 2^bits) by ranking-free min/max-independent bucketing: the caller
-    is expected to pass already-bucketized integer columns (e.g.
-    ``F.expr("value_bucket")``); this just interleaves."""
-    return F.expr(zorder_sql(cols, bits))

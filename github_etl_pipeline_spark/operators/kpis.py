@@ -15,37 +15,35 @@ Reference semantics (etl/transform.py:165-258 + calculate_volatility
   all metrics NULL unless min_bet > 0 and size > 0                 (P5)
 
 Execution shape (the 100-TB story): the ONLY full-data shuffle is
-``groupBy(pool, game_win).count()`` — with partial (map-side) aggregation
-this reduces ~1M rows/pool to the pool's distinct-prize-value cardinality
-(~30 rows observed in the reference corpus) before any network transfer.
-Everything after operates on that tiny ``dist`` relation: per-pool stats,
-the rtp-dependent variance pass (a second agg over dist), the dimension
-broadcast join. At 1000 executors the scan dominates; the shuffle payload
-is ~#pools x #distinct_values rows regardless of input size.
+``groupBy(source_file, game_win).count()`` — with partial (map-side)
+aggregation this reduces ~1M rows/pool to the pool's distinct-prize-value
+cardinality (~30 rows observed in the reference corpus) before any
+network transfer. The key is ``source_file`` alone, in the URI form the
+scan lists it in; the distribution decodes it after the shuffle, and the
+other pool key columns come from ``sources.pol.pool_identity`` once per
+pool. Everything after operates on that tiny ``dist`` relation: per-pool
+stats, the rtp-dependent variance pass (a second agg over dist), the
+dimension broadcast join. At 1000 executors the scan dominates; the
+shuffle payload is ~#pools x #distinct_values rows regardless of input
+size. ``dist`` is persisted for the two passes; ``release_pool_kpis``
+drops it once the caller is done with the records.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from github_etl_pipeline_spark.functions.keys import normalize_pool_id, reference_match_expr
+from github_etl_pipeline_spark.functions.rounding import rounder
 from github_etl_pipeline_spark.operators.classify import (
     is_flat_expr,
     max_multiplier_expr,
     tag_expr,
 )
-from github_etl_pipeline_spark.sources.pol import POOL_KEY_COLS
+from github_etl_pipeline_spark.sources.pol import POOL_KEY_COLS, decode_uri_path, pool_identity
 
 Z_90_CI = 1.645
-
-
-def _rounder(mode: str):
-    if mode == "bankers":
-        return F.bround  # parity with numpy/pandas half-even (golden tests)
-    if mode == "half_up":
-        return F.round  # parity with DuckDB round (oracle queries)
-    raise ValueError(f"unknown rounding mode: {mode}")
 
 
 def pool_distribution(parsed: DataFrame, key_cols: list[str] | None = None) -> DataFrame:
@@ -54,45 +52,49 @@ def pool_distribution(parsed: DataFrame, key_cols: list[str] | None = None) -> D
     return parsed.groupBy(*key_cols, "game_win").agg(F.count(F.lit(1)).alias("cnt"))
 
 
+def _source_file_distribution(parsed: DataFrame) -> DataFrame:
+    """``pool_distribution`` keyed on ``source_file`` alone, decoded after
+    the shuffle: every other pool key column is a string function of
+    ``source_file``, so the map-side hash agg hashes one string per line
+    instead of six, and the decode runs once per (pool, value) row."""
+    dist = pool_distribution(parsed.select("source_file", "game_win"), ["source_file"])
+    return dist.withColumn("source_file", decode_uri_path(F.col("source_file")))
+
+
+def release_pool_kpis(parsed: DataFrame) -> None:
+    """Drop the distribution cache that ``pool_kpis(parsed)`` persisted.
+    Spark finds cache entries by plan, so rebuilding the same plan and
+    unpersisting it releases the entry without a handle to it."""
+    _source_file_distribution(parsed).unpersist()
+
+
 def pool_kpis(
     parsed: DataFrame,
     dim_agg: DataFrame | None = None,
-    inventory: DataFrame | None = None,
-    z: float = Z_90_CI,
     rounding: str = "bankers",
-    key_cols: list[str] | None = None,
     with_processed_at: bool = True,
 ) -> DataFrame:
     """Full per-pool KPI record from parsed lines.
 
-    parsed     — output of ``parse_pol_lines`` (or anything with key_cols +
-                 ``game_win``).
+    parsed     — output of ``parse_pol_lines`` (anything with
+                 ``source_file`` + ``game_win``); with ``keep_invalid=True``
+                 unparseable lines count in ``line_count`` and a file with
+                 no valid line still gets a size=0 record.
     dim_agg    — output of ``prepare_dim`` (norm_pool_id, min_bet, game_ids);
                  broadcast-joined. None -> all lookup-dependent metrics NULL.
-    inventory  — output of ``pol_file_inventory``; when given, files whose
-                 every line failed the parse still emit a size=0 record
-                 (reference per-file loop behavior).
     rounding   — 'bankers' (reference parity) or 'half_up' (DuckDB parity).
-    """
-    key_cols = key_cols or POOL_KEY_COLS
-    rnd = _rounder(rounding)
 
-    # Narrow-key optimization: every other pool key column (file_name,
-    # folder_path, parent_folder, pool_id, pool_type) is a pure string
-    # function of source_file, so the per-row aggregation key is just
-    # (source_file, game_win) — the map-side hash agg hashes/compares one
-    # string per input row instead of six; the derived columns are
-    # recomputed on the tiny per-pool aggregate afterwards.
-    derivable = key_cols == POOL_KEY_COLS
-    agg_keys = ["source_file"] if derivable else key_cols
+    The distribution this persists is released by ``release_pool_kpis``.
+    """
+    rnd = rounder(rounding)
 
     # The single large shuffle. dist is tiny (#pools x distinct prize
     # values, +1 NULL group per pool in single-pass mode) — persist it so
     # the stats pass and the rtp-dependent variance pass don't each
     # re-scan the raw data.
-    dist = pool_distribution(parsed.select(*agg_keys, "game_win"), agg_keys).persist()
+    dist = _source_file_distribution(parsed).persist()
     valid = F.col("game_win").isNotNull()
-    stats = dist.groupBy(*agg_keys).agg(
+    stats = dist.groupBy("source_file").agg(
         F.sum(F.col("cnt")).alias("line_count"),
         F.coalesce(F.sum(F.when(valid, F.col("cnt"))), F.lit(0)).alias("size"),
         F.sum(F.when(valid, F.col("game_win") * F.col("cnt"))).alias("total_win"),
@@ -101,36 +103,7 @@ def pool_kpis(
         ).alias("hits"),
         F.max("game_win").alias("max_win"),
     )
-    if derivable:
-        # re-derive the file-identity columns from source_file (must stay
-        # in lockstep with sources/pol.py read_pol_lines/parse_pol_lines)
-        folder = F.when(
-            F.col("source_file").contains("/"),
-            F.regexp_replace("source_file", r"/[^/]+$", ""),
-        ).otherwise(F.lit("root"))
-        parts = F.split(
-            F.regexp_replace(F.element_at(F.split("source_file", "/"), -1), r"\.pol$", ""), "_"
-        )
-        stats = (
-            stats.withColumn("file_name", F.element_at(F.split("source_file", "/"), -1))
-            .withColumn("folder_path", folder)
-            .withColumn("parent_folder", F.element_at(F.split(folder, "/"), -1))
-            .withColumn("pool_id", F.get(parts, 1))
-            .withColumn("pool_type", F.get(parts, 2))
-        )
-
-    if inventory is not None:
-        inv_keys = [c for c in key_cols if c in inventory.columns]
-        stats = (
-            inventory.select(*inv_keys)
-            .join(
-                stats.select("source_file", "line_count", "size", "total_win", "hits", "max_win"),
-                "source_file",
-                "left",
-            )
-            .withColumn("size", F.coalesce(F.col("size"), F.lit(0)))
-            .withColumn("hits", F.coalesce(F.col("hits"), F.lit(0)))
-        )
+    stats = pool_identity(stats)
 
     if dim_agg is not None:
         stats = stats.join(
@@ -156,7 +129,7 @@ def pool_kpis(
 
     gate = F.col("min_bet").isNotNull() & (F.col("min_bet") > 0) & (F.col("size") > 0)
     kpi = stats.select(
-        *[c for c in key_cols if c in stats.columns],
+        *POOL_KEY_COLS,
         "line_count",
         "size",
         "total_win",
@@ -187,13 +160,13 @@ def pool_kpis(
         .select("source_file", "game_win", "cnt")
         .join(pool_ctx, "source_file")
         .groupBy("source_file")
-        .agg(rnd(F.lit(z) * F.sqrt(F.sum(var_term)), 2).alias("volatility"))
+        .agg(rnd(F.lit(Z_90_CI) * F.sqrt(F.sum(var_term)), 2).alias("volatility"))
     )
     out = kpi.join(vols, "source_file", "left")
 
     out = out.select(
-        F.col("file_name").alias("pool_name") if "file_name" in out.columns else F.col("source_file").alias("pool_name"),
-        *[c for c in out.columns],
+        F.col("file_name").alias("pool_name"),
+        *out.columns,
         tag_expr("pool_type").alias("tag"),
         is_flat_expr("pool_type").alias("is_flat"),
         max_multiplier_expr("pool_type").alias("max_multiplier"),

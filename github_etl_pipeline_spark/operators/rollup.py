@@ -18,9 +18,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from github_etl_pipeline_spark.functions.rounding import rounder
+
 
 def aggregated_summary(pools: DataFrame, rounding: str = "bankers") -> DataFrame:
-    rnd = F.bround if rounding == "bankers" else F.round
+    rnd = rounder(rounding)
 
     def _stats(col: str) -> F.Column:
         return F.when(

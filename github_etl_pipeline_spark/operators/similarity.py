@@ -44,10 +44,6 @@ def norm_expr(a: Column) -> Column:
     )
 
 
-def cosine_expr(a: Column, b: Column) -> Column:
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
-
-
 # ---------------------------------------------------------------------------
 # Driver-side IO for DRIVER-BOUNDED index relations (centroids, PQ
 # codebooks — O(n_centroids x dim) values by construction at ANY corpus

@@ -22,7 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from github_etl_pipeline_spark.sources.pol import POOL_KEY_COLS
+from github_etl_pipeline_spark.functions.rounding import rounder
+from github_etl_pipeline_spark.sources.pol import POOL_KEY_COLS, decode_uri_path, pool_identity
 
 # README.md:94-98 bucket edges: 0-500, 501-1000, 1001-2000, then wider
 BUCKET_EDGES = [500, 1000, 2000, 5000, 10000]
@@ -47,7 +48,7 @@ def pool_extended_stats(parsed: DataFrame, k: int = 10, rounding: str = "bankers
     """parsed — output of ``parse_pol_lines(..., keep_invalid=False)`` with
     an ``_order`` column when first/last-k sampling is wanted (see
     ``parse_pol_lines``'s ``with_order`` flag)."""
-    rnd = F.bround if rounding == "bankers" else F.round
+    rnd = rounder(rounding)
     keys = [c for c in POOL_KEY_COLS if c in parsed.columns]
 
     summary = parsed.groupBy(*keys).agg(
@@ -156,7 +157,8 @@ def pool_extended_stats(parsed: DataFrame, k: int = 10, rounding: str = "bankers
         )
         out = out.join(samples, "source_file", "left")
 
-    return out
+    # per-pool output keys are decoded paths, as in pool_kpis
+    return pool_identity(out.withColumn("source_file", decode_uri_path(F.col("source_file"))))
 
 
 def streak_summary(

@@ -226,12 +226,6 @@ def _bigrams_of(w: Column) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def word_bigrams(col: Column | str) -> Column:
-    """NON-distinct consecutive word bigrams (repetition needs counts,
-    unlike the dedup shingles which are a set)."""
-    return _bigrams_of(words_lower(col))
-
-
 def max_multiplicity(arr: Column) -> Column:
     """Count of the most frequent element of an array, as a pure
     expression: sort, then the longest run of equal adjacent elements —

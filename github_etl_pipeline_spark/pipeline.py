@@ -12,7 +12,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from github_etl_pipeline_spark.operators.kpis import pool_kpis
+from github_etl_pipeline_spark.operators.kpis import pool_kpis, release_pool_kpis
 from github_etl_pipeline_spark.operators.rollup import aggregated_summary
 from github_etl_pipeline_spark.sources.lookup import load_game_lookup, prepare_dim
 from github_etl_pipeline_spark.sources.pol import parse_pol_lines, read_pol_lines
@@ -72,12 +72,12 @@ def run_pipeline(
         # so the corpus-sized scan+shuffle below it runs once, not three
         # times (pools is one row per file: tiny at any corpus size).
         # TARGETED release in the finally (ADVICE r10, revising the r9
-        # session-wide sweep): pools is the ONLY relation this block
-        # persists, and unpersisting the handle removes its CacheManager
-        # entry and storage even when a sink raises. A session-wide sweep
-        # here would also clear caches owned by the CALLER (e.g. a
-        # persisted dim passed in), forcing recomputes the caller paid to
-        # avoid — session-wide sweeps belong to harness entry points.
+        # session-wide sweep): the caches released are the two this call
+        # created — pools, and the distribution pool_kpis persisted under
+        # it — even when a sink raises. A session-wide sweep here would
+        # also clear caches owned by the CALLER (e.g. a persisted dim
+        # passed in), forcing recomputes the caller paid to avoid —
+        # session-wide sweeps belong to harness entry points.
         try:
             pools.persist()
             write_consolidated_json(pools, consolidated)
@@ -103,5 +103,6 @@ def run_pipeline(
             save_as_csv(pools, output_dir / "_all_files_summary.csv")
         finally:
             pools.unpersist()
+            release_pool_kpis(parsed)
 
     return pools, summary

@@ -2,7 +2,6 @@ from github_etl_pipeline_spark.sources.pol import (
     read_pol_lines,
     read_pol_lines_any_encoding,
     parse_pol_lines,
-    pol_file_inventory,
 )
 from github_etl_pipeline_spark.sources.lookup import load_game_lookup, prepare_dim
 from github_etl_pipeline_spark.sources.tables import load_tables, register_views
@@ -11,7 +10,6 @@ __all__ = [
     "read_pol_lines",
     "read_pol_lines_any_encoding",
     "parse_pol_lines",
-    "pol_file_inventory",
     "load_game_lookup",
     "prepare_dim",
     "load_tables",

@@ -1,83 +1,74 @@
-"""Incremental processing (reference S2/S3/EP2) as Structured Streaming.
+"""Incremental processing (reference S2/S3/EP2): three change ledgers
+over one scan path.
 
 The reference's change detection is ``git diff --name-only HEAD~1 HEAD``
 driven by a GitHub-Actions push loop (etl/extract.py:55-80,
 .github/workflows/etl_pipeline.yml:3-10): each run processes only files
 changed since the last run, falling back to a full scan when none.
 
-Spark-first: a streaming FILE SOURCE with a checkpoint is exactly that
-ledger — ``readStream.text`` discovers files, the checkpoint records
-which were already processed, ``Trigger.AvailableNow`` drains everything
-new and stops (micro-batch semantics matching the push-triggered CI
-loop). The first run IS the full scan (S3 fallback); subsequent runs see
-only new/changed paths. Each micro-batch runs the same KPI transform and
-MERGE-upserts into the parquet store, so reruns are idempotent.
-
-Two ledgers, two change models:
+Every runner reads pool files through ``sources/pol.py`` — the same
+``scan_pol_files`` (recursive ``*.pol`` glob minus ``EXCLUDED_DIRS``),
+``pol_lines`` (``source_file`` projection) and ``pool_identity`` as the
+batch pipeline — and ends in the same tail, ``_upsert_pools``:
+``parse_pol_lines`` -> ``pool_kpis`` -> ``upsert_parquet``, so a rerun
+is an idempotent MERGE and every store row equals the batch record.
 
   * ``run_incremental`` — Spark's streaming file-source checkpoint,
-    keyed on file PATH. New files are processed once; an in-place EDIT
-    of an already-seen file is not re-processed. Right for
-    immutable-drop fleets (the common case at scale).
+    keyed on file PATH: ``readStream`` discovers files, the checkpoint
+    records which were processed, ``Trigger.AvailableNow`` drains
+    everything new and stops (the push-triggered CI loop). The first
+    run IS the full scan (S3). New files are processed once; an
+    in-place EDIT of an already-seen file is not re-processed. Right
+    for immutable-drop fleets (the common case at scale).
   * ``run_incremental_mtime`` — an explicit (path, mtime) ledger
-    matching the reference's git-diff semantics exactly
-    (etl/extract.py:55-80): a modified file shows a new mtime and is
-    re-processed, its store row upserted in place. The listing pass is
-    metadata-only (binaryFile schema pruned to path+modificationTime —
-    no bytes read); the anti-join against the ledger is O(corpus
-    listing), and only CHANGED files' contents are ever read.
+    matching the reference's git-diff semantics: a modified file shows
+    a new mtime and is re-processed, its store row upserted in place.
+    The listing is metadata-only (``binaryFile`` pruned to
+    path+modificationTime — no bytes read), the anti-join against the
+    ledger is O(corpus listing), and only CHANGED files are read.
   * ``run_incremental_git`` — the reference's LITERAL change log: one
     subprocess call to ``git diff --name-only HEAD~1 HEAD``
-    (etl/extract.py:55-80, the pipeline's only process boundary per
-    SURVEY §"Process/thread boundaries"), filtered to .pol files under
-    the scan dir, deleted files skipped, full-scan fallback when the
-    diff is empty or git fails (etl/main.py:79-85). Use when the
-    corpus actually lives in a git work-tree (the reference's CI
-    deployment); the changed-path list is bounded by ONE COMMIT'S
-    CHURN, never corpus size, so the driver round-trip is safe at
-    fleet scale.
+    (etl/extract.py:55-80, the pipeline's only process boundary),
+    filtered to .pol files under the scan dir, deleted and excluded
+    files skipped, full-scan fallback when the diff is empty or git
+    fails (etl/main.py:79-85). The changed-path list is bounded by ONE
+    COMMIT'S CHURN, never corpus size, so the driver round-trip is safe
+    at fleet scale.
 """
 
 from __future__ import annotations
 
 from pathlib import Path
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
-
-from github_etl_pipeline_spark.operators.kpis import pool_kpis
-from github_etl_pipeline_spark.sinks.upsert import read_store, upsert_parquet
-from github_etl_pipeline_spark.sources.pol import parse_pol_lines, EXCLUDED_DIRS
-
 from pyspark.sql import functions as F
 
+from github_etl_pipeline_spark.operators.kpis import pool_kpis, release_pool_kpis
+from github_etl_pipeline_spark.sinks.upsert import read_store, upsert_parquet
+from github_etl_pipeline_spark.sources.pol import (
+    drop_excluded,
+    parse_pol_lines,
+    pol_lines,
+    read_pol_lines,
+    scan_pol_files,
+)
 
-def _stream_pol_lines(spark: SparkSession, scan_dir: str) -> DataFrame:
-    df = (
-        spark.readStream.format("text")
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.pol")
-        .option("maxFilesPerTrigger", "64")
-        .load(scan_dir)
-    )
-    path = F.col("_metadata.file_path")
-    for d in EXCLUDED_DIRS:
-        df = df.filter(~path.contains(f"/{d}/"))
-    scan_posix = scan_dir.rstrip("/").replace("\\", "/")
-    import re
 
-    rel = F.regexp_replace(path, r"^.*?" + re.escape(scan_posix) + "/", "")
-    folder = F.when(rel.contains("/"), F.regexp_replace(rel, r"/[^/]+$", "")).otherwise(
-        F.lit("root")
-    )
-    return df.select(
-        F.col("value"),
-        rel.alias("source_file"),
-        F.col("_metadata.file_name").alias("file_name"),
-        folder.alias("folder_path"),
-        F.element_at(F.split(folder, "/"), -1).alias("parent_folder"),
-        F.col("_metadata.file_size").alias("file_size"),
-        F.col("_metadata.file_modification_time").alias("file_mtime"),
-    )
+def _upsert_pools(
+    spark: SparkSession,
+    lines: DataFrame,
+    store_path: str | Path,
+    dim_agg: DataFrame | None,
+    rounding: str,
+) -> None:
+    """The tail every runner shares: KPI records of ``lines`` MERGEd into
+    the store, then the distribution cache ``pool_kpis`` took released."""
+    parsed = parse_pol_lines(lines, keep_invalid=True)
+    try:
+        upsert_parquet(spark, pool_kpis(parsed, dim_agg=dim_agg, rounding=rounding), store_path)
+    finally:
+        release_pool_kpis(parsed)
 
 
 def run_incremental(
@@ -91,7 +82,9 @@ def run_incremental(
     """Drain all unseen .pol files into the parquet KPI store; returns the
     number of micro-batches processed. Repeated calls process only files
     the checkpoint has not seen (S2); the first call processes all (S3)."""
-    lines = _stream_pol_lines(spark, str(scan_dir))
+    scan_dir = str(scan_dir)
+    reader = spark.readStream.format("text").option("maxFilesPerTrigger", "64")
+    lines = pol_lines(scan_pol_files(reader, scan_dir), scan_dir)
     n_batches = 0
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -99,9 +92,7 @@ def run_incremental(
         if batch_df.isEmpty():
             return
         n_batches += 1
-        parsed = parse_pol_lines(batch_df, keep_invalid=True)
-        pools = pool_kpis(parsed, dim_agg=dim_agg, rounding=rounding)
-        upsert_parquet(batch_df.sparkSession, pools, store_path)
+        _upsert_pools(batch_df.sparkSession, batch_df, store_path, dim_agg, rounding)
 
     query = (
         lines.writeStream.foreachBatch(process_batch)
@@ -111,22 +102,6 @@ def run_incremental(
     )
     query.awaitTermination()
     return n_batches
-
-
-def _list_pol_files(spark: SparkSession, scan_dir: str) -> DataFrame:
-    """Metadata-only corpus listing: (path URI, mtime). binaryFile with
-    the content column pruned away never reads file bytes — this pass
-    costs one directory walk regardless of corpus size."""
-    df = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.pol")
-        .load(scan_dir)
-        .select(F.col("path"), F.col("modificationTime").alias("mtime"))
-    )
-    for d in EXCLUDED_DIRS:
-        df = df.filter(~F.col("path").contains(f"/{d}/"))
-    return df
 
 
 def run_incremental_mtime(
@@ -165,15 +140,19 @@ def run_incremental_mtime(
     # (truncated/padded content). Detecting edits is this mode's whole
     # contract, so drop cached listings under the scan root first.
     spark.catalog.refreshByPath(scan_dir)
-    listing = _list_pol_files(spark, scan_dir)
+    # metadata-only listing: binaryFile with content pruned reads no bytes
+    listing = scan_pol_files(spark.read.format("binaryFile"), scan_dir).select(
+        F.col("path"), F.col("modificationTime").alias("mtime")
+    )
     ledger_path = Path(ledger_path)
     if ledger_path.exists():
         seen = read_store(spark, ledger_path).select("path", "mtime")
         changed = listing.join(seen, ["path", "mtime"], "left_anti")
-        paths = [r.path for r in changed.select("path").collect()]
+        # listed paths are URIs; the reader wants the file system's names
+        paths = [unquote(r.path) for r in changed.select("path").collect()]
         if not paths:
             return 0
-        raw = spark.read.format("text").load(paths)
+        lines = pol_lines(spark.read.format("text").load(paths), scan_dir)
         n_changed = len(paths)
     else:
         # first run = full scan: directory read, no per-path file list
@@ -181,11 +160,8 @@ def run_incremental_mtime(
         n_changed = listing.count()
         if n_changed == 0:
             return 0
-        raw = _full_scan_text(spark, scan_dir)
-    lines = _project_lines(raw, scan_dir)
-    parsed = parse_pol_lines(lines, keep_invalid=True)
-    pools = pool_kpis(parsed, dim_agg=dim_agg, rounding=rounding)
-    upsert_parquet(spark, pools, store_path)
+        lines = read_pol_lines(spark, scan_dir)
+    _upsert_pools(spark, lines, store_path, dim_agg, rounding)
     upsert_parquet(spark, changed, ledger_path, key="path")
     return n_changed
 
@@ -255,17 +231,15 @@ def run_incremental_git(
     changed = changed_paths_from_git(repo_root, base_ref=base_ref)
     sub_posix = scan_subdir.strip("/")
     paths: list[str] = []
-    if changed:
-        for rel in changed:
-            rel_posix = rel.replace("\\", "/")
-            if not rel_posix.endswith(".pol") or sub_posix not in rel_posix:
-                continue
-            fp = repo_root / rel_posix
-            if not fp.exists():  # deleted in the commit
-                continue
-            if any(part in EXCLUDED_DIRS for part in fp.parts):
-                continue
-            paths.append(str(fp))
+    for rel in changed or []:
+        rel = rel.replace("\\", "/")
+        # a listed file that no longer exists was deleted in the commit
+        if rel.endswith(".pol") and sub_posix in rel and (repo_root / rel).exists():
+            paths.append(str(repo_root / rel))
+    if paths:
+        # the scan's own exclusion filter, over the (churn-sized) path list
+        candidates = spark.createDataFrame([(p,) for p in paths], "path string")
+        paths = [r.path for r in drop_excluded(candidates, F.col("path")).collect()]
     # In-place edits: drop stale cached file lengths (see
     # run_incremental_mtime) BEFORE either branch reads — the full-scan
     # fallback re-reads the whole corpus and would otherwise read a
@@ -282,64 +256,11 @@ def run_incremental_git(
             spark.catalog.refreshByPath(p)
     if paths:
         raw = spark.read.format("text").load(paths)
+        lines = pol_lines(raw, scan_dir, fallback_root=str(repo_root))
         n_changed = len(paths)
     else:
         # no changed .pol files (or git failed) -> full-scan fallback
-        raw = _full_scan_text(spark, scan_dir)
+        lines = read_pol_lines(spark, scan_dir)
         n_changed = -1
-    lines = _project_lines(raw, scan_dir, fallback_root=str(repo_root))
-    parsed = parse_pol_lines(lines, keep_invalid=True)
-    pools = pool_kpis(parsed, dim_agg=dim_agg, rounding=rounding)
-    upsert_parquet(spark, pools, store_path)
+    _upsert_pools(spark, lines, store_path, dim_agg, rounding)
     return n_changed
-
-
-def _full_scan_text(spark: SparkSession, scan_dir: str) -> DataFrame:
-    """Directory-rooted recursive text read for the first/full mtime-CDC
-    run: ONE file index over the scan root (the glob prunes to .pol at
-    listing time); excluded dirs are filtered on the path column — same
-    row-level exclusion the metadata listing applies, so ledger and
-    store stay consistent."""
-    df = (
-        spark.read.format("text")
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.pol")
-        .load(scan_dir)
-    )
-    for d in EXCLUDED_DIRS:
-        df = df.filter(~F.col("_metadata.file_path").contains(f"/{d}/"))
-    return df
-
-
-def _project_lines(
-    raw: DataFrame, scan_dir: str, fallback_root: str | None = None
-) -> DataFrame:
-    """Attach the reference's path-derived columns to a raw text read.
-
-    ``source_file`` strips the ``scan_dir`` prefix; when ``fallback_root``
-    is given, paths OUTSIDE scan_dir (possible in git mode, whose subdir
-    filter is a reference-faithful posix SUBSTRING test) strip that root
-    instead — matching the reference's ``relative_to(repo_root)``
-    projection (etl/extract.py:125) instead of leaking an absolute path.
-    The second replace is a no-op whenever the first one stripped (the
-    stripped relative path no longer contains the root prefix)."""
-    import re
-
-    scan_posix = scan_dir.rstrip("/").replace("\\", "/")
-    fpath = F.col("_metadata.file_path")
-    rel = F.regexp_replace(fpath, r"^.*?" + re.escape(scan_posix) + "/", "")
-    if fallback_root:
-        root_posix = fallback_root.rstrip("/").replace("\\", "/")
-        rel = F.regexp_replace(rel, r"^.*?" + re.escape(root_posix) + "/", "")
-    folder = F.when(rel.contains("/"), F.regexp_replace(rel, r"/[^/]+$", "")).otherwise(
-        F.lit("root")
-    )
-    return raw.select(
-        F.col("value"),
-        rel.alias("source_file"),
-        F.col("_metadata.file_name").alias("file_name"),
-        folder.alias("folder_path"),
-        F.element_at(F.split(folder, "/"), -1).alias("parent_folder"),
-        F.col("_metadata.file_size").alias("file_size"),
-        F.col("_metadata.file_modification_time").alias("file_mtime"),
-    )

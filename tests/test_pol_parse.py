@@ -3,7 +3,8 @@
 import pytest
 from pyspark.sql import functions as F
 
-from github_etl_pipeline_spark.sources.pol import parse_pol_lines, pol_file_inventory
+from github_etl_pipeline_spark.operators.kpis import pool_kpis
+from github_etl_pipeline_spark.sources.pol import parse_pol_lines
 
 
 def _lines_df(spark, rows):
@@ -67,10 +68,11 @@ def test_filename_parse_missing_parts(spark):
 
 
 def test_inventory_counts_raw_lines(spark):
+    # single-pass mode: unparseable lines count in line_count, not size
     df = _lines_df(spark, ["1", "garbage", "2"])
-    inv = pol_file_inventory(df).first()
-    assert inv.line_count == 3
-    assert inv.pool_id == "0201"
+    rec = pool_kpis(parse_pol_lines(df, keep_invalid=True)).first()
+    assert rec.line_count == 3 and rec.size == 2
+    assert rec.pool_id == "0201"
 
 
 def _reference_decode_chain(raw: bytes) -> str:

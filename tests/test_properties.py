@@ -64,9 +64,7 @@ def _run_engine(spark, pools, dim_agg):
         "source_file", "file_name", "folder_path", "parent_folder", "pool_id", "pool_type",
         F.col("value").cast("long").alias("game_win"),
     )
-    out = pool_kpis(df, dim_agg=dim_agg, key_cols=[
-        "source_file", "file_name", "folder_path", "parent_folder", "pool_id", "pool_type"
-    ])
+    out = pool_kpis(df, dim_agg=dim_agg)
     return {r.pool_id: r for r in out.collect()}
 
 
