@@ -13,6 +13,7 @@ reference: $GITHUB_WORKSPACE, else walk up to a .git directory, else cwd.
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import sys
 from pathlib import Path
@@ -65,11 +66,11 @@ def main(argv: list[str] | None = None) -> int:
     else:
         from github_etl_pipeline_spark.pipeline import run_pipeline
 
-        pools, summary = run_pipeline(
-            spark, root, scan_subdir=args.scan_subdir, output_dir=out
-        )
-        n = pools.count()
-        print(f"batch run complete: {n} pool(s) -> {out}")
+        run_pipeline(spark, root, scan_subdir=args.scan_subdir, output_dir=out)
+        # the count the run just wrote: pools.count() here would rerun the
+        # scan, since run_pipeline has released its caches
+        summary = json.loads((out / "_pipeline_summary.json").read_text())
+        print(f"batch run complete: {summary['files_processed']} pool(s) -> {out}")
     return 0
 
 

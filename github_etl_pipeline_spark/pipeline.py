@@ -66,7 +66,6 @@ def run_pipeline(
 
         output_dir = Path(output_dir)
         output_dir.mkdir(parents=True, exist_ok=True)
-        consolidated = output_dir / "all_pools_data.json"
         # the output surface takes THREE actions over pools (JSON collect,
         # counter agg, CSV export) — persist the pool-cardinality aggregate
         # so the corpus-sized scan+shuffle below it runs once, not three
@@ -80,7 +79,9 @@ def run_pipeline(
         # session-wide sweeps belong to harness entry points.
         try:
             pools.persist()
-            write_consolidated_json(pools, consolidated)
+            consolidated = write_consolidated_json(
+                pools, output_dir / "all_pools_data.json"
+            )
 
             # A9 counters: a file "failed" when it had raw lines but none
             # parsed (the reference's per-file try/except surface,

@@ -14,6 +14,9 @@ from datetime import datetime, timezone
 from pathlib import Path
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from github_etl_pipeline_spark.sinks.upsert import collect_at_most, read_consolidated
 
 
 def _iso_now() -> str:
@@ -52,10 +55,10 @@ def save_summary_report(
 
 
 def generate_index_file(consolidated_json: str | Path, output_file: str | Path) -> Path:
-    """Index of the consolidated store, sorted by source file (S10)."""
-    consolidated_json = Path(consolidated_json)
+    """Index of the consolidated store, sorted by source file (S10).
+    ``consolidated_json`` is the path ``write_consolidated_json`` returned: the
+    document or its shard directory."""
     output_file = Path(output_file)
-    data = json.loads(consolidated_json.read_text()) if consolidated_json.exists() else {}
     files = sorted(
         (
             {
@@ -64,7 +67,7 @@ def generate_index_file(consolidated_json: str | Path, output_file: str | Path) 
                 "processed_at": rec.get("metadata", {}).get("processed_at"),
                 "size": rec.get("size"),
             }
-            for rec in data.values()
+            for rec in read_consolidated(consolidated_json).values()
         ),
         key=lambda x: x.get("source_file") or "",
     )
@@ -106,12 +109,11 @@ def save_as_csv(
     the collect is refused and executors write range-partitioned, sorted
     CSV shards (with headers) to ``<output_file>.shards/`` — same columns,
     same global sort order across shard file names."""
-    from pyspark.sql import functions as F
-
     output_file = Path(output_file)
     output_file.parent.mkdir(parents=True, exist_ok=True)
     sel = pools.select(*CSV_FIELDS)
-    if sel.limit(max_driver_rows + 1).count() > max_driver_rows:
+    rows = collect_at_most(sel, max_driver_rows)
+    if rows is None:
         shard_dir = output_file.with_name(output_file.name + ".shards")
         (
             sel.repartitionByRange(F.col("source_file"))
@@ -121,8 +123,7 @@ def save_as_csv(
             .csv(str(shard_dir))
         )
         return shard_dir
-    rows = [r.asDict() for r in sel.collect()]
-    rows.sort(key=lambda r: r.get("source_file") or "")
+    rows = sorted((r.asDict() for r in rows), key=lambda r: r["source_file"] or "")
     with open(output_file, "w", newline="", encoding="utf-8") as f:
         writer = csv.DictWriter(f, fieldnames=CSV_FIELDS)
         writer.writeheader()

@@ -21,8 +21,10 @@ equivalents:
     fleet-rollup cardinality, i.e. hundreds-thousands of pools; the
     100-TB input reduces to one record per pool file, so the driver-side
     materialization is of the tiny AGGREGATE, never the raw data).
-    Guarded: above ``max_driver_rows`` it refuses the driver collect
-    and writes sharded JSONL through Spark instead.
+    Guarded by :func:`collect_at_most`: above ``max_driver_rows`` it
+    writes sharded JSONL through Spark instead. Both forms take the key
+    (``source_file``) and the record (``_pool_record_col``, the one
+    definition of the reference record) from the same Spark expressions.
 """
 
 from __future__ import annotations
@@ -165,49 +167,41 @@ def upsert_parquet(
             .parquet(str(table_path))
             .where(F.col(_BUCKET_COL).isin(touched))
         )
-        merged = (
-            updates.withColumn("_pri", F.lit(0))
-            .unionByName(existing.withColumn("_pri", F.lit(1)), allowMissingColumns=True)
-            .withColumn(
-                "_rn", F.row_number().over(Window.partitionBy(key).orderBy(F.col("_pri")))
-            )
-            .where(F.col("_rn") == 1)
-            .drop("_pri", "_rn")
+        # dynamic mode replaces ONLY the partitions present in the merge
+        # (== touched buckets); all other bucket dirs are untouched
+        (
+            _keep_newest(updates, existing, key)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(_BUCKET_COL)
+            .parquet(str(table_path))
         )
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            # dynamic mode replaces ONLY the partitions present in `merged`
-            # (== touched buckets); all other bucket dirs are untouched
-            merged.write.mode("overwrite").partitionBy(_BUCKET_COL).parquet(
-                str(table_path)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
         return
 
+    merged = updates
     if table_path.exists():
         # legacy unbucketed store: one-time migration to the bucketed layout
         existing = spark.read.parquet(str(table_path))
         if _BUCKET_COL not in existing.columns:
             existing = _with_bucket(existing, key, n_buckets)
-        merged = (
-            updates.withColumn("_pri", F.lit(0))
-            .unionByName(existing.withColumn("_pri", F.lit(1)), allowMissingColumns=True)
-            .withColumn(
-                "_rn", F.row_number().over(Window.partitionBy(key).orderBy(F.col("_pri")))
-            )
-            .where(F.col("_rn") == 1)
-            .drop("_pri", "_rn")
-        )
-    else:
-        merged = updates
+        merged = _keep_newest(updates, existing, key)
 
     staging = table_path.with_name(table_path.name + "._staging")
     merged.write.mode("overwrite").partitionBy(_BUCKET_COL).parquet(str(staging))
     if table_path.exists():
         shutil.rmtree(table_path)
     staging.rename(table_path)
+
+
+def _keep_newest(updates: DataFrame, existing: DataFrame, key: str) -> DataFrame:
+    """The merge itself: union, then one row per key, updates first."""
+    return (
+        updates.withColumn("_pri", F.lit(0))
+        .unionByName(existing.withColumn("_pri", F.lit(1)), allowMissingColumns=True)
+        .withColumn("_rn", F.row_number().over(Window.partitionBy(key).orderBy("_pri")))
+        .where(F.col("_rn") == 1)
+        .drop("_pri", "_rn")
+    )
 
 
 def read_store(spark: SparkSession, table_path: str | Path) -> DataFrame:
@@ -217,42 +211,13 @@ def read_store(spark: SparkSession, table_path: str | Path) -> DataFrame:
     return df.drop(_BUCKET_COL) if _BUCKET_COL in df.columns else df
 
 
-def _record_dict(row: dict) -> dict:
-    """Shape one pools row as the reference's nested output record
-    (etl/transform.py:237-256 + output-only max_win_factor)."""
-    from datetime import timezone
-
-    processed_at = row.get("processed_at")
-    if hasattr(processed_at, "isoformat") and processed_at.tzinfo is None:
-        # Spark collect() yields naive datetimes in session-tz wall time;
-        # the session factory pins UTC, and the reference stamps
-        # ISO-8601 with the +00:00 offset (etl/transform.py:253)
-        processed_at = processed_at.replace(tzinfo=timezone.utc)
-    return {
-        "pool_name": row.get("pool_name"),
-        "pool_id": row.get("pool_id"),
-        "pool_type": row.get("pool_type"),
-        "game_ids": list(row.get("game_ids") or []),
-        "min_bet": row.get("min_bet"),
-        "max_win_factor": row.get("max_win_factor"),
-        "rtp": row.get("rtp"),
-        "volatility": row.get("volatility"),
-        "is_flat": row.get("is_flat"),
-        "tag": list(row.get("tag") or []),
-        "size": row.get("size"),
-        "max_multiplier": row.get("max_multiplier"),
-        "metadata": {
-            "source_file": row.get("source_file"),
-            "file_name": row.get("file_name"),
-            "folder_path": row.get("folder_path"),
-            "processed_at": (
-                processed_at.isoformat(timespec="seconds")
-                if hasattr(processed_at, "isoformat")
-                else processed_at
-            ),
-            "hit_frequency": row.get("hit_frequency"),
-        },
-    }
+def collect_at_most(df: DataFrame, max_rows: int) -> list | None:
+    """The driver-or-shards rule of the sinks: ``df``'s rows when there are
+    at most ``max_rows`` of them, else ``None`` (the caller then writes
+    shards through Spark). One ``limit(max_rows + 1)`` collect, so the
+    check and the driver copy are the same job."""
+    rows = df.limit(max_rows + 1).collect()
+    return rows if len(rows) <= max_rows else None
 
 
 # Above this many pool records the single-document JSON format itself is
@@ -261,9 +226,11 @@ def _record_dict(row: dict) -> dict:
 CONSOLIDATED_DRIVER_MAX_ROWS = 100_000
 
 
-def _sharded_record_col() -> F.Column:
-    """The consolidated record shape (_record_dict) as a Spark struct, for
-    the sharded JSONL spill path — built JVM-side, never collected."""
+def _pool_record_col() -> F.Column:
+    """The reference's nested pool record (etl/transform.py:237-256 plus
+    the output-only max_win_factor), for both the document and the shards.
+    ``processed_at`` is ISO-8601 with the ``+00:00`` offset the reference
+    stamps (etl/transform.py:253); the session factory pins UTC."""
     return F.struct(
         F.col("pool_name"),
         F.col("pool_id"),
@@ -289,30 +256,22 @@ def _sharded_record_col() -> F.Column:
     )
 
 
-def _write_sharded_json(pools: DataFrame, shard_dir: Path) -> Path:
-    """Scale spill for :func:`write_consolidated_json`: one JSON record per
-    line, written by executors (no driver materialization), sorted shards
-    keyed by posix source_file. Not the single-document format — at this
-    cardinality that format is the thing being refused."""
-    key = F.regexp_replace(F.col("source_file"), r"\\", "/")
-    (
-        pools.select(key.alias("key"), _sharded_record_col().alias("record"))
-        .where(F.col("key").isNotNull() & (F.col("key") != ""))
-        .repartitionByRange(F.col("key"))
-        .sortWithinPartitions("key")
-        # ignoreNullFields=false: a null field must serialize as an
-        # explicit null exactly like the consolidated json.dumps path —
-        # a reader switching between store formats sees one record shape
-        # (golden-parity-tested in test_sinks.py)
-        .select(
-            F.to_json(
-                F.struct("key", "record"), {"ignoreNullFields": "false"}
-            ).alias("value")
+def read_consolidated(path: str | Path) -> dict:
+    """{key: record} of a store :func:`write_consolidated_json` wrote, from
+    the document or from the ``part-*`` JSONL lines of its shard
+    directory. A missing store reads as empty."""
+    path = Path(path)
+    if not path.exists():
+        return {}
+    if path.is_dir():
+        lines = (
+            line
+            for part in sorted(path.glob("part-*"))
+            for line in part.read_text(encoding="utf-8").splitlines()
+            if line
         )
-        .write.mode("overwrite")
-        .text(str(shard_dir))
-    )
-    return shard_dir
+        return {d["key"]: d["record"] for d in map(json.loads, lines)}
+    return json.loads(path.read_text(encoding="utf-8"))
 
 
 def write_consolidated_json(
@@ -321,39 +280,42 @@ def write_consolidated_json(
     max_driver_rows: int = CONSOLIDATED_DRIVER_MAX_ROWS,
 ) -> Path:
     """Upsert pool records into the consolidated JSON document keyed by
-    posix-normalized source_file (reference etl/load.py:16-82).
+    source_file (reference etl/load.py:16-82).
 
     The single-document format is inherently driver-side; the collect is
     of the per-pool AGGREGATE (one row per pool file), bounded by
-    ``max_driver_rows``. Above the bound this refuses the collect and
-    writes sharded JSONL to ``<output_file>.shards/`` instead (returned
-    path points at the shard directory)."""
+    ``max_driver_rows``. Above the bound this writes one ``{"key",
+    "record"}`` JSON line per pool, range-sorted by key, to
+    ``<output_file>.shards/`` instead (the returned path points at the
+    shard directory)."""
     output_file = Path(output_file)
-    if pools.limit(max_driver_rows + 1).count() > max_driver_rows:
-        return _write_sharded_json(
-            pools, output_file.with_name(output_file.name + ".shards")
+    keyed = pools.select(
+        F.col("source_file").alias("key"), _pool_record_col().alias("record")
+    ).where(F.col("key").isNotNull() & (F.col("key") != ""))
+    rows = collect_at_most(keyed, max_driver_rows)
+    if rows is None:
+        shard_dir = output_file.with_name(output_file.name + ".shards")
+        (
+            keyed.repartitionByRange("key")
+            .sortWithinPartitions("key")
+            # ignoreNullFields=false: a null field serializes as an
+            # explicit null, exactly like the document's json.dumps
+            .select(F.to_json(F.struct("key", "record"), {"ignoreNullFields": "false"}))
+            .write.mode("overwrite")
+            .text(str(shard_dir))
         )
-    all_data: dict = {}
-    if output_file.exists():
-        try:
-            all_data = json.loads(output_file.read_text(encoding="utf-8"))
-        except (json.JSONDecodeError, OSError):
-            all_data = {}
+        return shard_dir
 
     # deterministic output: the reference processes files in sorted order
     # (etl/extract.py:52), so fresh-run insertion order is sorted paths;
-    # sorting the collected aggregate reproduces that regardless of Spark
-    # task completion order (existing keys keep their position — dict
-    # update semantics — exactly like the reference's upsert)
-    records = []
-    for row in pools.collect():
-        rec = _record_dict(row.asDict())
-        key = rec["metadata"]["source_file"]
-        if not key:
-            continue
-        records.append((str(Path(key).as_posix()), rec))
-    for key, rec in sorted(records, key=lambda kv: kv[0]):
-        all_data[key] = rec
+    # existing keys keep their position (dict update semantics), exactly
+    # like the reference's upsert
+    try:
+        all_data = read_consolidated(output_file)
+    except (json.JSONDecodeError, OSError):
+        all_data = {}
+    for row in sorted(rows, key=lambda r: r.key):
+        all_data[row.key] = row.record.asDict(recursive=True)
 
     output_file.parent.mkdir(parents=True, exist_ok=True)
     output_file.write_text(

@@ -314,7 +314,9 @@ def test_bucketed_merge_rewrites_only_touched_buckets(spark, tmp_path):
         str(p): (p.stat().st_ino, p.stat().st_mtime_ns)
         for p in table.rglob("*.parquet")
     }
+    mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
     upsert_parquet(spark, _pools_df(spark, [("k3.pol", 99.0)]), table, n_buckets=n_buckets)
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == mode
     after = {
         str(p): (p.stat().st_ino, p.stat().st_mtime_ns)
         for p in table.rglob("*.parquet")
@@ -381,6 +383,12 @@ def test_consolidated_json_spills_to_shards_over_threshold(spark, tmp_path):
     rec = recs["p/Pool_0203_395.pol"]
     assert rec["rtp"] == 4749.78 and rec["metadata"]["hit_frequency"] == 100.0
     assert rec["metadata"]["processed_at"].endswith("+00:00")
+    # the index describes the store in either form
+    from github_etl_pipeline_spark.sinks.reports import generate_index_file
+
+    index = _json.loads(generate_index_file(got, tmp_path / "_index.json").read_text())
+    assert index["total_files"] == 5
+    assert [f["source_file"] for f in index["files"]] == sorted(recs)
     # under the threshold: unchanged single-document behavior
     single = write_consolidated_json(_full_pools_df(spark, 2), out, max_driver_rows=3)
     assert single == out and len(_json.loads(out.read_text())) == 2
@@ -413,12 +421,16 @@ def test_sharded_json_matches_consolidated_dict_semantics(spark, tmp_path):
     """Golden parity for the 100-TB overflow path (VERDICT r7 #8): the
     SAME pools written through the sharded-JSONL spill and through the
     single-document consolidated path must yield IDENTICAL per-key
-    record dicts — same keys (posix source_file), same fields, same
+    record dicts — same keys (source_file as it is), same fields, same
     values, explicit nulls included. A consumer switching stores at the
-    threshold must see one record shape."""
+    threshold must see one record shape. The backslash row is a folder
+    named ``a\\b`` on posix: both forms keep the key unchanged."""
     import json as _json
 
-    pools = _full_pools_df(spark, 7)
+    backslash = _full_pools_df(spark, 1).withColumn(
+        "source_file", F.lit("a\\b/Pool_0200_395.pol")
+    )
+    pools = _full_pools_df(spark, 7).unionByName(backslash)
 
     # consolidated single-document path (threshold far above row count)
     single_out = tmp_path / "all_pools_data.json"
@@ -437,3 +449,4 @@ def test_sharded_json_matches_consolidated_dict_semantics(spark, tmp_path):
     sharded = {d["key"]: d["record"] for d in map(_json.loads, lines)}
 
     assert sharded == consolidated
+    assert "a\\b/Pool_0200_395.pol" in consolidated
