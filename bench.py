@@ -130,7 +130,6 @@ def _warm_page_cache(root: str) -> bool:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else None
 
     waited_for_idle = _wait_for_idle()
@@ -146,7 +145,7 @@ def main() -> None:
         sweep_caches,
     )
 
-    spark = get_spark(app_name="bench", cpus=cpus)
+    spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     # structural cache contract (VERDICT r9 #6): per-query sweeps below

@@ -19,14 +19,17 @@ Execution shape (the 100-TB story): the ONLY full-data shuffle is
 aggregation this reduces ~1M rows/pool to the pool's distinct-prize-value
 cardinality (~30 rows observed in the reference corpus) before any
 network transfer. The key is ``source_file`` alone, in the URI form the
-scan lists it in; the distribution decodes it after the shuffle, and the
-other pool key columns come from ``sources.pol.pool_identity`` once per
-pool. Everything after operates on that tiny ``dist`` relation: per-pool
-stats, the rtp-dependent variance pass (a second agg over dist), the
-dimension broadcast join. At 1000 executors the scan dominates; the
-shuffle payload is ~#pools x #distinct_values rows regardless of input
-size. ``dist`` is persisted for the two passes; ``release_pool_kpis``
-drops it once the caller is done with the records.
+scan lists it in. ONE per-pool aggregate over that distribution yields
+the pool stats and collects the pool's valid ``(game_win, cnt)`` pairs;
+the key is decoded and the other pool key columns come from
+``sources.pol.pool_identity`` once per pool; after the broadcast
+dimension join, volatility is a per-row fold over the collected pairs.
+The plan is lazy and side-effect free: nothing is cached, so there is
+nothing to release. The collected array holds one element per distinct
+valid prize value, so it is never longer than the pool's line count —
+the same per-file bound as the reference's whole-file read
+(etl/extract.py:152). At 1000 executors the scan dominates; the shuffle
+payload is ~#pools x #distinct_values rows regardless of input size.
 """
 
 from __future__ import annotations
@@ -52,22 +55,6 @@ def pool_distribution(parsed: DataFrame, key_cols: list[str] | None = None) -> D
     return parsed.groupBy(*key_cols, "game_win").agg(F.count(F.lit(1)).alias("cnt"))
 
 
-def _source_file_distribution(parsed: DataFrame) -> DataFrame:
-    """``pool_distribution`` keyed on ``source_file`` alone, decoded after
-    the shuffle: every other pool key column is a string function of
-    ``source_file``, so the map-side hash agg hashes one string per line
-    instead of six, and the decode runs once per (pool, value) row."""
-    dist = pool_distribution(parsed.select("source_file", "game_win"), ["source_file"])
-    return dist.withColumn("source_file", decode_uri_path(F.col("source_file")))
-
-
-def release_pool_kpis(parsed: DataFrame) -> None:
-    """Drop the distribution cache that ``pool_kpis(parsed)`` persisted.
-    Spark finds cache entries by plan, so rebuilding the same plan and
-    unpersisting it releases the entry without a handle to it."""
-    _source_file_distribution(parsed).unpersist()
-
-
 def pool_kpis(
     parsed: DataFrame,
     dim_agg: DataFrame | None = None,
@@ -83,16 +70,11 @@ def pool_kpis(
     dim_agg    — output of ``prepare_dim`` (norm_pool_id, min_bet, game_ids);
                  broadcast-joined. None -> all lookup-dependent metrics NULL.
     rounding   — 'bankers' (reference parity) or 'half_up' (DuckDB parity).
-
-    The distribution this persists is released by ``release_pool_kpis``.
     """
     rnd = rounder(rounding)
 
-    # The single large shuffle. dist is tiny (#pools x distinct prize
-    # values, +1 NULL group per pool in single-pass mode) — persist it so
-    # the stats pass and the rtp-dependent variance pass don't each
-    # re-scan the raw data.
-    dist = _source_file_distribution(parsed).persist()
+    # The single large shuffle; everything after it is pool-cardinality.
+    dist = pool_distribution(parsed.select("source_file", "game_win"), ["source_file"])
     valid = F.col("game_win").isNotNull()
     stats = dist.groupBy("source_file").agg(
         F.sum(F.col("cnt")).alias("line_count"),
@@ -102,8 +84,9 @@ def pool_kpis(
             F.sum(F.when(valid & (F.col("game_win") > 0), F.col("cnt"))), F.lit(0)
         ).alias("hits"),
         F.max("game_win").alias("max_win"),
+        F.collect_list(F.when(valid, F.struct("game_win", "cnt"))).alias("_dist"),
     )
-    stats = pool_identity(stats)
+    stats = pool_identity(stats.withColumn("source_file", decode_uri_path(F.col("source_file"))))
 
     if dim_agg is not None:
         stats = stats.join(
@@ -143,30 +126,23 @@ def pool_kpis(
             F.col("min_bet").isNotNull() & (F.col("min_bet") > 0) & F.col("max_win").isNotNull(),
             F.col("max_win") / F.col("min_bet"),
         ).alias("max_win_factor"),
+        "_dist",
     )
 
-    # Volatility: second pass over the tiny dist relation with the
-    # pool-level (size, min_bet, rtp) attached. AQE broadcasts the smaller
-    # side at runtime; both inputs are #pools-scale, never raw-data-scale.
-    pool_ctx = kpi.where(F.col("rtp").isNotNull()).select(
-        "source_file", F.col("size").alias("_n"), F.col("min_bet").alias("_bet"), F.col("rtp").alias("_rtp")
-    )
-    # square via multiplication, not pow(): bit-deterministic across
-    # engines/libm implementations (matters for the DuckDB oracle compare)
-    diff = F.col("game_win") / F.col("_bet") - F.col("_rtp") / 100
-    var_term = rnd((F.col("cnt") / F.col("_n")) * diff * diff, 4)
-    vols = (
-        dist.where(F.col("game_win").isNotNull())
-        .select("source_file", "game_win", "cnt")
-        .join(pool_ctx, "source_file")
-        .groupBy("source_file")
-        .agg(rnd(F.lit(Z_90_CI) * F.sqrt(F.sum(var_term)), 2).alias("volatility"))
-    )
-    out = kpi.join(vols, "source_file", "left")
+    # Volatility: a fold over the pool's own (game_win, cnt) pairs, with
+    # the per-term 4dp round; square via multiplication, not pow():
+    # bit-deterministic across engines/libm implementations (matters for
+    # the DuckDB oracle compare)
+    def add_term(acc, x):
+        diff = x["game_win"] / F.col("min_bet") - F.col("rtp") / 100
+        return acc + rnd((x["cnt"] / F.col("size")) * diff * diff, 4)
 
-    out = out.select(
+    variance = F.aggregate("_dist", F.lit(0.0), add_term)
+    volatility = F.when(F.col("rtp").isNotNull(), rnd(F.lit(Z_90_CI) * F.sqrt(variance), 2))
+    out = kpi.select(
         F.col("file_name").alias("pool_name"),
-        *out.columns,
+        *kpi.drop("_dist").columns,
+        volatility.alias("volatility"),
         tag_expr("pool_type").alias("tag"),
         is_flat_expr("pool_type").alias("is_flat"),
         max_multiplier_expr("pool_type").alias("max_multiplier"),

@@ -49,9 +49,10 @@ def pool_extended_stats(parsed: DataFrame, k: int = 10, rounding: str = "bankers
     an ``_order`` column when first/last-k sampling is wanted (see
     ``parse_pol_lines``'s ``with_order`` flag)."""
     rnd = rounder(rounding)
-    keys = [c for c in POOL_KEY_COLS if c in parsed.columns]
 
-    summary = parsed.groupBy(*keys).agg(
+    # keyed on source_file alone (URI form); the other pool key columns
+    # are derived from it once per pool at the end, as in pool_kpis
+    summary = parsed.groupBy("source_file").agg(
         F.count(F.lit(1)).alias("total_records"),
         F.sum("game_win").alias("total_sum"),
         F.min("game_win").alias("min_value"),
@@ -63,14 +64,14 @@ def pool_extended_stats(parsed: DataFrame, k: int = 10, rounding: str = "bankers
     )
 
     # R12 + R13 from ONE (pool, type_code) aggregate
-    td = parsed.where(F.col("type_code").isNotNull()).groupBy(*keys, "type_code").agg(
+    td = parsed.where(F.col("type_code").isNotNull()).groupBy("source_file", "type_code").agg(
         F.count(F.lit(1)).alias("cnt"),
         F.sum("game_win").alias("tsum"),
         F.min("game_win").alias("tmin"),
         F.max("game_win").alias("tmax"),
         rnd(F.avg("game_win"), 2).alias("tavg"),
     )
-    type_stats = td.groupBy(*keys).agg(
+    type_stats = td.groupBy("source_file").agg(
         F.map_from_entries(
             F.array_sort(F.collect_list(F.struct("type_code", "cnt")))
         ).alias("type_distribution"),
@@ -91,7 +92,7 @@ def pool_extended_stats(parsed: DataFrame, k: int = 10, rounding: str = "bankers
         F.sum("cnt").alias("_typed_records"),
     )
     type_stats = type_stats.select(
-        *keys,
+        "source_file",
         "type_distribution",
         F.transform(
             "_ts",
@@ -108,15 +109,15 @@ def pool_extended_stats(parsed: DataFrame, k: int = 10, rounding: str = "bankers
     )
 
     # R14 histogram from one (pool, bucket) aggregate
-    vb = parsed.groupBy(*keys, _bucket_expr("game_win").alias("bucket")).agg(
+    vb = parsed.groupBy("source_file", _bucket_expr("game_win").alias("bucket")).agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    hist = vb.groupBy(*keys).agg(
+    hist = vb.groupBy("source_file").agg(
         F.array_sort(F.collect_list(F.struct("bucket", "cnt"))).alias("_hb"),
         F.sum("cnt").alias("_n"),
     )
     hist = hist.select(
-        *keys,
+        "source_file",
         F.transform(
             "_hb",
             lambda s: F.struct(
@@ -127,7 +128,7 @@ def pool_extended_stats(parsed: DataFrame, k: int = 10, rounding: str = "bankers
         ).alias("value_distribution"),
     )
 
-    out = summary.join(type_stats, keys, "left").join(hist, keys, "left")
+    out = summary.join(type_stats, "source_file", "left").join(hist, "source_file", "left")
 
     if "_order" in parsed.columns:
         wf = Window.partitionBy("source_file").orderBy(F.col("_order").asc())
@@ -158,7 +159,8 @@ def pool_extended_stats(parsed: DataFrame, k: int = 10, rounding: str = "bankers
         out = out.join(samples, "source_file", "left")
 
     # per-pool output keys are decoded paths, as in pool_kpis
-    return pool_identity(out.withColumn("source_file", decode_uri_path(F.col("source_file"))))
+    out = pool_identity(out.withColumn("source_file", decode_uri_path(F.col("source_file"))))
+    return out.select(*POOL_KEY_COLS, *[c for c in out.columns if c not in POOL_KEY_COLS])
 
 
 def streak_summary(

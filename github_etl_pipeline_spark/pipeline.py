@@ -12,7 +12,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from github_etl_pipeline_spark.operators.kpis import pool_kpis, release_pool_kpis
+from github_etl_pipeline_spark.operators.kpis import pool_kpis
 from github_etl_pipeline_spark.operators.rollup import aggregated_summary
 from github_etl_pipeline_spark.sources.lookup import load_game_lookup, prepare_dim
 from github_etl_pipeline_spark.sources.pol import parse_pol_lines, read_pol_lines
@@ -70,13 +70,9 @@ def run_pipeline(
         # counter agg, CSV export) — persist the pool-cardinality aggregate
         # so the corpus-sized scan+shuffle below it runs once, not three
         # times (pools is one row per file: tiny at any corpus size).
-        # TARGETED release in the finally (ADVICE r10, revising the r9
-        # session-wide sweep): the caches released are the two this call
-        # created — pools, and the distribution pool_kpis persisted under
-        # it — even when a sink raises. A session-wide sweep here would
-        # also clear caches owned by the CALLER (e.g. a persisted dim
-        # passed in), forcing recomputes the caller paid to avoid —
-        # session-wide sweeps belong to harness entry points.
+        # Released in the finally, even when a sink raises; only this
+        # cache, never a session-wide sweep that would also drop caches
+        # the CALLER owns (e.g. a persisted dim passed in).
         try:
             pools.persist()
             consolidated = write_consolidated_json(
@@ -104,6 +100,5 @@ def run_pipeline(
             save_as_csv(pools, output_dir / "_all_files_summary.csv")
         finally:
             pools.unpersist()
-            release_pool_kpis(parsed)
 
     return pools, summary

@@ -24,8 +24,8 @@ Spark lists files as URIs, so on lines ``source_file`` and its derived
 columns are in URI form: a space is ``%20``, a literal ``%`` is ``%25``.
 That keeps the per-line aggregation key a plain substring of the listed
 path. ``decode_uri_path`` turns the key into the decoded posix path the
-reference keys its outputs on; ``pool_kpis`` applies it to the per-pool
-distribution, after the shuffle, so no line pays for it.
+reference keys its outputs on; ``pool_kpis`` and ``pool_extended_stats``
+apply it once per pool, after their aggregates, so no line pays for it.
 
 S4 multi-encoding read (etl/extract.py:83-105): ``read_pol_lines`` is the
 UTF-8 text source (correct for this ASCII corpus);

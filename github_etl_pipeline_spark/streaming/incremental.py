@@ -44,7 +44,7 @@ from urllib.parse import unquote
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from github_etl_pipeline_spark.operators.kpis import pool_kpis, release_pool_kpis
+from github_etl_pipeline_spark.operators.kpis import pool_kpis
 from github_etl_pipeline_spark.sinks.upsert import read_store, upsert_parquet
 from github_etl_pipeline_spark.sources.pol import (
     drop_excluded,
@@ -63,12 +63,16 @@ def _upsert_pools(
     rounding: str,
 ) -> None:
     """The tail every runner shares: KPI records of ``lines`` MERGEd into
-    the store, then the distribution cache ``pool_kpis`` took released."""
+    the store. A merge into an existing store runs two actions over the
+    records (the touched buckets, then the write), so the pool-sized
+    ``pool_kpis`` result is persisted for the call and released in the
+    finally: the scan and shuffle under it run once."""
     parsed = parse_pol_lines(lines, keep_invalid=True)
+    pools = pool_kpis(parsed, dim_agg=dim_agg, rounding=rounding).persist()
     try:
-        upsert_parquet(spark, pool_kpis(parsed, dim_agg=dim_agg, rounding=rounding), store_path)
+        upsert_parquet(spark, pools, store_path)
     finally:
-        release_pool_kpis(parsed)
+        pools.unpersist()
 
 
 def run_incremental(

@@ -121,3 +121,6 @@ def test_run_pipeline_releases_the_caches_it_creates(spark, tmp_path, dim):
     for i in range(2):
         run_pipeline(spark, root, dim=dim, output_dir=tmp_path / f"out{i}")
         assert n_persisted() == before
+        pools, _ = run_pipeline(spark, root, dim=dim)
+        pools.collect()
+        assert n_persisted() == before

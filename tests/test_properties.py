@@ -43,7 +43,12 @@ def _mk_pool(rng, size, max_win, zero_frac):
 @pytest.fixture(scope="module")
 def dim_agg(spark):
     dim = spark.createDataFrame(
-        [("G", "1", "100", 10.0), ("G", "2", "200", 25.0), ("G", "3", "300", 40.0)],
+        [
+            ("G", "1", "100", 10.0),
+            ("G", "2", "200", 25.0),
+            ("G", "3", "300", 40.0),
+            ("G", "4", "400", 5.0),
+        ],
         "Game string, Game_id string, Pool_id string, Bet double",
     )
     return prepare_dim(dim)
@@ -74,8 +79,11 @@ def test_random_pools_match_reference_semantics(spark, dim_agg):
         "0100": _mk_pool(rng, 5000, 2500, 0.5),
         "0200": _mk_pool(rng, 3000, 100, 0.1),
         "0300": _mk_pool(rng, 800, 50000, 0.9),
+        # hostile input for the per-pool (game_win, cnt) array pool_kpis
+        # folds: every value distinct, so the array is as long as the pool
+        "0400": rng.sample(range(10_000_000), 100_000),
     }
-    bets = {"0100": 10.0, "0200": 25.0, "0300": 40.0}
+    bets = {"0100": 10.0, "0200": 25.0, "0300": 40.0, "0400": 5.0}
     got = _run_engine(spark, pools, dim_agg)
     for pid, values in pools.items():
         rtp, hit, vol = ref_semantics(values, bets[pid])

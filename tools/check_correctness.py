@@ -93,7 +93,7 @@ def main() -> int:
         sweep_caches,
     )
 
-    spark = get_spark(app_name="check_correctness", cpus="32")
+    spark = get_spark(app_name="check_correctness")
     spark.sparkContext.setLogLevel("ERROR")
 
     # session warmup so the FIRST checked queries don't book JVM codegen /

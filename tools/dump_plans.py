@@ -19,10 +19,12 @@ FLAGSHIPS = {
     "pool_kpis_synth": (
         "The reference's whole pipeline as ONE plan: scan -> parse -> single "
         "groupBy(source_file, game_win) shuffle with map-side partial "
-        "aggregation -> tiny distribution relation -> broadcast dim join -> "
-        "second agg for volatility. Look for: one Exchange over the raw rows, "
-        "BroadcastHashJoin for the dimension, ReusedExchange for the "
-        "distribution re-use."
+        "aggregation -> ONE per-pool aggregate that also collects the pool's "
+        "(game_win, cnt) pairs -> broadcast dim join -> volatility as a "
+        "per-row fold over those pairs. Look for: one Exchange over the raw "
+        "rows, an ObjectHashAggregate pair over pool-cardinality rows, "
+        "BroadcastHashJoin for the dimension, no InMemoryRelation and no "
+        "second join."
     ),
     "pricing_summary": (
         "Predicate pushdown + column pruning: the filter and the 7-column "

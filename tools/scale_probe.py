@@ -614,7 +614,7 @@ def main() -> int:
     }
     have_sf10 = have_sf3 and bool(sf10_tables)
 
-    spark = get_spark(app_name="scale_probe", cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = get_spark(app_name="scale_probe")
     spark.sparkContext.setLogLevel("ERROR")
     # warmup: JVM/codegen, Python-worker/Arrow, parquet reader, plus one
     # full throwaway probe query — same block as bench.py, so the first
