@@ -42,6 +42,7 @@ from github_etl_pipeline_spark.operators.text import (
     TOKEN_RE,
     quality_features,
 )
+from github_etl_pipeline_spark.sinks import commit
 
 
 def boilerplate_ngrams(
@@ -217,30 +218,10 @@ def compact_gram_index(
     rewrite happened.
 
     The ratio check is one aggregate over the skinny index; the rewrite
-    is one shuffle of the index (never the corpus). Written to a
-    sibling temp dir then rename-swapped. The swap is crash-RECOVERABLE,
-    not atomic (ADVICE r5): a crash between the two renames leaves the
-    complete old index at ``._old`` and the complete new one at
-    ``._compact`` — the stale-dir sweep below finishes or restarts the
-    job on the next call, and no state loses data. It is also not
-    isolated for an in-flight Spark read (directory renames never are);
-    run compaction in the same maintenance window as the other
-    single-writer index operations (``mode="append"`` has the same
-    constraint)."""
-    import shutil
-    from pathlib import Path
-
-    index_path = Path(str(index_path))
-    tmp = index_path.with_name(index_path.name + "._compact")
-    old = index_path.with_name(index_path.name + "._old")
-    # sweep leftovers from a prior crashed run (they would make the
-    # renames below fail): a stranded ._old with NO live index is the
-    # crashed-between-renames state — restore it instead of deleting
-    if old.exists() and not index_path.exists():
-        old.rename(index_path)
-    for stale in (tmp, old):
-        if stale.exists():
-            shutil.rmtree(stale)
+    is one shuffle of the index (never the corpus), committed through
+    ``sinks/commit.py``. Run it in the same maintenance window as the
+    other single-writer index operations (``mode="append"``)."""
+    staging = commit.begin(index_path)
     idx = spark.read.parquet(str(index_path))
     total, distinct = idx.agg(
         F.count(F.lit(1)), F.count_distinct("gh")
@@ -251,11 +232,9 @@ def compact_gram_index(
         idx.groupBy("gh")
         .agg(F.sum("cnt").alias("cnt"))
         .write.mode("overwrite")
-        .parquet(str(tmp))
+        .parquet(str(staging))
     )
-    index_path.rename(old)
-    tmp.rename(index_path)
-    shutil.rmtree(old)
+    commit.promote(index_path)
     return True
 
 

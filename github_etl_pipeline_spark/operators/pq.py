@@ -41,6 +41,7 @@ from github_etl_pipeline_spark.operators.similarity import (
     read_centroids,
     write_centroids,
 )
+from github_etl_pipeline_spark.sinks import commit
 
 Codebooks = list[list[list[float]]]  # [m][k][dsub]
 
@@ -602,47 +603,47 @@ def build_ivfpq_index(
     ``pq_reconstruction_error`` drops sharply under residualization —
     that is the regime where the FAISS default pays. Citing the
     reference is N/A — the reference engine (etl/*.py) has no vector
-    surface at all."""
-    from pathlib import Path
-
-    from github_etl_pipeline_spark.operators.similarity import _sample_centroids
-
-    index_path = Path(str(index_path))
+    surface at all. Like ``build_ivf_index``, it is built in staging
+    and promoted whole (``sinks/commit.py``)."""
+    staging = commit.begin(index_path)
     emb = emb.persist()
-    # r14 build-pass fusion (guide §1.2): ONE md5-ordered sample serves
-    # both the coarse centroids and the PQ seeds (the PQ sample was the
-    # SAME prefix of the SAME ordering — one TakeOrdered job instead of
-    # two), and each Lloyd iteration refines coarse + all subspaces in
-    # ONE corpus scan instead of two (_fused_coarse_pq_lloyd). 4 corpus
-    # passes + 2 sample jobs -> 2 passes + 1 sample job per build;
-    # outputs bit-identical (see the fused helper's contract).
-    sampled = _sample_centroids(emb, id_col, vec_col, max(n_centroids, k))
-    centroids = sampled[:n_centroids]
-    dim = len(sampled[0][1]) if sampled else 0
-    books: Codebooks = [
-        [
-            [float(x) for x in vec[ms * (dim // m) : (ms + 1) * (dim // m)]]
-            for _, vec in sampled[:k]
+    try:
+        # r14 build-pass fusion (guide §1.2): ONE md5-ordered sample serves
+        # both the coarse centroids and the PQ seeds (the PQ sample was the
+        # SAME prefix of the SAME ordering — one TakeOrdered job instead of
+        # two), and each Lloyd iteration refines coarse + all subspaces in
+        # ONE corpus scan instead of two (_fused_coarse_pq_lloyd). 4 corpus
+        # passes + 2 sample jobs -> 2 passes + 1 sample job per build;
+        # outputs bit-identical (see the fused helper's contract).
+        sampled = _sample_centroids(emb, id_col, vec_col, max(n_centroids, k))
+        centroids = sampled[:n_centroids]
+        dim = len(sampled[0][1]) if sampled else 0
+        books: Codebooks = [
+            [
+                [float(x) for x in vec[ms * (dim // m) : (ms + 1) * (dim // m)]]
+                for _, vec in sampled[:k]
+            ]
+            for ms in range(m)
         ]
-        for ms in range(m)
-    ]
-    centroids, books = _fused_coarse_pq_lloyd(
-        emb, vec_col, centroids, books, lloyd_iterations
-    )
-    # r14: both relations are driver-bounded — write them driver-side
-    # instead of paying one Spark job each (guide §5; see write_centroids)
-    write_centroids(index_path / "centroids", centroids)
-    write_codebooks(index_path / "codebooks", books)
-    cc = _cell_codes_udf(centroids, books)
-    (
-        emb.select(F.col(id_col), cc(F.col(vec_col)).alias("_cc"))
-        .select(F.col(id_col), F.col("_cc.cell").alias("cell"), F.col("_cc.codes").alias("codes"))
-        .repartition(n_centroids, F.col("cell"))
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(str(index_path / "codes"))
-    )
-    emb.unpersist()
+        centroids, books = _fused_coarse_pq_lloyd(
+            emb, vec_col, centroids, books, lloyd_iterations
+        )
+        # r14: both relations are driver-bounded — write them driver-side
+        # instead of paying one Spark job each (guide §5; see write_centroids)
+        write_centroids(staging / "centroids", centroids)
+        write_codebooks(staging / "codebooks", books)
+        cc = _cell_codes_udf(centroids, books)
+        (
+            emb.select(F.col(id_col), cc(F.col(vec_col)).alias("_cc"))
+            .select(F.col(id_col), F.col("_cc.cell").alias("cell"), F.col("_cc.codes").alias("codes"))
+            .repartition(n_centroids, F.col("cell"))
+            .write.mode("overwrite")
+            .partitionBy("cell")
+            .parquet(str(staging / "codes"))
+        )
+    finally:
+        emb.unpersist()
+    commit.promote(index_path)
 
 
 def ann_ivfpq_append(

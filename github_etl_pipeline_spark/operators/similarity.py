@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from github_etl_pipeline_spark.sinks import commit
+
 
 def dot_expr(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -593,34 +595,37 @@ def build_ivf_index(
     build runs once — the ``build_minhash_index`` pattern — and
     ``ann_ivf_search`` is a pure bucket-pruned join against the stored
     cells. At 100 TB the index is rebuilt on corpus refresh cadence, not
-    per query.
+    per query. The index is built in staging and promoted whole
+    (``sinks/commit.py``): a failed rebuild leaves the served index as
+    it was.
     """
-    from pathlib import Path
-
-    index_path = Path(str(index_path))
+    staging = commit.begin(index_path)
     if lloyd_iterations > 0:
         emb = emb.persist()
-    centroids = _sample_centroids(emb, id_col, vec_col, n_centroids)
-    if lloyd_iterations > 0:
-        centroids = _lloyd_refine(emb, vec_col, centroids, lloyd_iterations)
-    # r14: the centroid table is driver-bounded — write it driver-side
-    # (one pyarrow file, same schema/layout) instead of paying a whole
-    # Spark job to move n_centroids rows (guide §5; the r13 form already
-    # collapsed 32 slice handoffs to one, this removes the job outright)
-    write_centroids(index_path / "centroids", centroids)
-    (
-        _assign_cells(emb, centroids, id_col, vec_col)
-        # co-locate each cell before the partitioned write: one file per
-        # cell directory instead of (cells x write-tasks) small files, so
-        # a probe of n_probe cells opens n_probe files. At fleet scale
-        # raise the partition count to target ~128 MB files per cell.
-        .repartition(n_centroids, F.col("cell"))
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(str(index_path / "cells"))
-    )
-    if lloyd_iterations > 0:
-        emb.unpersist()
+    try:
+        centroids = _sample_centroids(emb, id_col, vec_col, n_centroids)
+        if lloyd_iterations > 0:
+            centroids = _lloyd_refine(emb, vec_col, centroids, lloyd_iterations)
+        # r14: the centroid table is driver-bounded — write it driver-side
+        # (one pyarrow file, same schema/layout) instead of paying a whole
+        # Spark job to move n_centroids rows (guide §5; the r13 form already
+        # collapsed 32 slice handoffs to one, this removes the job outright)
+        write_centroids(staging / "centroids", centroids)
+        (
+            _assign_cells(emb, centroids, id_col, vec_col)
+            # co-locate each cell before the partitioned write: one file per
+            # cell directory instead of (cells x write-tasks) small files, so
+            # a probe of n_probe cells opens n_probe files. At fleet scale
+            # raise the partition count to target ~128 MB files per cell.
+            .repartition(n_centroids, F.col("cell"))
+            .write.mode("overwrite")
+            .partitionBy("cell")
+            .parquet(str(staging / "cells"))
+        )
+    finally:
+        if lloyd_iterations > 0:
+            emb.unpersist()
+    commit.promote(index_path)
 
 
 def ann_ivf_append(

@@ -18,17 +18,18 @@ RANGE-PARTITIONED and SORTED on the caller's key columns:
 
 The rewrite is one wide job: a range-exchange (sampled boundaries, AQE
 coalesces empty buckets) + local sort — no driver materialization at any
-size. The swap is the same staging-dir rename the upsert sink uses:
-last-writer-wins snapshot semantics, not ACID (documented there).
+size. ``output_dir`` is replaced by a directory commit (``sinks/commit.py``),
+so compacting in place never loses the table; not ACID.
 """
 
 from __future__ import annotations
 
-import shutil
 from pathlib import Path
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from github_etl_pipeline_spark.sinks import commit
 
 
 def compact_parquet(
@@ -58,6 +59,8 @@ def compact_parquet(
     if bool(sort_cols) == bool(zorder_by):
         raise ValueError("compact_parquet: pass exactly one of sort_cols / zorder_by")
     input_dir, output_dir = Path(input_dir), Path(output_dir)
+    # recover first: in place, the input IS the committed target
+    staging = commit.begin(output_dir)
     df = spark.read.parquet(str(input_dir))
     if zorder_by:
         from github_etl_pipeline_spark.functions.zorder import zorder_sql
@@ -75,9 +78,6 @@ def compact_parquet(
     # files, defeating the compaction
     per_file_cap = max(1, int(target_rows_per_file * 1.5))
 
-    staging = output_dir.with_name(output_dir.name + ".staging")
-    if staging.exists():
-        shutil.rmtree(staging)
     out = df.repartitionByRange(n_files, *[F.col(c) for c in sort_cols]).sortWithinPartitions(
         *sort_cols
     )
@@ -88,8 +88,6 @@ def compact_parquet(
         .mode("overwrite")
         .parquet(str(staging))
     )
-    if output_dir.exists():
-        shutil.rmtree(output_dir)
-    staging.rename(output_dir)
+    commit.promote(output_dir)
     files_after = len(list(output_dir.glob("*.parquet")))
     return {"rows": rows, "files_before": files_before, "files_after": files_after}

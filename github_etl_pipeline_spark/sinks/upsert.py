@@ -30,11 +30,12 @@ equivalents:
 from __future__ import annotations
 
 import json
-import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from github_etl_pipeline_spark.sinks import commit
 
 # Bucket count for the hash-partitioned store layout. 64 keeps sf-scale
 # test stores small; at fleet scale pick ~(store size / target file size)
@@ -152,9 +153,12 @@ def upsert_parquet(
 
     A pre-existing UNBUCKETED store (written by an older version of this
     sink) is migrated in one full rewrite on first merge; thereafter all
-    merges are bucket-pruned.
+    merges are bucket-pruned. Create and migration are directory commits
+    (``sinks/commit.py``).
     """
     table_path = Path(table_path)
+    # before the layout check: recovery may move a flat store back here
+    staging = commit.begin(table_path)
     updates = _with_bucket(updates, key, n_buckets)
 
     if table_path.exists() and _is_bucketed_store(table_path):
@@ -186,11 +190,8 @@ def upsert_parquet(
             existing = _with_bucket(existing, key, n_buckets)
         merged = _keep_newest(updates, existing, key)
 
-    staging = table_path.with_name(table_path.name + "._staging")
     merged.write.mode("overwrite").partitionBy(_BUCKET_COL).parquet(str(staging))
-    if table_path.exists():
-        shutil.rmtree(table_path)
-    staging.rename(table_path)
+    commit.promote(table_path)
 
 
 def _keep_newest(updates: DataFrame, existing: DataFrame, key: str) -> DataFrame:

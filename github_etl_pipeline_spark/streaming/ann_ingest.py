@@ -18,9 +18,8 @@ math append == rebuild-with-frozen-state (tests/test_pq.py pins the
 batch operator; tests/test_ann_ingest.py pins the loop), so a served
 search over N batches equals the search over their one-shot union.
 
-Idempotency / crash safety (the dedup-ingest protocol, simplified —
-every write here is an OVERWRITE of a batch-scoped or bootstrap-scoped
-location, so no three-rename staging is needed):
+Idempotency / crash safety (the one directory commit,
+``sinks/commit.py``):
   * codes: one ``codes/batch=<id>`` directory per micro-batch,
     partitioned by cell INSIDE it — a replayed epoch rewrites the same
     directory instead of double-appending (plain ``mode("append")``,
@@ -28,13 +27,11 @@ location, so no three-rename staging is needed):
     redelivery). Spark's partition discovery exposes both ``batch`` and
     ``cell`` as partition columns, so the search's cell pruning works
     unchanged across shards.
-  * bootstrap: centroids + codebooks are trained on the FIRST batch
-    and written with overwrite — a replayed bootstrap epoch retrains on
-    the identical batch (deterministic build) and rewrites the same
-    bytes.
-  * the ``_last_batch`` high-water marker is written LAST via
-    write-to-temp + atomic rename; every crash point therefore replays
-    the epoch into overwrite-idempotent locations.
+  * bootstrap: the FIRST batch builds the whole index (centroids,
+    codebooks, its shard, its epoch stamp) in staging and promotes it;
+    a crash mid-bootstrap replays the deterministic build from scratch.
+  * later batches stamp their epoch id into the live index after their
+    shard, so a crash replays into overwrite-idempotent locations.
 
 Distribution drift: frozen codebooks lose DISTORTION quality, never
 correctness — watch ``pq_reconstruction_error`` on each delta and
@@ -62,6 +59,7 @@ from github_etl_pipeline_spark.operators.similarity import (
     read_centroids,
     write_centroids,
 )
+from github_etl_pipeline_spark.sinks import commit
 
 
 def _load_frozen(spark: SparkSession, index_path: Path):
@@ -88,20 +86,18 @@ def run_ann_ingest(
     """Start (availableNow) the continuous ANN-index ingest; returns the
     StreamingQuery — callers ``awaitTermination()``. ``emb_stream`` is a
     streaming DataFrame of (id_col, vec_col). Like the rollup store,
-    ``index_path`` / ``checkpoint_dir`` are a pair: epoch ids are only
-    meaningful against the checkpoint that produced them."""
+    ``index_path`` / ``checkpoint_dir`` are a pair."""
     index_path = Path(str(index_path))
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        marker = index_path / "_last_batch"
-        if marker.exists() and batch_id <= int(marker.read_text()):
+        staging = commit.begin(index_path)
+        if commit.applied(index_path, batch_id):
             return  # replayed epoch: shard already applied
 
+        bootstrap = not index_path.exists()
+        target = staging if bootstrap else index_path
         try:
             batch_df = batch_df.persist()
-            bootstrap = not (index_path / "centroids").exists()
             if bootstrap:
                 # train on the first delta — the deterministic build, so
                 # a replayed bootstrap rewrites identical bytes
@@ -116,8 +112,8 @@ def run_ann_ingest(
                 )
                 # r14: driver-side writes (write_centroids rationale) —
                 # a replayed bootstrap still rewrites identical values
-                write_centroids(index_path / "centroids", centroids)
-                write_codebooks(index_path / "codebooks", books)
+                write_centroids(target / "centroids", centroids)
+                write_codebooks(target / "codebooks", books)
             else:
                 centroids, books = _load_frozen(spark, index_path)
 
@@ -130,15 +126,13 @@ def run_ann_ingest(
                 .repartition(len(centroids), F.col("cell"))
                 .write.mode("overwrite")
                 .partitionBy("cell")
-                .parquet(str(index_path / "codes" / f"batch={batch_id}"))
+                .parquet(str(target / "codes" / f"batch={batch_id}"))
             )
-
-            # high-water LAST, atomically: temp write + rename
-            tmp = index_path / "_last_batch.tmp"
-            tmp.write_text(str(batch_id))
-            os.replace(tmp, marker)
         finally:
             batch_df.unpersist()
+        commit.stamp(target, batch_id)
+        if bootstrap:
+            commit.promote(index_path)
 
     return (
         emb_stream.writeStream.foreachBatch(sink)

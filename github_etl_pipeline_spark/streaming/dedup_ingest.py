@@ -12,19 +12,18 @@ own skinny (id, pos, gh) relation against the vocabulary-bounded
 ``(gh, cnt)`` index (``duplicate_spans_against_index``), and the index
 advances by a merge of per-gram counts — the same semantics as
 ``build_gram_index(mode="append")`` + ``compact_gram_index`` but
-maintained crash-safe per batch with the three-rename promote protocol
-proven by ``streaming/rollup.py`` (the index is rewritten per batch;
-it is thousands of times smaller than the text, so the rewrite is the
+maintained crash-safe per batch (the index is rewritten per batch; it
+is thousands of times smaller than the text, so the rewrite is the
 cheap side of the loop).
 
 Idempotency / crash safety:
   * cleaned output: one ``batch=<id>`` directory per micro-batch,
     written with overwrite — a replayed epoch rewrites the same
     directory byte-for-byte instead of appending duplicates.
-  * index: staged write + rename promote with the ``_last_batch``
-    high-water marker traveling INSIDE the staged directory, exactly
-    the rollup store's protocol — every crash point leaves a complete
-    index on disk, and a replayed epoch short-circuits on the marker.
+  * index: rewritten through the one directory commit
+    (``sinks/commit.py``), stamped with the batch's epoch id — every
+    crash point leaves a complete index on disk, and a replayed epoch
+    short-circuits on the stamp.
   * the output shard is written BEFORE the index promotes, so a crash
     between them replays the batch: the shard overwrite is idempotent
     and the index merge re-runs from the pre-batch index.
@@ -43,6 +42,7 @@ from github_etl_pipeline_spark.operators.curation import (
     duplicate_spans_against_index,
 )
 from github_etl_pipeline_spark.operators.text import TOKEN_RE
+from github_etl_pipeline_spark.sinks import commit
 
 
 def clean_with_spans(
@@ -106,27 +106,13 @@ def run_dedup_ingest(
     StreamingQuery — callers ``awaitTermination()``. ``docs_stream`` is
     a streaming DataFrame of documents (at minimum ``id_col`` +
     ``text_col``). Like the rollup store, ``index_path`` /
-    ``checkpoint_dir`` are a pair: epoch ids are only meaningful
-    against the checkpoint that produced them."""
+    ``checkpoint_dir`` are a pair."""
     out_path = Path(str(out_path))
     index_path = Path(str(index_path))
-    staging = index_path.with_name(index_path.name + "._staging")
-    old = index_path.with_name(index_path.name + "._old")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
-        # -- crash recovery (rollup three-rename protocol) --
-        if old.exists():
-            if index_path.exists():
-                shutil.rmtree(old)  # crashed after promote
-            else:
-                old.rename(index_path)  # crashed between renames
-        if staging.exists():
-            shutil.rmtree(staging)
-
-        marker = index_path / "_last_batch"
-        if marker.exists() and batch_id <= int(marker.read_text()):
+        staging = commit.begin(index_path)
+        if commit.applied(index_path, batch_id):
             return  # replayed epoch: shard + index already applied
 
         # TARGETED unpersist (ADVICE r10, revising the r9 session-wide
@@ -179,12 +165,8 @@ def run_dedup_ingest(
             else:
                 merged = delta
             merged.write.mode("overwrite").parquet(str(staging))
-            (staging / "_last_batch").write_text(str(batch_id))
-            if index_path.exists():
-                index_path.rename(old)
-            staging.rename(index_path)
-            if old.exists():
-                shutil.rmtree(old)
+            commit.stamp(staging, batch_id)
+            commit.promote(index_path)
         finally:
             batch_df.unpersist()
             if cleaned is not None:

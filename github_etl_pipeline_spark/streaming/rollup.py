@@ -15,23 +15,9 @@ volume, each micro-batch shuffles only its own partial (one hash
 aggregate per batch), and restarts are safe because the streaming
 checkpoint replays unprocessed files only.
 
-Exactly-once: Structured Streaming may re-run a micro-batch after a
-sink failure (foreachBatch is at-least-once), and ADDING the same
-partial twice double-counts. The sink therefore records the epoch id it
-last applied in a ``_last_batch`` sidecar INSIDE the store directory
-(swapped atomically with the data): a replayed batch_id <= high-water is
-skipped. Sidecar-and-data move together in the same staging rename, so
-the marker can never disagree with the data it describes.
-
-Crash windows during the swap itself are handled by a three-step
-rename protocol (never a delete-then-rename): the current store is
-renamed aside to ``<store>._old``, the fully-written staging dir is
-renamed into place, and only then is ``._old`` deleted. Every sink
-invocation first RECOVERS from a leftover ``._old`` (crash between
-rename-aside and promote: the old store is renamed back) and clears any
-stale staging dir before writing its own, so a retried batch always
-re-reads a complete previous store — the history is never exposed to a
-window where no copy exists on disk.
+Exactly-once and crash safety: each merged store is a directory commit
+(``sinks/commit.py``) stamped with the batch's epoch id, so a crash at
+any point leaves a complete store and a replayed epoch is skipped.
 """
 
 from __future__ import annotations
@@ -42,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from github_etl_pipeline_spark.functions.epoch import event_micros, bucket_div_sql
+from github_etl_pipeline_spark.sinks import commit
 
 HOUR_US = 3_600_000_000
 
@@ -90,34 +77,14 @@ def maintain_hourly_rollup(
     """Start (availableNow) a stream that keeps the hourly rollup store
     current. Returns the StreamingQuery; callers awaitTermination().
 
-    The store and ``checkpoint_dir`` are a PAIR: epoch ids in the
-    store's ``_last_batch`` high-water marker are only meaningful against
-    the checkpoint that produced them. Re-pointing an existing store at a
-    fresh checkpoint restarts epoch numbering at 0 and the marker would
-    silently skip the first batches — start a fresh store with a fresh
-    checkpoint."""
+    The store and ``checkpoint_dir`` are a PAIR (``sinks/commit.py``):
+    start a fresh store with a fresh checkpoint."""
     store_path = Path(store_path)
 
-    staging = store_path.with_name(store_path.name + "._staging")
-    old = store_path.with_name(store_path.name + "._old")
-
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
-        # -- crash recovery (see module docstring: three-rename protocol) --
-        if old.exists():
-            if store_path.exists():
-                # crashed after promote, before cleanup: new store is live
-                shutil.rmtree(old)
-            else:
-                # crashed between rename-aside and promote: restore history
-                old.rename(store_path)
-        if staging.exists():
-            shutil.rmtree(staging)  # incomplete write from a dead attempt
-
-        marker = store_path / "_last_batch"
-        if marker.exists() and batch_id <= int(marker.read_text()):
-            return  # replayed epoch — already applied, skip (idempotent)
+        staging = commit.begin(store_path)
+        if commit.applied(store_path, batch_id):
+            return  # replayed epoch: already applied
         partial = hourly_partial(batch_df, time_col)
         if store_path.exists():
             existing = spark.read.parquet(str(store_path))
@@ -125,16 +92,8 @@ def maintain_hourly_rollup(
         else:
             merged = partial
         merged.write.mode("overwrite").parquet(str(staging))
-        # high-water travels WITH the data in one atomic rename
-        (staging / "_last_batch").write_text(str(batch_id))
-        # promote via renames only — at every instant a complete copy of
-        # the store exists on disk (as <store>, ._old, or fully-written
-        # ._staging), so no crash point can lose the accumulated history
-        if store_path.exists():
-            store_path.rename(old)
-        staging.rename(store_path)
-        if old.exists():
-            shutil.rmtree(old)
+        commit.stamp(staging, batch_id)
+        commit.promote(store_path)
 
     return (
         events_stream.writeStream.foreachBatch(sink)

@@ -2,6 +2,8 @@
 bootstrap training, per-batch replay-idempotent code shards, served
 search over everything ingested, and restart/crash recovery."""
 
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from github_etl_pipeline_spark.operators.pq import (
@@ -9,6 +11,7 @@ from github_etl_pipeline_spark.operators.pq import (
     build_ivfpq_index,
 )
 from github_etl_pipeline_spark.sources.tables import read_table
+from github_etl_pipeline_spark.streaming import ann_ingest
 from github_etl_pipeline_spark.streaming.ann_ingest import run_ann_ingest
 
 SF = "/root/testdata/sf0.001"
@@ -114,3 +117,33 @@ def test_crash_before_marker_replays_idempotently(spark, tmp_path):
         for r in spark.read.parquet(str(idx / "codes")).collect()
     )
     assert after == before  # overwrite-idempotent replay, byte-stable content
+
+
+def test_crashed_bootstrap_replays_from_scratch(spark, tmp_path, monkeypatch):
+    """A crash between the bootstrap's centroid and codebook writes must
+    not wedge the index: the replayed epoch bootstraps again and ends
+    with the same index a clean ingest builds."""
+    src, idx, ckpt = tmp_path / "src", tmp_path / "idx", tmp_path / "ckpt"
+    _feed(spark, src, _rows(spark, 0, 200))
+
+    def crash(path, books):
+        raise RuntimeError("crash between the bootstrap writes")
+
+    with monkeypatch.context() as m:
+        m.setattr(ann_ingest, "write_codebooks", crash)
+        with pytest.raises(StreamingQueryException):
+            _run(spark, src, idx, ckpt)
+    _run(spark, src, idx, ckpt)
+
+    clean = tmp_path / "clean_idx"
+    _run(spark, src, clean, tmp_path / "clean_ckpt")
+
+    def codes(path):
+        return sorted(
+            (r["vec_id"], r["cell"], tuple(r["codes"]))
+            for r in spark.read.parquet(str(path / "codes")).collect()
+        )
+
+    assert len(codes(idx)) == 200
+    assert codes(idx) == codes(clean)
+    assert (idx / "_last_batch").read_text() == "0"

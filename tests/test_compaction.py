@@ -65,3 +65,23 @@ def test_compact_requires_sort_cols(spark, tmp_path):
 
     with pytest.raises(ValueError):
         compact_parquet(spark, tmp_path, tmp_path / "o", sort_cols=[])
+
+
+def test_compact_in_place_recovers_crashed_swap(spark, tmp_path):
+    """Crash between the two renames of an in-place compaction: the table
+    sits only at its ``._old`` name and a half-written staging dir is
+    lying around. The next call restores the table and compacts all of
+    it."""
+    table = tmp_path / "t"
+    _fragmented_table(spark, table)
+    old = table.with_name(table.name + "._old")
+    staging = table.with_name(table.name + "._staging")
+    table.rename(old)
+    staging.mkdir()
+    (staging / "junk.parquet").write_text("not a real file")
+
+    stats = compact_parquet(spark, table, table, sort_cols=["k"], target_rows_per_file=500)
+    assert stats["rows"] == 2000
+    assert stats["files_after"] <= 5
+    assert spark.read.parquet(str(table)).count() == 2000
+    assert not old.exists() and not staging.exists()

@@ -220,7 +220,7 @@ def test_compact_gram_index_folds_append_partials(spark, tmp_path):
 
 def test_compact_gram_index_recovers_crashed_swap(spark, tmp_path):
     """Every crash state of the rename-swap must self-heal on the next
-    call (ADVICE r5): stale ._compact / ._old leftovers are swept, and
+    call (ADVICE r5): stale ._staging / ._old leftovers are swept, and
     the stranded-._old-with-no-live-index state (crash between the two
     renames) is restored instead of deleted."""
     import shutil
@@ -238,12 +238,12 @@ def test_compact_gram_index_recovers_crashed_swap(spark, tmp_path):
     build_gram_index(docs, idx, k=3, mode="append")
     n_distinct = spark.read.parquet(str(idx)).select("gh").distinct().count()
 
-    # crash state A: a prior run died after writing ._compact
-    shutil.copytree(idx, idx.with_name(idx.name + "._compact"))
+    # crash state A: a prior run died after writing ._staging
+    shutil.copytree(idx, idx.with_name(idx.name + "._staging"))
     # crash state B leftovers: a stale ._old next to a live index
     shutil.copytree(idx, idx.with_name(idx.name + "._old"))
     assert compact_gram_index(spark, idx) is True
-    assert not idx.with_name(idx.name + "._compact").exists()
+    assert not idx.with_name(idx.name + "._staging").exists()
     assert not idx.with_name(idx.name + "._old").exists()
     assert spark.read.parquet(str(idx)).count() == n_distinct
 

@@ -7,6 +7,7 @@ per query."""
 import pytest
 from pyspark.sql import functions as F
 
+from github_etl_pipeline_spark.operators.pq import ann_ivfpq_search, build_ivfpq_index
 from github_etl_pipeline_spark.operators.similarity import (
     ann_ivf_search,
     ann_ivf_topk,
@@ -210,3 +211,52 @@ def test_build_survives_empty_scan_partitions(spark, tmp_path):
     n = read_table(spark, SF, "embeddings").count()
     assert cells.count() == n
     assert cells.select("vec_id").distinct().count() == n
+
+
+@pytest.mark.parametrize(
+    "build, search, step",
+    [
+        (
+            build_ivf_index,
+            ann_ivf_search,
+            "github_etl_pipeline_spark.operators.similarity._assign_cells",
+        ),
+        (
+            build_ivfpq_index,
+            ann_ivfpq_search,
+            "github_etl_pipeline_spark.operators.pq._cell_codes_udf",
+        ),
+    ],
+    ids=["ivf", "ivfpq"],
+)
+def test_failed_rebuild_leaves_served_index_and_caches(
+    spark, tmp_path, monkeypatch, build, search, step
+):
+    """A rebuild that fails after writing its small tables and before
+    writing the corpus must not change what the index serves (the new
+    index is promoted only once complete) and must not leave the corpus
+    it persisted cached."""
+    emb = read_table(spark, SF, "embeddings")
+    path = str(tmp_path / "idx")
+    build(emb.where(F.col("vec_id") % 2 == 0), path, n_centroids=8)
+
+    def served():
+        return sorted(
+            (r.query_id, r.rank, r.neighbor_id)
+            for r in search(spark, path, _queries(spark), k=5, n_probe=4).collect()
+        )
+
+    def n_persisted():
+        return len(spark.sparkContext._jsc.getPersistentRDDs())
+
+    before, cached = served(), n_persisted()
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("injected build failure")
+
+    with monkeypatch.context() as m:
+        m.setattr(step, fail)
+        with pytest.raises(RuntimeError, match="injected build failure"):
+            build(emb.where(F.col("vec_id") % 2 == 1), path, n_centroids=8)
+    assert n_persisted() == cached
+    assert served() == before

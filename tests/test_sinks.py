@@ -345,6 +345,26 @@ def test_legacy_flat_store_migrates_to_bucketed(spark, tmp_path):
     assert got == {"a": 9.0, "b": 2.0, "c": 3.0}
 
 
+def test_legacy_flat_store_migration_recovers_crashed_swap(spark, tmp_path):
+    """Crash between the two renames of the migration rewrite: the flat
+    store sits only at its ``._old`` name and a half-written staging dir
+    is lying around. The next merge restores the store, then migrates
+    and merges all of it."""
+    table = tmp_path / "legacy"
+    _pools_df(spark, [("a", 1.0), ("b", 2.0)]).write.parquet(str(table))
+    old = table.with_name(table.name + "._old")
+    staging = table.with_name(table.name + "._staging")
+    table.rename(old)
+    staging.mkdir()
+    (staging / "junk.parquet").write_text("not a real file")
+
+    upsert_parquet(spark, _pools_df(spark, [("a", 9.0), ("c", 3.0)]), table)
+    assert any(p.name.startswith("_bucket=") for p in table.iterdir())
+    got = {r.source_file: r.rtp for r in read_store(spark, table).collect()}
+    assert got == {"a": 9.0, "b": 2.0, "c": 3.0}
+    assert not old.exists() and not staging.exists()
+
+
 def _full_pools_df(spark, n):
     rows = [
         (
