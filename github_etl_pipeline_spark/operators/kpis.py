@@ -14,22 +14,26 @@ Reference semantics (etl/transform.py:165-258 + calculate_volatility
   max_win_factor = max(game_win) / min_bet                         (A7)
   all metrics NULL unless min_bet > 0 and size > 0                 (P5)
 
-Execution shape (the 100-TB story): the ONLY full-data shuffle is
-``groupBy(source_file, game_win).count()`` — with partial (map-side)
-aggregation this reduces ~1M rows/pool to the pool's distinct-prize-value
-cardinality (~30 rows observed in the reference corpus) before any
-network transfer. The key is ``source_file`` alone, in the URI form the
-scan lists it in. ONE per-pool aggregate over that distribution yields
-the pool stats and collects the pool's valid ``(game_win, cnt)`` pairs;
-the key is decoded and the other pool key columns come from
-``sources.pol.pool_identity`` once per pool; after the broadcast
-dimension join, volatility is a per-row fold over the collected pairs.
-The plan is lazy and side-effect free: nothing is cached, so there is
-nothing to release. The collected array holds one element per distinct
-valid prize value, so it is never longer than the pool's line count —
-the same per-file bound as the reference's whole-file read
-(etl/extract.py:152). At 1000 executors the scan dominates; the shuffle
-payload is ~#pools x #distinct_values rows regardless of input size.
+Execution shape (the 100-TB story): the only aggregate over full data
+is the line count per (file, raw text) that ``count_pol_lines`` runs
+before the tokenizer — its map-side partial aggregation reduces ~1M
+lines/pool to the pool's few dozen distinct texts (~30 in the reference
+corpus) before any network transfer, and the tokenizer then runs once
+per distinct text. ``pool_distribution`` regroups those counts by
+``(source_file, game_win)`` (a plain ``parse_pol_lines`` frame is
+counted there instead). The key is ``source_file`` alone, in the URI
+form the scan lists it in. ONE per-pool aggregate over that distribution
+yields the pool stats and collects the pool's valid ``(game_win, cnt)``
+pairs; the key is decoded and the other pool key columns come from
+``sources.pol.pool_identity`` once per pool; after the broadcast join
+of the prepared dimension (a local relation, so no job), volatility is
+a per-row fold over the collected pairs. The plan is lazy and side-effect
+free: nothing is cached, so there is nothing to release. The collected
+array holds one element per distinct valid prize value, so it is never
+longer than the pool's line count — the same per-file bound as the
+reference's whole-file read (etl/extract.py:152). At 1000 executors the
+scan dominates; the shuffle payload is ~#pools x #distinct_texts rows
+regardless of input size.
 """
 
 from __future__ import annotations
@@ -50,9 +54,11 @@ Z_90_CI = 1.645
 
 
 def pool_distribution(parsed: DataFrame, key_cols: list[str] | None = None) -> DataFrame:
-    """(pool, game_win) -> cnt. The single large shuffle (A5)."""
+    """(pool, game_win) -> cnt (A5). Rows that already carry a ``cnt``
+    (``count_pol_lines``) add it; any other row counts once."""
     key_cols = key_cols or POOL_KEY_COLS
-    return parsed.groupBy(*key_cols, "game_win").agg(F.count(F.lit(1)).alias("cnt"))
+    n = F.sum("cnt") if "cnt" in parsed.columns else F.count(F.lit(1))
+    return parsed.groupBy(*key_cols, "game_win").agg(n.alias("cnt"))
 
 
 def pool_kpis(
@@ -63,18 +69,20 @@ def pool_kpis(
 ) -> DataFrame:
     """Full per-pool KPI record from parsed lines.
 
-    parsed     — output of ``parse_pol_lines`` (anything with
-                 ``source_file`` + ``game_win``); with ``keep_invalid=True``
-                 unparseable lines count in ``line_count`` and a file with
-                 no valid line still gets a size=0 record.
+    parsed     — output of ``parse_pol_lines`` or ``count_pol_lines``
+                 (anything with ``source_file`` + ``game_win``, and
+                 optionally a ``cnt`` of lines per row); with
+                 ``keep_invalid=True`` / ``count_pol_lines`` unparseable
+                 lines count in ``line_count`` and a file with no valid
+                 line still gets a size=0 record.
     dim_agg    — output of ``prepare_dim`` (norm_pool_id, min_bet, game_ids);
                  broadcast-joined. None -> all lookup-dependent metrics NULL.
     rounding   — 'bankers' (reference parity) or 'half_up' (DuckDB parity).
     """
     rnd = rounder(rounding)
 
-    # The single large shuffle; everything after it is pool-cardinality.
-    dist = pool_distribution(parsed.select("source_file", "game_win"), ["source_file"])
+    # Everything after this aggregate is pool-cardinality.
+    dist = pool_distribution(parsed, ["source_file"])
     valid = F.col("game_win").isNotNull()
     stats = dist.groupBy("source_file").agg(
         F.sum(F.col("cnt")).alias("line_count"),

@@ -38,6 +38,7 @@ from github_etl_pipeline_spark.operators.similarity import (
     _sample_centroids,
     _tiny_parquet_overwrite,
     _tiny_parquet_read,
+    _uncached,
     read_centroids,
     write_centroids,
 )
@@ -106,12 +107,8 @@ def build_pq_codebooks(
     import numpy as np
 
     dsub = dim // m
-    # only own (and later release) a cache THIS function created: an
-    # unpersist of a caller-held cache would silently drop it mid-build
-    # (build_ivfpq_index persists emb for the whole index build)
-    own_cache = lloyd_iterations > 0 and str(emb.storageLevel) == str(
-        __import__("pyspark").StorageLevel.NONE
-    )
+    # build_ivfpq_index persists emb for the whole index build
+    own_cache = lloyd_iterations > 0 and _uncached(emb)
     if own_cache:
         emb = emb.persist()
     sampled = seeds[:k] if seeds is not None else _sample_centroids(
@@ -606,7 +603,9 @@ def build_ivfpq_index(
     surface at all. Like ``build_ivf_index``, it is built in staging
     and promoted whole (``sinks/commit.py``)."""
     staging = commit.begin(index_path)
-    emb = emb.persist()
+    own_cache = _uncached(emb)
+    if own_cache:
+        emb = emb.persist()
     try:
         # r14 build-pass fusion (guide §1.2): ONE md5-ordered sample serves
         # both the coarse centroids and the PQ seeds (the PQ sample was the
@@ -642,7 +641,8 @@ def build_ivfpq_index(
             .parquet(str(staging / "codes"))
         )
     finally:
-        emb.unpersist()
+        if own_cache:
+            emb.unpersist()
     commit.promote(index_path)
 
 

@@ -3,7 +3,7 @@ etl/transform.py:261-322 ``generate_aggregated_summary``).
 
 One single-row DataFrame with:
   total_files_processed, total_records_across_all_files,
-  tags_distribution (map<string,long> — explode of the tag arrays),
+  tags_distribution (map<string,long> — count of each tag over the pools),
   files_by_folder  (map<string,long>),
   rtp_stats / volatility_stats (struct min,max,avg-2dp over non-null values)
 
@@ -15,16 +15,45 @@ parent folder.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from github_etl_pipeline_spark.functions.rounding import rounder
 
 
-def aggregated_summary(pools: DataFrame, rounding: str = "bankers") -> DataFrame:
+def _value_counts(values: str) -> Column:
+    """``{value: occurrences}`` of the SQL array expression ``values``,
+    keys ascending: sort it, then each run of equal values is one entry —
+    O(n log n), where counting each distinct value with ``filter`` would
+    be O(n x distinct). A lambda body re-evaluates every non-lambda
+    subexpression per element, so each array it indexes into is bound
+    once as a lambda variable (``get(transform(array(x), v -> ...), 0)``).
+    One SQL string, parsed by one JVM call: built from Column calls the
+    same expression took ~35 ms of driver time (4-core host), <1 ms as
+    SQL."""
+    return F.expr(
+        f"""CASE WHEN size({values}) > 0 THEN map_from_entries(get(transform(
+              array(array_sort({values})),
+              s -> get(transform(
+                array(filter(sequence(0, size(s) - 1), i -> i = 0 OR get(s, i) != get(s, i - 1))),
+                starts -> transform(starts, (p, j) -> named_struct(
+                  'key', get(s, p),
+                  'count', CAST(coalesce(get(starts, j + 1), size(s)) - p AS BIGINT)))
+              ), 0)
+            ), 0))
+            ELSE CAST(map() AS MAP<STRING, BIGINT>) END"""
+    )
+
+
+def summary_metrics(rounding: str) -> list[Column]:
+    """The fleet rollup as global aggregate expressions, so one
+    ``agg`` computes it — or ``DataFrame.observe`` on an action the
+    caller runs anyway. The two maps collect one tag array and one folder
+    per pool into the aggregate's buffer: O(pools), like the driver copy
+    of the records the output surface holds."""
     rnd = rounder(rounding)
 
-    def _stats(col: str) -> F.Column:
+    def _stats(col: str) -> Column:
         return F.when(
             F.count(col) > 0,
             F.struct(
@@ -34,25 +63,16 @@ def aggregated_summary(pools: DataFrame, rounding: str = "bankers") -> DataFrame
             ),
         )
 
-    base = pools.agg(
+    return [
         F.count(F.lit(1)).alias("total_files_processed"),
         F.sum(F.coalesce("size", F.lit(0))).alias("total_records_across_all_files"),
         _stats("rtp").alias("rtp_stats"),
         _stats("volatility").alias("volatility_stats"),
-    )
-    tags = (
-        pools.select(F.explode("tag").alias("t"))
-        .groupBy("t")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .agg(F.map_from_entries(F.array_sort(F.collect_list(F.struct("t", "c")))).alias("tags_distribution"))
-    )
-    folders = (
-        pools.groupBy(F.coalesce("parent_folder", F.lit("root")).alias("f"))
-        .agg(F.count(F.lit(1)).alias("c"))
-        .agg(F.map_from_entries(F.array_sort(F.collect_list(F.struct("f", "c")))).alias("files_by_folder"))
-    )
-    return (
-        base.crossJoin(tags)
-        .crossJoin(folders)
-        .withColumn("generated_at", F.current_timestamp())
-    )
+        _value_counts("flatten(collect_list(tag))").alias("tags_distribution"),
+        _value_counts("collect_list(coalesce(parent_folder, 'root'))").alias("files_by_folder"),
+    ]
+
+
+def aggregated_summary(pools: DataFrame, rounding: str = "bankers") -> DataFrame:
+    """The single-row fleet rollup of ``pools``: one aggregate."""
+    return pools.agg(*summary_metrics(rounding), F.current_timestamp().alias("generated_at"))

@@ -573,6 +573,16 @@ def ann_ivf_topk(
     )
 
 
+def _uncached(df: DataFrame) -> bool:
+    """Whether ``df`` is not cached yet. A builder persists its input, and
+    later releases it, only then: on a frame the caller persisted,
+    ``persist()`` returns that same cache and an ``unpersist`` would drop
+    it under the caller."""
+    from pyspark import StorageLevel
+
+    return str(df.storageLevel) == str(StorageLevel.NONE)
+
+
 def build_ivf_index(
     emb: DataFrame,
     index_path,
@@ -600,7 +610,8 @@ def build_ivf_index(
     it was.
     """
     staging = commit.begin(index_path)
-    if lloyd_iterations > 0:
+    own_cache = lloyd_iterations > 0 and _uncached(emb)
+    if own_cache:
         emb = emb.persist()
     try:
         centroids = _sample_centroids(emb, id_col, vec_col, n_centroids)
@@ -623,7 +634,7 @@ def build_ivf_index(
             .parquet(str(staging / "cells"))
         )
     finally:
-        if lloyd_iterations > 0:
+        if own_cache:
             emb.unpersist()
     commit.promote(index_path)
 

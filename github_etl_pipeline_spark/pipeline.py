@@ -1,7 +1,8 @@
 """End-to-end batch pipeline (reference EP1, etl/main.py:42-151).
 
-extract (distributed scan) -> transform (single shuffled agg + broadcast
-dim join) -> per-pool KPI records + fleet rollup. Sinks live in
+extract (distributed scan, lines counted per distinct text) -> transform
+(per-pool aggregate + broadcast join of the driver-prepared dimension)
+-> per-pool KPI records + fleet rollup. Sinks live in
 ``github_etl_pipeline_spark.sinks`` and are optional — the DataFrame is
 the IR between stages (reference EP3 seam, etl/__init__.py:8-18).
 """
@@ -10,12 +11,14 @@ from __future__ import annotations
 
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from github_etl_pipeline_spark.operators.kpis import pool_kpis
-from github_etl_pipeline_spark.operators.rollup import aggregated_summary
+from github_etl_pipeline_spark.operators.rollup import aggregated_summary, summary_metrics
+from github_etl_pipeline_spark.sinks import reports, upsert
 from github_etl_pipeline_spark.sources.lookup import load_game_lookup, prepare_dim
-from github_etl_pipeline_spark.sources.pol import parse_pol_lines, read_pol_lines
+from github_etl_pipeline_spark.sources.pol import count_pol_lines, read_pol_lines
 
 
 def run_pipeline(
@@ -41,64 +44,65 @@ def run_pipeline(
     if not scan_dir.exists():
         scan_dir = repo_root
 
-    # single-pass mode: invalid lines kept as NULL game_win, so raw line
-    # counts AND size-0 records for unparseable files come out of the same
-    # scan + shuffle (no separate inventory pass over the data)
-    lines = read_pol_lines(spark, str(scan_dir))
-    parsed = parse_pol_lines(lines, keep_invalid=True)
+    # one scan: blank and invalid lines count under game_win NULL, so raw
+    # line counts AND size-0 records for unparseable files come out of the
+    # same aggregate (no separate inventory pass over the data)
+    counted = count_pol_lines(read_pol_lines(spark, str(scan_dir)))
 
     if dim is None:
         dim = load_game_lookup(spark, repo_root)
     dim_agg = prepare_dim(dim) if dim is not None else None
 
-    pools = pool_kpis(parsed, dim_agg=dim_agg, rounding=rounding)
-    summary = aggregated_summary(pools, rounding=rounding)
-
+    pools = pool_kpis(counted, dim_agg=dim_agg, rounding=rounding)
     if output_dir is not None:
-        from pyspark.sql import functions as F
+        _write_outputs(pools, Path(output_dir), rounding)
+    return pools, aggregated_summary(pools, rounding=rounding)
 
-        from github_etl_pipeline_spark.sinks.reports import (
-            generate_index_file,
-            save_as_csv,
-            save_summary_report,
+
+def _write_outputs(pools: DataFrame, output_dir: Path, rounding: str) -> None:
+    """The output surface from ONE action over ``pools`` when the records
+    fit the driver bounds: a bounded collect of the record and CSV
+    columns, with the fleet rollup and the A9 counters observed on the
+    same pass (``DataFrame.observe``; its metrics are complete because an
+    in-bound collect reads every partition). Above either bound the
+    records are persisted and each sink takes its own path, shards
+    included, and the rollup is one more aggregate."""
+    output_dir.mkdir(parents=True, exist_ok=True)
+    json_path = output_dir / "all_pools_data.json"
+    csv_path = output_dir / "_all_files_summary.csv"
+    metrics = [
+        *summary_metrics(rounding),
+        # A9: a file "failed" when it had raw lines but none parsed (the
+        # reference's per-file try/except surface, etl/main.py:100-122)
+        F.count_if((F.col("size") == 0) & (F.col("line_count") > 0)).alias("files_failed"),
+    ]
+    observed = Observation()
+    rows = upsert.collect_at_most(
+        pools.observe(observed, *metrics).select(
+            *reports.CSV_FIELDS, upsert.pool_record_col().alias("record")
+        ),
+        min(upsert.CONSOLIDATED_DRIVER_MAX_ROWS, reports.CSV_DRIVER_MAX_ROWS),
+    )
+    if rows is not None:
+        consolidated = upsert.upsert_consolidated_document(
+            ((r.source_file, r.record) for r in rows), json_path
         )
-        from github_etl_pipeline_spark.sinks.upsert import write_consolidated_json
-
-        output_dir = Path(output_dir)
-        output_dir.mkdir(parents=True, exist_ok=True)
-        # the output surface takes THREE actions over pools (JSON collect,
-        # counter agg, CSV export) — persist the pool-cardinality aggregate
-        # so the corpus-sized scan+shuffle below it runs once, not three
-        # times (pools is one row per file: tiny at any corpus size).
-        # Released in the finally, even when a sink raises; only this
-        # cache, never a session-wide sweep that would also drop caches
-        # the CALLER owns (e.g. a persisted dim passed in).
+        reports.write_csv(rows, csv_path)
+        summary = observed.get
+    else:
+        # only this cache, never a session-wide sweep that would also drop
+        # caches the CALLER owns (e.g. a persisted dim passed in)
+        pools.persist()
         try:
-            pools.persist()
-            consolidated = write_consolidated_json(
-                pools, output_dir / "all_pools_data.json"
+            consolidated = upsert.write_consolidated_json(
+                pools, json_path, upsert.CONSOLIDATED_DRIVER_MAX_ROWS
             )
-
-            # A9 counters: a file "failed" when it had raw lines but none
-            # parsed (the reference's per-file try/except surface,
-            # etl/main.py:100-122)
-            counts = pools.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.count_if(
-                    (F.col("size") == 0) & (F.col("line_count") > 0)
-                ).alias("failed"),
-            ).first()
-            counters = {
-                "files_processed": counts["n"],
-                "files_succeeded": counts["n"] - counts["failed"],
-                "files_failed": counts["failed"],
-            }
-            save_summary_report(
-                summary, counters, output_dir / "_pipeline_summary.json"
-            )
-            generate_index_file(consolidated, output_dir / "_index.json")
-            save_as_csv(pools, output_dir / "_all_files_summary.csv")
+            reports.save_as_csv(pools, csv_path, reports.CSV_DRIVER_MAX_ROWS)
+            summary = pools.agg(*metrics).first()
         finally:
             pools.unpersist()
 
-    return pools, summary
+    n, failed = summary["total_files_processed"], summary["files_failed"]
+    counters = {"files_processed": n, "files_succeeded": n - failed, "files_failed": failed}
+    reports.write_summary_report(summary, counters, output_dir / "_pipeline_summary.json")
+    reports.generate_index_file(consolidated, output_dir / "_index.json")

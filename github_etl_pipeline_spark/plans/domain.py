@@ -214,9 +214,9 @@ def token_stats_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sf >= 0.01) where four pools (pool % 10 == 3) deliberately carry BOTH
 # the unpadded and the zero-padded Pool_id spelling — the J1 edge SURVEY
 # §4 warns about (the reference's exact-match-first fallback would be
-# ambiguous there). prepare_dim must aggregate the big dim through its
-# source-order window WITHOUT tripping its own size guard and SURFACE the
-# collision as _n_spellings = 2 instead of silently picking a spelling.
+# ambiguous there). prepare_dim must group the big dim in source order
+# WITHOUT tripping its own size bound and SURFACE the collision as
+# _n_spellings = 2 instead of silently picking a spelling.
 # Every output column is order-invariant (Bet is a function of the pool,
 # counts are set-cardinalities), so the source-order pin never leaks into
 # the checked values.
@@ -244,7 +244,7 @@ FROM dim GROUP BY 1
 @register(
     "dim_ambiguity_guard_synth",
     oracle=_DIM_AMBIG_SQL,
-    doc=f"J1 boundary in anger (VERDICT r12 #6): prepare_dim over a {_DIM_GIDS}-key dimension derived from events where pools 3/13/23/33 carry BOTH the unpadded and zero-padded Pool_id spelling — the normalized-key pre-aggregation runs its source-order window over thousands of rows (well under the loud max_rows guard) and SURFACES the zero-padding collision as _n_spellings = 2 (assert_dim_unambiguous would raise; the query checks the surfacing, tests check the raise); min_bet/min counts are spelling-invariant by construction so the source-order pin cannot leak into checked values; oracle mirrors the seeding, normalization (strip-zeros + zfill 4 == LPAD for <= 2-digit pools), and set-cardinality aggregates",
+    doc=f"J1 boundary in anger (VERDICT r12 #6): prepare_dim over a {_DIM_GIDS}-key dimension derived from events where pools 3/13/23/33 carry BOTH the unpadded and zero-padded Pool_id spelling — the normalized-key pre-aggregation groups thousands of rows in source order (well under the loud max_rows bound) and SURFACES the zero-padding collision as _n_spellings = 2 (assert_dim_unambiguous would raise; the query checks the surfacing, tests check the raise); min_bet/min counts are spelling-invariant by construction so the source-order pin cannot leak into checked values; oracle mirrors the seeding, normalization (strip-zeros + zfill 4 == LPAD for <= 2-digit pools), and set-cardinality aggregates",
 )
 def dim_ambiguity_guard_synth(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = read_table(spark, sf_dir, "events")

@@ -30,6 +30,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from github_etl_pipeline_spark.sinks import commit
+from github_etl_pipeline_spark.sinks.upsert import _BUCKET_COL, _is_bucketed_store
 
 
 def compact_parquet(
@@ -55,6 +56,9 @@ def compact_parquet(
     column, not just the leading one — the Delta/Iceberg OPTIMIZE ZORDER
     technique on plain parquet. The z-key is computed, range-partitioned
     and sorted on, then dropped before the write.
+
+    A bucketed ``upsert_parquet`` store keeps its ``_bucket=K``
+    directories: the bucket leads the range key and partitions the write.
     """
     if bool(sort_cols) == bool(zorder_by):
         raise ValueError("compact_parquet: pass exactly one of sort_cols / zorder_by")
@@ -62,13 +66,16 @@ def compact_parquet(
     # recover first: in place, the input IS the committed target
     staging = commit.begin(output_dir)
     df = spark.read.parquet(str(input_dir))
+    # an upsert_parquet store keeps its _bucket=K directories, or the next
+    # upsert would see a flat store and migrate all of it
+    part_cols = [_BUCKET_COL] if _is_bucketed_store(input_dir) else []
     if zorder_by:
         from github_etl_pipeline_spark.functions.zorder import zorder_sql
 
         df = df.withColumn("_zkey", F.expr(zorder_sql(zorder_by, zorder_bits)))
         sort_cols = ["_zkey"]
 
-    files_before = len(list(input_dir.glob("*.parquet")))
+    files_before = len(list(input_dir.rglob("*.parquet")))
     rows = df.count()
     n_files = max(1, -(-rows // target_rows_per_file))  # ceil
     # straggler cap with 50% slack over the per-partition target: the
@@ -78,16 +85,16 @@ def compact_parquet(
     # files, defeating the compaction
     per_file_cap = max(1, int(target_rows_per_file * 1.5))
 
-    out = df.repartitionByRange(n_files, *[F.col(c) for c in sort_cols]).sortWithinPartitions(
-        *sort_cols
-    )
+    keys = [*part_cols, *sort_cols]
+    out = df.repartitionByRange(n_files, *[F.col(c) for c in keys]).sortWithinPartitions(*keys)
     if sort_cols == ["_zkey"]:
         out = out.drop("_zkey")
     (
         out.write.option("maxRecordsPerFile", per_file_cap)
         .mode("overwrite")
+        .partitionBy(*part_cols)
         .parquet(str(staging))
     )
     commit.promote(output_dir)
-    files_after = len(list(output_dir.glob("*.parquet")))
+    files_after = len(list(output_dir.rglob("*.parquet")))
     return {"rows": rows, "files_before": files_before, "files_after": files_after}

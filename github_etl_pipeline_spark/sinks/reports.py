@@ -30,13 +30,20 @@ def save_summary_report(
 ) -> Path:
     """Write _pipeline_summary.json: run counters (A9) + the fleet
     aggregate (A8) from the single-row summary DataFrame."""
+    return write_summary_report(summary.first(), counters, output_file)
+
+
+def write_summary_report(row, counters: dict, output_file: str | Path) -> Path:
+    """Write _pipeline_summary.json from one row of ``summary_metrics``
+    (a Row, or the dict an ``Observation`` returns) and the counters."""
     output_file = Path(output_file)
-    row = summary.first()
     agg = {
         "total_files_processed": row["total_files_processed"],
         "total_records_across_all_files": row["total_records_across_all_files"],
-        "tags_distribution": dict(row["tags_distribution"] or {}),
-        "files_by_folder": dict(row["files_by_folder"] or {}),
+        # keys ascending: a map reaches Python through a hash map, whose
+        # iteration order depends on the conversion path
+        "tags_distribution": dict(sorted((row["tags_distribution"] or {}).items())),
+        "files_by_folder": dict(sorted((row["files_by_folder"] or {}).items())),
         "generated_at": _iso_now(),
     }
     if row["rtp_stats"] is not None:
@@ -110,7 +117,6 @@ def save_as_csv(
     CSV shards (with headers) to ``<output_file>.shards/`` — same columns,
     same global sort order across shard file names."""
     output_file = Path(output_file)
-    output_file.parent.mkdir(parents=True, exist_ok=True)
     sel = pools.select(*CSV_FIELDS)
     rows = collect_at_most(sel, max_driver_rows)
     if rows is None:
@@ -123,9 +129,19 @@ def save_as_csv(
             .csv(str(shard_dir))
         )
         return shard_dir
-    rows = sorted((r.asDict() for r in rows), key=lambda r: r["source_file"] or "")
+    return write_csv(rows, output_file)
+
+
+def write_csv(rows, output_file: str | Path) -> Path:
+    """Write collected rows (any Rows holding ``CSV_FIELDS``) as the
+    single-file export, sorted by source file."""
+    output_file = Path(output_file)
+    output_file.parent.mkdir(parents=True, exist_ok=True)
+    records = sorted(
+        ({f: r[f] for f in CSV_FIELDS} for r in rows), key=lambda r: r["source_file"] or ""
+    )
     with open(output_file, "w", newline="", encoding="utf-8") as f:
         writer = csv.DictWriter(f, fieldnames=CSV_FIELDS)
         writer.writeheader()
-        writer.writerows(rows)
+        writer.writerows(records)
     return output_file

@@ -23,7 +23,7 @@ equivalents:
     materialization is of the tiny AGGREGATE, never the raw data).
     Guarded by :func:`collect_at_most`: above ``max_driver_rows`` it
     writes sharded JSONL through Spark instead. Both forms take the key
-    (``source_file``) and the record (``_pool_record_col``, the one
+    (``source_file``) and the record (``pool_record_col``, the one
     definition of the reference record) from the same Spark expressions.
 """
 
@@ -227,7 +227,7 @@ def collect_at_most(df: DataFrame, max_rows: int) -> list | None:
 CONSOLIDATED_DRIVER_MAX_ROWS = 100_000
 
 
-def _pool_record_col() -> F.Column:
+def pool_record_col() -> F.Column:
     """The reference's nested pool record (etl/transform.py:237-256 plus
     the output-only max_win_factor), for both the document and the shards.
     ``processed_at`` is ISO-8601 with the ``+00:00`` offset the reference
@@ -291,7 +291,7 @@ def write_consolidated_json(
     shard directory)."""
     output_file = Path(output_file)
     keyed = pools.select(
-        F.col("source_file").alias("key"), _pool_record_col().alias("record")
+        F.col("source_file").alias("key"), pool_record_col().alias("record")
     ).where(F.col("key").isNotNull() & (F.col("key") != ""))
     rows = collect_at_most(keyed, max_driver_rows)
     if rows is None:
@@ -306,17 +306,24 @@ def write_consolidated_json(
             .text(str(shard_dir))
         )
         return shard_dir
+    return upsert_consolidated_document(((r.key, r.record) for r in rows), output_file)
 
-    # deterministic output: the reference processes files in sorted order
-    # (etl/extract.py:52), so fresh-run insertion order is sorted paths;
-    # existing keys keep their position (dict update semantics), exactly
-    # like the reference's upsert
+
+def upsert_consolidated_document(records, output_file: str | Path) -> Path:
+    """Upsert collected ``(key, record Row)`` pairs into the JSON document
+    at ``output_file``; a pair with no key is not a record and is skipped.
+
+    Deterministic output: the reference processes files in sorted order
+    (etl/extract.py:52), so fresh-run insertion order is sorted paths;
+    existing keys keep their position (dict update semantics), exactly
+    like the reference's upsert."""
+    output_file = Path(output_file)
     try:
         all_data = read_consolidated(output_file)
     except (json.JSONDecodeError, OSError):
         all_data = {}
-    for row in sorted(rows, key=lambda r: r.key):
-        all_data[row.key] = row.record.asDict(recursive=True)
+    for key, record in sorted((kr for kr in records if kr[0]), key=lambda kr: kr[0]):
+        all_data[key] = record.asDict(recursive=True)
 
     output_file.parent.mkdir(parents=True, exist_ok=True)
     output_file.write_text(

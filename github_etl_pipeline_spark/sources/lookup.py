@@ -15,11 +15,12 @@ from __future__ import annotations
 
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType, StructField, StringType, DoubleType
 
 from github_etl_pipeline_spark.functions.keys import normalize_pool_id
+from github_etl_pipeline_spark.sinks.upsert import collect_at_most
 
 LOOKUP_SCHEMA = StructType(
     [
@@ -118,70 +119,63 @@ def prepare_dim(dim: DataFrame, max_rows: int = 100_000) -> DataFrame:
     """Pre-aggregate the dimension to one row per normalized pool key.
 
     * ``min_bet``  — Bet of the FIRST row in source order (the reference's
-      ``tmp['Bet'].iloc[0]``); source order is pinned with a row index so
-      the result is deterministic under Spark parallelism.
-    * ``game_ids`` — ALL Game_ids for the key, in source order.
+      ``tmp['Bet'].iloc[0]``);
+    * ``game_ids`` — ALL Game_ids for the key, in source order;
+    * ``dim_pool_id`` — the first row's raw Pool_id, for the fact-side
+      reference-match gate (functions/keys.py ``reference_match_expr``);
+    * ``_n_spellings`` — distinct non-NULL Pool_ids under the key (J1
+      edge, SURVEY §4: two spellings that differ only in zero padding
+      would make the reference's exact-match-first fallback diverge from
+      the normalized join; ``assert_dim_unambiguous`` surfaces it).
 
     Pre-aggregating before the fact join avoids fan-out: the join is 1:1,
     so a million-row pool never duplicates into (pool_rows x games) rows.
 
-    DIMENSION-ONLY operator: the source-order pin is a GLOBAL window
-    (single partition by construction) — correct and cheap for the
-    hundreds-row Excel lookup this models, quadratically wrong for a
-    fact table. ``max_rows`` makes misuse loud instead of slow; raise it
-    deliberately if a legitimately larger dimension appears.
-
-    Two guards, cheap-first (r4 advice): a call-time ``limit(max_rows
-    + 1).count()`` probe — bounded by max_rows+1 rows scanned, raising
-    the old ``ValueError`` BEFORE the single-partition window sort ever
-    runs on an oversized input — plus the IN-PLAN ``raise_error`` on
-    the grouping key, which survives callers that re-derive the plan
-    from this function's output without executing the probe path (the
-    probe is one extra small Spark job per call; for a lookup dimension
-    that is noise).
+    DIMENSION-ONLY operator: the lookup is hundreds of rows, so it is
+    collected to the driver once (``collect_at_most``, with the key
+    normalized by the same Spark expression the fact side joins on),
+    grouped there in collect order — which is source order — and
+    returned as a local relation, so the broadcast join costs no Spark
+    job. ``max_rows`` is the one bound: a larger input raises
+    ``ValueError`` at call time; raise it deliberately if a legitimately
+    larger dimension appears.
     """
-    probed = dim.limit(int(max_rows) + 1).count()
-    if probed > max_rows:
+    import pyarrow as pa
+
+    rows = collect_at_most(
+        dim.select(normalize_pool_id("Pool_id"), "Pool_id", "Bet", "Game_id"), int(max_rows)
+    )
+    if rows is None:
         raise ValueError(
             f"prepare_dim: dimension has >{max_rows} rows; this operator "
-            "single-partitions the input to pin source order and is meant "
-            "for small lookup dimensions only. Pass max_rows=... to "
-            "override deliberately, or pre-aggregate the input."
+            "collects its input to the driver and is meant for small "
+            "lookup dimensions only. Pass max_rows=... to override "
+            "deliberately, or pre-aggregate the input."
         )
-    w = Window.orderBy(F.monotonically_increasing_id())
-    # guard rides on the GROUPING KEY so no amount of column pruning can
-    # eliminate it (an _idx-only guard column gets pruned under count())
-    guarded_key = F.when(
-        F.col("_idx") > int(max_rows),
-        F.raise_error(
-            f"prepare_dim: dimension has >{max_rows} rows; this operator "
-            "single-partitions the input to pin source order and is meant "
-            "for small lookup dimensions only. Pass max_rows=... to "
-            "override deliberately, or pre-aggregate the input."
-        ).cast("string"),
-    ).otherwise(normalize_pool_id("Pool_id"))
-    indexed = dim.withColumn("_idx", F.row_number().over(w)).withColumn(
-        "norm_pool_id", guarded_key
+    groups: dict[str, dict] = {}
+    for key, pool_id, bet, game_id in rows:
+        g = groups.get(key)
+        if g is None:
+            g = groups[key] = {
+                "dim_pool_id": pool_id,
+                "min_bet": bet,
+                "game_ids": [],
+                "spellings": set(),
+            }
+        g["game_ids"].append(game_id)
+        if pool_id is not None:
+            g["spellings"].add(pool_id)
+    # pyarrow, not pandas: a NaN Bet stays NaN instead of becoming NULL
+    table = pa.table(
+        {
+            "norm_pool_id": pa.array(list(groups), pa.string()),
+            "dim_pool_id": pa.array([g["dim_pool_id"] for g in groups.values()], pa.string()),
+            "min_bet": pa.array([g["min_bet"] for g in groups.values()], pa.float64()),
+            "game_ids": pa.array([g["game_ids"] for g in groups.values()], pa.list_(pa.string())),
+            "_n_spellings": pa.array([len(g["spellings"]) for g in groups.values()], pa.int64()),
+        }
     )
-    agg = indexed.groupBy("norm_pool_id").agg(
-        F.min_by("Bet", "_idx").alias("min_bet"),
-        F.array_sort(F.collect_list(F.struct("_idx", "Game_id"))).alias("_pairs"),
-        F.count_distinct("Pool_id").alias("_n_spellings"),
-        # the raw source spelling, for the fact-side reference-match gate
-        # (functions/keys.py reference_match_expr); unique per group
-        # whenever assert_dim_unambiguous holds
-        F.min_by("Pool_id", "_idx").alias("dim_pool_id"),
-    )
-    # J1 edge (SURVEY §4): two source Pool_ids that differ only in zero
-    # padding would have made the reference's exact-match-first fallback
-    # diverge from the normalized join. Surface it instead of guessing.
-    return agg.select(
-        "norm_pool_id",
-        "dim_pool_id",
-        "min_bet",
-        F.transform("_pairs", lambda p: p["Game_id"]).alias("game_ids"),
-        "_n_spellings",
-    )
+    return dim.sparkSession.createDataFrame(table)
 
 
 def assert_dim_unambiguous(dim_agg: DataFrame) -> None:

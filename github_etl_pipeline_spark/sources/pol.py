@@ -188,6 +188,35 @@ def read_pol_lines_any_encoding(spark: SparkSession, scan_dir: str) -> DataFrame
     return pol_lines(raw, scan_dir)
 
 
+def _tokens(value: Column) -> Column:
+    """P1 lenient tokenizer (etl/transform.py:61-95): a raw line split on
+    whitespace."""
+    return F.split(F.trim(value), r"\s+")
+
+
+def _game_win(toks: Column) -> Column:
+    """``int(tok0)`` plus tok2 when it is an int; NULL when tok0 is not an
+    int (the reference drops that line)."""
+    base = F.get(toks, 0).try_cast("long")
+    return base + F.coalesce(F.get(toks, 2).try_cast("long"), F.lit(0))
+
+
+def count_pol_lines(lines: DataFrame) -> DataFrame:
+    """``(source_file, game_win, cnt)`` over raw lines: every line counts,
+    a blank or invalid one under game_win NULL. Lines are counted per
+    (file, raw text) BEFORE the tokenizer runs, so the map-side partial
+    aggregate collapses a pool's ~1M lines to its few dozen distinct
+    texts and split/try_cast run once per distinct text, not once per
+    line. Texts that parse to the same value (``"100"``, ``"100 TB1"``)
+    keep one row each; ``pool_kpis`` sums ``cnt`` when it regroups by
+    ``(source_file, game_win)``."""
+    return (
+        lines.groupBy("source_file", "value")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .select("source_file", _game_win(_tokens(F.col("value"))).alias("game_win"), "cnt")
+    )
+
+
 def parse_pol_lines(
     lines: DataFrame, keep_invalid: bool = False, with_order: bool = False
 ) -> DataFrame:
@@ -206,11 +235,8 @@ def parse_pol_lines(
       * the pool key columns come from ``pool_identity`` over
         ``source_file``
     """
-    toks = F.split(F.trim(F.col("value")), r"\s+")
-    base = F.get(toks, 0).try_cast("long")
-    extra = F.coalesce(F.get(toks, 2).try_cast("long"), F.lit(0))
-
-    out = pool_identity(lines).withColumn("game_win", base + extra)
+    toks = _tokens(F.col("value"))
+    out = pool_identity(lines).withColumn("game_win", _game_win(toks))
     if not keep_invalid:
         out = out.where(F.col("game_win").isNotNull())
     out = out.withColumn("type_code", F.nullif(F.get(toks, 1), F.lit("")))

@@ -85,3 +85,39 @@ def test_compact_in_place_recovers_crashed_swap(spark, tmp_path):
     assert stats["files_after"] <= 5
     assert spark.read.parquet(str(table)).count() == 2000
     assert not old.exists() and not staging.exists()
+
+
+def test_compact_keeps_bucketed_store_layout(spark, tmp_path):
+    """Compacting an ``upsert_parquet`` store in place keeps its
+    ``_bucket=K`` directories and counts the files inside them, so the
+    next upsert merges bucket-pruned instead of migrating a flat store."""
+    from github_etl_pipeline_spark.sinks.upsert import (
+        _is_bucketed_store,
+        read_store,
+        upsert_parquet,
+    )
+
+    store = tmp_path / "store"
+    rows = spark.range(200).select(
+        F.format_string("p/Pool_%04d_941.pol", "id").alias("source_file"),
+        F.col("id").cast("double").alias("rtp"),
+    )
+    upsert_parquet(spark, rows, store)
+    n_files = len(list(store.rglob("*.parquet")))
+
+    stats = compact_parquet(spark, store, store, sort_cols=["source_file"])
+    assert stats["rows"] == 200
+    assert stats["files_before"] == n_files > 0
+    assert 0 < stats["files_after"] <= n_files
+    assert _is_bucketed_store(store)
+    assert sorted(read_store(spark, store).columns) == ["rtp", "source_file"]
+    assert sorted(map(tuple, read_store(spark, store).collect())) == sorted(
+        map(tuple, rows.collect())
+    )
+
+    # each row still sits in the bucket its key hashes to: an update
+    # replaces the row instead of adding a second copy
+    upsert_parquet(spark, rows.where("rtp < 10").withColumn("rtp", F.lit(-1.0)), store)
+    got = {r.source_file: r.rtp for r in read_store(spark, store).collect()}
+    assert len(got) == read_store(spark, store).count() == 200
+    assert sum(v == -1.0 for v in got.values()) == 10

@@ -260,3 +260,17 @@ def test_failed_rebuild_leaves_served_index_and_caches(
             build(emb.where(F.col("vec_id") % 2 == 1), path, n_centroids=8)
     assert n_persisted() == cached
     assert served() == before
+
+
+@pytest.mark.parametrize("build", [build_ivf_index, build_ivfpq_index], ids=["ivf", "ivfpq"])
+def test_build_keeps_caller_cache(spark, tmp_path, build):
+    """A builder releases only a cache it created: an input the caller
+    persisted (and filled) is still cached after the build."""
+    emb = read_table(spark, SF, "embeddings").persist()
+    try:
+        emb.count()
+        build(emb, str(tmp_path / "idx"), n_centroids=8)
+        level = emb.storageLevel
+        assert level.useMemory or level.useDisk
+    finally:
+        emb.unpersist()

@@ -157,3 +157,63 @@ def test_ambiguous_dim_surfaces_spellings_and_guard_raises(spark):
     with pytest.raises(ValueError, match="multiple distinct Pool_id"):
         assert_dim_unambiguous(agg)
     agg.unpersist()
+
+
+def _prepare_dim_spark(dim):
+    """The Spark-side ``prepare_dim`` the driver-side one replaced: source
+    order pinned by a row index over a global window. Kept as the oracle
+    for the driver-side grouping."""
+    from pyspark.sql import Window
+
+    w = Window.orderBy(F.monotonically_increasing_id())
+    indexed = dim.withColumn("_idx", F.row_number().over(w)).withColumn(
+        "norm_pool_id", normalize_pool_id("Pool_id")
+    )
+    agg = indexed.groupBy("norm_pool_id").agg(
+        F.min_by("Bet", "_idx").alias("min_bet"),
+        F.array_sort(F.collect_list(F.struct("_idx", "Game_id"))).alias("_pairs"),
+        F.count_distinct("Pool_id").alias("_n_spellings"),
+        F.min_by("Pool_id", "_idx").alias("dim_pool_id"),
+    )
+    return agg.select(
+        "norm_pool_id",
+        "dim_pool_id",
+        "min_bet",
+        F.transform("_pairs", lambda p: p["Game_id"]).alias("game_ids"),
+        "_n_spellings",
+    )
+
+
+def test_prepare_dim_matches_spark_definition_on_hostile_dims(spark):
+    """Driver-side grouping == the Spark definition on NULL Pool_id / Bet /
+    Game_id, padded and unpadded spellings of one key, repeated Game_ids,
+    a NaN Bet, and source order spread over several partitions."""
+    nan = float("nan")
+    rows = [
+        ("A", "11", "201", None),     # first row of key 0201: NULL Bet wins
+        ("B", "22", "0201", 25.0),    # second spelling of the same key
+        ("C", None, "201", 30.0),     # NULL Game_id is kept in game_ids
+        ("D", "11", "00201", 35.0),   # repeated Game_id, third spelling
+        ("E", "44", None, 5.0),       # NULL Pool_id: key '0000', no spelling
+        ("F", "55", "000", 6.0),      # same key, one spelling
+        ("G", "66", "6371", nan),     # NaN Bet stays NaN
+        ("H", "66", "6371", 10.0),
+        ("I", "77", "12345", 1.0),    # wider than the pad width
+        ("J", "77", "12345", None),
+        ("K", "88", "0", 2.0),
+    ] * 3
+    dim = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 5),
+        "Game string, Game_id string, Pool_id string, Bet double",
+    )
+    assert dim.rdd.getNumPartitions() >= 4
+
+    def keyed(df):
+        return {r.norm_pool_id: repr(tuple(r)) for r in df.collect()}
+
+    got, want = prepare_dim(dim), _prepare_dim_spark(dim)
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in want.schema
+    ]
+    assert keyed(got) == keyed(want)
+    assert sorted(keyed(got)) == ["0000", "0201", "12345", "6371"]

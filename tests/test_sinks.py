@@ -66,9 +66,8 @@ def test_consolidated_json_upsert_and_shape(spark, tmp_path):
     assert len(json.loads(out.read_text())) == 1
 
 
-def test_full_output_surface(spark, tmp_path):
-    from github_etl_pipeline_spark.pipeline import run_pipeline
-
+def _surface_corpus(spark, tmp_path):
+    """Two pools, one of which has no valid line, and a one-row lookup."""
     d = tmp_path / "corpus"
     d.mkdir()
     (d / "Pool_0201_941.pol").write_text("100\n0 TB1\n250 TB2 10\n")
@@ -76,6 +75,13 @@ def test_full_output_surface(spark, tmp_path):
     dim = spark.createDataFrame(
         [("G", "9493", "201", 25.0)], "Game string, Game_id string, Pool_id string, Bet double"
     )
+    return d, dim
+
+
+def test_full_output_surface(spark, tmp_path):
+    from github_etl_pipeline_spark.pipeline import run_pipeline
+
+    d, dim = _surface_corpus(spark, tmp_path)
     out = tmp_path / "Meta_data"
     run_pipeline(spark, d, dim=dim, output_dir=out)
 
@@ -95,6 +101,106 @@ def test_full_output_surface(spark, tmp_path):
     csv_text = (out / "_all_files_summary.csv").read_text()
     assert csv_text.splitlines()[0].startswith("source_file,pool_name")
     assert len(csv_text.strip().splitlines()) == 3
+
+
+def _count_jobs(spark, fn):
+    """Spark jobs ``fn()`` runs, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_run_pipeline_job_budget(spark, tmp_path):
+    """The output surface is one action over the pools: a run whose
+    records fit the driver bounds takes at most 8 Spark jobs, and
+    building the KPI plan over a prepared dimension takes none beyond
+    the dimension's one bounded collect."""
+    from github_etl_pipeline_spark.operators.kpis import pool_kpis
+    from github_etl_pipeline_spark.pipeline import run_pipeline
+    from github_etl_pipeline_spark.sinks.upsert import collect_at_most
+    from github_etl_pipeline_spark.sources.lookup import prepare_dim
+    from github_etl_pipeline_spark.sources.pol import count_pol_lines, read_pol_lines
+
+    d, dim = _surface_corpus(spark, tmp_path)
+    for i in range(2):  # cold, then warm
+        jobs = _count_jobs(spark, lambda: run_pipeline(spark, d, dim=dim, output_dir=tmp_path / f"o{i}"))
+        assert jobs <= 8, f"run {i}: {jobs} jobs"
+
+    one_collect = _count_jobs(spark, lambda: collect_at_most(dim, 100_000))
+    prepared = []
+    assert _count_jobs(spark, lambda: prepared.append(prepare_dim(dim))) == one_collect
+    assert _count_jobs(
+        spark, lambda: pool_kpis(count_pol_lines(read_pol_lines(spark, str(d))), dim_agg=prepared[0])
+    ) == 0
+
+
+def _strip_times(doc):
+    """``doc`` without the run's timestamps (they differ between runs)."""
+    if isinstance(doc, dict):
+        return {
+            k: _strip_times(v)
+            for k, v in doc.items()
+            if k not in ("generated_at", "pipeline_run_at", "processed_at")
+        }
+    if isinstance(doc, list):
+        return [_strip_times(v) for v in doc]
+    return doc
+
+
+def _csv_rows(paths):
+    """Rows of CSV files with headers, numbers compared as numbers."""
+    import csv
+
+    def value(v):
+        try:
+            return float(v)
+        except ValueError:
+            return v
+
+    return sorted(
+        (
+            {k: value(v) for k, v in row.items()}
+            for p in paths
+            for row in csv.DictReader(p.open(encoding="utf-8"))
+        ),
+        key=lambda row: row["source_file"],
+    )
+
+
+def test_spill_path_writes_the_same_outputs(spark, tmp_path, monkeypatch):
+    """Above the driver bounds every output goes through its shard path;
+    the records, index, CSV rows and summary equal an in-bound run's."""
+    from github_etl_pipeline_spark.pipeline import run_pipeline
+    from github_etl_pipeline_spark.sinks import reports, upsert
+    from github_etl_pipeline_spark.sinks.upsert import read_consolidated
+
+    d, dim = _surface_corpus(spark, tmp_path)
+    inb, spill = tmp_path / "in_bound", tmp_path / "spill"
+    run_pipeline(spark, d, dim=dim, output_dir=inb)
+    with monkeypatch.context() as m:
+        m.setattr(upsert, "CONSOLIDATED_DRIVER_MAX_ROWS", 1)
+        m.setattr(reports, "CSV_DRIVER_MAX_ROWS", 1)
+        run_pipeline(spark, d, dim=dim, output_dir=spill)
+
+    assert not (spill / "all_pools_data.json").exists()
+    assert not (spill / "_all_files_summary.csv").exists()
+    doc = read_consolidated(inb / "all_pools_data.json")
+    assert len(doc) == 2
+    assert _strip_times(read_consolidated(spill / "all_pools_data.json.shards")) == _strip_times(doc)
+    for name in ("_index.json", "_pipeline_summary.json"):
+        want = json.loads((inb / name).read_text())
+        assert _strip_times(json.loads((spill / name).read_text())) == _strip_times(want), name
+    shards = sorted((spill / "_all_files_summary.csv.shards").glob("part-*.csv"))
+    assert shards
+    assert _csv_rows(shards) == _csv_rows([inb / "_all_files_summary.csv"])
 
 
 def _has_delta() -> bool:
