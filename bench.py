@@ -10,11 +10,11 @@ Also times the full .pol ETL over the reference sample corpus (~27.2M
 rows) and reports its rows/sec — the apples-to-apples number against
 BASELINE.md's ~1.72M rows/s single-node transform throughput.
 
-Queries execute via the `noop` sink: full execution, no driver collect,
-no output I/O — measures the engine, not the materialization. Per-query
-time is the MIN over $SPARK_GRAFT_BENCH_REPS executions (default 2,
-disclosed as "reps" in the JSON); the pool-ETL cold number is always
-single-shot so the baseline comparison keeps its one-shot semantics.
+The session warm-up, the timer and the re-run rule are tools/harness.py's:
+queries execute via the `noop` sink, and per-query time is the MIN over
+$SPARK_GRAFT_BENCH_REPS executions (default 2, disclosed as "reps" in
+the JSON); the pool-ETL cold number is always single-shot so the
+baseline comparison keeps its one-shot semantics.
 
 Contention awareness (VERDICT r4 #2 — BENCH_r04 published a 14x phantom
 regression taken under host load; VERDICT r8 #1 — BENCH_r08 started at
@@ -27,11 +27,10 @@ pool-ETL "cold" shot is cold ENGINE state (fresh caches, first plan),
 not cold OS state: the corpus bytes (~84 MB) are read once, untimed,
 immediately before it — page-cache eviction after an unrelated tier
 rebuild was measured at -25% throughput (README r9) and says nothing
-about the engine. Disclosed as ``page_cache_warmed``. Any query
-measuring slower than 1.5x its time in the latest committed
-BENCH_r*.json gets ONE extra re-run after the sweep (still
-min-of-all-observations; re-adjudicated queries are disclosed in
-``reruns``).
+about the engine. Disclosed as ``page_cache_warmed``. After the sweep
+every query is re-checked against its time in the latest committed
+BENCH_r*.json by the harness's 1.5x rule; re-adjudicated queries are
+disclosed in ``reruns``.
 """
 
 from __future__ import annotations
@@ -43,13 +42,7 @@ import re
 import sys
 import time
 
-import pandas as pd
-
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-
-def _run(df) -> None:
-    df.write.mode("overwrite").format("noop").save()
 
 
 _NON_QUERY_KEYS = {
@@ -139,40 +132,15 @@ def main() -> None:
     loadavg_start = os.getloadavg()
 
     from github_etl_pipeline_spark.plans import REGISTRY
-    from github_etl_pipeline_spark.session import (
-        get_spark,
-        managed_caches,
-        sweep_caches,
-    )
+    from github_etl_pipeline_spark.session import managed_caches, sweep_caches
+    from tools import harness
 
-    spark = get_spark(app_name="bench")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = harness.session("bench", sf_dir)
 
-    # structural cache contract (VERDICT r9 #6): per-query sweeps below
-    # keep queries from polluting each other; the context guarantees the
-    # session ends swept even if a builder raises mid-suite
+    # structural cache contract (VERDICT r9 #6): the harness sweeps after
+    # every rep so queries don't pollute each other; the context
+    # guarantees the session ends swept even if a builder raises mid-suite
     with managed_caches(spark):
-        # JVM / codegen / parquet-reader warmup, not counted
-        spark.range(1_000_000).selectExpr("sum(id)").collect()
-        spark.read.parquet(f"{sf_dir}/region.parquet").groupBy(
-            "r_name"
-        ).count().collect()
-        # Python-worker / Arrow warmup for the Pandas-UDF queries (one-time
-        # environment startup, same class as the JVM warmup above)
-        from pyspark.sql import functions as _F
-
-        @_F.pandas_udf("double")
-        def _wu(s: pd.Series) -> pd.Series:
-            return s
-
-        spark.range(1000).select(_wu(_F.col("id").cast("double"))).collect()
-        # one full throwaway registry query so the first TIMED query doesn't
-        # absorb whole-stage-codegen / shuffle-service warmup (measured ~2s
-        # skew on the first query vs an identically-shaped later one)
-        first = next(iter(REGISTRY.values()))
-        _run(first.builder(spark, sf_dir))
-        sweep_caches(spark)
-
         # per-query time = MIN over $SPARK_GRAFT_BENCH_REPS executions
         # (default 2): one-shot timings swing up to 2x under transient host
         # contention, and min-of-reps is the standard steady-state report.
@@ -181,30 +149,21 @@ def main() -> None:
         # comparison and includes codegen + first-plan cost by design).
         reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2")))
 
-        def timed(spec, n: int) -> float:
-            best = float("inf")
-            for _ in range(n):
-                t0 = time.perf_counter()
-                _run(spec.builder(spark, sf_dir))
-                best = min(best, time.perf_counter() - t0)
-                # builders may persist small intermediates (e.g. the pool
-                # distribution); drop them so queries don't pollute each
-                # other
-                sweep_caches(spark)
-            return best
+        def build(name: str):
+            return lambda: REGISTRY[name].builder(spark, sf_dir)
 
-        timings: dict[str, float] = {}
-        for name, spec in REGISTRY.items():
-            timings[name] = round(timed(spec, reps), 3)
+        timings = {
+            name: round(harness.best_of(spark, build(name), reps), 3)
+            for name in REGISTRY
+        }
 
-        # contention re-adjudication: a query >1.5x slower than the latest
-        # committed round gets one extra run AFTER the main sweep (transient
-        # host load has usually passed by then); min of all observations
-        # wins. sf0.1 adjudicates against the driver's committed round
-        # artifact; the sf1 cross-round reference adjudicates against the
-        # committed BENCH_sf1.json (this sandbox's kernel reclaim can stall
-        # a different query group on every pass — two otherwise-idle r11
-        # sweeps each read a disjoint set of phantom 3-8x regressions)
+        # contention re-adjudication runs AFTER the main sweep (transient
+        # host load has usually passed by then). sf0.1 adjudicates against
+        # the latest committed BENCH_r*.json; the sf1 cross-round
+        # reference adjudicates against the committed BENCH_sf1.json (this
+        # sandbox's kernel reclaim can stall a different query group on
+        # every pass — two otherwise-idle r11 sweeps each read a disjoint
+        # set of phantom 3-8x regressions)
         if sf == 0.1:
             prior = _prior_timings()
         elif sf == 1.0:
@@ -220,11 +179,11 @@ def main() -> None:
             prior = {}
         reruns: list[str] = []
         for name, prev in prior.items():
-            if name in timings and prev > 0 and timings[name] > 1.5 * prev:
-                reruns.append(name)
-                timings[name] = round(
-                    min(timings[name], timed(REGISTRY[name], 1)), 3
-                )
+            if name in timings:
+                best, reran = harness.recheck(spark, build(name), timings[name], prev)
+                if reran:
+                    reruns.append(name)
+                    timings[name] = round(best, 3)
 
         extras: dict[str, float] = {}
         page_cache_warmed = False
@@ -244,7 +203,7 @@ def main() -> None:
             def one_run() -> float:
                 t0 = time.perf_counter()
                 pools, _ = run_pipeline(spark, ref_root, dim=dim)
-                _run(pools)
+                harness.noop(pools)
                 dt = time.perf_counter() - t0
                 sweep_caches(spark)
                 return dt

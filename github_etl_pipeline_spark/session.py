@@ -74,10 +74,7 @@ def get_spark(
         # (hash-map build beats sort only when the downstream doesn't
         # reuse the sort order; AQE's byte test cannot see that). The
         # static flip above carries all of the measured win.
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP", "0"),
-        )
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "0")
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
@@ -91,8 +88,8 @@ def sweep_caches(spark: SparkSession) -> None:
     next identical analyzed plan reuses WITHOUT re-storing
     (recompute-per-consumer, measured 3-10x slower), and an
     async-unpersist race can even serve stale rows if the table was
-    rewritten in between. Shared by bench.py, tools/check_correctness.py
-    and tools/scale_probe.py so the comment lives once (ADVICE r8)."""
+    rewritten in between. Shared by the measurement harness
+    (tools/harness.py) so the comment lives once (ADVICE r8)."""
     spark.catalog.clearCache()
     for _id, rdd in spark.sparkContext._jsc.getPersistentRDDs().items():
         rdd.unpersist()

@@ -13,6 +13,7 @@ broadcast hash join with no row explosion and no shuffle.
 
 from __future__ import annotations
 
+import math
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -80,12 +81,32 @@ def _read_xlsx_rows(path: Path) -> list[dict]:
     return out
 
 
+def _blank(x) -> bool:
+    """A blank sheet cell: None from the stdlib reader, NaN from pandas."""
+    return x is None or (isinstance(x, float) and math.isnan(x))
+
+
+def _cell_str(x) -> str | None:
+    """A string cell, NULL when blank; integer-valued numerics (xlsx
+    stores ids as floats) read as '6371', not '6371.0'."""
+    if _blank(x):
+        return None
+    if isinstance(x, float) and x == int(x):
+        return str(int(x))
+    if isinstance(x, str) and x.endswith(".0") and x[:-2].isdigit():
+        return x[:-2]
+    return str(x)
+
+
 def load_game_lookup(spark: SparkSession, repo_root: str | Path) -> DataFrame | None:
     """Probe candidate paths for the xlsx and return the raw dimension
     DataFrame (Game, Game_id, Pool_id as strings, Bet double), or None.
 
     Prefers pandas.read_excel (openpyxl); falls back to a stdlib xlsx
-    parser when openpyxl is not installed."""
+    parser when openpyxl is not installed. Both give the same rows: a
+    blank Game / Game_id is NULL, a blank Bet is NaN (what
+    ``pd.read_excel`` gives), and a row with a blank Pool_id is
+    skipped."""
     for sub in _CANDIDATE_SUBPATHS:
         path = Path(repo_root) / sub
         if not path.exists():
@@ -99,18 +120,17 @@ def load_game_lookup(spark: SparkSession, repo_root: str | Path) -> DataFrame | 
             records = _read_xlsx_rows(path)
         rows = []
         for r in records:
-            if r.get("Pool_id") is None:
+            if _blank(r.get("Pool_id")):
                 continue
-
-            def _s(x):
-                # integer-valued floats (xlsx numerics) -> '6371' not '6371.0'
-                if isinstance(x, float) and x == int(x):
-                    return str(int(x))
-                if isinstance(x, str) and x.endswith(".0") and x[:-2].isdigit():
-                    return x[:-2]
-                return str(x)
-
-            rows.append((_s(r.get("Game")), _s(r.get("Game_id")), _s(r.get("Pool_id")), float(r.get("Bet"))))
+            bet = r.get("Bet")
+            rows.append(
+                (
+                    _cell_str(r.get("Game")),
+                    _cell_str(r.get("Game_id")),
+                    _cell_str(r.get("Pool_id")),
+                    math.nan if _blank(bet) else float(bet),
+                )
+            )
         return spark.createDataFrame(rows, LOOKUP_SCHEMA)
     return None
 

@@ -5,7 +5,9 @@ schema (column names), and values (columns sorted by name, rows sorted
 by every column, floats compared to 1e-9 relative tolerance).
 
 Usage: python tools/check_correctness.py [--json OUT.json] [query ...]
-Exit 0 iff every checked query matches.
+Exit 0 iff every checked query matches; exit 2, before any Spark work,
+when a named query is not registered. The session warm-up is
+tools/harness.py's.
 
 With --json, per-query results (status, rows, seconds, mismatch reason)
 are written to OUT.json — committed each round as CHECK_LOCAL.json so
@@ -87,38 +89,16 @@ def main() -> int:
     import duckdb
 
     import __spark_entry__ as entry
-    from github_etl_pipeline_spark.session import (
-        get_spark,
-        managed_caches,
-        sweep_caches,
-    )
+    from github_etl_pipeline_spark.session import managed_caches, sweep_caches
+    from tools import harness
 
-    spark = get_spark(app_name="check_correctness")
-    spark.sparkContext.setLogLevel("ERROR")
+    queries = entry.queries()
+    unknown = only - set(queries)
+    if unknown:
+        print(f"not registered: {sorted(unknown)}")
+        return 2
 
-    # session warmup so the FIRST checked queries don't book JVM codegen /
-    # Python-worker / parquet-reader startup into their per-query `sec`
-    # (r8's CHECK_LOCAL showed 6.5s for the prefix head vs ~1s steady;
-    # the r8-verdict 'slowest query' table was partly this artifact)
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    from pyspark.sql import functions as _F
-
-    @_F.pandas_udf("double")
-    def _wu(s: pd.Series) -> pd.Series:
-        return s
-
-    spark.range(1000).select(_wu(_F.col("id").cast("double"))).collect()
-    spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
-    # one full throwaway registry query (same as bench.py): without it
-    # the FIRST checked query absorbs whole-stage-codegen / shuffle
-    # warmup — r10's CHECK_LOCAL read 5.8s for the prefix head vs 1.6s
-    # steady for the same query
-    from github_etl_pipeline_spark.plans import REGISTRY as _REG
-
-    next(iter(_REG.values())).builder(spark, sf_dir).write.mode(
-        "overwrite"
-    ).format("noop").save()
-    sweep_caches(spark)
+    spark = harness.session("check_correctness", sf_dir)
 
     con = duckdb.connect()
     for t in TABLES:
@@ -126,7 +106,6 @@ def main() -> int:
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
-    queries = entry.queries()
     oracles = entry.oracle_sql()
     failures = []
     # managed_caches: per-query sweeps keep queries independent; the

@@ -28,114 +28,29 @@ from __future__ import annotations
 import math
 import os
 import sys
-import time
 
-import pandas as pd  # module-level: the warmup pandas_udf's type hints
-# are strings under future-annotations and resolve against module globals
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from pyspark.errors import AnalysisException
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
-SF1_DIR = os.path.join(REPO, ".sf1")
-SF3_DIR = os.path.join(REPO, ".sf3")
+sys.path.insert(0, REPO)
 
-# queries that get an extra 3x tier: the text-heavy family (VERDICT r4
-# #5) plus the banded-join/ANN family (VERDICT r5 #7), and since r9 the
-# TPC-H + session/window block (VERDICT r8 #5). Build the full tier:
-#   python tools/make_sf1.py --copies 30
-# Maps query -> the ANCHOR .sf3 table it needs (the probe skips the sf3
-# cell, rather than crashing, when that table has not been generated;
-# multi-table queries need the full tier on disk).
-SF3_PROBES = {
-    "repetition_profile_documents": "documents",
-    "quality_filter_documents": "documents",
-    "dup_span_documents": "documents",
-    "curation_pipeline_documents": "documents",
-    "exact_dedup_documents": "documents",
-    "minhash_dup_pairs_documents": "documents",
-    "fuzzy_pairs_documents": "documents",
-    "ann_topk_lsh": "embeddings",
-    "ivf_index_build": "embeddings",
-    "ann_topk_ivf_served": "embeddings",
-    # r8 additions (VERDICT r7 #6): the remaining heavy text/media family
-    "bigram_lm_outliers": "documents",
-    "top_terms_by_source": "documents",
-    "source_overlap_documents": "documents",
-    "media_dup_pairs_documents": "documents",
-    "quality_percentile_gate_documents": "documents",
-    # r9 additions (VERDICT r8 #5): TPC-H + session/window block
-    "pricing_summary": "lineitem",
-    "tpch_q9_product_profit": "lineitem",
-    "tpch_q18_large_orders": "lineitem",
-    "quantile_sketch_lineitem": "lineitem",
-    "top3_orders_per_priority": "orders",
-    "sessionize_events": "events",
-    "session_window_events": "events",
-    "funnel_events": "events",
-    "window_analytics_events": "events",
-    "rolling_7d_revenue": "events",
-    "ann_topk_gemm": "embeddings",
-    "split_documents_hash": "documents",
-    "simhash_dup_pairs": "documents",
-    "ngram_jaccard_pairs_documents": "documents",
-    # r10 additions (VERDICT r9 #4): the embedding-pair family — the two
-    # slowest non-pipeline queries at sf1 with no scaled tier yet
-    "embedding_high_sim_pairs": "embeddings",
-    "embedding_dup_clusters": "embeddings",
-    # r11 addition (VERDICT r10 #4): the steady-state index-ingest path
-    "ivf_index_append": "embeddings",
-    # r11 addition: DSIR data-selection (one vocab-sized model aggregate
-    # + one corpus-sized scoring join — the text-LM cost family)
-    "dsir_importance_documents": "documents",
-    # r11 second batch: the semantic-curation + PQ block
-    "semdedup_embeddings": "embeddings",        # adaptive-cell within-cell pairs
-    "knn_graph_recall_tuned": "embeddings",     # ladder sweep: shared cand scan
-    "containment_gram_documents": "documents",  # rare-gram bounded self-join
-    "dim_ambiguity_guard_synth": "events",      # dim window + set-cardinality aggs
-    "cluster_balanced_sample_embeddings": "embeddings",
-    "hybrid_rrf_search_documents": "documents",  # needs documents+embeddings
-    "pq_codes_embeddings": "embeddings",        # codebook build + encode
-    "ann_topk_ivfpq_served": "embeddings",      # pruned + compressed serve
-    "ivfpq_index_append": "embeddings",         # frozen-state delta ingest
-    "pagerank_similarity_graph": "embeddings",  # k-NN graph + 3 PR rounds
-    "token_budget_mix_documents": "documents",  # rate solve + coin projection
-    # r11 fifth batch: LPA rounds over the same graph + the split audit
-    "lpa_communities_similarity_graph": "embeddings",
-    "split_leakage_audit_documents": "documents",
-    # r12 additions (VERDICT r11 #1/#2): the two new recall-floor gates
-    # + the recall-tuned banding scale-sibling
-    "knn_graph_recall_floor": "embeddings",
-    "minhash_recall_floor": "documents",
-    "minhash_recall_tuned": "documents",
-    "bloom_dedup_documents": "documents",
-    "containment_pairs_documents": "documents",
-    # r13 extension block
-    "asof_nearest_events": "events",
-    "kmv_source_overlap_documents": "documents",
-    "heavy_grams_documents": "documents",
-    "quality_checks_orders": "orders",
-    "heavy_value_event_types": "events",
-    "join_size_estimate_orders": "lineitem",
-    "quality_metrics_lineitem": "lineitem",
-    "frequent_brand_pairs_lineitem": "lineitem",
-    "k_anonymity_events": "events",
-    "triangle_stats_similarity_graph": "embeddings",
-    "kcenter_coreset_embeddings": "embeddings",
-    "scd2_user_status_events": "events",
-    "activity_streaks_events": "events",
-    "record_linkage_customers": "customer",
-    "term_drift_documents": "documents",
-}
+from github_etl_pipeline_spark.plans import REGISTRY  # noqa: E402
+from tools import harness  # noqa: E402
 
-# the 10x tier started as pair-miners-only (VERDICT r8 #5: "the 100-TB
-# claim currently rests on a 1->3 fit"); r9 widened it to every probe
-# with an sf3 anchor so the largest-step exponent exists for the whole
-# cost-family set, not just banding (ADVICE r9: kept as a plain alias of
-# SF3_PROBES so an SF3 edit can never silently diverge the two tiers):
-#   python tools/make_sf1.py --copies 100
-SF10_DIR = os.path.join(REPO, ".sf10")
-SF10_PROBES = dict(SF3_PROBES)
+# Scale tiers, smallest first. sf1 / sf3 / sf10 are the 10x / 30x / 100x
+# key-offset replications of sf0.1 that tools/make_sf1.py builds
+# (--copies 10 / 30 / 100; --tables builds a tier partially). A scaled
+# tier is probed when its directory exists and every smaller tier is
+# probed; a query's cell is left blank when a table it reads has not
+# been generated in that tier.
+TIERS = [
+    ("sf0.001", "/root/testdata/sf0.001"),
+    ("sf0.01", "/root/testdata/sf0.01"),
+    ("sf0.1", "/root/testdata/sf0.1"),
+    ("sf1", os.path.join(REPO, ".sf1")),
+    ("sf3", os.path.join(REPO, ".sf3")),
+    ("sf10", os.path.join(REPO, ".sf10")),
+]
 
 # one representative per cost family
 PROBES = [
@@ -242,7 +157,7 @@ def _pool_etl_tiers(spark, sweep_caches, prior=None) -> list[str]:
     ~a minute at x10), so a transient host spike used to publish phantom
     exponents unchecked — an r11 run under 13-loadavg contention read
     x10 at 71.7s / alpha 1.47 vs the committed 38.8s / 0.67. Like
-    ``timed_cell``, a tier reading >1.5x its committed seconds gets ONE
+    ``harness.recheck``, a tier reading >1.5x its committed seconds gets ONE
     extra rep and the min wins."""
     import math as _math
     import time as _time
@@ -329,8 +244,6 @@ def _lsh_recall_tiers(spark, sweep_caches) -> list[str]:
         recall_seed_union,
     )
 
-    tiers = [("sf0.01", SF_DIRS[1]), ("sf0.1", SF_DIRS[2]), ("sf1", SF1_DIR),
-             ("sf3", SF3_DIR), ("sf10", SF10_DIR)]
     out = [
         "## embedding-LSH recall tiers (cos=0.85 seeded near-dups; prod = "
         f"{_EMB_PAIR_LSH['bands']} fixed bands, tuned = bands_for_recall(n, 0.95))",
@@ -354,7 +267,7 @@ def _lsh_recall_tiers(spark, sweep_caches) -> list[str]:
         found = expected.join(pairs, ["id_a", "id_b"]).count()
         return found / max(1, n_exp), _time.perf_counter() - t0
 
-    for label, d in tiers:
+    for label, d in TIERS[1:]:
         if not os.path.exists(os.path.join(d, "embeddings.parquet")):
             continue
         emb = spark.read.parquet(os.path.join(d, "embeddings.parquet")).select(
@@ -409,8 +322,6 @@ def _knn_graph_recall_tiers(spark, sweep_caches) -> list[str]:
 
     from github_etl_pipeline_spark.operators.graph import knn_graph_recall_flags
 
-    tiers = [("sf0.01", SF_DIRS[1]), ("sf0.1", SF_DIRS[2]), ("sf1", SF1_DIR),
-             ("sf3", SF3_DIR), ("sf10", SF10_DIR)]
     out = [
         "## knn-graph edge recall tiers (exact 3-NN sample vs the cell-local",
         "IVF build; ~64 adaptively-sampled query nodes per tier; random",
@@ -419,7 +330,7 @@ def _knn_graph_recall_tiers(spark, sweep_caches) -> list[str]:
         "| tier | n | recall @1 | s @1 | recall @2 | s @2 | recall @4 | s @4 |",
         "|---|---|---|---|---|---|---|---|",
     ]
-    for label, d in tiers:
+    for label, d in TIERS[1:]:
         if not os.path.exists(os.path.join(d, "embeddings.parquet")):
             continue
         emb = spark.read.parquet(os.path.join(d, "embeddings.parquet")).select(
@@ -462,8 +373,6 @@ def _minhash_recall_tiers(spark, sweep_caches) -> list[str]:
         minhash_recall_seed_union,
     )
 
-    tiers = [("sf0.01", SF_DIRS[1]), ("sf0.1", SF_DIRS[2]), ("sf1", SF1_DIR),
-             ("sf3", SF3_DIR), ("sf10", SF10_DIR)]
     out = [
         "## minhash banding recall tiers (seeded exact-Jaccard pairs at threshold",
         "0.2; prod = 16 sigs x 4 bands, tuned = minhash_bands_for_recall(0.2, 0.9)",
@@ -500,7 +409,7 @@ def _minhash_recall_tiers(spark, sweep_caches) -> list[str]:
             for t in ("j81", "j51", "j26")
         )
 
-    for label, d in tiers:
+    for label, d in TIERS[1:]:
         if not os.path.exists(os.path.join(d, "documents.parquet")):
             continue
         docs = spark.read.parquet(os.path.join(d, "documents.parquet")).select(
@@ -521,11 +430,10 @@ def _minhash_recall_tiers(spark, sweep_caches) -> list[str]:
 
 def _prior_cells() -> dict[tuple[str, str], float]:
     """(query, column-header) -> seconds from the committed SCALING.md —
-    the contention re-adjudication baseline (same rule as bench.py: a
-    cell measuring >1.5x its committed value gets ONE extra rep, min of
-    all observations wins; transient host spikes otherwise publish
-    phantom superlinear exponents — r10 saw a plain scan+agg read
-    alpha=1.15 in one run and 0.69 an hour earlier).
+    the baseline of the harness's contention re-check (``recheck``);
+    transient host spikes otherwise publish phantom superlinear
+    exponents — r10 saw a plain scan+agg read alpha=1.15 in one run and
+    0.69 an hour earlier.
 
     Keyed by the HEADER NAME of each column, not its position (ADVICE
     r10): if tier availability differs from the committed layout (sf1
@@ -557,13 +465,27 @@ def _prior_cells() -> dict[tuple[str, str], float]:
     return prior
 
 
+def tier_cell(spark, name: str, sf_dir: str, prior: float | None) -> float | None:
+    """Seconds for registry query ``name`` on the tables under ``sf_dir``:
+    the harness's min of 2 noop reps, re-checked against the committed
+    cell ``prior``. None when a table the query reads has not been
+    generated in that tier (Spark's PATH_NOT_FOUND for a path under
+    ``sf_dir``); any other error raises."""
+    def build():
+        return REGISTRY[name].builder(spark, sf_dir)
+
+    try:
+        best = harness.best_of(spark, build, 2)
+    except AnalysisException as e:
+        path = (e.getMessageParameters() or {}).get("path", "")
+        if e.getCondition() == "PATH_NOT_FOUND" and f"{sf_dir}/" in path:
+            return None
+        raise
+    return harness.recheck(spark, build, best, prior)[0]
+
+
 def main() -> int:
-    from github_etl_pipeline_spark.plans import REGISTRY
-    from github_etl_pipeline_spark.session import (
-        get_spark,
-        managed_caches,
-        sweep_caches,
-    )
+    from github_etl_pipeline_spark.session import managed_caches, sweep_caches
 
     only = {a for a in sys.argv[1:] if not a.startswith("-")}
     unknown = only - set(PROBES)
@@ -573,74 +495,34 @@ def main() -> int:
     probes = [n for n in PROBES if n in only] if only else PROBES
 
     prior = _prior_cells()
+    tiers = TIERS[:3]
+    for tier in TIERS[3:]:
+        if not os.path.isdir(tier[1]):
+            break
+        tiers.append(tier)
+    labels = [label for label, _ in tiers]
+    # column layout: seconds of the first four tiers, then the
+    # 0.01->0.1 (and 0.1->1) exponents, then seconds + exponent for each
+    # larger tier; ("a", i) is the exponent from tier i-1 to tier i
+    k = min(len(tiers), 4)
+    cols = [("s", i) for i in range(k)] + [("a", i) for i in range(2, k)]
+    for i in range(4, len(tiers)):
+        cols += [("s", i), ("a", i)]
 
-    def timed_cell(spec, sf_dir: str, name: str, col: str) -> float:
-        """min-of-2 noop executions, +1 re-adjudication rep when the
-        result reads >1.5x the committed cell for this (query, tier).
+    def header(kind: str, i: int) -> str:
+        if kind == "s":
+            return f"{labels[i]} s"
+        return f"alpha({labels[i - 1][2:]}->{labels[i][2:]})"
 
-        Caches are swept BETWEEN reps (same discipline as bench.py), not
-        only between cells: builders that persist a dominant intermediate
-        (the k-NN graph, the shingle base, IVF cells, the PQ sample)
-        would otherwise serve rep 2 from rep 1's cache via plan-equality
-        lookup, and min-of-2 silently becomes a warm-cache number —
-        measured 3.8s warm vs 13.6s honest-cold for the LPA query at sf1
-        when this harness still swept per-cell."""
-        best = math.inf
-        reps = 2
-        while reps > 0:
-            for _ in range(reps):
-                t0 = time.perf_counter()
-                spec.builder(spark, sf_dir).write.mode("overwrite").format(
-                    "noop").save()
-                best = min(best, time.perf_counter() - t0)
-                sweep_caches(spark)
-            prev = prior.get((name, col))
-            reps = 1 if (prev and best > 1.5 * prev and reps == 2) else 0
-        return best
+    def alpha(ts: list, i: int) -> float | None:
+        if ts[i] is None or ts[i - 1] is None:
+            return None
+        return math.log(ts[i] / ts[i - 1]) / math.log(
+            float(labels[i][2:]) / float(labels[i - 1][2:]))
 
-    sf_dirs = list(SF_DIRS)
-    have_sf1 = os.path.isdir(SF1_DIR) and os.path.exists(
-        os.path.join(SF1_DIR, "lineitem.parquet"))
-    if have_sf1:
-        sf_dirs.append(SF1_DIR)
-    sf3_tables = {
-        t for t in set(SF3_PROBES.values())
-        if os.path.exists(os.path.join(SF3_DIR, f"{t}.parquet"))
-    }
-    have_sf3 = have_sf1 and bool(sf3_tables)
-    sf10_tables = {
-        t for t in set(SF10_PROBES.values())
-        if os.path.exists(os.path.join(SF10_DIR, f"{t}.parquet"))
-    }
-    have_sf10 = have_sf3 and bool(sf10_tables)
+    spark = harness.session("scale_probe", TIERS[1][1])
 
-    spark = get_spark(app_name="scale_probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    # warmup: JVM/codegen, Python-worker/Arrow, parquet reader, plus one
-    # full throwaway probe query — same block as bench.py, so the first
-    # PROBED cell never absorbs whole-stage-codegen/shuffle startup
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    from pyspark.sql import functions as _F
-
-    @_F.pandas_udf("double")
-    def _wu(s: pd.Series) -> pd.Series:
-        return s
-
-    spark.range(1000).select(_wu(_F.col("id").cast("double"))).collect()
-    spark.read.parquet(os.path.join(SF_DIRS[1], "region.parquet")).count()
-    REGISTRY[PROBES[0]].builder(spark, SF_DIRS[1]).write.mode("overwrite").format(
-        "noop").save()
-    sweep_caches(spark)
-
-    hdr_cols = ["query", "sf0.001 s", "sf0.01 s", "sf0.1 s"]
-    if have_sf1:
-        hdr_cols += ["sf1 s", "alpha(0.01->0.1)", "alpha(0.1->1)"]
-    else:
-        hdr_cols += ["alpha(0.01->0.1)"]
-    if have_sf3:
-        hdr_cols += ["sf3 s", "alpha(1->3)"]
-    if have_sf10:
-        hdr_cols += ["sf10 s", "alpha(3->10)"]
+    hdr_cols = ["query"] + [header(*c) for c in cols]
     lines = [
         "# SCALING — per-query scaling exponents (auto-generated by tools/scale_probe.py)",
         "",
@@ -662,46 +544,28 @@ def main() -> int:
            " chars/row is the same at every tier, so char-bound"
            " operators scale honestly; the fixed ~1.3x char overhead vs"
            " sf0.1 slightly inflates the 0.1->1 step only)."
-           if have_sf1 else ""),
+           if len(tiers) > 3 else ""),
         "",
         "| " + " | ".join(hdr_cols) + " |",
         "|" + "---|" * len(hdr_cols),
     ]
     worst: list[tuple[str, float]] = []
     new_rows: dict[str, str] = {}
-    # managed_caches: the per-tier sweeps keep cells independent; the
-    # context guarantees a swept session even if a probe raises
+    # the exponent over the largest base step: 0.1->1 with sf1, else 0.01->0.1
+    w = k - 1
+    # managed_caches: the harness sweeps after every rep; the context
+    # guarantees a swept session even if a probe raises
     with managed_caches(spark):
         for name in probes:
-            spec = REGISTRY[name]
-            ts = []
-            tier_hdrs = ["sf0.001 s", "sf0.01 s", "sf0.1 s", "sf1 s"]
-            for i, sf_dir in enumerate(sf_dirs):
-                ts.append(timed_cell(spec, sf_dir, name, tier_hdrs[i]))
-            a_small = math.log(ts[2] / ts[1]) / math.log(10)
-            cells = [name] + [f"{t:.2f}" for t in ts]
-            if have_sf1:
-                a_big = math.log(ts[3] / ts[2]) / math.log(10)
-                worst.append((name, a_big))
-                cells += [f"{a_small:.2f}", f"{a_big:.2f}"]
-            else:
-                worst.append((name, a_small))
-                cells += [f"{a_small:.2f}"]
-            best3 = None
-            if have_sf3:
-                if SF3_PROBES.get(name) in sf3_tables:
-                    best3 = timed_cell(spec, SF3_DIR, name, "sf3 s")
-                    a3 = math.log(best3 / ts[3]) / math.log(3)
-                    cells += [f"{best3:.2f}", f"{a3:.2f}"]
-                else:
-                    cells += ["", ""]
-            if have_sf10:
-                if best3 is not None and SF10_PROBES.get(name) in sf10_tables:
-                    best10 = timed_cell(spec, SF10_DIR, name, "sf10 s")
-                    a10 = math.log(best10 / best3) / math.log(10 / 3)
-                    cells += [f"{best10:.2f}", f"{a10:.2f}"]
-                else:
-                    cells += ["", ""]
+            ts = [tier_cell(spark, name, d, prior.get((name, f"{label} s")))
+                  for label, d in tiers]
+            a = alpha(ts, w)
+            if a is not None:
+                worst.append((name, a))
+            cells = [name] + [
+                "" if v is None else f"{v:.2f}"
+                for v in (ts[i] if kind == "s" else alpha(ts, i) for kind, i in cols)
+            ]
             lines.append("| " + " | ".join(cells) + " |")
             new_rows[name] = lines[-1]
             print(lines[-1], flush=True)
@@ -738,7 +602,7 @@ def main() -> int:
         print(f"patched SCALING.md rows: {sorted(new_rows)} (inserted: {fresh})")
         return 0
 
-    which = "alpha(0.1->1)" if have_sf1 else "alpha(0.01->0.1)"
+    which = header("a", w)
     worst.sort(key=lambda kv: -kv[1])
     lines += [
         "",
