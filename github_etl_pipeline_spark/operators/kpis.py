@@ -14,15 +14,14 @@ Reference semantics (etl/transform.py:165-258 + calculate_volatility
   max_win_factor = max(game_win) / min_bet                         (A7)
   all metrics NULL unless min_bet > 0 and size > 0                 (P5)
 
-Execution shape (the 100-TB story): the only aggregate over full data
-is the line count per (file, raw text) that ``count_pol_lines`` runs
-before the tokenizer — its map-side partial aggregation reduces ~1M
-lines/pool to the pool's few dozen distinct texts (~30 in the reference
-corpus) before any network transfer, and the tokenizer then runs once
-per distinct text. ``pool_distribution`` regroups those counts by
-``(source_file, game_win)`` (a plain ``parse_pol_lines`` frame is
-counted there instead). The key is ``source_file`` alone, in the URI
-form the scan lists it in. ONE per-pool aggregate over that distribution
+Execution shape (the 100-TB story): no Spark operator sees a line.
+``sources.pol.count_pol_files`` counts each file's lines per raw text in
+one Arrow pass at the scan leaf, so ~1M lines/pool reach Spark as the
+pool's few dozen distinct texts (~30 in the reference corpus), and the
+tokenizer runs once per distinct text. ``pool_distribution`` regroups
+those counts by ``(source_file, game_win)`` (a plain ``parse_pol_lines``
+frame is counted there instead). The key is ``source_file`` alone, in
+the URI form the scan lists it in. ONE per-pool aggregate over that distribution
 yields the pool stats and collects the pool's valid ``(game_win, cnt)``
 pairs; the key is decoded and the other pool key columns come from
 ``sources.pol.pool_identity`` once per pool; after the broadcast join
@@ -55,7 +54,7 @@ Z_90_CI = 1.645
 
 def pool_distribution(parsed: DataFrame, key_cols: list[str] | None = None) -> DataFrame:
     """(pool, game_win) -> cnt (A5). Rows that already carry a ``cnt``
-    (``count_pol_lines``) add it; any other row counts once."""
+    (``count_pol_files``) add it; any other row counts once."""
     key_cols = key_cols or POOL_KEY_COLS
     n = F.sum("cnt") if "cnt" in parsed.columns else F.count(F.lit(1))
     return parsed.groupBy(*key_cols, "game_win").agg(n.alias("cnt"))
@@ -69,10 +68,10 @@ def pool_kpis(
 ) -> DataFrame:
     """Full per-pool KPI record from parsed lines.
 
-    parsed     — output of ``parse_pol_lines`` or ``count_pol_lines``
+    parsed     — output of ``parse_pol_lines`` or ``count_pol_files``
                  (anything with ``source_file`` + ``game_win``, and
                  optionally a ``cnt`` of lines per row); with
-                 ``keep_invalid=True`` / ``count_pol_lines`` unparseable
+                 ``keep_invalid=True`` / ``count_pol_files`` unparseable
                  lines count in ``line_count`` and a file with no valid
                  line still gets a size=0 record.
     dim_agg    — output of ``prepare_dim`` (norm_pool_id, min_bet, game_ids);

@@ -1,6 +1,7 @@
 """End-to-end batch pipeline (reference EP1, etl/main.py:42-151).
 
-extract (distributed scan, lines counted per distinct text) -> transform
+extract (distributed scan, each file's lines counted per distinct text
+in one Arrow pass) -> transform
 (per-pool aggregate + broadcast join of the driver-prepared dimension)
 -> per-pool KPI records + fleet rollup. Sinks live in
 ``github_etl_pipeline_spark.sinks`` and are optional — the DataFrame is
@@ -18,7 +19,7 @@ from github_etl_pipeline_spark.operators.kpis import pool_kpis
 from github_etl_pipeline_spark.operators.rollup import aggregated_summary, summary_metrics
 from github_etl_pipeline_spark.sinks import reports, upsert
 from github_etl_pipeline_spark.sources.lookup import load_game_lookup, prepare_dim
-from github_etl_pipeline_spark.sources.pol import count_pol_lines, read_pol_lines
+from github_etl_pipeline_spark.sources.pol import count_pol_files, scan_pol_files
 
 
 def run_pipeline(
@@ -47,7 +48,8 @@ def run_pipeline(
     # one scan: blank and invalid lines count under game_win NULL, so raw
     # line counts AND size-0 records for unparseable files come out of the
     # same aggregate (no separate inventory pass over the data)
-    counted = count_pol_lines(read_pol_lines(spark, str(scan_dir)))
+    raw = scan_pol_files(spark.read.format("binaryFile"), str(scan_dir))
+    counted = count_pol_files(raw, str(scan_dir))
 
     if dim is None:
         dim = load_game_lookup(spark, repo_root)

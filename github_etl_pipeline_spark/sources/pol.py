@@ -12,8 +12,10 @@ and the batch scan, the streaming source and the mtime/git CDC reads
     filtered on the hidden ``_metadata.file_path`` column. It takes the
     reader, so text, ``binaryFile`` and streaming reads share it.
   * ``pol_lines`` — the projection from ``_metadata`` to ``source_file``
-    (the path relative to the scan root; git mode passes a second root
-    for files outside it), ``file_size`` and ``file_mtime``.
+    (the path relative to the scan root), ``file_size`` and
+    ``file_mtime`` for the line-level text readers. ``count_pol_files``,
+    ``pool_kpis``' input, projects the same ``source_file`` onto per-file
+    line counts made in Arrow, so on that path no Spark operator sees a line.
   * ``pool_identity`` — ``file_name``, ``folder_path``, ``parent_folder``,
     ``pool_id`` and ``pool_type`` derived from ``source_file`` (reference
     P2, etl/transform.py:181-186: missing name parts become NULL like the
@@ -27,24 +29,18 @@ path. ``decode_uri_path`` turns the key into the decoded posix path the
 reference keys its outputs on; ``pool_kpis`` and ``pool_extended_stats``
 apply it once per pool, after their aggregates, so no line pays for it.
 
-S4 multi-encoding read (etl/extract.py:83-105): ``read_pol_lines`` is the
-UTF-8 text source (correct for this ASCII corpus);
+S4 multi-encoding read (etl/extract.py:83-105): ``read_pol_lines`` and
+``count_pol_files`` read UTF-8 (correct for this ASCII corpus);
 ``read_pol_lines_any_encoding`` is the faithful fallback chain. The
 reference tries utf-8, utf-8-sig, latin-1, cp1252, then
 binary-with-replacement — but plain utf-8 succeeds whenever utf-8-sig
-would (the BOM decodes to U+FEFF), and latin-1 maps every byte, so cp1252
-and the binary fallback are unreachable; the chain reduces EXACTLY to
-"valid UTF-8 ? utf-8 : latin-1", which ``is_valid_utf8`` + ``decode``
-express as codegen'd JVM expressions over a ``binaryFile`` scan.
+would (the BOM decodes to U+FEFF), and latin-1 maps every byte, so the
+chain reduces EXACTLY to "valid UTF-8 ? utf-8 : latin-1", which
+``is_valid_utf8`` + ``decode`` express over a ``binaryFile`` scan.
 
 P1 lenient tokenizer (etl/transform.py:61-95): split on whitespace,
-``int(tok0)`` else drop the line, add tok2 when it is an int — ``split`` +
-``try_cast`` + ``coalesce``, entirely inside whole-stage codegen.
-
-Scale notes: the text source streams each file in splits (no whole-file
-string materialization — contrast etl/extract.py:152); a fleet of pool
-files scans partition-parallel with ``maxPartitionBytes`` chunking, and
-every derived column is a codegen'd expression.
+``int(tok0)`` else drop the line, add tok2 when it is an int, NULL when
+the sum leaves int64 — ``split`` + ``try_cast`` + ``try_add``.
 """
 
 from __future__ import annotations
@@ -88,37 +84,29 @@ def scan_pol_files(reader: DataFrameReader | DataStreamReader, root: str) -> Dat
     return drop_excluded(df, F.col("_metadata.file_path"))
 
 
-def _strip_root(spark: SparkSession, path: Column, root: str) -> Column:
-    """Everything after the first ``<root>/`` in ``path``, or ``path``
-    when the root is absent. The root is URI-encoded the way Hadoop lists
-    it, so roots holding a space or a ``%`` are found too. A substring
-    search, not a regex: this column is the per-line aggregation key, and
-    the regex form cost ~2.6s of the 27M-row reference-corpus aggregate."""
-    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(str(root).replace("\\", "/"))
-    marker = hpath.toUri().getRawPath().rstrip("/") + "/"
-    pos = F.instr(path, F.lit(marker))
-    return F.when(pos > 0, F.substring(path, pos + len(marker), 2_147_483_647)).otherwise(path)
+def _strip_root(spark: SparkSession, path: Column, *roots: str | None) -> Column:
+    """``path`` cut after the first ``<root>/`` of each non-None root in
+    turn, unchanged where a root is absent. Roots are URI-encoded as Hadoop
+    lists them, so a space or ``%`` in one is found. A substring search:
+    the regex form cost ~2.6s of the 27M-row reference line aggregate."""
+    for root in filter(None, roots):
+        hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(str(root).replace("\\", "/"))
+        marker = hpath.toUri().getRawPath().rstrip("/") + "/"
+        pos = F.instr(path, F.lit(marker))
+        path = F.when(pos > 0, F.substring(path, pos + len(marker), 2_147_483_647)).otherwise(path)
+    return path
 
 
-def pol_lines(raw: DataFrame, scan_dir: str, fallback_root: str | None = None) -> DataFrame:
-    """Attach ``source_file``, ``file_size``, ``file_mtime`` and the
-    ``pool_identity`` columns to a read of pool files (any columns of
-    ``raw`` are kept; a ``_metadata`` column carried through a select is
-    consumed and dropped).
-
-    ``source_file`` is the file's path relative to ``scan_dir``. Git mode
-    also reads files OUTSIDE ``scan_dir`` (its subdir filter is a
-    reference-faithful posix substring test); those are made relative to
-    ``fallback_root`` instead, like the reference's
-    ``relative_to(repo_root)`` (etl/extract.py:125)."""
+def pol_lines(raw: DataFrame, scan_dir: str) -> DataFrame:
+    """Attach ``source_file`` (the file's path relative to ``scan_dir``),
+    ``file_size``, ``file_mtime`` and the ``pool_identity`` columns to a
+    read of pool files (any columns of ``raw`` are kept; a ``_metadata``
+    column carried through a select is consumed and dropped)."""
     meta = F.col("_metadata")
-    rel = _strip_root(raw.sparkSession, meta.file_path, scan_dir)
-    if fallback_root is not None:
-        rel = _strip_root(raw.sparkSession, rel, fallback_root)
     return pool_identity(
         raw.withColumns(
             {
-                "source_file": rel,
+                "source_file": _strip_root(raw.sparkSession, meta.file_path, scan_dir),
                 "file_size": meta.file_size,
                 "file_mtime": meta.file_modification_time,
             }
@@ -165,14 +153,8 @@ def read_pol_lines_any_encoding(spark: SparkSession, scan_dir: str) -> DataFrame
     files via the reference's effective decode chain (valid UTF-8 ->
     utf-8, else latin-1 — see module docstring for why the 5-step chain
     reduces to this). Adds an ``encoding`` column ('utf-8' | 'latin-1')
-    so pipelines can count salvaged files.
-
-    Scale note: ``binaryFile`` materializes one file per row (bounded by
-    a pool file's ~10 MB size, exactly like the reference's whole-file
-    read at etl/extract.py:152) and does not split large files across
-    tasks. Parallelism comes from file count — the right trade for a
-    fleet of millions of small pool files; keep the streaming text source
-    for known-UTF8 corpora."""
+    so pipelines can count salvaged files. Memory: one whole file per row,
+    as in ``count_pol_files``."""
     valid = F.is_valid_utf8("content")
     text = F.when(valid, F.decode("content", "UTF-8")).otherwise(
         F.decode("content", "ISO-8859-1")
@@ -196,24 +178,66 @@ def _tokens(value: Column) -> Column:
 
 def _game_win(toks: Column) -> Column:
     """``int(tok0)`` plus tok2 when it is an int; NULL when tok0 is not an
-    int (the reference drops that line)."""
+    int (the reference drops that line) or the sum leaves int64."""
     base = F.get(toks, 0).try_cast("long")
-    return base + F.coalesce(F.get(toks, 2).try_cast("long"), F.lit(0))
+    return F.try_add(base, F.coalesce(F.get(toks, 2).try_cast("long"), F.lit(0)))
 
 
-def count_pol_lines(lines: DataFrame) -> DataFrame:
-    """``(source_file, game_win, cnt)`` over raw lines: every line counts,
-    a blank or invalid one under game_win NULL. Lines are counted per
-    (file, raw text) BEFORE the tokenizer runs, so the map-side partial
-    aggregate collapses a pool's ~1M lines to its few dozen distinct
-    texts and split/try_cast run once per distinct text, not once per
-    line. Texts that parse to the same value (``"100"``, ``"100 TB1"``)
-    keep one row each; ``pool_kpis`` sums ``cnt`` when it regroups by
-    ``(source_file, game_win)``."""
-    return (
-        lines.groupBy("source_file", "value")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select("source_file", _game_win(_tokens(F.col("value"))).alias("game_win"), "cnt")
+def count_pol_files(raw: DataFrame, scan_dir: str, fallback_root: str | None = None) -> DataFrame:
+    """``(source_file, game_win, cnt)`` over a ``binaryFile`` read of pool
+    files: one row per distinct line text of a file, blank and invalid
+    lines under game_win NULL. ``source_file`` is relative to ``scan_dir``,
+    or to ``fallback_root`` for the files git mode reads outside it (the
+    reference's ``relative_to(repo_root)``, etl/extract.py:125).
+
+    One ``mapInArrow`` at the scan leaf splits each file into lines and
+    counts them per text, so the path filter, ``_strip_root`` and the
+    tokenizer run once per file or distinct text, never per line. Lines
+    end as in the text source (``\\n``, ``\\r``, ``\\r\\n``; no empty line
+    after a final terminator; none in a 0-byte file), bytes are cast, not
+    decoded, but a leading UTF-8 BOM is kept. Memory: a whole file is one
+    Arrow row (as etl/extract.py:152 reads it) and a batch holds files of
+    one scan partition: at most ``spark.sql.files.maxPartitionBytes`` plus
+    one larger file. A file over ``spark.sql.sources.binaryFile.maxLength``
+    fails the read."""
+
+    def count_lines(batches):  # local, so cloudpickle ships it by value
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        for rb in batches:
+            content = rb.column(1)
+            if not pc.sum(pc.binary_length(content)).as_py():  # no rows or only 0-byte files
+                continue
+            _, offsets, data = content.buffers()
+            offs = np.frombuffer(offsets, np.int32, len(content) + 1, content.offset * 4)
+            lo, ends = int(offs[0]), offs[1:] - offs[0]
+            b = np.frombuffer(data, np.uint8, int(ends[-1]), lo)
+            # a line ends after "\n", after "\r" unless "\n" follows, and at a file's end
+            term, cr = b == 10, b == 13
+            cr[:-1] &= ~term[1:]
+            term |= cr
+            term[ends[ends > offs[:-1] - lo] - 1] = True
+            stops = np.flatnonzero(term) + 1
+            line_offs = pa.py_buffer(np.concatenate(([0], stops)).astype(np.int32) + lo)
+            lines = pa.Array.from_buffers(pa.binary(), len(stops), [None, line_offs, data])
+            g = pa.table({"f": np.searchsorted(ends, stops - 1, "right"), "v": lines})
+            g = g.group_by(["f", "v"]).aggregate([([], "count_all")])
+            # each text still ends in its terminator: strip it and regroup
+            v = pc.replace_substring_regex(g["v"], r"(\r\n|\r|\n)$", "")
+            g = pa.table({"f": g["f"], "v": v, "n": g["count_all"]})
+            g = g.group_by(["f", "v"]).aggregate([("n", "sum")])
+            path = pc.take(rb.column(0), g["f"])
+            yield from pa.table({"path": path, "value": g["v"], "cnt": g["n_sum"]}).to_batches()
+
+    counted = raw.select(F.col("_metadata.file_path"), "content").mapInArrow(
+        count_lines, "path string, value binary, cnt long"
+    )
+    return counted.select(
+        _strip_root(raw.sparkSession, F.col("path"), scan_dir, fallback_root).alias("source_file"),
+        _game_win(_tokens(F.col("value").cast("string"))).alias("game_win"),
+        "cnt",
     )
 
 
@@ -225,9 +249,7 @@ def parse_pol_lines(
     Mirrors reference P1/P2 semantics:
       * non-integer first token  -> line dropped (try_cast NULL filter);
         with ``keep_invalid=True`` the line is kept with game_win NULL so
-        downstream can count raw lines AND valid rows in ONE scan (the
-        pipeline's single-pass mode — invalid lines are rare, so the
-        extra NULL group per pool in the distribution agg costs nothing)
+        downstream can count raw lines AND valid rows in ONE scan
       * third token, when integer, is ADDED to the value
       * type code (second token) is carried along (the reference's current
         code discards it, but the README-era per-type statistics R12-R14

@@ -6,12 +6,12 @@ driven by a GitHub-Actions push loop (etl/extract.py:55-80,
 .github/workflows/etl_pipeline.yml:3-10): each run processes only files
 changed since the last run, falling back to a full scan when none.
 
-Every runner reads pool files through ``sources/pol.py`` — the same
-``scan_pol_files`` (recursive ``*.pol`` glob minus ``EXCLUDED_DIRS``),
-``pol_lines`` (``source_file`` projection) and ``pool_identity`` as the
-batch pipeline — and ends in the same tail, ``_upsert_pools``:
-``parse_pol_lines`` -> ``pool_kpis`` -> ``upsert_parquet``, so a rerun
-is an idempotent MERGE and every store row equals the batch record.
+Every runner reads pool files as the batch pipeline does: a
+``binaryFile`` read (``scan_pol_files``' recursive ``*.pol`` glob minus
+``EXCLUDED_DIRS``, or the changed paths) counted per file by
+``count_pol_files`` — and ends in the same tail, ``_upsert_pools``:
+``pool_kpis`` -> ``upsert_parquet``, so a rerun is an idempotent MERGE
+and every store row equals the batch record.
 
   * ``run_incremental`` — Spark's streaming file-source checkpoint,
     keyed on file PATH: ``readStream`` discovers files, the checkpoint
@@ -46,29 +46,23 @@ from pyspark.sql import functions as F
 
 from github_etl_pipeline_spark.operators.kpis import pool_kpis
 from github_etl_pipeline_spark.sinks.upsert import read_store, upsert_parquet
-from github_etl_pipeline_spark.sources.pol import (
-    drop_excluded,
-    parse_pol_lines,
-    pol_lines,
-    read_pol_lines,
-    scan_pol_files,
-)
+from github_etl_pipeline_spark.sources.pol import count_pol_files, drop_excluded, scan_pol_files
 
 
 def _upsert_pools(
     spark: SparkSession,
-    lines: DataFrame,
+    counted: DataFrame,
     store_path: str | Path,
     dim_agg: DataFrame | None,
     rounding: str,
 ) -> None:
-    """The tail every runner shares: KPI records of ``lines`` MERGEd into
-    the store. A merge into an existing store runs two actions over the
-    records (the touched buckets, then the write), so the pool-sized
-    ``pool_kpis`` result is persisted for the call and released in the
-    finally: the scan and shuffle under it run once."""
-    parsed = parse_pol_lines(lines, keep_invalid=True)
-    pools = pool_kpis(parsed, dim_agg=dim_agg, rounding=rounding).persist()
+    """The tail every runner shares: KPI records of ``counted`` (a
+    ``count_pol_files`` frame) MERGEd into the store. A merge into an
+    existing store runs two actions over the records (the touched
+    buckets, then the write), so the pool-sized ``pool_kpis`` result is
+    persisted for the call and released in the finally: the scan and
+    shuffle under it run once."""
+    pools = pool_kpis(counted, dim_agg=dim_agg, rounding=rounding).persist()
     try:
         upsert_parquet(spark, pools, store_path)
     finally:
@@ -87,8 +81,12 @@ def run_incremental(
     number of micro-batches processed. Repeated calls process only files
     the checkpoint has not seen (S2); the first call processes all (S3)."""
     scan_dir = str(scan_dir)
-    reader = spark.readStream.format("text").option("maxFilesPerTrigger", "64")
-    lines = pol_lines(scan_pol_files(reader, scan_dir), scan_dir)
+    reader = (
+        spark.readStream.format("binaryFile")  # a stream needs binaryFile's fixed schema
+        .schema("path string, modificationTime timestamp, length long, content binary")
+        .option("maxFilesPerTrigger", "64")
+    )
+    counted = count_pol_files(scan_pol_files(reader, scan_dir), scan_dir)
     n_batches = 0
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -99,7 +97,7 @@ def run_incremental(
         _upsert_pools(batch_df.sparkSession, batch_df, store_path, dim_agg, rounding)
 
     query = (
-        lines.writeStream.foreachBatch(process_batch)
+        counted.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", str(checkpoint_dir))
         .trigger(availableNow=True)
         .start()
@@ -156,7 +154,7 @@ def run_incremental_mtime(
         paths = [unquote(r.path) for r in changed.select("path").collect()]
         if not paths:
             return 0
-        lines = pol_lines(spark.read.format("text").load(paths), scan_dir)
+        raw = spark.read.format("binaryFile").load(paths)
         n_changed = len(paths)
     else:
         # first run = full scan: directory read, no per-path file list
@@ -164,8 +162,8 @@ def run_incremental_mtime(
         n_changed = listing.count()
         if n_changed == 0:
             return 0
-        lines = read_pol_lines(spark, scan_dir)
-    _upsert_pools(spark, lines, store_path, dim_agg, rounding)
+        raw = scan_pol_files(spark.read.format("binaryFile"), scan_dir)
+    _upsert_pools(spark, count_pol_files(raw, scan_dir), store_path, dim_agg, rounding)
     upsert_parquet(spark, changed, ledger_path, key="path")
     return n_changed
 
@@ -259,12 +257,12 @@ def run_incremental_git(
         if not p.startswith(scan_prefix):
             spark.catalog.refreshByPath(p)
     if paths:
-        raw = spark.read.format("text").load(paths)
-        lines = pol_lines(raw, scan_dir, fallback_root=str(repo_root))
+        raw = spark.read.format("binaryFile").load(paths)
         n_changed = len(paths)
     else:
         # no changed .pol files (or git failed) -> full-scan fallback
-        lines = read_pol_lines(spark, scan_dir)
+        raw = scan_pol_files(spark.read.format("binaryFile"), scan_dir)
         n_changed = -1
-    _upsert_pools(spark, lines, store_path, dim_agg, rounding)
+    counted = count_pol_files(raw, scan_dir, fallback_root=str(repo_root))
+    _upsert_pools(spark, counted, store_path, dim_agg, rounding)
     return n_changed

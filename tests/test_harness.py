@@ -1,8 +1,9 @@
 """The measurement harness (tools/harness.py) and the tools built on it:
 the min-of-reps timer sweeps caches after every rep, the 1.5x re-run rule
 adds exactly one rep, check_correctness rejects an unknown query name
-before any Spark work, and scale_probe leaves a tier cell blank when a
-table the query reads is missing from that tier."""
+before any Spark work, scale_probe leaves a tier cell blank when a
+table the query reads is missing from that tier, and its patch mode
+splices rows only under a header of the same tiers."""
 
 import os
 import subprocess
@@ -114,3 +115,20 @@ def test_scale_probe_tier_cell_raises_other_errors(spark, tmp_path, monkeypatch)
     (tmp_path / "sf3").mkdir()
     with pytest.raises(Exception, match="PATH_NOT_FOUND"):
         scale_probe.tier_cell(spark, "_missing_elsewhere", str(tmp_path / "sf3"), None)
+
+
+def test_scale_probe_splice_rows_replaces_inserts_and_refuses_other_tiers():
+    hdr3 = "| query | sf0.001 s | sf0.01 s | sf0.1 s | alpha(0.01->0.1) |"
+    hdr4 = "| query | sf0.001 s | sf0.01 s | sf0.1 s | sf1 s | alpha(0.01->0.1) | alpha(0.1->1) |"
+    first, second, third = scale_probe.PROBES[:3]
+    committed = ["# SCALING", hdr4, "|---|", f"| {first} | 1 | 2 | 3 | 4 | 5 | 6 |",
+                 f"| {third} | 1 | 2 | 3 | 4 | 5 | 6 |", "", "footer"]
+    rows = {first: f"| {first} | 9 | 9 | 9 | 9 | 9 | 9 |",
+            second: f"| {second} | 8 | 8 | 8 | 8 | 8 | 8 |"}
+    assert scale_probe.splice_rows(committed, hdr4, rows) == [
+        "# SCALING", hdr4, "|---|", rows[first], committed[4], rows[second], "", "footer"
+    ]
+    # a host without the sf1 tier yields 4-value rows: refused, tier named
+    with pytest.raises(ValueError, match=r"missing here: \['sf1'\]"):
+        scale_probe.splice_rows(committed, hdr3, {first: f"| {first} | 1 | 2 | 3 | 4 |"})
+    assert committed[3] == f"| {first} | 1 | 2 | 3 | 4 | 5 | 6 |"

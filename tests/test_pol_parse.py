@@ -75,6 +75,22 @@ def test_inventory_counts_raw_lines(spark):
     assert rec.pool_id == "0201"
 
 
+def test_sum_past_int64_is_null_not_an_error(spark, tmp_path):
+    """A first and third token that each fit int64 but whose sum does not
+    give game_win NULL (ROADMAP's int64-overflow rule): the line counts
+    in line_count, not in size, and the run does not fail."""
+    from github_etl_pipeline_spark.pipeline import run_pipeline
+
+    rows = ["9223372036854775807 X 1", "-9223372036854775808 X -1", "5 X 2"]
+    got = parse_pol_lines(_lines_df(spark, rows), keep_invalid=True).collect()
+    assert sorted((r.game_win for r in got), key=str) == [7, None, None]
+
+    (tmp_path / "Pool_0201_395.pol").write_text("\n".join(rows) + "\n")
+    pools, _ = run_pipeline(spark, tmp_path)
+    rec = pools.first()
+    assert (rec.line_count, rec.size, rec.total_win) == (3, 1, 7)
+
+
 def _reference_decode_chain(raw: bytes) -> str:
     """The reference's read_pol_file fallback (etl/extract.py:83-105):
     first of utf-8 / utf-8-sig / latin-1 / cp1252 that decodes, else

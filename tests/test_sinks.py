@@ -127,7 +127,7 @@ def test_run_pipeline_job_budget(spark, tmp_path):
     from github_etl_pipeline_spark.pipeline import run_pipeline
     from github_etl_pipeline_spark.sinks.upsert import collect_at_most
     from github_etl_pipeline_spark.sources.lookup import prepare_dim
-    from github_etl_pipeline_spark.sources.pol import count_pol_lines, read_pol_lines
+    from github_etl_pipeline_spark.sources.pol import count_pol_files, scan_pol_files
 
     d, dim = _surface_corpus(spark, tmp_path)
     for i in range(2):  # cold, then warm
@@ -138,7 +138,11 @@ def test_run_pipeline_job_budget(spark, tmp_path):
     prepared = []
     assert _count_jobs(spark, lambda: prepared.append(prepare_dim(dim))) == one_collect
     assert _count_jobs(
-        spark, lambda: pool_kpis(count_pol_lines(read_pol_lines(spark, str(d))), dim_agg=prepared[0])
+        spark,
+        lambda: pool_kpis(
+            count_pol_files(scan_pol_files(spark.read.format("binaryFile"), str(d)), str(d)),
+            dim_agg=prepared[0],
+        ),
     ) == 0
 
 

@@ -20,7 +20,9 @@ Patch mode re-probes ONLY the named queries and splices their rows into
 the committed SCALING.md in place (every other row, the recall tiers and
 the pool tiers stay untouched) — the targeted-re-adjudication workflow
 for a post-probe fix or a suspect cell, without re-paying the ~40-minute
-full sweep.
+full sweep. It needs the committed tiers: when this host lacks one, the
+main-table columns differ, and it exits 2 before starting Spark and
+writes nothing.
 """
 
 from __future__ import annotations
@@ -484,6 +486,38 @@ def tier_cell(spark, name: str, sf_dir: str, prior: float | None) -> float | Non
     return harness.recheck(spark, build, best, prior)[0]
 
 
+def splice_rows(committed: list[str], hdr_row: str, new_rows: dict[str, str]) -> list[str]:
+    """Patch mode's edit of SCALING.md: ``committed`` (its lines) with the
+    main-table row of each query in ``new_rows`` replaced; a query with
+    no committed row is inserted after the table's last row, in PROBES
+    order. Every other line (footer, recall and pool tiers) is kept.
+
+    Raises ValueError naming the missing tiers when ``hdr_row``, the
+    header this host's tiers give, differs from the committed one: a
+    fresh row would not line up with the committed columns."""
+    committed_hdr = next((ln for ln in committed if ln.startswith("| query |")), None)
+    if committed_hdr != hdr_row:
+        def tiers(row):
+            return [c[:-2] for c in (row or "").strip("| ").split(" | ") if c.endswith(" s")]
+        missing = [t for t in tiers(committed_hdr) if t not in tiers(hdr_row)]
+        raise ValueError(
+            f"SCALING.md's main table has tiers {tiers(committed_hdr)}, this host "
+            f"{tiers(hdr_row)}; missing here: {missing}. Build them with "
+            "tools/make_sf1.py or run the full sweep; nothing was written."
+        )
+    patched = [
+        next((new_rows[n] for n in new_rows if ln.startswith(f"| {n} |")), ln)
+        for ln in committed
+    ]
+    fresh = [n for n in PROBES if n in new_rows
+             and not any(ln.startswith(f"| {n} |") for ln in committed)]
+    if fresh:
+        last_row = max(i for i, ln in enumerate(patched)
+                       if any(ln.startswith(f"| {n} |") for n in PROBES))
+        patched[last_row + 1:last_row + 1] = [new_rows[n] for n in fresh]
+    return patched
+
+
 def main() -> int:
     from github_etl_pipeline_spark.session import managed_caches, sweep_caches
 
@@ -520,9 +554,20 @@ def main() -> int:
         return math.log(ts[i] / ts[i - 1]) / math.log(
             float(labels[i][2:]) / float(labels[i - 1][2:]))
 
-    spark = harness.session("scale_probe", TIERS[1][1])
-
     hdr_cols = ["query"] + [header(*c) for c in cols]
+    hdr_row = "| " + " | ".join(hdr_cols) + " |"
+    scaling_md = os.path.join(REPO, "SCALING.md")
+    if only:
+        # patch mode: check the column layout before starting Spark
+        with open(scaling_md) as fh:
+            committed = fh.read().splitlines()
+        try:
+            splice_rows(committed, hdr_row, {})
+        except ValueError as e:
+            print(e)
+            return 2
+
+    spark = harness.session("scale_probe", TIERS[1][1])
     lines = [
         "# SCALING — per-query scaling exponents (auto-generated by tools/scale_probe.py)",
         "",
@@ -546,7 +591,7 @@ def main() -> int:
            " sf0.1 slightly inflates the 0.1->1 step only)."
            if len(tiers) > 3 else ""),
         "",
-        "| " + " | ".join(hdr_cols) + " |",
+        hdr_row,
         "|" + "---|" * len(hdr_cols),
     ]
     worst: list[tuple[str, float]] = []
@@ -571,35 +616,9 @@ def main() -> int:
             print(lines[-1], flush=True)
 
     if only:
-        # patch mode: splice the fresh rows into the committed file —
-        # assumes tier availability matches the committed layout (same
-        # columns); the footer, recall tiers, and pool tiers stay as-is.
-        # Names with no committed row (a just-registered probe) are
-        # INSERTED after the main table's last row, in PROBES order.
-        path = os.path.join(REPO, "SCALING.md")
-        with open(path) as fh:
-            committed = fh.read().splitlines()
-        replaced: set[str] = set()
-        patched = []
-        for line in committed:
-            hit = next((n for n in probes if line.startswith(f"| {n} |")), None)
-            if hit:
-                patched.append(new_rows[hit])
-                replaced.add(hit)
-            else:
-                patched.append(line)
-        fresh = [n for n in probes if n in new_rows and n not in replaced]
-        if fresh:
-            last_row = max(
-                i
-                for i, line in enumerate(patched)
-                if any(line.startswith(f"| {n} |") for n in PROBES)
-            )
-            for off, n in enumerate(fresh):
-                patched.insert(last_row + 1 + off, new_rows[n])
-        with open(path, "w") as fh:
-            fh.write("\n".join(patched) + "\n")
-        print(f"patched SCALING.md rows: {sorted(new_rows)} (inserted: {fresh})")
+        with open(scaling_md, "w") as fh:
+            fh.write("\n".join(splice_rows(committed, hdr_row, new_rows)) + "\n")
+        print(f"patched SCALING.md rows: {sorted(new_rows)}")
         return 0
 
     which = header("a", w)
@@ -653,7 +672,7 @@ def main() -> int:
         lines += _minhash_recall_tiers(spark, sweep_caches)
     with managed_caches(spark):
         lines += _pool_etl_tiers(spark, sweep_caches, prior=prior)
-    with open(os.path.join(REPO, "SCALING.md"), "w") as fh:
+    with open(scaling_md, "w") as fh:
         fh.write("\n".join(lines))
     print("wrote SCALING.md")
     return 0
