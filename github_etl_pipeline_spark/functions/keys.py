@@ -17,8 +17,12 @@ Edges where the fallback and the plain normalized join diverge:
     width 4) or fact '201' against dim '0201' match NOTHING in the
     reference, while a both-sides normalized join would match. The exact
     reference acceptance set, given a normalized-key match, is
-    ``reference_match_expr`` below; pool_kpis applies it as a post-join
+    ``reference_match_sql`` below; pool_kpis applies it as a post-join
     gate so the single broadcast equi-join keeps reference fidelity.
+
+Each rule is written once, as SQL text over column names (``*_sql``),
+so a plan that uses it makes one JVM call to parse it instead of one per
+Column operator; the Column helpers wrap that text in ``F.expr``.
 """
 
 from __future__ import annotations
@@ -27,28 +31,26 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def strip_zeros(col: Column | str) -> Column:
+def strip_zeros_sql(col: str) -> str:
     """``lstrip('0') or '0'``: an all-zeros id becomes '0'
     (reference etl/transform.py:206)."""
-    col = F.col(col) if isinstance(col, str) else col
-    return F.coalesce(F.nullif(F.regexp_replace(col, r"^0+", ""), F.lit("")), F.lit("0"))
+    return f"coalesce(nullif(regexp_replace({col}, '^0+', ''), ''), '0')"
 
 
-def zfill(col: Column | str, width: int = 4) -> Column:
+def zfill_sql(col: str, width: int = 4) -> str:
     """``str.zfill(width)``: pad when short, never truncate (lpad alone
     would truncate longer ids)."""
-    col = F.col(col) if isinstance(col, str) else col
-    return F.when(F.length(col) >= width, col).otherwise(F.lpad(col, width, "0"))
+    return f"CASE WHEN length({col}) >= {width} THEN {col} ELSE lpad({col}, {width}, '0') END"
 
 
-def normalize_pool_id(col: Column | str, width: int = 4) -> Column:
+def normalize_pool_id_sql(col: str, width: int = 4) -> str:
     """Strip leading zeros then left-pad with zeros to ``width`` — the
     shared join key that makes all of the reference's fallback stages
     land in ONE equi-join bucket."""
-    return zfill(strip_zeros(col), width)
+    return zfill_sql(strip_zeros_sql(col), width)
 
 
-def reference_match_expr(fact_id: Column | str, dim_raw_id: Column | str) -> Column:
+def reference_match_sql(fact_id: str, dim_raw_id: str) -> str:
     """True iff the reference's 3-stage fallback (etl/transform.py:202-211)
     would match this (fact, dim) pair:
 
@@ -61,6 +63,15 @@ def reference_match_expr(fact_id: Column | str, dim_raw_id: Column | str) -> Col
     dim id carries leading zeros and the fact spelling is neither the raw
     nor the zfilled dim spelling (e.g. fact '00201' or '201' vs dim
     '0201') — those must stay unmatched, as the reference leaves them."""
-    f = F.col(fact_id) if isinstance(fact_id, str) else fact_id
-    d = F.col(dim_raw_id) if isinstance(dim_raw_id, str) else dim_raw_id
-    return (f == d) | (strip_zeros(f) == d) | (zfill(d) == f)
+    f, d = fact_id, dim_raw_id
+    return f"({f} = {d} OR {strip_zeros_sql(f)} = {d} OR {zfill_sql(d)} = {f})"
+
+
+def normalize_pool_id(col: str, width: int = 4) -> Column:
+    """``normalize_pool_id_sql`` as a Column."""
+    return F.expr(normalize_pool_id_sql(col, width))
+
+
+def reference_match_expr(fact_id: str, dim_raw_id: str) -> Column:
+    """``reference_match_sql`` as a Column."""
+    return F.expr(reference_match_sql(fact_id, dim_raw_id))

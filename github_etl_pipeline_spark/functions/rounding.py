@@ -16,11 +16,21 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 
+# mode -> Spark function name: HALF_EVEN for parity with numpy/pandas
+# (golden tests), HALF_UP for parity with DuckDB round (oracle queries)
+_ROUNDING_FUNCTIONS = {"bankers": "bround", "half_up": "round"}
+
+
+def rounder_sql(mode: str) -> str:
+    """The SQL name of the rounding function for ``mode``: 'bankers' or
+    'half_up'. Any other value raises, so a typo cannot silently pick a
+    mode."""
+    try:
+        return _ROUNDING_FUNCTIONS[mode]
+    except KeyError:
+        raise ValueError(f"unknown rounding mode: {mode}") from None
+
+
 def rounder(mode: str):
-    """The rounding function for ``mode``: 'bankers' or 'half_up'.
-    Any other value raises, so a typo cannot silently pick a mode."""
-    if mode == "bankers":
-        return F.bround  # parity with numpy/pandas half-even (golden tests)
-    if mode == "half_up":
-        return F.round  # parity with DuckDB round (oracle queries)
-    raise ValueError(f"unknown rounding mode: {mode}")
+    """``rounder_sql(mode)`` as the ``pyspark.sql.functions`` function."""
+    return getattr(F, rounder_sql(mode))

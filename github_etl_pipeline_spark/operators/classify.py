@@ -13,7 +13,9 @@ Truth table:
     reference returns the bare string 'UNKNOWN' here — we normalize to a
     one-element array so the column type is stable; documented deviation)
 
-Pure ``when/otherwise`` column expressions — fully codegen'd, no UDFs.
+Each rule is one ``CASE`` expression, written once as SQL text over a
+column name (``*_sql``) — fully codegen'd, no UDFs — and parsed by one
+JVM call; the Column helpers wrap that text in ``F.expr``.
 """
 
 from __future__ import annotations
@@ -22,28 +24,36 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
+def _flat_sql(pt: str) -> str:
+    return f"length({pt}) > 4 AND startswith({pt}, '4')"
 
 
-def tag_expr(pool_type: Column | str) -> Column:
+def tag_sql(pool_type: str) -> str:
     # falsy check: '' behaves like NULL (reference etl/transform.py:231)
-    pt = F.nullif(_c(pool_type), F.lit(""))
+    pt = f"nullif({pool_type}, '')"
     return (
-        F.when(pt.isNull(), F.array(F.lit("UNKNOWN")))
-        .when(pt == "395", F.array(F.lit("GAB"), F.lit("PFB")))
-        .when((F.length(pt) > 4) & pt.startswith("5"), F.array(F.lit("PFB")))
-        .otherwise(F.array(F.lit("REG")))
+        f"CASE WHEN {pt} IS NULL THEN array('UNKNOWN') "
+        f"WHEN {pt} = '395' THEN array('GAB', 'PFB') "
+        f"WHEN length({pt}) > 4 AND startswith({pt}, '5') THEN array('PFB') "
+        "ELSE array('REG') END"
     )
 
 
-def is_flat_expr(pool_type: Column | str) -> Column:
-    pt = _c(pool_type)
-    return F.when((F.length(pt) > 4) & pt.startswith("4"), F.lit(1)).otherwise(F.lit(0)).cast("int")
+def is_flat_sql(pool_type: str) -> str:
+    return f"CASE WHEN {_flat_sql(pool_type)} THEN 1 ELSE 0 END"
 
 
-def max_multiplier_expr(pool_type: Column | str) -> Column:
-    pt = _c(pool_type)
-    return F.when(
-        (F.length(pt) > 4) & pt.startswith("4"), F.substring(pt, -4, 4)
-    ).otherwise(F.lit(None).cast("string"))
+def max_multiplier_sql(pool_type: str) -> str:
+    return f"CASE WHEN {_flat_sql(pool_type)} THEN substring({pool_type}, -4, 4) END"
+
+
+def tag_expr(pool_type: str) -> Column:
+    return F.expr(tag_sql(pool_type))
+
+
+def is_flat_expr(pool_type: str) -> Column:
+    return F.expr(is_flat_sql(pool_type))
+
+
+def max_multiplier_expr(pool_type: str) -> Column:
+    return F.expr(max_multiplier_sql(pool_type))

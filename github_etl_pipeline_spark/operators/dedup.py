@@ -37,6 +37,7 @@ from github_etl_pipeline_spark.functions.hashing import (
     portable_hash48,
 )
 from github_etl_pipeline_spark.operators.text import TOKEN_RE
+from github_etl_pipeline_spark.session import local_frame
 
 SIMHASH_BITS = 48
 
@@ -862,11 +863,9 @@ def _components_driver(nodes: DataFrame, pairs: DataFrame, id_col: str) -> DataF
     schema = StructType(
         [StructField(id_col, id_type), StructField("cluster_id", id_type)]
     )
-    # one slice: mapping is driver-bounded (<= max_driver_pairs ids); the
-    # default createDataFrame slices it defaultParallelism ways and the
-    # broadcast collect pays a Python-worker handoff per slice
-    spark = nodes.sparkSession
-    lbl = spark.createDataFrame(spark.sparkContext.parallelize(mapping, 1), schema)
+    # mapping is driver-bounded (<= max_driver_pairs ids): a local
+    # relation, so broadcasting it needs no Python worker
+    lbl = local_frame(nodes.sparkSession, mapping, schema)
     return (
         nodes.select(F.col(id_col))
         .join(F.broadcast(lbl), id_col, "left")

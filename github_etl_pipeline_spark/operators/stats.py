@@ -159,7 +159,7 @@ def pool_extended_stats(parsed: DataFrame, k: int = 10, rounding: str = "bankers
         out = out.join(samples, "source_file", "left")
 
     # per-pool output keys are decoded paths, as in pool_kpis
-    out = pool_identity(out.withColumn("source_file", decode_uri_path(F.col("source_file"))))
+    out = pool_identity(out.withColumn("source_file", decode_uri_path("source_file")))
     return out.select(*POOL_KEY_COLS, *[c for c in out.columns if c not in POOL_KEY_COLS])
 
 

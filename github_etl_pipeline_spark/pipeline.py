@@ -76,7 +76,7 @@ def _write_outputs(pools: DataFrame, output_dir: Path, rounding: str) -> None:
         *summary_metrics(rounding),
         # A9: a file "failed" when it had raw lines but none parsed (the
         # reference's per-file try/except surface, etl/main.py:100-122)
-        F.count_if((F.col("size") == 0) & (F.col("line_count") > 0)).alias("files_failed"),
+        F.expr("count_if(size = 0 AND line_count > 0) AS files_failed"),
     ]
     observed = Observation()
     rows = upsert.collect_at_most(

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from github_etl_pipeline_spark.functions.epoch import event_micros, bucket_div_sql
 from github_etl_pipeline_spark.plans.registry import register
 from github_etl_pipeline_spark.sources.tables import read_table as _t
+from github_etl_pipeline_spark.sources.tables import tables_named
 
 
 def _dec(col, scale: int = 2):
@@ -28,6 +29,15 @@ def _spark_sql_text(sql: str) -> str:
     rewrite. tests/test_relational_extra.py re-runs the literal-dated
     TPC-H queries under a deliberately non-UTC session tz to pin this."""
     return sql.replace("TIMESTAMP '", "TIMESTAMP_NTZ '")
+
+
+def _sql_over_views(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
+    """``sql`` run by ``spark.sql`` over temp views of the tables it names.
+    Each ``read_table`` runs one schema-inference job, so only those
+    tables are read."""
+    for name in tables_named(sql):
+        _t(spark, sf_dir, name).createOrReplaceTempView(name)
+    return spark.sql(_spark_sql_text(sql))
 
 
 # --------------------------------------------------------------------------
@@ -780,9 +790,9 @@ LIMIT 10
     doc="TPC-H Q3 shape via the spark.sql entry path: 3-way join, pushed-down segment/date filters, decimal-exact revenue, deterministic top-10 tie-break",
 )
 def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    for t in ("customer", "orders", "lineitem"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_spark_sql_text(_Q3_SQL.format(date_fmt="date_format(o_orderdate, 'yyyy-MM-dd')")))
+    return _sql_over_views(
+        spark, sf_dir, _Q3_SQL.format(date_fmt="date_format(o_orderdate, 'yyyy-MM-dd')")
+    )
 
 
 _Q5_SQL = """
@@ -807,10 +817,7 @@ GROUP BY n_name
     doc="TPC-H Q5 shape via spark.sql: 6-way join with broadcast dim chain (region->nation->supplier), local-supplier co-nation predicate, decimal-exact revenue per nation",
 )
 def tpch_q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from github_etl_pipeline_spark.sources.tables import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_spark_sql_text(_Q5_SQL))
+    return _sql_over_views(spark, sf_dir, _Q5_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -1267,10 +1274,7 @@ GROUP BY supp_nation, cust_nation, l_year
     doc="TPC-H Q7 shape via spark.sql: 6-way join, symmetric two-nation OR predicate over broadcast nation dims, pushed-down shipdate range, decimal-exact revenue by (supp_nation, cust_nation, year)",
 )
 def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from github_etl_pipeline_spark.sources.tables import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_spark_sql_text(_Q7_SQL))
+    return _sql_over_views(spark, sf_dir, _Q7_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -1300,10 +1304,7 @@ WHERE (p_brand = 'Brand#11' AND p_size BETWEEN 1 AND 15 AND l_quantity >= 1  AND
     doc="TPC-H Q19 shape via spark.sql: disjunctive predicate brackets spanning both join sides over a broadcast part join — no nested-loop fallback, decimal-exact revenue",
 )
 def tpch_q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from github_etl_pipeline_spark.sources.tables import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_spark_sql_text(_Q19_SQL))
+    return _sql_over_views(spark, sf_dir, _Q19_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -1321,10 +1322,7 @@ def tpch_q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 def _sql_query(name: str, sql: str, doc: str):
     def builder(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from github_etl_pipeline_spark.sources.tables import register_views
-
-        register_views(spark, sf_dir)
-        return spark.sql(_spark_sql_text(sql))
+        return _sql_over_views(spark, sf_dir, sql)
 
     builder.__name__ = name
     builder.__doc__ = doc

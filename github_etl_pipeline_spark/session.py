@@ -11,9 +11,10 @@ from __future__ import annotations
 
 import os
 from contextlib import contextmanager
-from typing import Iterator
+from typing import Iterable, Iterator
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -75,10 +76,38 @@ def get_spark(
         # reuse the sort order; AQE's byte test cannot see that). The
         # static flip above carries all of the measured win.
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "0")
+        # One Python worker daemon per session. Spark keys its worker
+        # factory by environment, and the SQL runners (mapInArrow, pandas
+        # UDFs) add SPARK_SIMPLIFIED_TRACEBACK to theirs while the RDD
+        # runner (a list-built createDataFrame) does not, so a session
+        # doing both starts two daemons, one after the other. Each cold
+        # daemon compiles pyspark from $SPARK_HOME/python/lib/pyspark.zip
+        # (1.2-1.4 s on a 4-core host). With this off, the first
+        # mapInArrow after a Python-RDD job took 1.06 s instead of 2.21 s.
+        # The cost: a failing UDF's traceback keeps PySpark's own frames.
+        .config("spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled", "false")
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: Iterable[tuple], schema: StructType) -> DataFrame:
+    """Driver-built ``rows`` (tuples in ``schema``'s field order) as a
+    DataFrame built from Arrow. Spark plans it as a local relation (above
+    ``spark.sql.execution.arrow.localRelationThreshold`` as Arrow batches
+    read by the JVM), so reading it needs no Python worker, where
+    ``createDataFrame`` over a Python list runs a Python RDD. A NaN stays
+    NaN and a None is NULL."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.table(
+        [pa.array(col, f.type) for col, f in zip(columns, arrow_schema)], schema=arrow_schema
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def sweep_caches(spark: SparkSession) -> None:

@@ -34,6 +34,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from github_etl_pipeline_spark.sinks import commit
 
@@ -212,13 +213,58 @@ def read_store(spark: SparkSession, table_path: str | Path) -> DataFrame:
     return df.drop(_BUCKET_COL) if _BUCKET_COL in df.columns else df
 
 
+def _all_nullable(t: DataType) -> DataType:
+    """``t`` with every nested field, element and value nullable."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _all_nullable(f.dataType)) for f in t])
+    if isinstance(t, ArrayType):
+        return ArrayType(_all_nullable(t.elementType))
+    if isinstance(t, MapType):
+        return MapType(t.keyType, _all_nullable(t.valueType))
+    return t
+
+
 def collect_at_most(df: DataFrame, max_rows: int) -> list | None:
-    """The driver-or-shards rule of the sinks: ``df``'s rows when there are
-    at most ``max_rows`` of them, else ``None`` (the caller then writes
-    shards through Spark). One ``limit(max_rows + 1)`` collect, so the
-    check and the driver copy are the same job."""
-    rows = df.limit(max_rows + 1).collect()
-    return rows if len(rows) <= max_rows else None
+    """The driver-or-shards rule of the sinks: ``df``'s rows, in ``df``'s
+    order, when there are at most ``max_rows`` of them, else ``None`` (the
+    caller then writes shards through Spark).
+
+    The check and the driver copy are one Spark job: a
+    ``limit(max_rows + 1)`` fetched as Arrow reads every partition in one
+    round, where ``collect`` scans one partition first and then the rest
+    (two jobs on any multi-partition input). That limit keeps each
+    partition's first ``max_rows + 1`` rows and gathers them through a
+    shuffle, so an oversized input moves at most all of its rows once;
+    only an input that fits is turned into Python objects (over the bound
+    this is faster and lighter than ``collect``, see CHANGES.md). The
+    shuffle keeps no order across executors, so each row carries its
+    ``monotonically_increasing_id`` (partition, then position) and the
+    rows are put back in that order on the driver.
+
+    The rows come from pyspark's Arrow-to-Row conversion
+    (``pyspark.sql.conversion``, an internal module), not from
+    ``collect()``'s pickles; on pyspark 4.1 they are the same Rows (Row
+    for a struct, dict for a map, NaN, ``bytes`` for a BinaryType value),
+    but a pyspark upgrade can move that module. ``toArrow`` casts to the
+    frame's Arrow schema, which
+    refuses a NULL struct over a non-nullable child field (Spark allows
+    one), so the fetch declares every nested field nullable first.
+    tests/test_sinks.py::test_collect_at_most_rows_match_collect pins the
+    parity."""
+    from pyspark.sql.conversion import ArrowTableToRowsConversion
+
+    schema = df.schema
+    fetched = _all_nullable(schema)
+    if fetched != schema:
+        df = df.to(fetched)
+    order = "__collect_order"
+    table = (
+        df.withColumn(order, F.monotonically_increasing_id()).limit(max_rows + 1).toArrow()
+    )
+    if table.num_rows > max_rows:
+        return None
+    table = table.sort_by(order).drop_columns(order)
+    return ArrowTableToRowsConversion.convert(table, schema)
 
 
 # Above this many pool records the single-document JSON format itself is
@@ -229,31 +275,21 @@ CONSOLIDATED_DRIVER_MAX_ROWS = 100_000
 
 def pool_record_col() -> F.Column:
     """The reference's nested pool record (etl/transform.py:237-256 plus
-    the output-only max_win_factor), for both the document and the shards.
-    ``processed_at`` is ISO-8601 with the ``+00:00`` offset the reference
-    stamps (etl/transform.py:253); the session factory pins UTC."""
-    return F.struct(
-        F.col("pool_name"),
-        F.col("pool_id"),
-        F.col("pool_type"),
-        F.coalesce(F.col("game_ids"), F.array()).alias("game_ids"),
-        F.col("min_bet"),
-        F.col("max_win_factor"),
-        F.col("rtp"),
-        F.col("volatility"),
-        F.col("is_flat"),
-        F.coalesce(F.col("tag"), F.array()).alias("tag"),
-        F.col("size"),
-        F.col("max_multiplier"),
-        F.struct(
-            F.col("source_file"),
-            F.col("file_name"),
-            F.col("folder_path"),
-            F.concat(
-                F.date_format("processed_at", "yyyy-MM-dd'T'HH:mm:ss"), F.lit("+00:00")
-            ).alias("processed_at"),
-            F.col("hit_frequency"),
-        ).alias("metadata"),
+    the output-only max_win_factor), for both the document and the shards,
+    as SQL text parsed by one JVM call. ``processed_at`` is ISO-8601 with
+    the ``+00:00`` offset the reference stamps (etl/transform.py:253); the
+    session factory pins UTC."""
+    return F.expr(
+        r"""named_struct(
+          'pool_name', pool_name, 'pool_id', pool_id, 'pool_type', pool_type,
+          'game_ids', coalesce(game_ids, array()), 'min_bet', min_bet,
+          'max_win_factor', max_win_factor, 'rtp', rtp, 'volatility', volatility,
+          'is_flat', is_flat, 'tag', coalesce(tag, array()), 'size', size,
+          'max_multiplier', max_multiplier,
+          'metadata', named_struct(
+            'source_file', source_file, 'file_name', file_name, 'folder_path', folder_path,
+            'processed_at', concat(date_format(processed_at, 'yyyy-MM-dd\'T\'HH:mm:ss'), '+00:00'),
+            'hit_frequency', hit_frequency))"""
     )
 
 

@@ -18,9 +18,10 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType, StructField, StringType, DoubleType
+from pyspark.sql.types import ArrayType, DoubleType, LongType, StringType, StructField, StructType
 
 from github_etl_pipeline_spark.functions.keys import normalize_pool_id
+from github_etl_pipeline_spark.session import local_frame
 from github_etl_pipeline_spark.sinks.upsert import collect_at_most
 
 LOOKUP_SCHEMA = StructType(
@@ -29,6 +30,17 @@ LOOKUP_SCHEMA = StructType(
         StructField("Game_id", StringType()),
         StructField("Pool_id", StringType()),
         StructField("Bet", DoubleType()),
+    ]
+)
+
+#: ``prepare_dim``'s output: one row per normalized pool key
+DIM_AGG_SCHEMA = StructType(
+    [
+        StructField("norm_pool_id", StringType()),
+        StructField("dim_pool_id", StringType()),
+        StructField("min_bet", DoubleType()),
+        StructField("game_ids", ArrayType(StringType())),
+        StructField("_n_spellings", LongType()),
     ]
 )
 
@@ -131,7 +143,7 @@ def load_game_lookup(spark: SparkSession, repo_root: str | Path) -> DataFrame | 
                     math.nan if _blank(bet) else float(bet),
                 )
             )
-        return spark.createDataFrame(rows, LOOKUP_SCHEMA)
+        return local_frame(spark, rows, LOOKUP_SCHEMA)
     return None
 
 
@@ -155,13 +167,13 @@ def prepare_dim(dim: DataFrame, max_rows: int = 100_000) -> DataFrame:
     collected to the driver once (``collect_at_most``, with the key
     normalized by the same Spark expression the fact side joins on),
     grouped there in collect order — which is source order — and
-    returned as a local relation, so the broadcast join costs no Spark
-    job. ``max_rows`` is the one bound: a larger input raises
-    ``ValueError`` at call time; raise it deliberately if a legitimately
-    larger dimension appears.
+    returned as a local relation. The collect is one Spark job; the
+    broadcast of the local relation in the fact join is one more small
+    job (a ``BroadcastExchange`` over a ``LocalTableScan``, 20-95 ms on a
+    4-core host) when the join's plan runs. ``max_rows`` is the one
+    bound: a larger input raises ``ValueError`` at call time; raise it
+    deliberately if a legitimately larger dimension appears.
     """
-    import pyarrow as pa
-
     rows = collect_at_most(
         dim.select(normalize_pool_id("Pool_id"), "Pool_id", "Bet", "Game_id"), int(max_rows)
     )
@@ -185,17 +197,14 @@ def prepare_dim(dim: DataFrame, max_rows: int = 100_000) -> DataFrame:
         g["game_ids"].append(game_id)
         if pool_id is not None:
             g["spellings"].add(pool_id)
-    # pyarrow, not pandas: a NaN Bet stays NaN instead of becoming NULL
-    table = pa.table(
-        {
-            "norm_pool_id": pa.array(list(groups), pa.string()),
-            "dim_pool_id": pa.array([g["dim_pool_id"] for g in groups.values()], pa.string()),
-            "min_bet": pa.array([g["min_bet"] for g in groups.values()], pa.float64()),
-            "game_ids": pa.array([g["game_ids"] for g in groups.values()], pa.list_(pa.string())),
-            "_n_spellings": pa.array([len(g["spellings"]) for g in groups.values()], pa.int64()),
-        }
+    return local_frame(
+        dim.sparkSession,
+        (
+            (key, g["dim_pool_id"], g["min_bet"], g["game_ids"], len(g["spellings"]))
+            for key, g in groups.items()
+        ),
+        DIM_AGG_SCHEMA,
     )
-    return dim.sparkSession.createDataFrame(table)
 
 
 def assert_dim_unambiguous(dim_agg: DataFrame) -> None:

@@ -65,11 +65,11 @@ EXCLUDED_DIRS = (
 POOL_KEY_COLS = ["source_file", "file_name", "folder_path", "parent_folder", "pool_id", "pool_type"]
 
 
-def drop_excluded(df: DataFrame, path: Column) -> DataFrame:
-    """Rows of ``df`` whose ``path`` has no ``EXCLUDED_DIRS`` directory."""
-    for d in EXCLUDED_DIRS:
-        df = df.filter(~path.contains(f"/{d}/"))
-    return df
+def drop_excluded(df: DataFrame, path: str) -> DataFrame:
+    """Rows of ``df`` whose ``path`` (a column name or SQL expression) has
+    no ``EXCLUDED_DIRS`` directory: one predicate."""
+    hits = " OR ".join(f"contains({path}, '/{d}/')" for d in EXCLUDED_DIRS)
+    return df.filter(F.expr(f"NOT ({hits})"))
 
 
 def scan_pol_files(reader: DataFrameReader | DataStreamReader, root: str) -> DataFrame:
@@ -81,7 +81,7 @@ def scan_pol_files(reader: DataFrameReader | DataStreamReader, root: str) -> Dat
         .option("pathGlobFilter", "*.pol")
         .load(root)
     )
-    return drop_excluded(df, F.col("_metadata.file_path"))
+    return drop_excluded(df, "_metadata.file_path")
 
 
 def _strip_root(spark: SparkSession, path: Column, *roots: str | None) -> Column:
@@ -114,31 +114,35 @@ def pol_lines(raw: DataFrame, scan_dir: str) -> DataFrame:
     )
 
 
+# ``pool_identity``'s rules as SQL text over ``source_file``, each parsed
+# by one JVM call
+_FILE_NAME = "element_at(split(source_file, '/'), -1)"
+_FOLDER = (
+    "CASE WHEN contains(source_file, '/') "
+    "THEN regexp_replace(source_file, '/[^/]+$', '') ELSE 'root' END"
+)
+_NAME_PARTS = rf"split(regexp_replace({_FILE_NAME}, '\\.pol$', ''), '_')"
+_POOL_IDENTITY = {
+    "file_name": _FILE_NAME,
+    "folder_path": _FOLDER,
+    "parent_folder": f"element_at(split({_FOLDER}, '/'), -1)",
+    "pool_id": f"get({_NAME_PARTS}, 1)",
+    "pool_type": f"get({_NAME_PARTS}, 2)",
+}
+
+
 def pool_identity(df: DataFrame) -> DataFrame:
     """Derive ``file_name``, ``folder_path`` (``'root'`` for a top-level
     file), ``parent_folder``, ``pool_id`` and ``pool_type`` from
     ``source_file`` — the one place the ``Pool_<id>_<type>`` split lives."""
-    src = F.col("source_file")
-    file_name = F.element_at(F.split(src, "/"), -1)
-    folder = F.when(src.contains("/"), F.regexp_replace(src, r"/[^/]+$", "")).otherwise(
-        F.lit("root")
-    )
-    parts = F.split(F.regexp_replace(file_name, r"\.pol$", ""), "_")
-    return df.withColumns(
-        {
-            "file_name": file_name,
-            "folder_path": folder,
-            "parent_folder": F.element_at(F.split(folder, "/"), -1),
-            "pool_id": F.get(parts, 1),
-            "pool_type": F.get(parts, 2),
-        }
-    )
+    return df.withColumns({name: F.expr(sql) for name, sql in _POOL_IDENTITY.items()})
 
 
-def decode_uri_path(path: Column) -> Column:
-    """Percent-decode a URI-form path. A literal ``+`` stays ``+`` (Hadoop
-    does not encode it, while ``url_decode`` would read it as a space)."""
-    return F.url_decode(F.replace(path, F.lit("+"), F.lit("%2B")))
+def decode_uri_path(path: str) -> Column:
+    """Percent-decode the URI-form path in column ``path``. A literal ``+``
+    stays ``+`` (Hadoop does not encode it, while ``url_decode`` would read
+    it as a space)."""
+    return F.expr(f"url_decode(replace({path}, '+', '%2B'))")
 
 
 def read_pol_lines(spark: SparkSession, scan_dir: str) -> DataFrame:

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -37,6 +39,14 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: read_table(spark, sf_dir, name) for name in TABLES}
+
+
+def tables_named(sql: str) -> tuple[str, ...]:
+    """The ``TABLES`` that ``sql`` names as whole words (case-insensitive).
+    A column or alias that happens to be a table name only registers one
+    view too many; a table the text names cannot be missed."""
+    words = {w.lower() for w in re.findall(r"\w+", sql)}
+    return tuple(name for name in TABLES if name in words)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -39,14 +39,17 @@ and every store row equals the batch record.
 from __future__ import annotations
 
 from pathlib import Path
-from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from github_etl_pipeline_spark.operators.kpis import pool_kpis
+from github_etl_pipeline_spark.session import local_frame
 from github_etl_pipeline_spark.sinks.upsert import read_store, upsert_parquet
 from github_etl_pipeline_spark.sources.pol import count_pol_files, drop_excluded, scan_pol_files
+
+_PATHS_SCHEMA = StructType([StructField("path", StringType())])
 
 
 def _upsert_pools(
@@ -150,8 +153,10 @@ def run_incremental_mtime(
     if ledger_path.exists():
         seen = read_store(spark, ledger_path).select("path", "mtime")
         changed = listing.join(seen, ["path", "mtime"], "left_anti")
-        # listed paths are URIs; the reader wants the file system's names
-        paths = [unquote(r.path) for r in changed.select("path").collect()]
+        # binaryFile lists ``path`` as the file's own name behind the
+        # scheme, which is what the reader takes back: decoding it again
+        # would turn a literal "%25" in a name into "%"
+        paths = [r.path for r in changed.select("path").collect()]
         if not paths:
             return 0
         raw = spark.read.format("binaryFile").load(paths)
@@ -240,8 +245,8 @@ def run_incremental_git(
             paths.append(str(repo_root / rel))
     if paths:
         # the scan's own exclusion filter, over the (churn-sized) path list
-        candidates = spark.createDataFrame([(p,) for p in paths], "path string")
-        paths = [r.path for r in drop_excluded(candidates, F.col("path")).collect()]
+        candidates = local_frame(spark, [(p,) for p in paths], _PATHS_SCHEMA)
+        paths = [r.path for r in drop_excluded(candidates, "path").collect()]
     # In-place edits: drop stale cached file lengths (see
     # run_incremental_mtime) BEFORE either branch reads — the full-scan
     # fallback re-reads the whole corpus and would otherwise read a

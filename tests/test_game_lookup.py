@@ -82,7 +82,11 @@ def test_both_reader_branches_give_the_same_rows(spark, tmp_path, monkeypatch):
     assert repr(stdlib_rows) == repr(_EXPECTED)
     assert repr(pandas_rows) == repr(_EXPECTED)
 
-    dim = prepare_dim(load_game_lookup(spark, tmp_path))
+    # driver-built rows are a local relation: reading them needs no
+    # Python worker (a list-built createDataFrame runs a Python RDD)
+    lookup = load_game_lookup(spark, tmp_path)
+    assert "LocalTableScan" in lookup._jdf.queryExecution().executedPlan().toString()
+    dim = prepare_dim(lookup)
     by_key = {r.dim_pool_id: r for r in dim.collect()}
     assert sorted(by_key) == ["0201", "6371", "7001"]
     assert np.isnan(by_key["6371"].min_bet)

@@ -228,3 +228,34 @@ def test_the_arrow_node_sits_on_the_binary_scan(spark, hostile, dim):
     assert any("FileScan binaryFile" in ln for ln in sub), "\n".join(plan)
     assert not any("Exchange" in ln for ln in sub), "\n".join(plan)
     assert not any("FileScan text" in ln for ln in plan), "\n".join(plan)
+
+
+def _daemon_children(pid: int) -> list[int]:
+    """Pids of the ``pyspark.daemon`` processes whose parent is ``pid``."""
+    found = []
+    for entry in os.listdir("/proc"):
+        if not entry.isdigit():
+            continue
+        try:
+            with open(f"/proc/{entry}/stat") as f:
+                ppid = int(f.read().rsplit(")", 1)[1].split()[1])
+            with open(f"/proc/{entry}/cmdline", "rb") as f:
+                cmdline = f.read()
+        except OSError:  # the process exited while being read
+            continue
+        if ppid == pid and b"pyspark.daemon" in cmdline:
+            found.append(int(entry))
+    return found
+
+
+@pytest.mark.skipif(not os.path.isdir("/proc"), reason="needs a /proc file system")
+def test_one_python_worker_daemon_per_session(spark, hostile):
+    """A Python-RDD job (the collect of a list-built frame) and the Arrow
+    line counter share one worker daemon: the session sets no environment
+    difference between the RDD and SQL runners, so no second daemon is
+    started (and compiled) for the other runner."""
+    assert len(spark.createDataFrame(DIM_ROWS, DIM_SCHEMA).collect()) == len(DIM_ROWS)
+    raw = scan_pol_files(spark.read.format("binaryFile"), str(hostile))
+    assert count_pol_files(raw, str(hostile)).count() > 0
+    jvm = spark.sparkContext._gateway.proc.pid
+    assert len(_daemon_children(jvm)) == 1

@@ -159,3 +159,26 @@ def test_event_micros_batch_roundtrip_all_dtypes(spark):
         results.append(got)
     assert results[0] == sorted(us_values)
     assert results[0] == results[1] == results[2]
+
+
+def test_sql_builders_register_only_the_tables_they_name(spark):
+    """A ``spark.sql`` builder reads (and registers as a view) only the
+    tables its text names: each read is one schema-inference job, so a
+    one-table query must not pay for all ten."""
+    import uuid
+
+    from github_etl_pipeline_spark.sources.tables import tables_named
+
+    assert tables_named(REGISTRY["tpch_q6_forecast_revenue"].oracle) == ("lineitem",)
+    assert tables_named(REGISTRY["tpch_q5_local_supplier"].oracle) == (
+        "region", "nation", "customer", "supplier", "orders", "lineitem",
+    )
+    sc = spark.sparkContext
+    group = f"q6-build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        REGISTRY["tpch_q6_forecast_revenue"].builder(spark, SF)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1

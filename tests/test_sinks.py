@@ -2,6 +2,7 @@
 SURVEY §5), consolidated JSON format parity, reports."""
 
 import json
+import math
 
 import pytest
 from pyspark.sql import functions as F
@@ -118,14 +119,33 @@ def _count_jobs(spark, fn):
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_run_pipeline_job_budget(spark, tmp_path):
+def _count_py4j_calls(spark, monkeypatch, fn):
+    """py4j commands the driver sends to the JVM while ``fn()`` runs."""
+    import gc
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return send(*args, **kwargs)
+
+    gc.collect()
+    with monkeypatch.context() as m:
+        m.setattr(client, "send_command", counting)
+        fn()
+    return len(calls)
+
+
+def test_run_pipeline_job_budget(spark, tmp_path, monkeypatch):
     """The output surface is one action over the pools: a run whose
-    records fit the driver bounds takes at most 8 Spark jobs, and
-    building the KPI plan over a prepared dimension takes none beyond
-    the dimension's one bounded collect."""
+    records fit the driver bounds takes at most 8 Spark jobs. Preparing
+    a multi-partition dimension is one job, and building the KPI plan
+    over it runs none and stays within a py4j call budget (a SQL-text
+    plan: ~190 calls, against ~1,980 built from Column calls)."""
     from github_etl_pipeline_spark.operators.kpis import pool_kpis
     from github_etl_pipeline_spark.pipeline import run_pipeline
-    from github_etl_pipeline_spark.sinks.upsert import collect_at_most
     from github_etl_pipeline_spark.sources.lookup import prepare_dim
     from github_etl_pipeline_spark.sources.pol import count_pol_files, scan_pol_files
 
@@ -134,16 +154,15 @@ def test_run_pipeline_job_budget(spark, tmp_path):
         jobs = _count_jobs(spark, lambda: run_pipeline(spark, d, dim=dim, output_dir=tmp_path / f"o{i}"))
         assert jobs <= 8, f"run {i}: {jobs} jobs"
 
-    one_collect = _count_jobs(spark, lambda: collect_at_most(dim, 100_000))
+    rows = [("G", str(i), f"{i:04d}", float(i)) for i in range(23)]
+    dim4 = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), dim.schema)
     prepared = []
-    assert _count_jobs(spark, lambda: prepared.append(prepare_dim(dim))) == one_collect
-    assert _count_jobs(
-        spark,
-        lambda: pool_kpis(
-            count_pol_files(scan_pol_files(spark.read.format("binaryFile"), str(d)), str(d)),
-            dim_agg=prepared[0],
-        ),
-    ) == 0
+    assert _count_jobs(spark, lambda: prepared.append(prepare_dim(dim4))) == 1
+    counted = count_pol_files(scan_pol_files(spark.read.format("binaryFile"), str(d)), str(d))
+    build = lambda: pool_kpis(counted, dim_agg=prepared[0])  # noqa: E731
+    assert _count_jobs(spark, build) == 0
+    calls = _count_py4j_calls(spark, monkeypatch, build)
+    assert calls <= 250, f"{calls} py4j calls to build pool_kpis"  # measured 190
 
 
 def _strip_times(doc):
@@ -205,6 +224,66 @@ def test_spill_path_writes_the_same_outputs(spark, tmp_path, monkeypatch):
     shards = sorted((spill / "_all_files_summary.csv.shards").glob("part-*.csv"))
     assert shards
     assert _csv_rows(shards) == _csv_rows([inb / "_all_files_summary.csv"])
+
+
+def _norm(v):
+    """A value with NaN made comparable and Row field names and map and
+    binary types kept."""
+    from pyspark.sql import Row
+
+    if isinstance(v, Row):
+        return ("Row", tuple(v.__fields__), tuple(_norm(x) for x in v))
+    if isinstance(v, dict):
+        return ("map", sorted((k, _norm(x)) for k, x in v.items()))
+    if isinstance(v, list):
+        return [_norm(x) for x in v]
+    if isinstance(v, float) and math.isnan(v):
+        return "NaN"
+    if isinstance(v, (bytes, bytearray)):
+        return (type(v), v)
+    return v
+
+
+def test_collect_at_most_rows_match_collect(spark):
+    """``collect_at_most`` converts an Arrow fetch, not ``collect()``'s
+    pickled rows: pin that the two agree on the types the sinks and
+    ``prepare_dim`` read (Row, nested struct, array, map, NaN, NULL,
+    decimal, timestamp, binary) and on row order across partitions."""
+    from pyspark.sql import Row
+
+    from github_etl_pipeline_spark.sinks.upsert import collect_at_most
+
+    df = spark.range(0, 12, numPartitions=3).selectExpr(
+        "id",
+        "concat('s', id) AS s",
+        "CASE WHEN id % 4 = 0 THEN double('NaN') WHEN id % 4 = 1 THEN NULL"
+        " ELSE cast(id AS double) / 3 END AS d",
+        "id % 2 = 0 AS b",
+        "cast(id / 7 AS decimal(18,4)) AS dec",
+        "timestamp_seconds(id * 86400) AS ts",
+        "array(concat('g', id), CASE WHEN id % 3 = 0 THEN NULL ELSE 'x' END) AS arr",
+        "map('k', id, 'n', id * 2) AS m",
+        "named_struct('a', id, 'inner', named_struct('s', cast(id AS string),"
+        " 'arr', array(double('NaN'), cast(id AS double)))) AS rec",
+        # a NULL struct over a non-nullable child field
+        "CASE WHEN id % 5 = 0 THEN NULL ELSE named_struct('x', id) END AS maybe",
+        "cast(concat('b', id) AS binary) AS bin",
+    )
+    want = df.collect()
+    got = collect_at_most(df, 12)
+    assert [r.id for r in got] == list(range(12))
+    assert all(type(g) is Row for g in got)
+    assert [_norm(g) for g in got] == [_norm(w) for w in want]
+    assert type(got[1].rec.inner) is Row and type(got[1].m) is dict
+    assert collect_at_most(df, 11) is None
+    # the shape run_pipeline fetches: the CSV columns and the nested record
+    from github_etl_pipeline_spark.sinks.reports import CSV_FIELDS
+    from github_etl_pipeline_spark.sinks.upsert import pool_record_col
+
+    pools = _full_pools_df(spark, 5).repartition(3, "source_file")
+    sel = pools.select(*CSV_FIELDS, pool_record_col().alias("record"))
+    want = sel.collect()
+    assert [_norm(g) for g in collect_at_most(sel, 5)] == [_norm(w) for w in want]
 
 
 def _has_delta() -> bool:

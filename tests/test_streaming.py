@@ -424,3 +424,46 @@ def test_incremental_git_skips_excluded_changes(spark, tmp_path, dim_agg):
     assert run_incremental_git(spark, repo, store, dim_agg=dim_agg) == 1
     got = {r.source_file: r.size for r in read_store(spark, store).collect()}
     assert got == {"Pool_0201_941.pol": 1, "Pool_0201_395.pol": 1}
+
+
+def test_incremental_reprocesses_edit_under_percent_escaped_root(spark, tmp_path, dim_agg):
+    """A literal ``%25`` in a directory name is part of the name: the
+    mtime churn read and the git-mode read take each changed path as the
+    file system names it, never percent-decoded a second time."""
+    import os
+    import time
+
+    from github_etl_pipeline_spark.streaming.incremental import (
+        run_incremental_git,
+        run_incremental_mtime,
+    )
+
+    corpus = tmp_path / "root %25 x"
+    corpus.mkdir()
+    f = corpus / "Pool_0201_941.pol"
+    f.write_text("100\n200\n")
+    ledger, store = tmp_path / "ledger_pct", tmp_path / "store_pct"
+    assert run_incremental_mtime(spark, corpus, ledger, store, dim_agg) == 1
+    f.write_text("100\n200\n300\n")
+    later = time.time() + 2
+    os.utime(f, (later, later))
+    assert run_incremental_mtime(spark, corpus, ledger, store, dim_agg) == 1
+    got = {r.source_file: r.size for r in read_store(spark, store).collect()}
+    assert got == {"Pool_0201_941.pol": 3}
+
+    repo = tmp_path / "repo %25 g"
+    pools = repo / "samples" / "pools2"
+    pools.mkdir(parents=True)
+    g = pools / "Pool_0201_941.pol"
+    g.write_text("100\n200\n")
+    _git(repo, "init", "-q")
+    _git(repo, "add", "-A")
+    _git(repo, "commit", "-qm", "c1")
+    git_store = tmp_path / "store_pct_git"
+    assert run_incremental_git(spark, repo, git_store, dim_agg=dim_agg) == -1
+    g.write_text("100\n200\n300\n400\n")
+    _git(repo, "add", "-A")
+    _git(repo, "commit", "-qm", "c2 edit")
+    assert run_incremental_git(spark, repo, git_store, dim_agg=dim_agg) == 1
+    got = {r.source_file: r.size for r in read_store(spark, git_store).collect()}
+    assert got == {"Pool_0201_941.pol": 4}
