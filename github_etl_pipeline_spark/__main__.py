@@ -4,9 +4,12 @@ etl/main.py:154-165).
     python -m github_etl_pipeline_spark [--repo-root PATH] [--output-dir PATH]
                                         [--incremental] [--all]
 
-``--incremental`` uses the streaming checkpoint ledger (reference S2's
-git-diff mode); default is a full batch run (``--all`` accepted for
-CLI-parity, it is the default behavior). Root resolution mirrors the
+``--incremental`` runs the streaming file-source checkpoint ledger
+(``streaming/incremental.run_incremental``): keyed on file path, it
+processes each new file once and never re-processes an in-place edit, so
+it is not the reference's S2 git-diff mode (``run_incremental_git``).
+The default is a full batch run (``--all`` accepted for CLI-parity, it
+is the default behavior). Root resolution mirrors the
 reference: $GITHUB_WORKSPACE, else walk up to a .git directory, else cwd.
 """
 

@@ -53,11 +53,6 @@ def portable_hash52(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 13), 16, 10).cast("long")
 
 
-def minhash_perm(h: Column, i: int, num_hashes: int = NUM_MINHASHES) -> Column:
-    a, b = (MINHASH_A, MINHASH_B) if num_hashes == NUM_MINHASHES else minhash_coeffs(num_hashes)
-    return (F.lit(a[i]) * h + F.lit(b[i])) % F.lit(MINHASH_P)
-
-
 def split_bucket_hex(id_col: Column | str, seed: str) -> Column:
     """First md5 BYTE (two lowercase hex chars) of a seed-prefixed id —
     the content-addressed 256-bucket coin behind the train/val/test

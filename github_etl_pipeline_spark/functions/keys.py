@@ -22,7 +22,7 @@ Edges where the fallback and the plain normalized join diverge:
 
 Each rule is written once, as SQL text over column names (``*_sql``),
 so a plan that uses it makes one JVM call to parse it instead of one per
-Column operator; the Column helpers wrap that text in ``F.expr``.
+Column operator; ``normalize_pool_id`` wraps its text in ``F.expr``.
 """
 
 from __future__ import annotations
@@ -70,8 +70,3 @@ def reference_match_sql(fact_id: str, dim_raw_id: str) -> str:
 def normalize_pool_id(col: str, width: int = 4) -> Column:
     """``normalize_pool_id_sql`` as a Column."""
     return F.expr(normalize_pool_id_sql(col, width))
-
-
-def reference_match_expr(fact_id: str, dim_raw_id: str) -> Column:
-    """``reference_match_sql`` as a Column."""
-    return F.expr(reference_match_sql(fact_id, dim_raw_id))

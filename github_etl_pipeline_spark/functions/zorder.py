@@ -6,7 +6,7 @@ that column only; interleaving the bits of several normalized columns
 gives locality on ALL of them at once, so point/range filters on any
 participating column skip most row groups (the standard Delta/Iceberg
 OPTIMIZE ZORDER technique, here as a plain expression usable with any
-sorted parquet write, e.g. sinks/compact.py).
+sorted parquet write).
 
 The key is built from pure integer shift/and/or arithmetic, generated as
 a SQL string so the IDENTICAL expression runs on Spark (F.expr) and

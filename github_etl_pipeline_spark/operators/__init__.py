@@ -1,105 +1,1 @@
-from github_etl_pipeline_spark.operators.classify import (
-    tag_expr,
-    is_flat_expr,
-    max_multiplier_expr,
-)
-from github_etl_pipeline_spark.operators.kpis import pool_kpis, pool_distribution
-from github_etl_pipeline_spark.operators.rollup import aggregated_summary
-from github_etl_pipeline_spark.operators.dedup import (
-    kgrams_of,
-    connected_components,
-    dup_clusters,
-    embedding_dup_pairs_lsh,
-    exact_dedup,
-    minhash_dedup_pairs,
-    minhash_signature,
-    simhash,
-    simhash_pairs,
-    winnowing_fingerprints,
-)
-from github_etl_pipeline_spark.operators.similarity import (
-    ann_ivf_topk,
-    ann_lsh_topk,
-    cosine_topk,
-)
-from github_etl_pipeline_spark.operators.text import (
-    bm25_topk,
-    pii_profile,
-    max_multiplicity,
-    repetition_profile,
-    repetition_signals,
-    source_profile,
-    text_profile,
-)
-from github_etl_pipeline_spark.operators.curation import (
-    boilerplate_ngrams,
-    build_gram_index,
-    compact_gram_index,
-    chunk_documents,
-    containment_gram_pairs,
-    decontaminate,
-    duplicate_spans,
-    duplicate_spans_against_index,
-    remove_duplicate_spans,
-    pack_sequences,
-    quality_filter,
-    temperature_sample,
-)
-from github_etl_pipeline_spark.operators.sampling import hash_sample, stratified_sample
-from github_etl_pipeline_spark.operators.sketches import (
-    cms_estimate,
-    cms_sketch,
-    hll_estimate,
-    hll_registers,
-)
-from github_etl_pipeline_spark.operators.multimodal import extract_features
-from github_etl_pipeline_spark.operators.joins import range_join
-
-__all__ = [
-    "kgrams_of",
-    "bm25_topk",
-    "tag_expr",
-    "is_flat_expr",
-    "max_multiplier_expr",
-    "pool_kpis",
-    "pool_distribution",
-    "aggregated_summary",
-    "connected_components",
-    "dup_clusters",
-    "embedding_dup_pairs_lsh",
-    "exact_dedup",
-    "minhash_dedup_pairs",
-    "minhash_signature",
-    "simhash",
-    "simhash_pairs",
-    "winnowing_fingerprints",
-    "ann_ivf_topk",
-    "ann_lsh_topk",
-    "cosine_topk",
-    "pii_profile",
-    "max_multiplicity",
-    "repetition_profile",
-    "repetition_signals",
-    "source_profile",
-    "text_profile",
-    "boilerplate_ngrams",
-    "chunk_documents",
-    "build_gram_index",
-    "compact_gram_index",
-    "duplicate_spans",
-    "duplicate_spans_against_index",
-    "remove_duplicate_spans",
-    "containment_gram_pairs",
-    "decontaminate",
-    "pack_sequences",
-    "quality_filter",
-    "temperature_sample",
-    "hash_sample",
-    "stratified_sample",
-    "cms_estimate",
-    "cms_sketch",
-    "hll_estimate",
-    "hll_registers",
-    "extract_features",
-    "range_join",
-]
+"""Operator modules; import each from its submodule."""

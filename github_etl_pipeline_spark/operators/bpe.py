@@ -1,36 +1,13 @@
-"""Byte-pair-encoding (BPE) subword tokenization: distributed merge
-TRAINING and corpus ENCODING — the real version of the tokenizer the
-text-analysis family approximates with the BPE-ish regex
-(``operators/text.py::BPEISH_RE``), and the canonical preprocessing
-step between curated text and training shards (Sennrich et al. 2016,
-"Neural Machine Translation of Rare Words with Subword Units").
+"""Byte-pair-encoding (BPE) merge candidates: the relation one BPE
+training step ranks (Sennrich et al. 2016, "Neural Machine Translation of
+Rare Words with Subword Units").
 
-Scale design (the 100-TB story):
-
-  * The corpus is touched ONCE: ``_word_counts`` reduces it to the
-    (word, count) frequency table — vocabulary-bounded, thousands of
-    times smaller than the text — and every training iteration runs on
-    that table, never on documents (the classic BPE formulation trains
-    on word frequencies; a corpus-sized iteration loop would be a
-    40-shuffle scan of 100 TB).
-  * One merge iteration = one map-side-combined groupBy over the
-    exploded adjacent symbol pairs of the word table + a bounded
-    collect of exactly ONE row (the argmax pair). State that grows is
-    executor-side (the evolving symbol arrays); the driver only ever
-    holds the merge list itself.
-  * Applying a merge is a pure fold expression (``F.aggregate``) over
-    each word's symbol array — JVM-side, no Python in the loop.
-  * Encoding re-uses the same trick: tokenize each DISTINCT word once
-    (vocabulary-bounded), then hash-join the word -> tokens table back
-    onto the corpus words. Token assembly is one Arrow-batched
-    mapInPandas over the distinct-word table only.
-
-Determinism: the argmax pair breaks ties by lexicographically smallest
-(pair_a, pair_b) — the same total order as the pure-Python reference
-implementation the tests cross-check against (an INDEPENDENT
-implementation, not a DuckDB oracle: iterative argmax training is not
-SQL-expressible, so verification here is reference-vs-distributed
-equality instead of the registry's oracle protocol).
+The corpus is touched ONCE: ``_word_counts`` reduces it to the
+(word, count) frequency table — vocabulary-bounded, thousands of times
+smaller than the text — and ``_initial_symbols`` splits each word into
+characters with the end-of-word marker fused onto the last one. The
+registry's ``bpe_top_pairs_documents`` counts adjacent symbol pairs over
+that table, so pair counting never touches documents.
 """
 
 from __future__ import annotations
@@ -64,143 +41,4 @@ def _initial_symbols(word: Column) -> Column:
     return F.concat(
         F.slice(chars, 1, n - 1),
         F.array(F.concat(F.element_at(chars, -1), F.lit(EOW))),
-    )
-
-
-def _merge_expr(syms: Column, a: str, b: str) -> Column:
-    """Fold that merges every adjacent (a, b) into a+b, left to right —
-    the exact greedy-scan semantics of the reference implementation
-    (after 'x x x' with merge (x, x): 'xx x', not 'x xx')."""
-    la, lb = F.lit(a), F.lit(b)
-    return F.aggregate(
-        syms,
-        F.array().cast("array<string>"),
-        lambda acc, s: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == la)
-            & (s == lb),
-            F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(F.concat(la, lb))),
-        ).otherwise(F.concat(acc, F.array(s))),
-    )
-
-
-def bpe_train(
-    docs: DataFrame,
-    n_merges: int,
-    text_col: str = "text",
-    min_pair_count: int = 2,
-) -> list[tuple[str, str]]:
-    """Learn ``n_merges`` BPE merges from the corpus. Returns the
-    ordered merge list [(a, b), ...]; stops early when no pair reaches
-    ``min_pair_count``. Ties on count break by smallest (a, b)."""
-    words = (
-        _word_counts(docs, text_col)
-        .select(_initial_symbols(F.col("word")).alias("syms"), "cnt")
-        # the iteration loop re-evaluates this table once per merge;
-        # persist so the corpus scan + word count never re-runs
-        .persist()
-    )
-    merges: list[tuple[str, str]] = []
-    try:
-        for _ in range(n_merges):
-            pairs = words.select(
-                F.explode(
-                    F.zip_with(
-                        F.slice(F.col("syms"), 1, F.size("syms") - 1),
-                        F.slice(F.col("syms"), 2, F.size("syms") - 1),
-                        lambda x, y: F.struct(x.alias("a"), y.alias("b")),
-                    )
-                ).alias("p"),
-                "cnt",
-            )
-            top = (
-                pairs.groupBy("p")
-                .agg(F.sum("cnt").alias("n"))
-                .orderBy(F.col("n").desc(), F.col("p.a").asc(), F.col("p.b").asc())
-                .limit(1)
-                .collect()
-            )
-            if not top or top[0]["n"] < min_pair_count:
-                break
-            a, b = top[0]["p"]["a"], top[0]["p"]["b"]
-            merges.append((a, b))
-            new_words = words.select(
-                _merge_expr(F.col("syms"), a, b).alias("syms"), "cnt"
-            ).persist()
-            new_words.count()  # materialize before dropping the parent
-            words.unpersist()
-            words = new_words
-    finally:
-        words.unpersist()
-    return merges
-
-
-def bpe_encode(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Tokenize the corpus with a learned merge list. Output one row per
-    document: (id, tokens array<string>, n_tokens).
-
-    The merge loop runs per DISTINCT word (an Arrow-batched mapInPandas
-    over the vocabulary-bounded word table — ranked merge application,
-    the standard encoder), and the corpus gets its tokens back through
-    a hash join on the word. Word order within a document is restored
-    by position, so ``tokens`` is the exact concatenation order."""
-    rank = {pair: i for i, pair in enumerate(merges)}
-
-    def encode_words(batches):
-        import pandas as pd
-
-        def enc(word: str) -> list[str]:
-            syms = list(word[:-1]) + [word[-1] + EOW] if word else []
-            while len(syms) > 1:
-                best, best_i = None, -1
-                for i in range(len(syms) - 1):
-                    r = rank.get((syms[i], syms[i + 1]))
-                    if r is not None and (best is None or r < best):
-                        best, best_i = r, i
-                if best is None:
-                    break
-                a, b = merges[best]
-                out = []
-                i = 0
-                while i < len(syms):
-                    if i < len(syms) - 1 and syms[i] == a and syms[i + 1] == b:
-                        out.append(a + b)
-                        i += 2
-                    else:
-                        out.append(syms[i])
-                        i += 1
-                syms = out
-            return syms
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {"word": pdf["word"], "toks": [enc(w) for w in pdf["word"]]}
-            )
-
-    positions = docs.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), WORD_SPLIT_RE)).alias("pos", "word"),
-    ).where(F.col("word") != "")
-    word_tokens = (
-        positions.select("word")
-        .distinct()
-        .mapInPandas(encode_words, "word string, toks array<string>")
-    )
-    nested = F.expr("transform(_ps, x -> x.toks)")
-    return (
-        positions.join(word_tokens, "word")
-        .groupBy(id_col)
-        # array_sort on (pos, toks) structs orders by pos: one grouped
-        # aggregate restores document order, no window shuffle
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "toks"))).alias("_ps"))
-        .select(
-            id_col,
-            F.flatten(nested).alias("tokens"),
-            F.size(F.flatten(nested)).alias("n_tokens"),
-        )
     )

@@ -15,13 +15,10 @@ Truth table:
 
 Each rule is one ``CASE`` expression, written once as SQL text over a
 column name (``*_sql``) — fully codegen'd, no UDFs — and parsed by one
-JVM call; the Column helpers wrap that text in ``F.expr``.
+JVM call when ``pool_kpis`` builds its plan.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 
 def _flat_sql(pt: str) -> str:
@@ -45,15 +42,3 @@ def is_flat_sql(pool_type: str) -> str:
 
 def max_multiplier_sql(pool_type: str) -> str:
     return f"CASE WHEN {_flat_sql(pool_type)} THEN substring({pool_type}, -4, 4) END"
-
-
-def tag_expr(pool_type: str) -> Column:
-    return F.expr(tag_sql(pool_type))
-
-
-def is_flat_expr(pool_type: str) -> Column:
-    return F.expr(is_flat_sql(pool_type))
-
-
-def max_multiplier_expr(pool_type: str) -> Column:
-    return F.expr(max_multiplier_sql(pool_type))

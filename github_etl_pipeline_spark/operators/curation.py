@@ -27,7 +27,7 @@ Scale design (the 100-TB story):
   * temperature_sample: per-source counts are a ~|sources|-row
     aggregate, broadcast back; the keep decision is an INTEGER
     inequality (bucket^2 * n_s < n_min * BUCKETS^2), so no float
-    boundary can disagree between engines — and like hash_sample it
+    boundary can disagree between engines — and as a plain filter it
     composes with predicate pushdown in the same scan.
 """
 
@@ -42,7 +42,6 @@ from github_etl_pipeline_spark.operators.text import (
     TOKEN_RE,
     quality_features,
 )
-from github_etl_pipeline_spark.sinks import commit
 
 
 def boilerplate_ngrams(
@@ -169,118 +168,6 @@ def _merge_spans(hits: "DataFrame", id_col: str, k: int) -> "DataFrame":
         )
         .select(id_col, "span_start", "span_end", "n_dup_grams")
     )
-
-
-def build_gram_index(
-    docs: "DataFrame",
-    index_path,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 8,
-    mode: str = "overwrite",
-) -> None:
-    """Persist the corpus's k-gram hash index as ``(gh, cnt)`` — one row
-    per distinct gram with its corpus occurrence COUNT (~12 bytes per
-    distinct gram, thousands of times smaller than the text) — the span
-    sibling of ``dedup.build_minhash_index``. A daily delta joins its
-    own gram positions against this index, so the historical corpus is
-    never re-read or re-tokenized. Storing counts (not just membership)
-    is what lets ``duplicate_spans_against_index`` honour min_count > 2
-    with exactly the batch operator's semantics (r4 advice: a
-    membership-only index over-marked for higher thresholds).
-
-    ``mode="append"`` adds a cleaned delta's gram counts after it has
-    been span-deduped (the ingest loop). Appended rows are PARTIAL
-    counts for grams already indexed — the probe sums per gh, so
-    correctness is unaffected; ``compact_gram_index`` folds the
-    partials back to one row per gram when the row-count ratio passes
-    its threshold."""
-    (
-        _pos_gram_hashes(docs, text_col, id_col, k)
-        .groupBy(F.col("_gh").alias("gh"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .write.mode(mode)
-        .parquet(str(index_path))
-    )
-
-
-def compact_gram_index(
-    spark,
-    index_path,
-    min_ratio: float = 1.5,
-) -> bool:
-    """Fold an append-grown gram index back to one ``(gh, cnt)`` row per
-    distinct gram. Each ``mode="append"`` adds partial-count rows for
-    grams the index already holds; probes stay correct (they SUM per
-    gh) but the index grows by duplicate gh rows. When total_rows /
-    distinct_grams >= ``min_ratio`` this rewrites the index as the
-    groupBy-sum — same probe results, minimal size. Returns True iff a
-    rewrite happened.
-
-    The ratio check is one aggregate over the skinny index; the rewrite
-    is one shuffle of the index (never the corpus), committed through
-    ``sinks/commit.py``. Run it in the same maintenance window as the
-    other single-writer index operations (``mode="append"``)."""
-    staging = commit.begin(index_path)
-    idx = spark.read.parquet(str(index_path))
-    total, distinct = idx.agg(
-        F.count(F.lit(1)), F.count_distinct("gh")
-    ).first()
-    if distinct == 0 or total / distinct < min_ratio:
-        return False
-    (
-        idx.groupBy("gh")
-        .agg(F.sum("cnt").alias("cnt"))
-        .write.mode("overwrite")
-        .parquet(str(staging))
-    )
-    commit.promote(index_path)
-    return True
-
-
-def duplicate_spans_against_index(
-    spark,
-    new_docs: "DataFrame",
-    index_path,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 8,
-    min_count: int = 2,
-) -> "DataFrame":
-    """Incremental duplicate-span detection: span-mark a DELTA without
-    touching the historical corpus, with EXACTLY the batch operator's
-    semantics at any ``min_count``: a delta position is duplicated iff
-    its k-gram's total occurrence count across history (summed from the
-    ``(gh, cnt)`` index) plus the delta itself reaches ``min_count`` —
-    i.e. the same threshold ``duplicate_spans`` would apply to
-    history UNION delta, restricted to delta positions. Runs merge into
-    maximal spans exactly as in ``duplicate_spans``.
-
-    Shape at 100 TB: the delta's (id, pos, gh) relation left-joins the
-    index on the 16-hex hash — a plain hash join against ~one row per
-    distinct history gram (append partials are summed per gh first,
-    which shuffles only the skinny index) — and the delta-internal
-    count is the same single window shuffle as the batch operator.
-    History cost is O(distinct grams), read-only, shared by every
-    delta.
-    """
-    pos_grams = _pos_gram_hashes(new_docs, text_col, id_col, k)
-    idx = (
-        spark.read.parquet(str(index_path))
-        .groupBy(F.col("gh").alias("_gh"))
-        .agg(F.sum("cnt").alias("_hist_cnt"))
-    )
-    freq_w = Window.partitionBy("_gh")
-    hits = (
-        pos_grams.withColumn("_freq", F.count(F.lit(1)).over(freq_w))
-        .join(idx, "_gh", "left")
-        .where(
-            F.coalesce(F.col("_hist_cnt"), F.lit(0)) + F.col("_freq")
-            >= F.lit(min_count)
-        )
-        .select(id_col, "pos")
-    )
-    return _merge_spans(hits, id_col, k)
 
 
 def remove_duplicate_spans(

@@ -32,8 +32,6 @@ from github_etl_pipeline_spark.functions.hashing import (
     MINHASH_P,
     NUM_MINHASHES,
     minhash_coeffs,
-    minhash_perm,
-    portable_hash32,
     portable_hash48,
 )
 from github_etl_pipeline_spark.operators.text import TOKEN_RE
@@ -1305,99 +1303,6 @@ def fuzzy_pairs(
     ed = F.levenshtein("ka", "kb")
     return cand.where(ed <= max_ed).select(
         "id_a", "id_b", ed.cast("long").alias("edit_distance")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Incremental dedup against a persisted corpus index (daily-delta pattern)
-# ---------------------------------------------------------------------------
-def build_minhash_index(
-    docs: DataFrame,
-    index_path,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 2,
-    mode: str = "overwrite",
-) -> None:
-    """Persist the corpus's dedup index: one row per doc with its full
-    MinHash signature array PLUS the banded bucket keys. The index is
-    O(docs x NUM_MINHASHES ints) — thousands of times smaller than the
-    corpus text — and is what the daily delta joins against, so arriving
-    data NEVER re-reads or re-shingles the historical corpus.
-
-    ``mode="append"`` adds a new delta's rows to the index after it has
-    been deduped (the ingest loop: dedup delta -> append survivors).
-    """
-    sig = minhash_signature(docs, text_col, id_col, k)
-    rows_per_band = NUM_MINHASHES // 4
-    band_cols = []
-    for b in range(4):
-        cols = [F.col(f"sig_{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_cols.append(F.md5(F.concat_ws(",", *cols)).alias(f"bh_{b}"))
-    sig_arr = F.array(*[F.col(f"sig_{i}") for i in range(NUM_MINHASHES)]).alias("sig")
-    sig.select(F.col(id_col), sig_arr, *band_cols).write.mode(mode).parquet(
-        str(index_path)
-    )
-
-
-def dedup_against_index(
-    spark,
-    new_docs: DataFrame,
-    index_path,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 2,
-    threshold: float = 0.7,
-) -> DataFrame:
-    """Match a DELTA against the persisted index WITHOUT touching the
-    historical corpus: compute the delta's signatures, hash-join its band
-    buckets against the index's stored buckets, then verify candidates by
-    MinHash-estimated Jaccard (fraction of agreeing signature components
-    — the standard unbiased estimator; the historical text is not
-    available and not needed). Output: (new_id, index_id, est_jaccard
-    rounded to 4dp) for matches >= threshold; downstream drops or
-    clusters the matched delta docs, then appends survivors via
-    ``build_minhash_index(mode="append")``.
-
-    Scale shape: the index is signatures-only (tiny vs the corpus); the
-    join is band-bucket equi-join (same banding as lsh_candidate_pairs);
-    verification is one zip_with sum over two NUM_MINHASHES arrays per
-    candidate. The delta never shuffles corpus text, and the index scan
-    prunes to the delta's bucket values via the hash join.
-    """
-    sig = minhash_signature(new_docs, text_col, id_col, k)
-    rows_per_band = NUM_MINHASHES // 4
-    new_bands = []
-    for b in range(4):
-        cols = [F.col(f"sig_{b * rows_per_band + r}") for r in range(rows_per_band)]
-        new_bands.append(F.md5(F.concat_ws(",", *cols)).alias(f"nbh_{b}"))
-    new_sig = sig.select(
-        F.col(id_col).alias("new_id"),
-        F.array(*[F.col(f"sig_{i}") for i in range(NUM_MINHASHES)]).alias("nsig"),
-        *new_bands,
-    )
-    idx = spark.read.parquet(str(index_path)).select(
-        F.col(id_col).alias("index_id"),
-        F.col("sig").alias("isig"),
-        *[F.col(f"bh_{b}") for b in range(4)],
-    )
-    cand = None
-    for b in range(4):
-        m = new_sig.join(
-            idx, new_sig[f"nbh_{b}"] == idx[f"bh_{b}"], "inner"
-        ).select("new_id", "nsig", "index_id", "isig")
-        cand = m if cand is None else cand.unionByName(m)
-    cand = cand.dropDuplicates(["new_id", "index_id"])
-    agree = F.aggregate(
-        F.zip_with("nsig", "isig", lambda a, b: (a == b).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    est = F.round(agree / F.lit(NUM_MINHASHES), 4)
-    return (
-        cand.where(F.col("new_id") != F.col("index_id"))
-        .select("new_id", "index_id", est.alias("est_jaccard"))
-        .where(F.col("est_jaccard") >= threshold)
     )
 
 

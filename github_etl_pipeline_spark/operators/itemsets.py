@@ -1,7 +1,7 @@
 """Frequent-itemset mining and association rules, DataFrame-native.
 
-Market-basket analysis over (basket, item) incidence relations: frequent
-single items, Apriori-pruned frequent pairs, and association-rule metrics
+Market-basket analysis over (basket, item) incidence relations:
+Apriori-pruned frequent pairs with association-rule metrics
 (support / confidence / lift). The extension-surface analytics family the
 relational block lacks — co-occurrence mining is the standard "what ships
 together" warehouse question, and the same machinery mines token/tag
@@ -27,66 +27,15 @@ Scale shape (100 TB):
     PRUNED incidence relation only.
   * The pair self-join shuffles once on basket; a basket with m frequent
     items emits C(m,2) rows, so a pathological mega-basket is the skew
-    risk — ``max_basket_items`` drops baskets above a bound (dropped
-    count is observable via basket_sizes(); mirrors the standard
-    practice of capping promiscuous baskets, which carry no signal).
+    risk — ``max_basket_items`` drops baskets above a bound (the
+    standard practice of capping promiscuous baskets, which carry no
+    signal).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def basket_items(
-    df: DataFrame, basket_col: str, item_col: str, max_basket_items: int | None = None
-) -> DataFrame:
-    """Distinct (basket, item) incidence relation; optionally drop
-    baskets with more than ``max_basket_items`` distinct items (the
-    skew guard — C(m,2) pair blowup grows quadratically in m)."""
-    items = df.select(
-        F.col(basket_col).alias("basket"), F.col(item_col).alias("item")
-    ).distinct()
-    if max_basket_items is not None:
-        n = F.count(F.lit(1)).over(Window.partitionBy("basket"))
-        items = (
-            items.withColumn("_m", n).filter(F.col("_m") <= max_basket_items).drop("_m")
-        )
-    return items
-
-
-def basket_sizes(items: DataFrame) -> DataFrame:
-    """Distribution of distinct items per basket — the skew profile that
-    sizes ``max_basket_items`` (one groupBy(basket) + one groupBy(size))."""
-    per = items.groupBy("basket").agg(F.count(F.lit(1)).alias("n_items"))
-    return per.groupBy("n_items").agg(F.count(F.lit(1)).alias("n_baskets"))
-
-
-def _with_n_baskets(items: DataFrame) -> DataFrame:
-    """Attach the scalar basket count as a column via a 1-row cross join
-    (broadcast nested loop of ONE row — no driver action, the whole
-    mining job stays a single lazy plan)."""
-    nb = items.select("basket").distinct().agg(F.count(F.lit(1)).alias("n_baskets"))
-    return items.crossJoin(F.broadcast(nb))
-
-
-def frequent_items(
-    items: DataFrame, min_support: float
-) -> DataFrame:
-    """Items appearing in >= ceil(min_support * n_baskets) baskets.
-
-    Output (item, item_cnt, n_baskets); one groupBy(item) over the
-    incidence relation. The Apriori bound caps the result at
-    avg_basket_size / min_support rows — broadcastable at any corpus
-    size (module docstring)."""
-    with_n = _with_n_baskets(items)
-    cnt = with_n.groupBy("item", "n_baskets").agg(
-        F.count(F.lit(1)).alias("item_cnt")
-    )
-    minc = F.ceil(F.lit(min_support) * F.col("n_baskets").cast("double"))
-    return cnt.filter(F.col("item_cnt") >= minc).select(
-        "item", "item_cnt", "n_baskets"
-    )
 
 
 def frequent_pairs(

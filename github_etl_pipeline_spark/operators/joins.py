@@ -11,7 +11,7 @@ followed by the exact BETWEEN verify emits every true match exactly once
 — no dedup shuffle. Cost: shuffle of facts + intervals x spanned-bucket
 fan-out; pick ``bucket_width`` near the typical interval length so the
 fan-out stays ~2. Skewed hot buckets respond to the usual levers (AQE
-skew join, functions/skew.salted_join on the bucket key).
+skew join, salting the bucket key).
 
 ``asof_join``: the other classic time join, generalized (direction
 backward/forward/nearest, tolerance, exact-match toggle) — see its

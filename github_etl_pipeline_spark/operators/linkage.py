@@ -46,21 +46,6 @@ def char_ngram_set(col: str, n: int = 3) -> Column:
     return F.array_distinct(F.expr(grams))
 
 
-def jaccard_sim(a_col: str, b_col: str, n: int = 3) -> Column:
-    """Character-n-gram Jaccard |A&B| / |A|B| as a 6dp double from exact
-    integer set sizes (union via |A|+|B|-|A&B| — operands are DISTINCT
-    gram arrays, so the size arithmetic is exact)."""
-    a, b = char_ngram_set(a_col, n), char_ngram_set(b_col, n)
-    inter = F.size(F.array_intersect(a, b))
-    union = F.size(a) + F.size(b) - inter
-    return F.round(
-        F.when(union == 0, F.lit(0.0)).otherwise(
-            inter.cast("double") / union.cast("double")
-        ),
-        6,
-    )
-
-
 def fs_weights(m: float, u: float) -> tuple[float, float]:
     """(agreement, disagreement) log2 weights, rounded 6dp in PYTHON so
     both engines consume identical literals."""

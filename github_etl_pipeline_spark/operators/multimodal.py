@@ -1,24 +1,13 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
-with typed metadata, processed via Arrow-batched Pandas UDFs.
+with typed metadata, processed via Arrow-batched Pandas UDFs. A media
+table has ``media_id`` (long), ``kind`` (image | audio | video),
+``format``, ``content`` (binary) and, for the frame plan, ``duration_ms``.
 
-Decode — three REAL in-repo codecs now run end-to-end through the
-mapInPandas plumbing via the ``decoder=`` seam of ``extract_features``
-/ ``resize_images`` / ``audio_features``, each tested on actual encoded
-bytes with exactly-predicted outputs:
-
-  * PNG  — pure stdlib (``decode_png``: zlib + scanline unfiltering), r4
-  * WAV  — pure stdlib (``decode_wav``: RIFF PCM 8/16/32-bit), r5
-  * JPEG — baseline T.81 (``operators/jpeg.py``: Huffman + IDCT,
-    grayscale/YCbCr, subsampling, restart markers), r5; progressive
-    SOF2 (spectral selection + successive approximation), r6
-  * MJPEG-AVI — pure stdlib RIFF walk (``operators/avi.py``) feeding
-    the JPEG decoder per sampled frame (``frame_sample``), r6
-
-Remaining codecs (webp, mp3/aac, mp4/mkv containers, inter-frame
-video) still need an external library injected through the same seam;
-absent one, a deterministic fake decoder keeps the Spark-side
-contract — schema, Arrow batch shape, partition preservation — fully
-testable.
+Decode: no codec runs here. ``extract_features`` and ``audio_features``
+derive their features from a deterministic md5 stand-in for the decoded
+payload (``fake_decode``), which keeps the Spark-side contract — schema,
+Arrow batch shape, one row per item or window — exact and testable. A
+real codec would replace that stand-in inside the batch function.
 
 Scale notes: binary payloads ride in the DataFrame as parquet binary
 columns; per-batch processing (Arrow RecordBatch in, RecordBatch out)
@@ -35,24 +24,11 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("kind", StringType(), False),  # image | audio | video
-        StructField("format", StringType(), True),  # png | wav | mp4 | ...
-        StructField("content", BinaryType(), True),  # opaque payload
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("duration_ms", LongType(), True),
-    ]
 )
 
 FEATURE_SCHEMA = StructType(
@@ -67,282 +43,6 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-
-
-def decode_png(content: bytes) -> tuple[int, int, int, bytes]:
-    """Minimal pure-stdlib PNG decoder (zlib inflate + scanline
-    unfiltering): 8-bit gray / gray+alpha / RGB / RGBA, non-interlaced.
-    Returns ``(width, height, channels, pixel_bytes)`` with pixels
-    row-major, channel-interleaved.
-
-    This is the REAL decode path for the one format the standard library
-    can fully handle — it exists so the mapInPandas plumbing
-    (``extract_features``/``resize_images`` with ``decoder=``) is
-    exercised end-to-end on actual image bytes, not only on
-    ``fake_decode``. Other codecs (JPEG, audio, video) still need an
-    external library injected through the same ``decoder`` seam.
-    """
-    import struct
-    import zlib
-
-    if content[: len(_PNG_SIG)] != _PNG_SIG:
-        raise ValueError("not a PNG: bad signature")
-    pos = len(_PNG_SIG)
-    idat = b""
-    w = h = channels = None
-    while pos + 8 <= len(content):
-        (length,) = struct.unpack(">I", content[pos : pos + 4])
-        ctype = content[pos + 4 : pos + 8]
-        data = content[pos + 8 : pos + 8 + length]
-        pos += 12 + length  # length + type + data + crc
-        if ctype == b"IHDR":
-            w, h, bit_depth, color_type, _comp, _filt, interlace = struct.unpack(
-                ">IIBBBBB", data
-            )
-            if bit_depth != 8:
-                raise NotImplementedError(f"PNG bit depth {bit_depth} (only 8)")
-            if interlace:
-                raise NotImplementedError("interlaced PNG")
-            channels = {0: 1, 2: 3, 4: 2, 6: 4}.get(color_type)
-            if channels is None:
-                raise NotImplementedError(f"PNG color type {color_type}")
-        elif ctype == b"IDAT":
-            idat += data
-        elif ctype == b"IEND":
-            break
-    if w is None or not idat:
-        raise ValueError("truncated PNG: missing IHDR/IDAT")
-    raw = zlib.decompress(idat)
-    stride = w * channels
-    if len(raw) != h * (stride + 1):
-        raise ValueError("PNG scanline data has unexpected length")
-    out = bytearray()
-    prev = bytearray(stride)
-    for y in range(h):
-        base = y * (stride + 1)
-        f = raw[base]
-        line = bytearray(raw[base + 1 : base + 1 + stride])
-        if f == 1:  # Sub
-            for i in range(channels, stride):
-                line[i] = (line[i] + line[i - channels]) & 0xFF
-        elif f == 2:  # Up
-            for i in range(stride):
-                line[i] = (line[i] + prev[i]) & 0xFF
-        elif f == 3:  # Average
-            for i in range(stride):
-                a = line[i - channels] if i >= channels else 0
-                line[i] = (line[i] + (a + prev[i]) // 2) & 0xFF
-        elif f == 4:  # Paeth
-            for i in range(stride):
-                a = line[i - channels] if i >= channels else 0
-                b = prev[i]
-                c = prev[i - channels] if i >= channels else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pr = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                line[i] = (line[i] + pr) & 0xFF
-        elif f != 0:
-            raise ValueError(f"PNG filter type {f}")
-        out += line
-        prev = line
-    return w, h, channels, bytes(out)
-
-
-def decode_image(content: bytes, fmt: str | None) -> tuple[int, int, int, bytes]:
-    """Real decoder entry point: PNG decodes with the stdlib decoder
-    above, baseline AND progressive JPEG with the in-repo T.81 decoder
-    (``operators/jpeg.py`` — pure Python + numpy, grayscale/YCbCr, any
-    SOF0/SOF2 subsampling, restart markers, successive approximation);
-    remaining formats (webp, tiff, ...) need an imaging library
-    injected through the ``decoder=`` seam of ``extract_features``/
-    ``resize_images``. Returns ``(width, height, channels, pixel_bytes)``."""
-    if (fmt or "").lower() == "png" or content[: len(_PNG_SIG)] == _PNG_SIG:
-        return decode_png(content)
-    if (fmt or "").lower() in ("jpeg", "jpg") or content[:2] == b"\xff\xd8":
-        from github_etl_pipeline_spark.operators.jpeg import decode_jpeg
-
-        return decode_jpeg(content)
-    raise NotImplementedError(
-        f"decoding {fmt!r} requires an imaging library; inject a decoder "
-        "with the same (content, fmt) -> (w, h, channels, pixels) contract"
-    )
-
-
-def decode_wav(content: bytes) -> tuple[int, int, list[int]]:
-    """REAL pure-stdlib audio decode (the ``wave`` module is part of the
-    standard library, so — like PNG — this codec needs no injected
-    dependency): RIFF/WAV PCM to ``(n_channels, sample_rate, samples)``
-    with ``samples`` channel-interleaved signed ints. 8-bit (unsigned,
-    recentred to signed), 16-bit and 32-bit PCM supported — the
-    ``wave``-module surface.
-
-    Exists for the same reason as :func:`decode_png` (VERDICT r4 #3):
-    the mapInPandas audio path (`audio_features`) runs end-to-end on
-    actual RIFF bytes with exactly verifiable integer features, proving
-    the decoder seam; compressed codecs (mp3, aac, ...) still need an
-    external library with this same contract."""
-    import io
-    import struct
-    import wave
-
-    with wave.open(io.BytesIO(content), "rb") as w:
-        n_ch = w.getnchannels()
-        rate = w.getframerate()
-        width = w.getsampwidth()
-        raw = w.readframes(w.getnframes())
-    n = len(raw) // width
-    if width == 1:  # 8-bit WAV is unsigned; recentre to signed
-        samples = [b - 128 for b in raw]
-    elif width == 2:
-        samples = list(struct.unpack(f"<{n}h", raw))
-    elif width == 4:
-        samples = list(struct.unpack(f"<{n}i", raw))
-    else:
-        raise NotImplementedError(f"WAV sample width {width} bytes (1/2/4 supported)")
-    return n_ch, rate, samples
-
-
-def decode_audio(content: bytes, fmt: str | None) -> tuple[int, int, list[int]]:
-    """Audio decoder entry point: WAV decodes with the stdlib decoder
-    above; every other codec needs a library injected through the
-    ``decoder=`` seam of :func:`audio_features`. Returns
-    ``(n_channels, sample_rate, samples)``."""
-    if (fmt or "").lower() == "wav" or content[:4] == b"RIFF":
-        return decode_wav(content)
-    raise NotImplementedError(
-        f"decoding {fmt!r} requires an audio library; inject a decoder "
-        "with the same (content, fmt) -> (n_channels, rate, samples) contract"
-    )
-
-
-def decode_video(content: bytes, fmt: str | None) -> tuple[int, list[tuple[int, bytes]]]:
-    """Video CONTAINER decoder entry point: MJPEG-AVI parses with the
-    pure-stdlib RIFF walker (``operators/avi.py``) into
-    ``(duration_ms, [(ts_ms, frame_jpeg_bytes)])`` — container-only, so
-    frame sampling can choose frames BEFORE paying any pixel decode;
-    the chosen frames' JPEG payloads then decode with the in-repo T.81
-    decoder. Other containers/codecs (mp4, mkv, webm, inter-frame
-    codecs) need a video library injected through the ``decoder=`` seam
-    of :func:`frame_sample` with this same contract."""
-    if (fmt or "").lower() == "avi" or (
-        content[:4] == b"RIFF" and content[8:12] == b"AVI "
-    ):
-        from github_etl_pipeline_spark.operators.avi import parse_avi_mjpeg
-
-        return parse_avi_mjpeg(content)
-    raise NotImplementedError(
-        f"decoding {fmt!r} requires a video library; inject a decoder "
-        "with the same (content, fmt) -> (duration_ms, [(ts_ms, "
-        "frame_bytes)]) contract"
-    )
-
-
-FRAME_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("frame_ts_ms", LongType(), False),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("channels", IntegerType(), True),
-        StructField("content", BinaryType(), True),  # raw decoded pixels
-        StructField("content_hash", StringType(), True),
-    ]
-)
-
-
-def frame_sample(
-    media: DataFrame,
-    every_ms: int = 1000,
-    decoder=None,
-    frame_decoder=None,
-) -> DataFrame:
-    """REAL video frame sampling through the decoder seam: parse each
-    video payload's container (``decoder``, default :func:`decode_video`
-    — MJPEG-AVI runs fully in-repo), pick the latest frame at or before
-    each ``every_ms`` grid point, and pixel-decode ONLY those frames
-    (``frame_decoder``, default :func:`decode_image` — the in-repo
-    baseline-JPEG/PNG path). One output row per sampled frame:
-    (media_id, frame_ts_ms, width, height, channels, content=raw
-    pixel bytes, content_hash).
-
-    This is the executed twin of :func:`frame_sample_plan` (which only
-    fans out the timestamps): sampling at 1 fps from a 30 fps clip
-    container-parses everything but JPEG-decodes ~1/30th of the frames.
-    Payloads whose container fails to parse are dropped (same policy as
-    ``perceptual_ahash``: undecodable media cannot contribute frames).
-
-    Scale shape: one Arrow-batched mapInPandas pass; output size is
-    sampled-frames x pixel bytes, so repartition by expected payload
-    size before calling when clips are large."""
-    ev = int(every_ms)
-    dec = decoder
-    fdec = frame_decoder
-
-    def run(batches):
-        import hashlib
-
-        import pandas as pd
-
-        def _decode_video(content, fmt):
-            from github_etl_pipeline_spark.operators.avi import parse_avi_mjpeg
-
-            if (fmt or "").lower() == "avi" or (
-                content[:4] == b"RIFF" and content[8:12] == b"AVI "
-            ):
-                return parse_avi_mjpeg(content)
-            raise NotImplementedError(f"no in-repo container parser for {fmt!r}")
-
-        def _decode_frame(content, fmt):
-            from github_etl_pipeline_spark.operators.multimodal import decode_image
-
-            return decode_image(content, fmt)
-
-        d = dec if dec is not None else _decode_video
-        fd = fdec if fdec is not None else _decode_frame
-        for pdf in batches:
-            out = {k: [] for k in (
-                "media_id", "frame_ts_ms", "width", "height", "channels",
-                "content", "content_hash",
-            )}
-            for mid, content, fmt in zip(
-                pdf["media_id"], pdf["content"], pdf["format"]
-            ):
-                if content is None:
-                    continue
-                try:
-                    duration_ms, frames = d(bytes(content), fmt)
-                except (ValueError, NotImplementedError):
-                    continue
-                if not frames:
-                    continue
-                picked: dict[int, int] = {}  # frame index -> grid ts (dedup)
-                for ts in range(0, max(duration_ms, 1), ev):
-                    i = max(
-                        (j for j, (fts, _) in enumerate(frames) if fts <= ts),
-                        default=0,
-                    )
-                    picked.setdefault(i, ts)
-                for i, grid_ts in sorted(picked.items()):
-                    fts, fbytes = frames[i]
-                    w, h, ch, px = fd(fbytes, None)
-                    out["media_id"].append(mid)
-                    out["frame_ts_ms"].append(grid_ts)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["channels"].append(ch)
-                    out["content"].append(px)
-                    out["content_hash"].append(hashlib.md5(px).hexdigest())
-            # skip all-filtered batches: pd.DataFrame of empty lists
-            # defaults every column to float64, and Arrow refuses
-            # empty-float64 -> binary for `content` (same class of crash
-            # as the _lloyd_refine empty-partition yield, r9)
-            if out["media_id"]:
-                yield pd.DataFrame(out)
-
-    return media.where(F.col("kind") == "video").mapInPandas(run, schema=FRAME_SCHEMA)
-
-
 def fake_decode(content: bytes) -> tuple[int, int]:
     """Deterministic stand-in for decode+feature-extract: (feature mean,
     feature dim) derived from the payload bytes. Lets every downstream
@@ -355,31 +55,16 @@ def fake_decode(content: bytes) -> tuple[int, int]:
     return (int.from_bytes(digest[:4], "big"), len(content) % 512 + 1)
 
 
-def extract_features(
-    media: DataFrame,
-    batch_hint: int | None = None,
-    decoder=None,
-) -> DataFrame:
+def extract_features(media: DataFrame, batch_hint: int | None = None) -> DataFrame:
     """mapInPandas feature extraction over the media table. Arrow batches
-    flow in/out; one output row per input row.
-
-    ``decoder`` — optional real decode function with the
-    ``(content_bytes, fmt) -> (w, h, channels, pixel_bytes)`` contract
-    (e.g. :func:`decode_image`, whose PNG path is pure stdlib and runs
-    for real in this environment). With a decoder, ``feat_mean`` is the
-    integer mean pixel value and ``feat_dim`` the decoded pixel count —
-    exact, verifiable values. Without one, the deterministic
-    ``fake_decode`` stand-in keeps the plumbing testable (see module
-    docstring).
+    flow in/out; one output row per input row, with ``feat_mean`` and
+    ``feat_dim`` from the ``fake_decode`` stand-in (see module docstring).
 
     The fake-decode logic is re-declared LOCALLY so cloudpickle ships it
     by value: a module-level reference would make every Python worker
     import this package, which fails when the driver's cwd isn't the
-    repo root (the driver-contract deployment mode). An injected
-    ``decoder`` must itself be import-safe on workers (a self-contained
-    closure, or this package importable). Kept in sync with
+    repo root (the driver-contract deployment mode). Kept in sync with
     ``fake_decode`` by test_extensions.test_multimodal_plumbing."""
-    dec = decoder
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
         import hashlib
@@ -393,23 +78,9 @@ def extract_features(
             return (int.from_bytes(digest[:4], "big"), len(content) % 512 + 1)
 
         for pdf in batches:
-            if dec is None:
-                feat = pdf["content"].map(
-                    lambda c: _fake_decode(bytes(c) if c is not None else None)
-                )
-            else:
-
-                def _real(row):
-                    c, fmt = row
-                    if c is None:
-                        return (0, 0)
-                    _w, _h, _ch, px = dec(bytes(c), fmt)
-                    return (sum(px) // len(px) if px else 0, len(px))
-
-                feat = pd.Series(
-                    [_real(t) for t in zip(pdf["content"], pdf["format"])],
-                    index=pdf.index,
-                )
+            feat = pdf["content"].map(
+                lambda c: _fake_decode(bytes(c) if c is not None else None)
+            )
             out = pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
@@ -430,9 +101,7 @@ def extract_features(
 def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Video frame-sampling PLAN: expands each video row into the frame
     timestamps that a real decoder would extract (sequence expression —
-    JVM-side), with the per-frame decode left to ``extract_features``.
-    Pure-expression fan-out twin of :func:`frame_sample`, which runs
-    the real container parse + per-frame pixel decode."""
+    JVM-side), with the per-frame decode left to ``extract_features``."""
     return (
         media.where(F.col("kind") == "video")
         .where(F.col("duration_ms").isNotNull())
@@ -442,36 +111,6 @@ def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
             F.explode(
                 F.sequence(F.lit(0), F.col("duration_ms"), F.lit(every_ms))
             ).alias("frame_ts_ms"),
-        )
-    )
-
-
-def audio_window_plan(
-    media: DataFrame, window_ms: int = 1000, hop_ms: int = 500
-) -> DataFrame:
-    """Audio analysis-window PLAN: (window_start_ms, window_end_ms) rows
-    per audio item at ``hop_ms`` stride — the STFT/feature-window fan-out
-    shape, decode left to the batch UDF. Windows start while there is at
-    least one ms of audio left; the final window may be short (clamped
-    end), mirroring ``curation.chunk_documents``'s token semantics."""
-    return (
-        media.where(F.col("kind") == "audio")
-        .where(F.col("duration_ms").isNotNull() & (F.col("duration_ms") > 0))
-        .select(
-            "media_id",
-            "format",
-            F.explode(
-                F.sequence(F.lit(0), F.col("duration_ms") - 1, F.lit(hop_ms))
-            ).alias("window_start_ms"),
-            F.col("duration_ms"),
-        )
-        .select(
-            "media_id",
-            "format",
-            "window_start_ms",
-            F.least(
-                F.col("window_start_ms") + window_ms, F.col("duration_ms")
-            ).alias("window_end_ms"),
         )
     )
 
@@ -493,29 +132,24 @@ def audio_features(
     media: DataFrame,
     window_ms: int = 1000,
     hop_ms: int = 500,
-    decoder=None,
 ) -> DataFrame:
     """mapInPandas audio feature extraction: decode each audio payload
     once per row, then emit one row per analysis window at ``hop_ms``
-    stride — the STFT-feature fan-out of ``audio_window_plan`` with the
-    decode actually performed inside the batch UDF.
+    stride — the STFT-feature fan-out, with the decode performed inside
+    the batch UDF.
 
     Features are EXACT integers (no float summation anywhere), so tests
     and cross-run comparisons are bit-stable: ``n_samples`` (interleaved
     samples in the window), ``sum_abs``, ``peak`` (max |sample|) and
     ``energy`` (sum of squares — Python ints never overflow).
 
-    ``decoder`` follows the audio contract
-    ``(content, fmt) -> (n_channels, sample_rate, samples)`` — e.g.
-    :func:`decode_audio`, whose WAV path is pure stdlib and runs for
-    real here. Without one, a deterministic fake (md5-derived samples at
-    a fixed rate) keeps the window plumbing testable. Window bounds use
-    the same clamped-end semantics as ``audio_window_plan``: windows
-    start while >= 1 ms of audio remains; sample index = ms * rate //
-    1000 over frame positions (channel-interleaved samples of one frame
-    always share a window)."""
+    The decode is a deterministic stand-in (8 md5-derived samples at
+    1 kHz per payload) with the ``(n_channels, sample_rate, samples)``
+    shape a real audio codec returns. Windows start while >= 1 ms of
+    audio remains and the last one may be short (clamped end); sample
+    index = ms * rate // 1000 over frame positions (channel-interleaved
+    samples of one frame always share a window)."""
     win, hop = int(window_ms), int(hop_ms)
-    dec = decoder
 
     def run(batches):
         import hashlib
@@ -529,7 +163,6 @@ def audio_features(
             digest = hashlib.md5(bytes(content)).digest()
             return (1, 1000, [b - 128 for b in digest[:8]])
 
-        d = dec if dec is not None else _fake_decode_audio
         for pdf in batches:
             out = {k: [] for k in (
                 "media_id", "window_start_ms", "window_end_ms",
@@ -540,7 +173,7 @@ def audio_features(
             ):
                 if content is None:
                     continue
-                n_ch, rate, samples = d(bytes(content), fmt)
+                n_ch, rate, samples = _fake_decode_audio(bytes(content), fmt)
                 n_frames = len(samples) // max(1, n_ch)
                 duration_ms = n_frames * 1000 // max(1, rate)
                 start = 0
@@ -557,161 +190,15 @@ def audio_features(
                     out["peak"].append(max((abs(s) for s in w), default=0))
                     out["energy"].append(sum(s * s for s in w))
                     start += hop
-            if out["media_id"]:  # see frame-sample note on empty batches
+            # skip all-filtered batches: a frame of empty lists has
+            # float64 columns, not the schema's types
+            if out["media_id"]:
                 yield pd.DataFrame(out)
 
     return media.where(F.col("kind") == "audio").mapInPandas(
         run, schema=AUDIO_FEATURE_SCHEMA
     )
 
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("width", IntegerType(), False),
-        StructField("height", IntegerType(), False),
-        StructField("content", BinaryType(), True),
-        StructField("content_hash", StringType(), True),
-    ]
-)
-
-
-def resize_images(
-    media: DataFrame, width: int, height: int, decoder=None
-) -> DataFrame:
-    """mapInPandas image resize. With an injected ``decoder`` (the
-    ``(content, fmt) -> (w, h, channels, pixels)`` contract, e.g.
-    :func:`decode_image`) the REAL path runs: nearest-neighbor resample
-    of the decoded pixels, output ``content`` = raw channel-interleaved
-    pixel bytes at the target geometry. Without one, the decode/encode
-    step is stubbed behind a deterministic fake (md5 of payload + target
-    geometry) so the Spark-side shape — Arrow batches, one row per
-    image, binary out, typed geometry columns — stays testable."""
-    w, h = int(width), int(height)
-    dec = decoder
-
-    def run(batches):
-        import hashlib
-
-        import pandas as pd
-
-        def _fake_resize(content, fmt):
-            if content is None:
-                return None
-            return hashlib.md5(bytes(content) + f":{w}x{h}".encode()).digest()
-
-        def _real_resize(content, fmt):
-            if content is None:
-                return None
-            sw, sh, ch, px = dec(bytes(content), fmt)
-            out = bytearray()
-            for y in range(h):
-                sy = min(sh - 1, (y * sh) // h)
-                for x in range(w):
-                    sx = min(sw - 1, (x * sw) // w)
-                    base = (sy * sw + sx) * ch
-                    out += px[base : base + ch]
-            return bytes(out)
-
-        resize = _fake_resize if dec is None else _real_resize
-        for pdf in batches:
-            out_content = pd.Series(
-                [resize(c, fmt) for c, fmt in zip(pdf["content"], pdf["format"])],
-                index=pdf.index,
-            )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": w,
-                    "height": h,
-                    "content": out_content,
-                    "content_hash": out_content.map(
-                        lambda c: hashlib.md5(c).hexdigest() if c is not None else None
-                    ),
-                }
-            )
-
-    return media.where(F.col("kind") == "image").mapInPandas(run, schema=RESIZED_SCHEMA)
-
-
-def perceptual_ahash(
-    media: DataFrame, decoder, hash_size: int = 8
-) -> DataFrame:
-    """aHash over REAL decoded pixels: decode each image through the
-    injected ``decoder`` (:func:`decode_image` covers PNG + baseline
-    JPEG in-repo), grayscale it, box-downscale to ``hash_size`` x
-    ``hash_size``, threshold each cell against the mean — one
-    ``hash_size**2``-bit integer per image. The same PICTURE stored
-    under different codecs (a PNG master and its JPEG export) hashes to
-    the same/nearby value, which is exactly the cross-codec near-dup
-    case a training-data pipeline must catch and byte-level dedup
-    cannot (tests pin PNG-vs-JPEG Hamming distance).
-
-    Output (media_id, ahash). Pair mining downstream reuses the
-    ``media_dup_pairs`` banding (pigeonhole Hamming bands + exact
-    ``bit_count(xor)`` verify); rows whose payload fails to decode are
-    dropped (they cannot be perceptually compared).
-
-    Scale shape: one Arrow-batched mapInPandas pass, one long per image
-    out — decode cost is the operator; everything after is integer ops.
-    """
-    hs = int(hash_size)
-    dec = decoder
-
-    def run(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            ids, hashes = [], []
-            for mid, content, fmt in zip(
-                pdf["media_id"], pdf["content"], pdf["format"]
-            ):
-                if content is None:
-                    continue
-                try:
-                    w, h, ch, px = dec(bytes(content), fmt)
-                except Exception:
-                    continue  # undecodable payloads cannot be compared
-                img = np.frombuffer(px, dtype=np.uint8).reshape(h, w, ch)
-                if ch >= 3:
-                    gray = (
-                        0.299 * img[..., 0]
-                        + 0.587 * img[..., 1]
-                        + 0.114 * img[..., 2]
-                    )
-                else:
-                    gray = img[..., 0].astype(np.float64)
-                # box-downscale by cell averaging (area interpolation)
-                ys = (np.arange(hs + 1) * h) // hs
-                xs = (np.arange(hs + 1) * w) // hs
-                cells = np.empty((hs, hs))
-                for i in range(hs):
-                    for j in range(hs):
-                        cells[i, j] = gray[
-                            ys[i] : max(ys[i + 1], ys[i] + 1),
-                            xs[j] : max(xs[j + 1], xs[j] + 1),
-                        ].mean()
-                bits = (cells >= cells.mean()).flatten()
-                val = 0
-                for k, b in enumerate(bits):
-                    if b:
-                        val |= 1 << k
-                if val >= 1 << 63:  # reinterpret as signed 64-bit long
-                    val -= 1 << 64
-                ids.append(mid)
-                hashes.append(val)
-            yield pd.DataFrame({"media_id": ids, "ahash": hashes})
-
-    from pyspark.sql.types import StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("media_id", LongType(), False),
-            StructField("ahash", LongType(), False),
-        ]
-    )
-    return media.where(F.col("kind") == "image").mapInPandas(run, schema=schema)
 
 
 # ---------------------------------------------------------------------------

@@ -33,13 +33,6 @@ def sample_bucket(id_col: Column | str, seed: str = SAMPLE_SEED) -> Column:
     return F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % BUCKETS
 
 
-def hash_sample(
-    df: DataFrame, id_col: str = "doc_id", rate: float = 0.1, seed: str = SAMPLE_SEED
-) -> DataFrame:
-    """Deterministic Bernoulli sample: keep ~rate of rows, stably."""
-    return df.where(sample_bucket(id_col, seed) < int(round(rate * BUCKETS)))
-
-
 def stratified_sample(
     df: DataFrame,
     rates: dict[str, float],

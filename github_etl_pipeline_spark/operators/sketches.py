@@ -13,9 +13,8 @@ Determinism: hashes are md5-derived (functions/hashing.py) and every
 output is an INTEGER (counters, bucket ids, registers), so the DuckDB
 oracles reproduce results bit-for-bit — unlike engine-native
 approx_count_distinct / stat.countMinSketch whose internals differ per
-engine. The float-valued HLL *estimate* is intentionally computed
-driver-side from the 64-register table (``hll_estimate``), keeping the
-registered query outputs exact integers.
+engine. The float-valued HLL *estimate* is left to the consumer of the
+64-register table, keeping the registered query outputs exact integers.
 """
 
 from __future__ import annotations
@@ -159,23 +158,6 @@ def hll_registers(
     )
 
 
-def hll_estimate(registers: dict[int, int], buckets: int = HLL_BUCKETS) -> float:
-    """Driver-side HLL cardinality estimate from a collected register
-    table (missing buckets count as register 0). Standard bias-corrected
-    harmonic mean with the small-range linear-counting correction —
-    float math stays OUT of the distributed/oracle-checked path."""
-    import math
-
-    m = buckets
-    regs = [registers.get(b, 0) for b in range(m)]
-    alpha = {16: 0.673, 32: 0.697, 64: 0.709}.get(m, 0.7213 / (1 + 1.079 / m))
-    raw = alpha * m * m / sum(2.0 ** -r for r in regs)
-    zeros = regs.count(0)
-    if raw <= 2.5 * m and zeros:
-        return m * math.log(m / zeros)
-    return raw
-
-
 def kmv_sketch(
     df: DataFrame, key_col: str, group_col: str, k: int = KMV_K
 ) -> DataFrame:
@@ -317,8 +299,7 @@ def quantile_sketch(
 # historical corpus WITHOUT joining the corpus — the 100-TB ingest
 # pattern where the history is represented by a constant-per-key digest
 # (~2 bytes/key at the default sizing) instead of 100 TB of content
-# hashes. Complements dedup_against_index (MinHash NEAR-dup vs index)
-# with the exact-hash fast path.
+# hashes.
 # ---------------------------------------------------------------------------
 BLOOM_HASHES = 4  # bit positions per key: the 4 disjoint 8-hex md5 windows
 
@@ -695,35 +676,3 @@ def cms_heavy_hitters(
         .agg(F.sum("_w").alias("cnt"))
         .where(F.col("cnt") >= tau)
     )
-
-
-def cms_join_size(
-    a: DataFrame,
-    a_key: str,
-    b: DataFrame,
-    b_key: str,
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
-) -> DataFrame:
-    """Equi-join cardinality estimate from two count-min sketches (the
-    AMS/Count-Min inner-product estimator, Cormode & Muthukrishnan §4.2):
-    |A ⋈ B| <= est = min over rows of Σ_bucket cntA[b]·cntB[b], because
-    every true match lands in the same bucket on every row while
-    collisions only ADD mass — the estimate NEVER undercounts, making it
-    a safe admission gate (e.g. refuse or re-plan a join whose estimated
-    output explodes) computed WITHOUT running the join.
-
-    Scale shape: one constant-size sketch aggregate per side (map-side
-    combined), then a (row, bucket) equi-join of two <= depth*width-row
-    relations and a depth-row min — cost independent of either input's
-    size beyond the two scans. One row out: (est_join_rows).
-    """
-    sa = cms_sketch(a, a_key, depth, width)
-    sb = cms_sketch(b, b_key, depth, width)
-    dots = (
-        sa.withColumnRenamed("cnt", "ca")
-        .join(sb.withColumnRenamed("cnt", "cb"), ["row", "bucket"])
-        .groupBy("row")
-        .agg(F.sum(F.col("ca") * F.col("cb")).alias("dot"))
-    )
-    return dots.agg(F.min("dot").alias("est_join_rows"))

@@ -265,31 +265,10 @@ def let_(value: Column, body) -> Column:
     return F.transform(F.array(value), body)[0]
 
 
-def repetition_signals(col: Column | str) -> dict[str, Column]:
-    """The per-document repetition measures as pure column expressions
-    over ONE tokenization: total word count, top-word fraction
-    (via ``max_multiplicity``), duplicated-bigram fraction. Usable
-    inline by any scan — no aggregation, no join, no shuffle."""
-    w = words_lower(col)
-    n = F.size(w)
-    bg = _bigrams_of(w)
-    nbg, ndbg = F.size(bg), F.size(F.array_distinct(bg))
-    return {
-        "n_words": F.when(n > 0, n).otherwise(F.lit(0)).cast("long"),
-        "top_word_frac": F.round(
-            F.when(n > 0, max_multiplicity(w) / n).otherwise(F.lit(0.0)), 6
-        ),
-        "dup_bigram_frac": F.round(
-            F.when(nbg > 0, F.lit(1.0) - ndbg.cast("double") / nbg).otherwise(
-                F.lit(0.0)
-            ),
-            6,
-        ),
-    }
-
-
 def repetition_struct(col: Column | str) -> Column:
-    """``repetition_signals`` as ONE struct column with the word array
+    """The per-document repetition measures — total word count, top-word
+    fraction (via ``max_multiplicity``), duplicated-bigram fraction — as
+    ONE struct column with the word array
     let-bound (see ``let_``): the WORD_RE extraction runs exactly once
     per row no matter how many signals the caller reads. Select the
     struct as a single column and read its fields in an outer projection

@@ -1112,7 +1112,7 @@ SELECT doc_id AS media_id,
        CAST(list_sum(list_transform(ws, x -> x * x)) AS BIGINT) AS energy
 FROM win
 """,
-    doc="audio analysis windows via mapInPandas (Arrow-batched): per-window exact integer features (sum_abs/peak/energy) over the deterministic fake decode; the REAL WAV decoder runs through the same seam in tests/test_wav_decode.py",
+    doc="audio analysis windows via mapInPandas (Arrow-batched): per-window exact integer features (sum_abs/peak/energy) over the deterministic fake decode",
 )
 def audio_features_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from github_etl_pipeline_spark.operators.multimodal import audio_features
@@ -2635,7 +2635,7 @@ SELECT bucket,
        MAX(CASE WHEN rest = 0 THEN 27 ELSE 27 - length(bin(rest)) END) AS register
 FROM r GROUP BY bucket
 """,
-    doc="HyperLogLog register table (64 buckets, md5-derived): constant-size distinct-count summary via one MAX-combined aggregate; the float estimate stays driver-side (hll_estimate) so the query output is exact integers",
+    doc="HyperLogLog register table (64 buckets, md5-derived): constant-size distinct-count summary via one MAX-combined aggregate; the float estimate is left to the consumer of the registers so the query output is exact integers",
 )
 def hll_registers_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from github_etl_pipeline_spark.operators.sketches import hll_registers
@@ -3374,9 +3374,8 @@ def kmv_source_overlap_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# BPE: the training loop's core relation (adjacent symbol-pair counts over
-# the word-frequency table) as a hash-checked query; the iterative argmax
-# loop itself is reference-checked in tests/test_bpe.py (not SQL-expressible)
+# BPE: the training step's core relation (adjacent symbol-pair counts over
+# the word-frequency table) as a hash-checked query
 # ---------------------------------------------------------------------------
 @register(
     "bpe_top_pairs_documents",
@@ -3543,7 +3542,7 @@ SELECT doc_id, CAST(MIN(hit) AS BIGINT) AS maybe_dup FROM hits GROUP BY doc_id
 @register(
     "bloom_dedup_documents",
     oracle=_bloom_oracle(),
-    doc="Bloom-digest exact dedup of a new batch against corpus history WITHOUT joining the history (the 100-TB ingest fast path, complementing dedup_against_index's MinHash near-dup): history (even doc_ids) OR-folds 4 md5-window bit positions per content hash into a <= n_words digest in ONE map-side-combined aggregate (shuffle carries partial digests, never keys); the probe batch (odd doc_ids) BROADCAST-joins the digest and min-folds per id — maybe_dup=1 iff every position is set. NO false negatives by construction (property-tested); false positives are md5-deterministic at the documented ~0.24% (adaptive sizing: 2 bytes per historical key via GREATEST(2048, ceil(n/2)) words, the cells_for_corpus device — a FIXED digest saturates at the 100x tier); oracle mirrors windows, modulo, packing, and probe bit-for-bit",
+    doc="Bloom-digest exact dedup of a new batch against corpus history WITHOUT joining the history (the 100-TB ingest fast path): history (even doc_ids) OR-folds 4 md5-window bit positions per content hash into a <= n_words digest in ONE map-side-combined aggregate (shuffle carries partial digests, never keys); the probe batch (odd doc_ids) BROADCAST-joins the digest and min-folds per id — maybe_dup=1 iff every position is set. NO false negatives by construction (property-tested); false positives are md5-deterministic at the documented ~0.24% (adaptive sizing: 2 bytes per historical key via GREATEST(2048, ceil(n/2)) words, the cells_for_corpus device — a FIXED digest saturates at the 100x tier); oracle mirrors windows, modulo, packing, and probe bit-for-bit",
 )
 def bloom_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from github_etl_pipeline_spark.operators.sketches import (

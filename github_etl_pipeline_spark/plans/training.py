@@ -114,7 +114,7 @@ SELECT event_id, {zorder_sql(['ub', 'vb'], _ZBITS)} AS zkey
 FROM b
 """,
     doc="z-order (Morton) layout key interleaving user-bucket and value-bucket "
-    "bits (functions/zorder.py) — the sort key sinks/compact.py uses for "
+    "bits (functions/zorder.py) — a sort key for a sorted parquet write's "
     "multi-column row-group skipping; generated shift/and/or SQL runs "
     "IDENTICALLY on both engines (no UDF, codegen-friendly)",
 )

@@ -1,21 +1,1 @@
-from github_etl_pipeline_spark.sinks.upsert import (
-    merge_into,
-    read_store,
-    upsert_parquet,
-    write_consolidated_json,
-)
-from github_etl_pipeline_spark.sinks.reports import (
-    save_summary_report,
-    generate_index_file,
-    save_as_csv,
-)
-
-__all__ = [
-    "merge_into",
-    "read_store",
-    "upsert_parquet",
-    "write_consolidated_json",
-    "save_summary_report",
-    "generate_index_file",
-    "save_as_csv",
-]
+"""Output writers; import each from its submodule."""

@@ -2,11 +2,8 @@
 whole is written complete under ``<target>._staging`` and promoted by
 renames only. A writer does::
 
-    staging = begin(target)        # recover, then an empty staging path
-    if applied(target, batch_id):  # epoch-stamped writers only
-        return
+    staging = begin(target)   # recover, then an empty staging path
     ...write the whole new directory under staging...
-    stamp(staging, batch_id)       # epoch-stamped writers only
     promote(target)
 
 ``promote`` moves the live target aside to ``<target>._old``, moves
@@ -15,19 +12,12 @@ instant, and a writer that fails before ``promote`` leaves the target as
 it was. ``begin`` recovers each crash point before the writer reads the
 target: it renames a stranded ``._old`` with no live target back, and
 deletes a stale ``._old`` next to a live target and a stale staging dir.
-
-A ``foreachBatch`` sink may re-run a micro-batch, and merging it twice
-double-counts. The epoch id in ``<dir>/_last_batch`` (a temp file, then
-``os.replace``) makes the replay a no-op; stamped into staging, it moves
-with the data in the same rename. Epoch ids mean something only against
-the checkpoint that produced them: a fresh checkpoint needs a fresh
-target. Renames recover a crashed writer but do not isolate an in-flight
-read, so run one writer per target at a time.
+Renames recover a crashed writer but do not isolate an in-flight read,
+so run one writer per target at a time.
 """
 
 from __future__ import annotations
 
-import os
 import shutil
 from pathlib import Path
 
@@ -52,19 +42,6 @@ def begin(target: str | Path) -> Path:
     if staging.exists():
         shutil.rmtree(staging)
     return staging
-
-
-def applied(target: str | Path, batch_id: int) -> bool:
-    """Whether the committed ``target`` already holds epoch ``batch_id``."""
-    marker = Path(target) / "_last_batch"
-    return marker.exists() and batch_id <= int(marker.read_text())
-
-
-def stamp(directory: str | Path, batch_id: int) -> None:
-    """Record epoch ``batch_id`` as applied to ``directory``."""
-    tmp = Path(directory) / "_last_batch.tmp"
-    tmp.write_text(str(batch_id))
-    os.replace(tmp, Path(directory) / "_last_batch")
 
 
 def promote(target: str | Path) -> None:

@@ -11,11 +11,9 @@ equivalents:
     overwrite) — an incremental micro-batch costs O(touched buckets),
     not O(entire history), so the maintained-store loop
     (streaming/incremental.py) stays flat over time instead of
-    degrading quadratically. (With Delta available, ``merge_into``
-    upgrades to a literal transactional ``MERGE INTO``; plain parquet
-    keeps the repo dependency-free. Per-bucket overwrite is
-    last-writer-wins, not ACID — the reference's read-modify-write
-    JSON has exactly the same property.)
+    degrading quadratically. (Per-bucket overwrite is last-writer-wins,
+    not ACID — the reference's read-modify-write JSON has exactly the
+    same property.)
   * ``write_consolidated_json`` — format-parity path producing the
     reference's exact nested JSON document (only sensible at
     fleet-rollup cardinality, i.e. hundreds-thousands of pools; the
@@ -46,80 +44,6 @@ DEFAULT_STORE_BUCKETS = 64
 _BUCKET_COL = "_bucket"
 
 
-def merge_into(
-    spark: SparkSession,
-    target: str | Path,
-    updates: DataFrame,
-    on: str = "source_file",
-    backend: str = "auto",
-) -> None:
-    """MERGE-shaped upsert boundary (reference S8, etl/load.py:16-82):
-
-        MERGE INTO target USING updates ON target.<on> = updates.<on>
-        WHEN MATCHED THEN UPDATE SET *    WHEN NOT MATCHED THEN INSERT *
-
-    Backends:
-      * ``delta`` — Delta Lake's literal transactional ``MERGE INTO``.
-        A missing target is CREATED as a Delta table (so a pipeline
-        started on Delta is ACID from its first write, not its second).
-      * ``parquet`` — the dependency-free emulation (``upsert_parquet``:
-        union + keep-newest-per-key + atomic snapshot swap). LAST-WRITER-
-        WINS, not ACID under concurrent writers — the reference's
-        read-modify-write JSON has exactly the same property.
-      * ``auto`` (default) — Delta only when delta-spark is importable
-        AND the target already IS a Delta table; everything else
-        (absent target included) takes the parquet path. Auto never
-        CREATES a Delta table: callers in auto mode read their store
-        back with ``read_store``/``spark.read.parquet``, and a
-        Delta-created store would show tombstoned superseded files to a
-        plain parquet reader after the next merge. Creating Delta is an
-        explicit ``backend="delta"`` decision.
-
-    ``backend="delta"`` raises ImportError when delta-spark is missing,
-    so a deployment that REQUIRES transactional semantics fails loudly
-    instead of degrading to last-writer-wins.
-
-    Test coverage: every branch of THIS function (including the exact
-    MERGE call chain) is asserted in every environment via a recording
-    stand-in for ``delta.tables`` (tests/test_sinks.py); the end-to-end
-    transactional behavior additionally runs wherever delta-spark is
-    importable. The parquet emulation is the golden-tested store."""
-    if backend not in ("auto", "delta", "parquet"):
-        raise ValueError(f"merge_into: unknown backend {backend!r}")
-    if backend != "parquet":
-        try:
-            from delta.tables import DeltaTable  # optional backend
-        except ImportError:
-            if backend == "delta":
-                raise
-        else:
-            t = str(target)
-            if DeltaTable.isDeltaTable(spark, t):
-                (
-                    DeltaTable.forPath(spark, t)
-                    .alias("t")
-                    .merge(updates.alias("u"), f"t.{on} = u.{on}")
-                    .whenMatchedUpdateAll()
-                    .whenNotMatchedInsertAll()
-                    .execute()
-                )
-                return
-            if Path(target).exists():
-                if backend == "delta":
-                    raise ValueError(
-                        f"merge_into(backend='delta'): {t} exists but is not a "
-                        "Delta table — refusing to overwrite a parquet table's "
-                        "format; migrate it explicitly (CONVERT TO DELTA) first"
-                    )
-                # auto + existing plain-parquet table -> emulation below
-            elif backend == "delta":
-                updates.write.format("delta").mode("error").save(t)
-                return
-            # auto + absent target -> plain parquet below (Delta
-            # creation is reserved for an explicit backend='delta')
-    upsert_parquet(spark, updates, target, key=on)
-
-
 def _is_bucketed_store(table_path: Path) -> bool:
     """A store written by this module has ``_bucket=K`` partition dirs."""
     return any(
@@ -141,8 +65,6 @@ def upsert_parquet(
     """Upsert ``updates`` into the parquet table at ``table_path`` keyed by
     ``key``: new rows win over existing rows with the same key; unmatched
     existing rows are preserved (reference etl/load.py:45-61 semantics).
-    Prefer the ``merge_into`` entry point, which upgrades to a real Delta
-    MERGE when available.
 
     Scale path: the store is laid out as ``_bucket=pmod(xxhash64(key), N)``
     directory partitions. A merge reads only the buckets whose keys appear

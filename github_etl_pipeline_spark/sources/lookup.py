@@ -154,7 +154,7 @@ def prepare_dim(dim: DataFrame, max_rows: int = 100_000) -> DataFrame:
       ``tmp['Bet'].iloc[0]``);
     * ``game_ids`` — ALL Game_ids for the key, in source order;
     * ``dim_pool_id`` — the first row's raw Pool_id, for the fact-side
-      reference-match gate (functions/keys.py ``reference_match_expr``);
+      reference-match gate (functions/keys.py ``reference_match_sql``);
     * ``_n_spellings`` — distinct non-NULL Pool_ids under the key (J1
       edge, SURVEY §4: two spellings that differ only in zero padding
       would make the reference's exact-match-first fallback diverge from

@@ -1,3 +1,1 @@
-from github_etl_pipeline_spark.streaming.incremental import run_incremental
-
-__all__ = ["run_incremental"]
+"""Incremental and streaming runners; import each from its submodule."""

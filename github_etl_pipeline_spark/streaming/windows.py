@@ -1,4 +1,4 @@
-"""Streaming windowed aggregation + custom stateful processing.
+"""Streaming windowed aggregation and stream-stream joins.
 
 The reference has no in-engine streaming (SURVEY §2.6) — its CI loop is
 micro-batch incremental, covered by streaming/incremental.py. These
@@ -11,29 +11,15 @@ pipeline needs on event streams:
     shape. Works identically on a batch DataFrame (Spark's unified
     semantics) — tests exercise both, so correctness is checkable
     without wall-clock waits.
-  * ``sessionize_native`` — THE DEFAULT sessionizer: gap-based session
-    windows via Spark's built-in ``F.session_window`` (JVM-side state
-    merge, batch/streaming unified, no Python in the loop).
-  * ``sessionize_stateful`` — the custom-state ESCAPE HATCH
-    (``applyInPandasWithState``), kept for semantics the native
-    operator cannot express (e.g. per-session early emission rules,
-    value-dependent gaps). Python state in a streaming hot path — use
-    only when the native operator genuinely can't express the logic.
-    State = (last_ts, session_start, n_events) per user; a session is
-    emitted when the inactivity gap passes or the group times out.
+  * ``interval_join_streams`` — a watermarked stream-stream interval
+    join whose state the event-time range bounds.
+
+Gap-based sessions are the registry's ``sessionize_events`` query (a
+batch window plan).
 
 Scale notes: watermark bounds state size (late rows beyond it are
 dropped); state-store shuffles are keyed by user — skewed users would
 need salting at the keyBy (same lever as batch).
-
-Spark 4's ``transformWithStateInPandas`` (the arbitrary-state successor
-with ValueState/ListState/MapState + timers) is the natural upgrade for
-these operators, but its driver<->worker state protocol needs the
-``google.protobuf`` runtime, which this environment lacks (verified:
-the TWS driver worker crashes on ``ImportError: cannot import name
-'descriptor'``). ``applyInPandasWithState`` has no such dependency and
-expresses the same per-key state machines, so it is the supported path
-here; the operators' semantics port 1:1 when TWS is available.
 """
 
 from __future__ import annotations
@@ -41,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from github_etl_pipeline_spark.functions.epoch import event_micros, event_time
+from github_etl_pipeline_spark.functions.epoch import event_time
 
 # event-time column's physical type varies across driver testdata
 # regenerations (BIGINT nanos vs TIMESTAMP_NTZ micros) — functions/epoch.py
@@ -84,134 +70,6 @@ def windowed_event_counts(
         "event_type",
         "cnt",
         "sum_value",
-    )
-
-
-SESSION_STATE_SCHEMA = "last_us long, start_us long, n long"
-SESSION_OUTPUT_SCHEMA = "user_id long, session_start_us long, n_events long, duration_ms long"
-
-
-def sessionize_native(
-    events: DataFrame,
-    gap_ms: int = 30 * 60 * 1000,
-    time_col: str = "ts",
-    watermark_delay: str = "0 seconds",
-) -> DataFrame:
-    """Gap-based sessions via the built-in ``F.session_window`` — the
-    DEFAULT sessionizer (same output schema as ``sessionize_stateful``).
-
-    Prefer this over ``sessionize_stateful`` everywhere the semantics
-    fit: session merging runs JVM-side inside the streaming state store
-    (no Arrow transfer, no Python workers), it works identically on
-    batch and streaming inputs, and in streaming append mode a session
-    emits once the watermark passes its close — the same emission rule
-    the stateful operator implements by hand (equality on a real stream
-    is tested in tests/test_streaming_windows.py).
-
-    Boundary semantics: native sessions are half-open — an event landing
-    EXACTLY at last_event + gap starts a NEW session, where the stateful
-    sessionizer's ``> gap`` check keeps it in the old one. Identical for
-    every other input; microsecond-resolution data hits the boundary
-    with probability ~0 (the equivalence test asserts the precondition).
-
-    Output: (user_id, session_start_us, n_events, duration_ms), with
-    ``duration_ms = last_event - first_event`` (NOT window end, which
-    native semantics place at last + gap).
-    """
-    et = _event_time(events, time_col).alias("_et")
-    df = events.select("user_id", event_micros(events, time_col).alias("_us"), et)
-    if df.isStreaming:
-        df = df.withWatermark("_et", watermark_delay)
-    s = df.groupBy(
-        "user_id", F.session_window("_et", f"{gap_ms} milliseconds").alias("_w")
-    ).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.min("_us").alias("session_start_us"),
-        F.max("_us").alias("_last_us"),
-    )
-    return s.select(
-        "user_id",
-        "session_start_us",
-        "n_events",
-        F.expr("(_last_us - session_start_us) div 1000").alias("duration_ms"),
-    )
-
-
-def sessionize_stateful(
-    events: DataFrame,
-    gap_ms: int = 30 * 60 * 1000,
-    time_col: str = "ts",
-    watermark_delay: str = "0 seconds",
-) -> DataFrame:
-    """Gap-based sessions via applyInPandasWithState — the CUSTOM-STATE
-    ESCAPE HATCH, not the default. Use :func:`sessionize_native`
-    (``F.session_window``, JVM-side, no Python in the streaming hot
-    path) unless the session logic genuinely needs arbitrary per-key
-    state (early emission, value-dependent gaps, cross-session
-    carryover). Semantics match plans/relational.py::sessionize_events
-    (batch) — gap close on ``> gap`` (see sessionize_native's boundary
-    note).
-
-    Event-time timeouts: a session closes when the WATERMARK passes its
-    last event + gap — deterministic under Trigger.AvailableNow (a
-    processing-time timeout would re-arm 'cleaning up state' batches
-    forever and never terminate). A user's final session stays open (and
-    unreported) until later data advances the watermark past it.
-
-    Streaming-only operator: on a batch DataFrame use the window-based
-    ``sessionize_events`` plan instead. Self-contained closure (see
-    multimodal.extract_features for why).
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    gap_us = gap_ms * 1000
-
-    def fn(key, pdfs, state):
-        import pandas as pd
-
-        (user_id,) = key
-        sessions = []
-        if state.exists:
-            last_us, start_us, n = state.get
-        else:
-            last_us, start_us, n = None, None, 0
-
-        if state.hasTimedOut:
-            if n:
-                sessions.append((user_id, start_us, n, (last_us - start_us) // 1000))
-            state.remove()
-        else:
-            ts_all = []
-            for pdf in pdfs:
-                ts_all.extend(pdf["_us"].tolist())
-            for t in sorted(ts_all):
-                if last_us is not None and t - last_us > gap_us:
-                    sessions.append((user_id, start_us, n, (last_us - start_us) // 1000))
-                    start_us, n = t, 0
-                if start_us is None:
-                    start_us = t
-                n += 1
-                last_us = t
-            state.update((last_us, start_us, n))
-            # close when the watermark passes last event + gap
-            state.setTimeoutTimestamp(last_us // 1000 + gap_ms)
-        yield pd.DataFrame(
-            sessions,
-            columns=["user_id", "session_start_us", "n_events", "duration_ms"],
-        )
-
-    et = _event_time(events, time_col).alias("_et")
-    return (
-        events.select("user_id", event_micros(events, time_col).alias("_us"), et)
-        .withWatermark("_et", watermark_delay)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=SESSION_OUTPUT_SCHEMA,
-            stateStructType=SESSION_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
     )
 
 
@@ -271,24 +129,4 @@ def interval_join_streams(
         lus.alias("left_us"),
         rus.alias("right_us"),
         ((rus - lus) / F.lit(1000)).cast("long").alias("delay_ms"),
-    )
-
-
-def dedup_stream(
-    events: DataFrame,
-    key_cols: tuple[str, ...] = ("user_id", "event_type"),
-    watermark: str = "2 hours",
-    time_col: str = "ts",
-) -> DataFrame:
-    """Streaming deduplication: keep the first event per key within the
-    watermark horizon (``dropDuplicatesWithinWatermark``). State is
-    BOUNDED — keys older than the watermark are evicted, so unlike plain
-    ``dropDuplicates`` on a stream the state store cannot grow without
-    limit. On a batch DataFrame the same call degrades to exact
-    dropDuplicates (Spark's unified semantics), which is what the
-    batch-equality test exercises; the dedup-pipeline analog over
-    documents is ``operators.dedup.exact_dedup``."""
-    e = events.withColumn("_event_time", _event_time(events, time_col))
-    return e.withWatermark("_event_time", watermark).dropDuplicatesWithinWatermark(
-        list(key_cols)
     )

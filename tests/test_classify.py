@@ -3,9 +3,9 @@
 from pyspark.sql import functions as F
 
 from github_etl_pipeline_spark.operators.classify import (
-    is_flat_expr,
-    max_multiplier_expr,
-    tag_expr,
+    is_flat_sql,
+    max_multiplier_sql,
+    tag_sql,
 )
 
 CASES = [
@@ -27,9 +27,9 @@ def test_classify_truth_table(spark):
     df = spark.createDataFrame([(c[0],) for c in CASES], "pool_type string")
     got = df.select(
         "pool_type",
-        tag_expr("pool_type").alias("tag"),
-        is_flat_expr("pool_type").alias("is_flat"),
-        max_multiplier_expr("pool_type").alias("mm"),
+        F.expr(tag_sql("pool_type")).alias("tag"),
+        F.expr(is_flat_sql("pool_type")).alias("is_flat"),
+        F.expr(max_multiplier_sql("pool_type")).alias("mm"),
     ).collect()
     by_pt = {r.pool_type: r for r in got}
     for pt, tag, flat, mm in CASES:

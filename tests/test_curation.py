@@ -173,40 +173,6 @@ def test_no_cartesian_in_registered_curation_queries(spark):
         assert "BroadcastNestedLoopJoin" not in plan, name
 
 
-def test_resize_images_deterministic(spark):
-    import hashlib
-
-    from github_etl_pipeline_spark.operators.multimodal import resize_images
-
-    media = spark.createDataFrame(
-        [(1, "image", "png", b"pixels-one"), (2, "audio", "wav", b"not-an-image")],
-        "media_id long, kind string, format string, content binary",
-    )
-    got = resize_images(media, 64, 48).collect()
-    assert [r.media_id for r in got] == [1]  # non-images filtered out
-    expect = hashlib.md5(b"pixels-one" + b":64x48").digest()
-    assert bytes(got[0].content) == expect
-    assert (got[0].width, got[0].height) == (64, 48)
-
-
-def test_audio_window_plan_clamps_tail(spark):
-    from github_etl_pipeline_spark.operators.multimodal import audio_window_plan
-
-    media = spark.createDataFrame(
-        [(1, "audio", "wav", 2300), (2, "audio", "wav", 0), (3, "video", "mp4", 5000)],
-        "media_id long, kind string, format string, duration_ms long",
-    )
-    got = sorted(
-        audio_window_plan(media, window_ms=1000, hop_ms=500).collect(),
-        key=lambda r: r.window_start_ms,
-    )
-    # duration 2300, hop 500 -> starts 0,500,1000,1500,2000; ends clamped at 2300
-    assert [r.media_id for r in got] == [1] * 5
-    assert [(r.window_start_ms, r.window_end_ms) for r in got] == [
-        (0, 1000), (500, 1500), (1000, 2000), (1500, 2300), (2000, 2300),
-    ]
-
-
 def test_boilerplate_ngrams_planted(spark):
     from github_etl_pipeline_spark.operators.curation import boilerplate_ngrams
 

@@ -53,12 +53,12 @@ def test_chunking_covers_every_token_exactly(spark, counts):
 def test_hash_sample_rate_monotone_superset(spark, rates):
     """For any two rates r1 <= r2, the r1 sample is a subset of the r2
     sample (stable buckets — incremental mixture rebalancing)."""
-    from github_etl_pipeline_spark.operators.sampling import hash_sample
+    from github_etl_pipeline_spark.operators.sampling import stratified_sample
 
     r1, r2 = min(rates), max(rates)
     df = spark.range(500).selectExpr("id AS doc_id")
-    small = {r.doc_id for r in hash_sample(df, rate=r1).collect()}
-    big = {r.doc_id for r in hash_sample(df, rate=r2).collect()}
+    small = {r.doc_id for r in stratified_sample(df, {}, default_rate=r1).collect()}
+    big = {r.doc_id for r in stratified_sample(df, {}, default_rate=r2).collect()}
     assert small <= big
 
 

@@ -1,11 +1,12 @@
 """M6: README-era extended statistics vs the worked example
-(README.md:53-105 for Pool_0201_395.pol — values verified in SURVEY §5)."""
+(README.md:53-105 for Pool_0201_395.pol — values verified in SURVEY §5),
+and over a hand-written corpus whose values are worked out in the test."""
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from github_etl_pipeline_spark.operators.stats import pool_extended_stats
+from github_etl_pipeline_spark.operators.stats import BUCKET_EDGES, pool_extended_stats
 from github_etl_pipeline_spark.sources.pol import parse_pol_lines, read_pol_lines
 
 
@@ -66,6 +67,139 @@ def test_first_last_k_match_file(stats_row):
     expect_last = [int(v) for v in lines[-10:]]
     assert list(stats_row.first_k) == expect_first
     assert list(stats_row.last_k) == expect_last
+
+
+# ---------------------------------------------------------------------------
+# The same surface over a hand-written corpus, with every expected value
+# worked out in plain Python below (no reference snapshot needed)
+# ---------------------------------------------------------------------------
+SMALL_POOL = [
+    "0 TB1",
+    "500 TB1",        # on the first bucket edge
+    "501 TB2",
+    "1000 TB2 0",     # integer third token: added (0)
+    "1001 TF1",
+    "2000 TF1",
+    "2001 TB3",
+    "5000 TB3",
+    "5001 TB3",
+    "10000 TF2",
+    "10001 TF2",
+    "400 TB1 100",    # integer third token: added -> 500
+    "700 TB2 x",      # non-integer third token: ignored
+    "",               # blank: dropped
+    "abc TB1",        # non-integer value: dropped
+    "   ",            # blank: dropped
+    "1500",           # valid, no type code
+    "  250   TB1  ",  # surrounding and repeated spaces
+]
+# longer than 2k lines, with one blank and one invalid line inside
+LONG_POOL = [f"{(i * 37) % 3000 + 1} TB{i % 3 + 1}" for i in range(2500)]
+LONG_POOL[1200:1200] = ["", "x TB1"]
+
+
+def _parse(line):
+    toks = line.split()
+    try:
+        value = int(toks[0])
+    except (IndexError, ValueError):
+        return None
+    if len(toks) > 2 and toks[2].lstrip("-").isdigit():
+        value += int(toks[2])
+    return value, (toks[1] if len(toks) > 1 else None)
+
+
+def _round(x, digits, mode):
+    from decimal import ROUND_HALF_EVEN, ROUND_HALF_UP, Decimal
+
+    q = Decimal(1).scaleb(-digits)
+    rnd = ROUND_HALF_EVEN if mode == "bankers" else ROUND_HALF_UP
+    return float(Decimal(repr(x)).quantize(q, rounding=rnd))
+
+
+def _bucket(v):
+    lo = 0
+    for hi in BUCKET_EDGES:
+        if lo <= v <= hi:
+            return f"{lo}-{hi}"
+        lo = hi + 1
+    return f"{BUCKET_EDGES[-1] + 1}+"
+
+
+def _expected(lines, k=10):
+    import statistics
+    from collections import Counter
+
+    rows = [r for r in map(_parse, lines) if r is not None]
+    vals = [v for v, _ in rows]
+    typed = [(v, t) for v, t in rows if t is not None]
+    counts = Counter(t for _, t in typed)
+    by_type = sorted(counts, key=lambda t: (counts[t], t), reverse=True)
+    buckets = Counter(map(_bucket, vals))
+    return {
+        "summary": (
+            len(vals),
+            sum(vals),
+            min(vals),
+            max(vals),
+            _round(sum(vals) / len(vals), 2, "bankers"),
+            float(statistics.median(vals)),
+            _round(statistics.stdev(vals), 2, "bankers"),
+            len(counts),
+        ),
+        "type_distribution": dict(counts),
+        "type_statistics": [
+            (
+                t,
+                counts[t],
+                sum(v for v, tt in typed if tt == t),
+                min(v for v, tt in typed if tt == t),
+                max(v for v, tt in typed if tt == t),
+                _round(sum(v for v, tt in typed if tt == t) / counts[t], 2, "bankers"),
+                _round(counts[t] * 100.0 / len(typed), 2, "half_up"),
+            )
+            for t in by_type
+        ],
+        "value_distribution": [
+            (b, buckets[b], _round(buckets[b] * 100.0 / len(vals), 2, "half_up"))
+            for b in sorted(buckets)
+        ],
+        "first_k": vals[:k],
+        "last_k": vals[-k:],
+    }
+
+
+def test_extended_stats_hand_worked_corpus(spark, tmp_path):
+    corpus = {"Pool_0201_395.pol": SMALL_POOL, "Pool_0300_941.pol": LONG_POOL}
+    for name, lines in corpus.items():
+        (tmp_path / name).write_text("\n".join(lines) + "\n")
+    lines = read_pol_lines(spark, str(tmp_path))
+    got = {
+        r.source_file: r
+        for r in pool_extended_stats(parse_pol_lines(lines, with_order=True)).collect()
+    }
+    assert set(got) == set(corpus)
+    for name, lines in corpus.items():
+        r, want = got[name], _expected(lines)
+        summary = (
+            r.total_records, r.total_sum, r.min_value, r.max_value,
+            r.avg_value, r.median_value, r.std_value, r.unique_types,
+        )
+        assert summary == want["summary"], name
+        assert dict(r.type_distribution) == want["type_distribution"], name
+        assert [
+            (t.type_code, t["count"], t.total, t.min, t.max, t.avg, t.pct)
+            for t in r.type_statistics
+        ] == want["type_statistics"], name
+        assert [
+            (b.bucket, b["count"], b.pct) for b in r.value_distribution
+        ] == want["value_distribution"], name
+        assert list(r.first_k) == want["first_k"], name
+        assert list(r.last_k) == want["last_k"], name
+    # every bucket edge of the small pool lands in its own bucket
+    assert [b.bucket for b in got["Pool_0201_395.pol"].value_distribution] == [
+        "0-500", "10001+", "1001-2000", "2001-5000", "5001-10000", "501-1000",
+    ]
 
 
 def test_bm25_ranked_retrieval_matches_reference_formula(spark):

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 from github_etl_pipeline_spark.operators import dedup as D
 from github_etl_pipeline_spark.operators import similarity as S
 from github_etl_pipeline_spark.operators.multimodal import (
+    audio_features,
     extract_features,
     fake_decode,
     frame_sample_plan,
@@ -103,19 +104,28 @@ def test_multimodal_plumbing(spark):
     assert [r.frame_ts_ms for r in frames] == [0, 1000, 2000, 3000]
 
 
-def test_decode_image_dispatch():
-    from github_etl_pipeline_spark.operators.multimodal import decode_image
+def test_audio_features_fake_fallback_and_filter(spark):
+    """The deterministic stand-in decode keeps the window plumbing
+    testable; non-audio rows never reach the UDF."""
+    import hashlib
 
-    # PNG routes to the real stdlib decoder, which rejects garbage bytes
-    with pytest.raises(ValueError):
-        decode_image(b"x", "png")
-    # JPEG routes to the in-repo baseline decoder (r5), which rejects a
-    # stream with no SOS
-    with pytest.raises(ValueError):
-        decode_image(b"\xff\xd8\xff\xd9", "jpeg")
-    # codecs with no in-repo decoder still need an injected one
-    with pytest.raises(NotImplementedError):
-        decode_image(b"RIFFxxxxWEBPish", "webp")
+    rows = [
+        (1, "audio", "bin", bytearray(b"payload"), None, None, None),
+        (2, "image", "png", bytearray(b"img"), None, None, None),
+    ]
+    media = spark.createDataFrame(
+        rows,
+        "media_id long, kind string, format string, content binary, "
+        "width int, height int, duration_ms long",
+    )
+    out = audio_features(media, window_ms=4, hop_ms=4).collect()
+    assert {r.media_id for r in out} == {1}
+    fake = [b - 128 for b in hashlib.md5(b"payload").digest()[:8]]
+    # 8 samples at 1 kHz = 8 ms -> windows [0,4) and [4,8)
+    assert [r.n_samples for r in sorted(out, key=lambda r: r.window_start_ms)] == [4, 4]
+    assert sorted(r.sum_abs for r in out) == sorted(
+        [sum(abs(s) for s in fake[:4]), sum(abs(s) for s in fake[4:])]
+    )
 
 
 def test_ann_ivf_recall(spark):
@@ -496,16 +506,22 @@ def test_pii_profile_planted(spark):
 
 
 def test_hash_sample_deterministic_and_calibrated(spark):
-    from github_etl_pipeline_spark.operators.sampling import hash_sample
+    """The md5 bucket coin behind every sampler, through
+    ``stratified_sample``'s default rate (no strata: one rate for all)."""
+    from github_etl_pipeline_spark.operators.sampling import stratified_sample
 
     df = spark.range(100_000).select(F.col("id").alias("doc_id"))
-    a = hash_sample(df, rate=0.1).count()
-    b = hash_sample(df, rate=0.1).count()
+
+    def sample(rate):
+        return stratified_sample(df, {}, default_rate=rate)
+
+    a = sample(0.1).count()
+    b = sample(0.1).count()
     assert a == b  # bit-stable across runs
     assert abs(a - 10_000) < 600  # calibrated within ~6 sigma
     # rate monotonicity: raising the rate keeps a SUPERSET (stable buckets)
-    small = {r.doc_id for r in hash_sample(df, rate=0.05).collect()}
-    big = {r.doc_id for r in hash_sample(df, rate=0.2).collect()}
+    small = {r.doc_id for r in sample(0.05).collect()}
+    big = {r.doc_id for r in sample(0.2).collect()}
     assert small <= big
 
 

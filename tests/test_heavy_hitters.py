@@ -134,32 +134,3 @@ def test_negative_weight_fails_loudly(spark):
     with pytest.raises(Exception, match="negative weight"):
         cms_heavy_hitters(df, "k", 0.1, weight_col="w").collect()
 
-
-# ---------------------------------------------------------------------------
-# CMS inner-product join-size estimation (cms_join_size)
-# ---------------------------------------------------------------------------
-def test_join_size_never_undercounts(spark):
-    import numpy as np
-    from github_etl_pipeline_spark.operators.sketches import cms_join_size
-
-    rng = np.random.default_rng(17)
-    a = spark.createDataFrame(
-        pd.DataFrame({"k": rng.integers(0, 300, size=4_000)})
-    )
-    b = spark.createDataFrame(
-        pd.DataFrame({"j": rng.integers(100, 500, size=6_000)})
-    )
-    exact = a.join(b, a.k == b.j).count()
-    est = cms_join_size(a, "k", b, "j", width=64).collect()[0]["est_join_rows"]
-    assert est >= exact > 0
-
-
-def test_join_size_exact_without_collisions(spark):
-    """With every key in its own bucket (width >> keys), the inner
-    product IS the exact join size."""
-    from github_etl_pipeline_spark.operators.sketches import cms_join_size
-
-    a = spark.createDataFrame(pd.DataFrame({"k": [1, 1, 2, 3]}))
-    b = spark.createDataFrame(pd.DataFrame({"j": [1, 2, 2, 4]}))
-    est = cms_join_size(a, "k", b, "j", width=65_536).collect()[0]
-    assert est["est_join_rows"] == 4  # 2*1 (k=1) + 1*2 (k=2)

@@ -6,12 +6,7 @@ import math
 import pandas as pd
 import pytest
 
-from github_etl_pipeline_spark.operators.itemsets import (
-    basket_items,
-    basket_sizes,
-    frequent_items,
-    frequent_pairs,
-)
+from github_etl_pipeline_spark.operators.itemsets import frequent_pairs
 
 # 6 baskets: x,y co-occur in 3; z is rare (1 basket); duplicates inside a
 # basket must not inflate counts.
@@ -28,16 +23,6 @@ ROWS = [
 @pytest.fixture(scope="module")
 def df(spark):
     return spark.createDataFrame(pd.DataFrame(ROWS, columns=["b", "i"]))
-
-
-def test_frequent_items_prune(spark, df):
-    items = basket_items(df, "b", "i")
-    # n_baskets = 6; min_support .5 -> ceil(3) = 3 baskets
-    got = {
-        r["item"]: r["item_cnt"] for r in frequent_items(items, 0.5).collect()
-    }
-    assert got == {"x": 5, "y": 4}  # z (1), w (1) pruned
-    assert all(r["n_baskets"] == 6 for r in frequent_items(items, 0.5).collect())
 
 
 def test_frequent_pairs_metrics(spark, df):
@@ -89,11 +74,10 @@ def test_exhaustive_parity_small(spark, df):
 def test_max_basket_items_guard(spark):
     rows = [(1, f"i{k}") for k in range(10)] + [(2, "i0"), (2, "i1"), (3, "i0"), (3, "i1")]
     df = spark.createDataFrame(pd.DataFrame(rows, columns=["b", "i"]))
-    items = basket_items(df, "b", "i", max_basket_items=5)
-    assert items.filter("basket = 1").count() == 0  # mega-basket dropped
-    # with basket 1 gone, n_baskets = 2 and (i0,i1) is the only pair
+    # with the 10-item basket 1 dropped, n_baskets = 2 and (i0,i1) is the
+    # only pair
     out = frequent_pairs(df, "b", "i", min_support=0.9, max_basket_items=5).collect()
     assert [(r["item_a"], r["item_b"], r["pair_cnt"]) for r in out] == [("i0", "i1", 2)]
-    sizes = {r["n_items"]: r["n_baskets"] for r in basket_sizes(
-        basket_items(df, "b", "i")).collect()}
-    assert sizes == {10: 1, 2: 2}
+    # without the guard basket 1 counts: 3 baskets, and (i0,i1) is in all 3
+    out = frequent_pairs(df, "b", "i", min_support=0.9).collect()
+    assert [(r["item_a"], r["item_b"], r["pair_cnt"]) for r in out] == [("i0", "i1", 3)]

@@ -53,10 +53,10 @@ def test_dim_ambiguity_detected(spark):
 
 
 def test_reference_match_gate_matches_reference_stages(spark):
-    """The normalized join + reference_match_expr gate must reproduce the
+    """The normalized join + reference_match_sql gate must reproduce the
     reference's asymmetric 3-stage fallback (etl/transform.py:202-211)
     exactly, including its MISSES."""
-    from github_etl_pipeline_spark.functions.keys import reference_match_expr
+    from github_etl_pipeline_spark.functions.keys import reference_match_sql
 
     def ref_stages(fact, dim_raw):
         if fact == dim_raw:
@@ -73,7 +73,7 @@ def test_reference_match_gate_matches_reference_stages(spark):
     df = spark.createDataFrame(cases, "f string, d string")
     got = {
         (r.f, r.d): bool(r.m)
-        for r in df.select("f", "d", reference_match_expr("f", "d").alias("m")).collect()
+        for r in df.select("f", "d", F.expr(reference_match_sql("f", "d")).alias("m")).collect()
     }
     for f, d in cases:
         assert got[(f, d)] == ref_stages(f, d), (f, d, got[(f, d)])

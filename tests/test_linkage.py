@@ -8,12 +8,18 @@ import pandas as pd
 import pytest
 
 from github_etl_pipeline_spark.operators.linkage import (
+    char_ngram_set,
     fs_score,
     fs_weights,
-    jaccard_sim,
+    jaccard_sim_grams,
     link_blocked,
 )
 from pyspark.sql import functions as F
+
+
+def jaccard_sim(a_col, b_col, n=3):
+    """Character-n-gram Jaccard of two string columns, grams built per side."""
+    return jaccard_sim_grams(char_ngram_set(a_col, n), char_ngram_set(b_col, n))
 
 
 def test_fs_weights():

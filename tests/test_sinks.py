@@ -4,7 +4,6 @@ SURVEY §5), consolidated JSON format parity, reports."""
 import json
 import math
 
-import pytest
 from pyspark.sql import functions as F
 
 from github_etl_pipeline_spark.sinks.upsert import (
@@ -284,163 +283,6 @@ def test_collect_at_most_rows_match_collect(spark):
     sel = pools.select(*CSV_FIELDS, pool_record_col().alias("record"))
     want = sel.collect()
     assert [_norm(g) for g in collect_at_most(sel, 5)] == [_norm(w) for w in want]
-
-
-def _has_delta() -> bool:
-    try:
-        import delta.tables  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def test_merge_into_upserts_and_is_idempotent(spark, tmp_path):
-    from github_etl_pipeline_spark.sinks.upsert import merge_into
-
-    table = tmp_path / "merged"
-    merge_into(spark, table, _pools_df(spark, [("a", 1.0), ("b", 2.0)]), backend="parquet")
-    merge_into(spark, table, _pools_df(spark, [("a", 9.0), ("c", 3.0)]), backend="parquet")
-    got = {r.source_file: r.rtp for r in read_store(spark, table).collect()}
-    assert got == {"a": 9.0, "b": 2.0, "c": 3.0}  # matched update + insert
-    # MERGE of the same updates twice == once
-    merge_into(spark, table, _pools_df(spark, [("a", 9.0), ("c", 3.0)]), backend="parquet")
-    again = {r.source_file: r.rtp for r in read_store(spark, table).collect()}
-    assert again == got
-
-
-def _install_fake_delta(monkeypatch, is_delta_table: bool):
-    """Inject a recording stand-in for delta.tables into sys.modules so
-    the MERGE call-chain construction is exercised without delta-spark
-    (which cannot be installed in this sandbox). Returns the call log:
-    entries are (method, arg) tuples in invocation order."""
-    import sys
-    import types
-
-    log: list[tuple] = []
-
-    class _Recorder:
-        def alias(self, a):
-            log.append(("alias", a))
-            return self
-
-        def merge(self, updates, cond):
-            log.append(("merge", cond))
-            return self
-
-        def whenMatchedUpdateAll(self):
-            log.append(("whenMatchedUpdateAll",))
-            return self
-
-        def whenNotMatchedInsertAll(self):
-            log.append(("whenNotMatchedInsertAll",))
-            return self
-
-        def execute(self):
-            log.append(("execute",))
-
-    class _FakeDeltaTable:
-        @staticmethod
-        def isDeltaTable(spark, path):
-            log.append(("isDeltaTable", path))
-            return is_delta_table
-
-        @staticmethod
-        def forPath(spark, path):
-            log.append(("forPath", path))
-            return _Recorder()
-
-    delta_mod = types.ModuleType("delta")
-    tables_mod = types.ModuleType("delta.tables")
-    tables_mod.DeltaTable = _FakeDeltaTable
-    delta_mod.tables = tables_mod
-    monkeypatch.setitem(sys.modules, "delta", delta_mod)
-    monkeypatch.setitem(sys.modules, "delta.tables", tables_mod)
-    return log
-
-
-def test_merge_into_delta_backend(spark, tmp_path, monkeypatch):
-    """The Delta MERGE path. With delta-spark importable this runs the
-    real transactional backend end-to-end; in this sandbox (no
-    delta-spark, and installs are not possible) it runs against a
-    recording fake, asserting the exact MERGE call chain merge_into
-    constructs — the seam our code owns. Either way the test RUNS:
-    the Delta branch is never a perpetual skip."""
-    from github_etl_pipeline_spark.sinks.upsert import merge_into
-
-    if _has_delta():
-        table = tmp_path / "merged_delta"
-        merge_into(spark, table, _pools_df(spark, [("a", 1.0), ("b", 2.0)]), backend="delta")
-        merge_into(spark, table, _pools_df(spark, [("a", 9.0), ("c", 3.0)]), backend="delta")
-        read = spark.read.format("delta").load(str(table))
-        got = {r.source_file: r.rtp for r in read.collect()}
-        assert got == {"a": 9.0, "b": 2.0, "c": 3.0}
-        merge_into(spark, table, _pools_df(spark, [("a", 9.0), ("c", 3.0)]), backend="delta")
-        again = {
-            r.source_file: r.rtp
-            for r in spark.read.format("delta").load(str(table)).collect()
-        }
-        assert again == got
-        return
-
-    # existing-Delta-table branch: the literal MERGE INTO chain
-    log = _install_fake_delta(monkeypatch, is_delta_table=True)
-    merge_into(spark, tmp_path / "t", _pools_df(spark, [("a", 1.0)]), backend="delta")
-    assert [e[0] for e in log] == [
-        "isDeltaTable",
-        "forPath",
-        "alias",
-        "merge",
-        "whenMatchedUpdateAll",
-        "whenNotMatchedInsertAll",
-        "execute",
-    ]
-    assert ("alias", "t") in log
-    assert ("merge", "t.source_file = u.source_file") in log
-    # nothing was written through the parquet emulation
-    assert not (tmp_path / "t").exists()
-
-
-def test_merge_into_auto_ignores_non_delta_target(spark, tmp_path, monkeypatch):
-    """auto mode with delta importable but a NON-Delta (absent) target
-    must take the parquet path and never create a Delta table."""
-    from github_etl_pipeline_spark.sinks.upsert import merge_into
-
-    log = _install_fake_delta(monkeypatch, is_delta_table=False)
-    table = tmp_path / "store"
-    merge_into(spark, table, _pools_df(spark, [("a", 1.0)]), backend="auto")
-    assert [e[0] for e in log] == ["isDeltaTable"]  # probed, then parquet
-    got = {r.source_file: r.rtp for r in read_store(spark, table).collect()}
-    assert got == {"a": 1.0}
-
-
-def test_merge_into_delta_refuses_to_clobber_parquet(spark, tmp_path, monkeypatch):
-    """backend='delta' with an existing non-Delta target must refuse
-    (format migration is an explicit user decision)."""
-    from github_etl_pipeline_spark.sinks.upsert import merge_into
-
-    table = tmp_path / "store"
-    merge_into(spark, table, _pools_df(spark, [("a", 1.0)]), backend="parquet")
-    _install_fake_delta(monkeypatch, is_delta_table=False)
-    with pytest.raises(ValueError, match="not a[\\s]+Delta table|not a Delta"):
-        merge_into(spark, table, _pools_df(spark, [("b", 2.0)]), backend="delta")
-
-
-def test_merge_into_delta_backend_fails_loudly_without_delta(spark, tmp_path, monkeypatch):
-    """backend='delta' must raise, never silently degrade to the
-    last-writer-wins parquet emulation. Forced by blanking the module
-    entry, so this runs in every environment."""
-    import sys
-
-    from github_etl_pipeline_spark.sinks.upsert import merge_into
-
-    monkeypatch.setitem(sys.modules, "delta", None)
-    monkeypatch.setitem(sys.modules, "delta.tables", None)
-    with pytest.raises(ImportError):
-        merge_into(
-            spark, tmp_path / "t", _pools_df(spark, [("a", 1.0)]), backend="delta"
-        )
-    assert not (tmp_path / "t").exists()
 
 
 def test_upsert_schema_evolution(spark, tmp_path):

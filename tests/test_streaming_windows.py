@@ -1,16 +1,11 @@
-"""Streaming windowed aggregation + custom stateful sessionization:
-the same operator code run as a REAL stream (availableNow over the
-parquet) must agree with its batch execution."""
+"""Streaming windowed aggregation and interval joins: the same operator
+code run as a REAL stream (availableNow over the parquet) must agree with
+its batch execution."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from github_etl_pipeline_spark.sources.tables import read_table
-from github_etl_pipeline_spark.streaming.windows import (
-    sessionize_native,
-    sessionize_stateful,
-    windowed_event_counts,
-)
+from github_etl_pipeline_spark.streaming.windows import windowed_event_counts
 
 SF = "/root/testdata/sf0.001"
 
@@ -51,100 +46,6 @@ def test_windowed_counts_stream_equals_batch(spark, tmp_path):
         for r in spark.sql("SELECT * FROM win_counts").collect()
     }
     assert got == expect
-
-
-def test_sessionize_stateful_stream(spark, tmp_path):
-    batch_events = read_table(spark, SF, "events")
-    # batch expectation from the window-based sessionizer
-    from github_etl_pipeline_spark.plans.registry import REGISTRY
-
-    batch_sessions = REGISTRY["sessionize_events"].builder(spark, SF)
-    per_user_total = {
-        r.user_id: r.n
-        for r in batch_sessions.groupBy("user_id").agg(F.sum("n_events").alias("n")).collect()
-    }
-
-    stream = _stream_events(spark, tmp_path)
-    q = (
-        sessionize_stateful(stream)
-        .writeStream.format("memory")
-        .queryName("sessions")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    emitted = spark.sql("SELECT * FROM sessions").collect()
-    # availableNow ends before processing-time timeouts fire, so each
-    # user's final (still-open) session is unreported: emitted counts per
-    # user must be <= batch totals, and closed sessions must match the
-    # batch sessionizer's per-session event counts exactly.
-    got_by_user = {}
-    for r in emitted:
-        got_by_user.setdefault(r.user_id, 0)
-        got_by_user[r.user_id] += r.n_events
-    assert got_by_user, "no sessions emitted"
-    for uid, n in got_by_user.items():
-        assert n <= per_user_total[uid]
-    # closed sessions are a prefix of the batch sessions per user
-    batch_rows = {
-        (r.user_id, r.session_idx): r.n_events for r in batch_sessions.collect()
-    }
-    emitted_sorted = {}
-    for r in sorted(emitted, key=lambda r: (r.user_id, r.session_start_us)):
-        emitted_sorted.setdefault(r.user_id, []).append(r.n_events)
-    for uid, counts in emitted_sorted.items():
-        batch_counts = [
-            batch_rows[(uid, i)] for i in sorted(
-                idx for (u, idx) in batch_rows if u == uid
-            )
-        ]
-        assert counts == batch_counts[: len(counts)], uid
-
-
-def test_sessionize_native_equals_stateful_on_stream(spark, tmp_path):
-    """The promoted default (F.session_window, JVM-side) and the
-    custom-state escape hatch (applyInPandasWithState) must emit the
-    SAME closed sessions on the same real stream — same users, same
-    starts, same counts, same durations."""
-    gap_ms = 30 * 60 * 1000
-    batch_events = read_table(spark, SF, "events")
-
-    # boundary precondition: the two sessionizers differ only for an
-    # event landing EXACTLY at last+gap (native >=, stateful >) — assert
-    # the data has no such pair so equality is exact
-    from pyspark.sql import Window as W
-    from github_etl_pipeline_spark.functions.epoch import event_micros
-
-    e = batch_events.select("user_id", event_micros(batch_events, "ts").alias("us"))
-    d = e.withColumn("prev", F.lag("us").over(W.partitionBy("user_id").orderBy("us")))
-    n_boundary = d.where(F.col("us") - F.col("prev") == gap_ms * 1000).count()
-    assert n_boundary == 0, "fixture hits the gap boundary exactly; pick another gap"
-
-    def run(op, name, ck):
-        stream = _stream_events(spark, tmp_path / name)
-        q = (
-            op(stream, gap_ms=gap_ms)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / ck))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return sorted(
-            (r.user_id, r.session_start_us, r.n_events, r.duration_ms)
-            for r in spark.sql(f"SELECT * FROM {name}").collect()
-        )
-
-    (tmp_path / "nat_sessions").mkdir()
-    (tmp_path / "st_sessions").mkdir()
-    native = run(sessionize_native, "nat_sessions", "ck_nat")
-    stateful = run(sessionize_stateful, "st_sessions", "ck_st")
-    assert native, "native sessionizer emitted nothing"
-    assert native == stateful
 
 
 def test_watermark_drops_late_data(spark, tmp_path):
@@ -244,30 +145,6 @@ def test_interval_join_stream_equals_batch(spark, tmp_path):
         for r in spark.sql("SELECT * FROM sjoin").collect()
     }
     assert got == expect
-
-
-def test_dedup_stream_bounded_state(spark, tmp_path):
-    from github_etl_pipeline_spark.streaming.windows import dedup_stream
-
-    batch_events = read_table(spark, SF, "events")
-    expect = batch_events.select("user_id", "event_type").distinct().count()
-
-    stream = _stream_events(spark, tmp_path)
-    q = (
-        dedup_stream(stream)
-        .select("user_id", "event_type")
-        .writeStream.format("memory")
-        .queryName("deduped")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck3"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.sql("SELECT * FROM deduped").collect()
-    # one survivor per key, and no key emitted twice
-    assert len(got) == expect
-    assert len({(r.user_id, r.event_type) for r in got}) == expect
 
 
 def test_sliding_windows_stream_equals_batch(spark, tmp_path):

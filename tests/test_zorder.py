@@ -1,5 +1,5 @@
-"""Z-order layout key (functions/zorder.py) + its compaction integration
-(sinks/compact.py zorder_by) + the WindowGroupLimit shape behind
+"""Z-order layout key (functions/zorder.py), the data skipping it gives a
+sorted parquet write, and the WindowGroupLimit shape behind
 top3_orders_per_priority (plans/shapes.py)."""
 
 from __future__ import annotations
@@ -9,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from github_etl_pipeline_spark.functions.zorder import zorder_sql
-from github_etl_pipeline_spark.sinks.compact import compact_parquet
 
 
 def test_zorder_interleave_exact(spark):
@@ -48,8 +47,19 @@ def _per_file_ranges(path, col):
     return spans
 
 
-def test_compact_zorder_tightens_both_columns(spark, tmp_path):
-    """On a 128x128 grid, z-order layout must make per-file min/max spans
+def _range_sorted_write(df, path, key, n_files=16):
+    """Range-partition and sort on ``key``, one file per partition."""
+    (
+        df.withColumn("_key", key)
+        .repartitionByRange(n_files, "_key")
+        .sortWithinPartitions("_key")
+        .drop("_key")
+        .write.parquet(str(path))
+    )
+
+
+def test_zorder_layout_tightens_both_columns(spark, tmp_path):
+    """On a 128x128 grid, a z-order layout must make per-file min/max spans
     tight on BOTH columns, where a lexicographic sort on `a` leaves every
     file spanning the full `b` range — the data-skipping win z-ordering
     exists for."""
@@ -57,16 +67,10 @@ def test_compact_zorder_tightens_both_columns(spark, tmp_path):
     grid = spark.range(n * n).select(
         (F.col("id") % n).alias("a"), (F.col("id") / n).cast("long").alias("b")
     )
-    src = tmp_path / "src"
-    grid.write.parquet(str(src))
-
     lex_out = tmp_path / "lex"
     z_out = tmp_path / "zord"
-    compact_parquet(spark, src, lex_out, sort_cols=["a"], target_rows_per_file=1024)
-    compact_parquet(
-        spark, src, z_out, sort_cols=[], zorder_by=["a", "b"], zorder_bits=7,
-        target_rows_per_file=1024,
-    )
+    _range_sorted_write(grid, lex_out, F.col("a"))
+    _range_sorted_write(grid, z_out, F.expr(zorder_sql(["a", "b"], 7)))
 
     lex_b = _per_file_ranges(lex_out, "b")
     z_b = _per_file_ranges(z_out, "b")
@@ -77,18 +81,6 @@ def test_compact_zorder_tightens_both_columns(spark, tmp_path):
     # z-order: files cover sub-squares — BOTH columns' spans shrink hard
     assert sum(z_b) / len(z_b) < 0.5 * (n - 1)
     assert sum(z_a) / len(z_a) < 0.5 * (n - 1)
-    # and the z-key helper column must not leak into the output schema
-    assert "_zkey" not in spark.read.parquet(str(z_out)).columns
-
-
-def test_compact_requires_exactly_one_layout(spark, tmp_path):
-    df = spark.range(10)
-    src = tmp_path / "s"
-    df.write.parquet(str(src))
-    with pytest.raises(ValueError):
-        compact_parquet(spark, src, tmp_path / "o", sort_cols=[])
-    with pytest.raises(ValueError):
-        compact_parquet(spark, src, tmp_path / "o", sort_cols=["id"], zorder_by=["id"])
 
 
 def test_top3_plan_uses_window_group_limit(spark):
