@@ -30,18 +30,15 @@ BUCKET_EDGES = [500, 1000, 2000, 5000, 10000]
 
 
 def _bucket_expr(col):
+    """The R14 value bucket of an integer ``col``: ``<0``, then one
+    ``lo-hi`` label per edge, then ``10001+``."""
     c = F.col(col) if isinstance(col, str) else col
-    expr = F.lit(f"{BUCKET_EDGES[-1] + 1}+")
-    labels = []
+    out = F.when(c < 0, "<0")
     lo = 0
     for hi in BUCKET_EDGES:
-        labels.append((lo, hi, f"{lo}-{hi}"))
+        out = out.when(c <= hi, f"{lo}-{hi}")
         lo = hi + 1
-    out = None
-    for lo_, hi_, label in labels:
-        cond = (c >= lo_) & (c <= hi_)
-        out = F.when(cond, label) if out is None else out.when(cond, label)
-    return out.otherwise(expr)
+    return out.otherwise(f"{BUCKET_EDGES[-1] + 1}+")
 
 
 def pool_extended_stats(parsed: DataFrame, k: int = 10, rounding: str = "bankers") -> DataFrame:

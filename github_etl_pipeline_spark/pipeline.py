@@ -29,11 +29,17 @@ def run_pipeline(
     rounding: str = "bankers",
     dim: DataFrame | None = None,
     output_dir: str | Path | None = None,
+    paths: list[str] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Return (per-pool KPI records, single-row aggregated summary).
 
     ``dim`` overrides the xlsx lookup (used by tests to inject the richer
     dimension the reference's committed goldens were produced with).
+
+    ``paths`` restricts the run to those pool files (the changed files of
+    ``streaming.incremental.changed_pol_paths``); a file outside the scan
+    dir is keyed relative to ``repo_root`` (etl/extract.py:125). Without
+    it the run scans every pool file under the scan dir.
 
     With ``output_dir`` set, also writes the reference's full output
     surface (EP1, etl/main.py:124-148): consolidated JSON upsert (S8),
@@ -48,8 +54,12 @@ def run_pipeline(
     # one scan: blank and invalid lines count under game_win NULL, so raw
     # line counts AND size-0 records for unparseable files come out of the
     # same aggregate (no separate inventory pass over the data)
-    raw = scan_pol_files(spark.read.format("binaryFile"), str(scan_dir))
-    counted = count_pol_files(raw, str(scan_dir))
+    reader = spark.read.format("binaryFile")
+    if paths is None:
+        raw, fallback_root = scan_pol_files(reader, str(scan_dir)), None
+    else:
+        raw, fallback_root = reader.load(paths), str(repo_root)
+    counted = count_pol_files(raw, str(scan_dir), fallback_root=fallback_root)
 
     if dim is None:
         dim = load_game_lookup(spark, repo_root)
@@ -68,7 +78,11 @@ def _write_outputs(pools: DataFrame, output_dir: Path, rounding: str) -> None:
     same pass (``DataFrame.observe``; its metrics are complete because an
     in-bound collect reads every partition). Above either bound the
     records are persisted and each sink takes its own path, shards
-    included, and the rollup is one more aggregate."""
+    included, and the rollup is one more aggregate.
+
+    The JSON document is upserted, so it and the index cover every pool
+    any run has written; the summary and the CSV cover the files of this
+    run only (after a changed-files run, those files)."""
     output_dir.mkdir(parents=True, exist_ok=True)
     json_path = output_dir / "all_pools_data.json"
     csv_path = output_dir / "_all_files_summary.csv"

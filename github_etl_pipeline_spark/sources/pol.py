@@ -4,13 +4,13 @@ The reference's extract stage (etl/extract.py:27-52,108-131) makes one
 decision: glob ``*.pol`` under the scan root, skip ``EXCLUDED_DIRS``, key
 each file by its posix path relative to the root, and split the file name
 ``Pool_<pool_id>_<pool_type>.pol``. Here that decision is three pieces,
-and the batch scan, the streaming source and the mtime/git CDC reads
-(``streaming/incremental.py``) all go through them:
+and the batch scan and the changed-files reads (``streaming/incremental.py``)
+go through them:
 
   * ``scan_pol_files`` — a recursive ``*.pol`` read under a root
     (``recursiveFileLookup`` + ``pathGlobFilter``) minus ``EXCLUDED_DIRS``,
     filtered on the hidden ``_metadata.file_path`` column. It takes the
-    reader, so text, ``binaryFile`` and streaming reads share it.
+    reader, so text and ``binaryFile`` reads share it.
   * ``pol_lines`` — the projection from ``_metadata`` to ``source_file``
     (the path relative to the scan root), ``file_size`` and
     ``file_mtime`` for the line-level text readers. ``count_pol_files``,
@@ -47,7 +47,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import DataStreamReader
 
 # Reference etl/extract.py:14-23
 EXCLUDED_DIRS = (
@@ -72,10 +71,10 @@ def drop_excluded(df: DataFrame, path: str) -> DataFrame:
     return df.filter(F.expr(f"NOT ({hits})"))
 
 
-def scan_pol_files(reader: DataFrameReader | DataStreamReader, root: str) -> DataFrame:
+def scan_pol_files(reader: DataFrameReader, root: str) -> DataFrame:
     """Every ``*.pol`` file under ``root``, recursively, minus the excluded
-    directories, read by ``reader`` (``spark.read.format("text")``,
-    ``binaryFile``, or a ``readStream``)."""
+    directories, read by ``reader`` (``spark.read.format("text")`` or
+    ``binaryFile``)."""
     df = (
         reader.option("recursiveFileLookup", "true")
         .option("pathGlobFilter", "*.pol")
@@ -191,7 +190,7 @@ def count_pol_files(raw: DataFrame, scan_dir: str, fallback_root: str | None = N
     """``(source_file, game_win, cnt)`` over a ``binaryFile`` read of pool
     files: one row per distinct line text of a file, blank and invalid
     lines under game_win NULL. ``source_file`` is relative to ``scan_dir``,
-    or to ``fallback_root`` for the files git mode reads outside it (the
+    or to ``fallback_root`` for the changed files read outside it (the
     reference's ``relative_to(repo_root)``, etl/extract.py:125).
 
     One ``mapInArrow`` at the scan leaf splits each file into lines and

@@ -1,43 +1,29 @@
-"""Incremental processing (reference S2/S3/EP2): three change ledgers
-over one scan path.
+"""Incremental processing (reference S2/S3/EP2): which pool files changed.
 
 The reference's change detection is ``git diff --name-only HEAD~1 HEAD``
 driven by a GitHub-Actions push loop (etl/extract.py:55-80,
 .github/workflows/etl_pipeline.yml:3-10): each run processes only files
 changed since the last run, falling back to a full scan when none.
 
-Every runner reads pool files as the batch pipeline does: a
-``binaryFile`` read (``scan_pol_files``' recursive ``*.pol`` glob minus
-``EXCLUDED_DIRS``, or the changed paths) counted per file by
-``count_pol_files`` — and ends in the same tail, ``_upsert_pools``:
-``pool_kpis`` -> ``upsert_parquet``, so a rerun is an idempotent MERGE
-and every store row equals the batch record.
-
-  * ``run_incremental`` — Spark's streaming file-source checkpoint,
-    keyed on file PATH: ``readStream`` discovers files, the checkpoint
-    records which were processed, ``Trigger.AvailableNow`` drains
-    everything new and stops (the push-triggered CI loop). The first
-    run IS the full scan (S3). New files are processed once; an
-    in-place EDIT of an already-seen file is not re-processed. Right
-    for immutable-drop fleets (the common case at scale).
-  * ``run_incremental_mtime`` — an explicit (path, mtime) ledger
-    matching the reference's git-diff semantics: a modified file shows
-    a new mtime and is re-processed, its store row upserted in place.
-    The listing is metadata-only (``binaryFile`` pruned to
-    path+modificationTime — no bytes read), the anti-join against the
-    ledger is O(corpus listing), and only CHANGED files are read.
-  * ``run_incremental_git`` — the reference's LITERAL change log: one
-    subprocess call to ``git diff --name-only HEAD~1 HEAD``
-    (etl/extract.py:55-80, the pipeline's only process boundary),
-    filtered to .pol files under the scan dir, deleted and excluded
-    files skipped, full-scan fallback when the diff is empty or git
-    fails (etl/main.py:79-85). The changed-path list is bounded by ONE
+  * ``changed_pol_paths`` — the reference's LITERAL change log: one
+    subprocess call to ``git diff``, filtered to .pol files under the
+    scan dir, deleted and excluded files skipped. It returns a path list
+    that ``pipeline.run_pipeline`` reads, or None for its full scan, so a
+    changed-files run and a full run share one scan, count, KPI and
+    output tail (the CLI default). The path list is bounded by ONE
     COMMIT'S CHURN, never corpus size, so the driver round-trip is safe
     at fleet scale.
+  * ``run_incremental_mtime`` — an explicit (path, mtime) ledger for a
+    corpus outside git: a modified file shows a new mtime and is
+    re-processed, its row upserted in place into a parquet store. The
+    listing is metadata-only (``binaryFile`` pruned to
+    path+modificationTime — no bytes read), the anti-join against the
+    ledger is O(corpus listing), and only CHANGED files are read.
 """
 
 from __future__ import annotations
 
+import subprocess
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,63 +38,6 @@ from github_etl_pipeline_spark.sources.pol import count_pol_files, drop_excluded
 _PATHS_SCHEMA = StructType([StructField("path", StringType())])
 
 
-def _upsert_pools(
-    spark: SparkSession,
-    counted: DataFrame,
-    store_path: str | Path,
-    dim_agg: DataFrame | None,
-    rounding: str,
-) -> None:
-    """The tail every runner shares: KPI records of ``counted`` (a
-    ``count_pol_files`` frame) MERGEd into the store. A merge into an
-    existing store runs two actions over the records (the touched
-    buckets, then the write), so the pool-sized ``pool_kpis`` result is
-    persisted for the call and released in the finally: the scan and
-    shuffle under it run once."""
-    pools = pool_kpis(counted, dim_agg=dim_agg, rounding=rounding).persist()
-    try:
-        upsert_parquet(spark, pools, store_path)
-    finally:
-        pools.unpersist()
-
-
-def run_incremental(
-    spark: SparkSession,
-    scan_dir: str | Path,
-    checkpoint_dir: str | Path,
-    store_path: str | Path,
-    dim_agg: DataFrame | None = None,
-    rounding: str = "bankers",
-) -> int:
-    """Drain all unseen .pol files into the parquet KPI store; returns the
-    number of micro-batches processed. Repeated calls process only files
-    the checkpoint has not seen (S2); the first call processes all (S3)."""
-    scan_dir = str(scan_dir)
-    reader = (
-        spark.readStream.format("binaryFile")  # a stream needs binaryFile's fixed schema
-        .schema("path string, modificationTime timestamp, length long, content binary")
-        .option("maxFilesPerTrigger", "64")
-    )
-    counted = count_pol_files(scan_pol_files(reader, scan_dir), scan_dir)
-    n_batches = 0
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal n_batches
-        if batch_df.isEmpty():
-            return
-        n_batches += 1
-        _upsert_pools(batch_df.sparkSession, batch_df, store_path, dim_agg, rounding)
-
-    query = (
-        counted.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", str(checkpoint_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return n_batches
-
-
 def run_incremental_mtime(
     spark: SparkSession,
     scan_dir: str | Path,
@@ -119,8 +48,8 @@ def run_incremental_mtime(
 ) -> int:
     """(path, mtime)-keyed incremental run: process files that are NEW or
     MODIFIED IN PLACE since the last run — the reference's git-diff change
-    model (etl/extract.py:55-80), which the path-keyed streaming ledger
-    cannot express. Returns the number of files processed.
+    model (etl/extract.py:55-80) without git. Returns the number of files
+    processed.
 
     The ledger is itself an ``upsert_parquet`` store keyed by path (so
     ledger maintenance is bucket-pruned too). Change detection is a
@@ -168,31 +97,34 @@ def run_incremental_mtime(
         if n_changed == 0:
             return 0
         raw = scan_pol_files(spark.read.format("binaryFile"), scan_dir)
-    _upsert_pools(spark, count_pol_files(raw, scan_dir), store_path, dim_agg, rounding)
+    # a merge into an existing store runs two actions over the records
+    # (the touched buckets, then the write): persist the pool-sized
+    # records so the scan and shuffle under them run once
+    counted = count_pol_files(raw, scan_dir)
+    pools = pool_kpis(counted, dim_agg=dim_agg, rounding=rounding).persist()
+    try:
+        upsert_parquet(spark, pools, store_path)
+    finally:
+        pools.unpersist()
     upsert_parquet(spark, changed, ledger_path, key="path")
     return n_changed
 
 
-def changed_paths_from_git(
-    repo_root: str | Path, base_ref: str = "HEAD~1"
-) -> list[str] | None:
-    """``git diff --name-only {base_ref} HEAD`` as a list of repo-relative
-    posix paths, or None when git fails (not a repo, single commit,
-    no git binary) — None means "fall back to a full scan"
-    (etl/extract.py:55-80: errors return [], and an empty changed list
-    triggers the full-scan fallback in etl/main.py:82-85).
+def changed_paths_from_git(repo_root: str | Path) -> list[str] | None:
+    """``git diff --name-only --relative HEAD~1 HEAD`` run in ``repo_root``:
+    the paths the last commit changed under ``repo_root``, relative to it
+    (also when it sits below the repository's top level), or None when
+    git fails (not a repo, single commit, no git binary) — None means
+    "fall back to a full scan" (etl/extract.py:55-80: errors return [],
+    and an empty changed list triggers the full-scan fallback in
+    etl/main.py:82-85).
 
-    The reference's default ``HEAD~1`` assumes RUN-ONCE-PER-COMMIT cadence
-    (its CI triggers on every push): if several commits land between runs,
-    .pol changes from the earlier commits are silently missed unless the
-    newest commit happens to trigger the fallback. Callers on a slower
-    cadence should pass the last-processed commit as ``base_ref`` so the
-    diff covers the full gap."""
-    import subprocess
-
+    ``HEAD~1`` assumes the reference's RUN-ONCE-PER-COMMIT cadence (its
+    CI triggers on every push): .pol changes from earlier commits that
+    landed between two runs are not seen."""
     try:
         result = subprocess.run(
-            ["git", "diff", "--name-only", base_ref, "HEAD"],
+            ["git", "diff", "--name-only", "--relative", "HEAD~1", "HEAD"],
             cwd=str(repo_root),
             capture_output=True,
             text=True,
@@ -203,71 +135,41 @@ def changed_paths_from_git(
     return [f.strip() for f in result.stdout.splitlines() if f.strip()]
 
 
-def run_incremental_git(
-    spark: SparkSession,
-    repo_root: str | Path,
-    store_path: str | Path,
-    scan_subdir: str = "samples/pools2",
-    dim_agg: DataFrame | None = None,
-    rounding: str = "bankers",
-    base_ref: str = "HEAD~1",
-) -> int:
-    """Git-commit-keyed incremental run: process exactly the .pol files
-    the last commit touched — the reference's change model verbatim
-    (etl/extract.py:160-211). Change detection is ONE subprocess call on
-    the driver; its output is bounded by one commit's churn (never the
-    corpus size), so unlike a listing-based ledger this mode costs no
-    directory walk at all in the steady state. Returns the number of
-    changed files processed, or -1 when it fell back to a full scan
-    (no changed .pol files / git unavailable — etl/main.py:82-85).
+def changed_pol_paths(
+    spark: SparkSession, repo_root: str | Path, scan_subdir: str = "samples/pools2"
+) -> list[str] | None:
+    """The .pol files the last commit changed, as paths for
+    ``run_pipeline(paths=...)``, or None for its full scan (no changed
+    .pol file, or git failed — etl/main.py:82-85).
 
-    Matches the reference filter chain exactly: ``.pol`` suffix, path
-    under ``scan_subdir`` (posix substring, etl/extract.py:176-180 —
-    so ``vendor/samples/pools2/x.pol`` matches too; such out-of-subdir
-    matches project ``source_file`` relative to ``repo_root``, mirroring
-    the reference's ``relative_to(repo_root)`` at etl/extract.py:125),
-    deleted files skipped (``:192-195``), ``EXCLUDED_DIRS`` path parts
-    skipped (``:197-199``).
-
-    Default ``base_ref="HEAD~1"`` carries the reference's implicit
-    run-once-per-commit assumption (see ``changed_paths_from_git``);
-    pass the last-processed commit to diff a multi-commit gap.
-    """
+    Matches the reference filter chain exactly (etl/extract.py:160-211):
+    ``.pol`` suffix, path under ``scan_subdir`` (posix substring,
+    etl/extract.py:176-180 — so ``vendor/samples/pools2/x.pol`` matches
+    too, and ``run_pipeline`` keys it relative to ``repo_root``), deleted
+    files skipped (``:192-195``), ``EXCLUDED_DIRS`` path parts skipped
+    (``:197-199``)."""
     repo_root = Path(repo_root)
-    scan_dir = str(repo_root / scan_subdir)
-    changed = changed_paths_from_git(repo_root, base_ref=base_ref)
     sub_posix = scan_subdir.strip("/")
-    paths: list[str] = []
-    for rel in changed or []:
-        rel = rel.replace("\\", "/")
+    paths = [
+        str(repo_root / rel)
+        for rel in changed_paths_from_git(repo_root) or []
         # a listed file that no longer exists was deleted in the commit
-        if rel.endswith(".pol") and sub_posix in rel and (repo_root / rel).exists():
-            paths.append(str(repo_root / rel))
+        if rel.endswith(".pol") and sub_posix in rel and (repo_root / rel).exists()
+    ]
     if paths:
         # the scan's own exclusion filter, over the (churn-sized) path list
         candidates = local_frame(spark, [(p,) for p in paths], _PATHS_SCHEMA)
         paths = [r.path for r in drop_excluded(candidates, "path").collect()]
     # In-place edits: drop stale cached file lengths (see
-    # run_incremental_mtime) BEFORE either branch reads — the full-scan
-    # fallback re-reads the whole corpus and would otherwise read a
-    # file edited in an earlier commit at its pinned stale length
-    # (FileStatusCache keeps lengths forever, metadataCacheTTLSeconds=-1).
-    # scan_dir covers the fallback branch; OUT-OF-SUBDIR matches (e.g.
-    # vendor/samples/pools2/x.pol — first-class since r10) live outside
-    # that prefix, so each gets its own refresh or an in-place edit
-    # could still be read at its stale pinned length (ADVICE r10).
-    spark.catalog.refreshByPath(scan_dir)
-    scan_prefix = scan_dir.rstrip("/") + "/"
+    # run_incremental_mtime) before either read. The scan dir covers the
+    # full-scan fallback, which would otherwise read a file edited in an
+    # earlier commit at its pinned stale length; an out-of-subdir match
+    # lives outside that prefix, so it gets its own refresh.
+    scan_dir = repo_root / scan_subdir
+    if not scan_dir.exists():
+        scan_dir = repo_root
+    spark.catalog.refreshByPath(str(scan_dir))
     for p in paths:
-        if not p.startswith(scan_prefix):
+        if not p.startswith(f"{scan_dir}/"):
             spark.catalog.refreshByPath(p)
-    if paths:
-        raw = spark.read.format("binaryFile").load(paths)
-        n_changed = len(paths)
-    else:
-        # no changed .pol files (or git failed) -> full-scan fallback
-        raw = scan_pol_files(spark.read.format("binaryFile"), scan_dir)
-        n_changed = -1
-    counted = count_pol_files(raw, scan_dir, fallback_root=str(repo_root))
-    _upsert_pools(spark, counted, store_path, dim_agg, rounding)
-    return n_changed
+    return paths or None

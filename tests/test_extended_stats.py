@@ -118,6 +118,8 @@ def _round(x, digits, mode):
 
 
 def _bucket(v):
+    if v < 0:
+        return "<0"
     lo = 0
     for hi in BUCKET_EDGES:
         if lo <= v <= hi:
@@ -170,7 +172,11 @@ def _expected(lines, k=10):
 
 
 def test_extended_stats_hand_worked_corpus(spark, tmp_path):
-    corpus = {"Pool_0201_395.pol": SMALL_POOL, "Pool_0300_941.pol": LONG_POOL}
+    corpus = {
+        "Pool_0201_395.pol": SMALL_POOL,
+        "Pool_0300_941.pol": LONG_POOL,
+        "Pool_0400_292.pol": ["-5 TB1", "100 TB1"],
+    }
     for name, lines in corpus.items():
         (tmp_path / name).write_text("\n".join(lines) + "\n")
     lines = read_pol_lines(spark, str(tmp_path))
@@ -200,6 +206,10 @@ def test_extended_stats_hand_worked_corpus(spark, tmp_path):
     assert [b.bucket for b in got["Pool_0201_395.pol"].value_distribution] == [
         "0-500", "10001+", "1001-2000", "2001-5000", "5001-10000", "501-1000",
     ]
+    # a negative value has its own bucket, not the top one
+    assert [
+        (b.bucket, b["count"]) for b in got["Pool_0400_292.pol"].value_distribution
+    ] == [("0-500", 1), ("<0", 1)]
 
 
 def test_bm25_ranked_retrieval_matches_reference_formula(spark):

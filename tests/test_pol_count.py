@@ -1,12 +1,13 @@
 """The per-file line counter (``sources.pol.count_pol_files``): parity with
-the line-level text path on a hostile corpus, through the batch pipeline
-and every incremental runner, the one intended output change (a leading
+the line-level text path on a hostile corpus, through the batch pipeline,
+the CLI and the mtime runner, the one intended output change (a leading
 BOM), and the design it depends on: workers need not import the package,
 a file is read whole or not at all, and the Arrow node sits at the scan
 leaf."""
 
 import json
 import os
+import re
 import subprocess
 import sys
 import time
@@ -14,6 +15,8 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from github_etl_pipeline_spark import pipeline
+from github_etl_pipeline_spark.__main__ import main
 from github_etl_pipeline_spark.operators.kpis import pool_distribution
 from github_etl_pipeline_spark.pipeline import run_pipeline
 from github_etl_pipeline_spark.sinks.upsert import read_store
@@ -25,8 +28,7 @@ from github_etl_pipeline_spark.sources.pol import (
     scan_pol_files,
 )
 from github_etl_pipeline_spark.streaming.incremental import (
-    run_incremental,
-    run_incremental_git,
+    changed_pol_paths,
     run_incremental_mtime,
 )
 
@@ -87,6 +89,17 @@ def _records(df):
     return {r.source_file: tuple(r) for r in df.select(*RECORD_COLS).collect()}
 
 
+def _document(out):
+    """The JSON document a run wrote to ``out``, its timestamps masked."""
+    text = (out / "all_pools_data.json").read_text()
+    return re.sub(r'"processed_at": "[^"]*"', '"processed_at": ""', text)
+
+
+def _cli(root, out):
+    assert main(["--repo-root", str(root), "--output-dir", str(out), "--cpus", "8"]) == 0
+    return _document(out)
+
+
 def test_counts_match_the_text_line_path(spark, hostile):
     raw = scan_pol_files(spark.read.format("binaryFile"), str(hostile))
     counted = count_pol_files(raw, str(hostile))
@@ -110,14 +123,17 @@ def test_counts_match_the_text_line_path(spark, hostile):
     assert got[("Pool_0107_941.pol", None)] == 2 and got[("Pool_0107_941.pol", 4)] == 1
 
 
-def test_incremental_runners_store_the_batch_records(spark, tmp_path, hostile, dim):
-    pools, _ = run_pipeline(spark, hostile, dim=dim)
+def test_incremental_runners_store_the_batch_records(spark, tmp_path, hostile, dim, monkeypatch):
+    pools, _ = run_pipeline(spark, hostile, dim=dim, output_dir=tmp_path / "out_b")
     batch = _records(pools)
     assert set(batch) == set(KEPT)
+    batch_doc = _document(tmp_path / "out_b")
     dim_agg = prepare_dim(dim)
+    # the CLI reads its dimension from the root's xlsx; this one has none
+    monkeypatch.setattr(pipeline, "load_game_lookup", lambda spark, root: dim)
 
-    run_incremental(spark, hostile, tmp_path / "ck", tmp_path / "st_s", dim_agg)
-    assert _records(read_store(spark, tmp_path / "st_s")) == batch
+    # outside a git work-tree the CLI's default run is a full scan
+    assert _cli(hostile, tmp_path / "out_s") == batch_doc
 
     # Spark's listing leaves 0-byte files out
     assert run_incremental_mtime(spark, hostile, tmp_path / "led", tmp_path / "st_m", dim_agg) == len(KEPT)
@@ -140,13 +156,13 @@ def test_incremental_runners_store_the_batch_records(spark, tmp_path, hostile, d
                  ["add", "-A"], ["commit", "-qm", "c2"]):
         subprocess.run(["git", "-C", str(repo), *args], check=True, capture_output=True, env=env)
     # git lists the 0-byte file; the read yields no record for it
-    assert run_incremental_git(spark, repo, tmp_path / "st_g", dim_agg=dim_agg) == len(KEPT) + 1
-    assert _records(read_store(spark, tmp_path / "st_g")) == batch
+    assert len(changed_pol_paths(spark, repo)) == len(KEPT) + 1
+    assert _cli(repo, tmp_path / "out_g") == batch_doc
     (repo / "README").write_text("r2")
     for args in (["add", "-A"], ["commit", "-qm", "c3"]):
         subprocess.run(["git", "-C", str(repo), *args], check=True, capture_output=True, env=env)
-    assert run_incremental_git(spark, repo, tmp_path / "st_g", dim_agg=dim_agg) == -1
-    assert _records(read_store(spark, tmp_path / "st_g")) == batch
+    assert changed_pol_paths(spark, repo) is None
+    assert _cli(repo, tmp_path / "out_g") == batch_doc
 
 
 def test_leading_bom_stays_in_the_first_line(spark, tmp_path, dim):

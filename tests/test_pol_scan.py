@@ -8,6 +8,7 @@ import time
 
 import pytest
 
+from github_etl_pipeline_spark.__main__ import main
 from github_etl_pipeline_spark.operators.stats import pool_extended_stats
 from github_etl_pipeline_spark.pipeline import run_pipeline
 from github_etl_pipeline_spark.sinks.upsert import read_store
@@ -17,10 +18,7 @@ from github_etl_pipeline_spark.sources.pol import (
     read_pol_lines,
     read_pol_lines_any_encoding,
 )
-from github_etl_pipeline_spark.streaming.incremental import (
-    run_incremental,
-    run_incremental_mtime,
-)
+from github_etl_pipeline_spark.streaming.incremental import run_incremental_mtime
 
 DIM_ROWS = [("G", "9493", "201", 25.0)]
 DIM_SCHEMA = "Game string, Game_id string, Pool_id string, Bet double"
@@ -53,10 +51,13 @@ def test_excluded_dirs_are_skipped_by_every_reader(spark, tmp_path, dim):
     lines = read_pol_lines_any_encoding(spark, str(root))
     assert {r.source_file for r in lines.select("source_file").distinct().collect()} == set(want)
 
-    dim_agg = prepare_dim(dim)
-    run_incremental(spark, root, tmp_path / "ck", tmp_path / "st", dim_agg)
-    assert _store(spark, tmp_path / "st") == want
+    # the CLI's default run (a full scan outside a git work-tree)
+    cli_out = tmp_path / "out_cli"
+    assert main(["--repo-root", str(root), "--output-dir", str(cli_out), "--cpus", "8"]) == 0
+    data = json.loads((cli_out / "all_pools_data.json").read_text())
+    assert {k: v["size"] for k, v in data.items()} == want
 
+    dim_agg = prepare_dim(dim)
     n = run_incremental_mtime(spark, root, tmp_path / "ledger", tmp_path / "st_m", dim_agg)
     assert n == 2
     assert _store(spark, tmp_path / "st_m") == want

@@ -40,9 +40,6 @@ KEPT = {
         "the paper's R10/R12-R15 per-pool statistics surface; ROADMAP item 3 "
         "plans it onto the served path"
     ),
-    "run_incremental_git": (
-        "the paper's S2 git-diff change model; ROADMAP item 4 puts it on the CLI"
-    ),
     "read_pol_lines_any_encoding": "the paper's S4 encoding fallback chain",
     "assert_dim_unambiguous": "an input check on the outside game lookup",
     "embedding_dup_pairs": (

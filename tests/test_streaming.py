@@ -1,12 +1,16 @@
-"""M7: incremental processing via streaming file source + checkpoint
-(reference S2/S3/EP2 — the git-diff loop re-expressed as Structured
-Streaming with Trigger.AvailableNow)."""
+"""Incremental processing (reference S2/S3/EP2): the (path, mtime) ledger
+runner, and the CLI's default run, which reads only the .pol files the
+last commit changed (``git diff --name-only HEAD~1 HEAD``) and falls back
+to a full scan when there are none."""
+
+import json
 
 import pytest
 
+from github_etl_pipeline_spark.__main__ import main
 from github_etl_pipeline_spark.sinks.upsert import read_store
 from github_etl_pipeline_spark.sources.lookup import prepare_dim
-from github_etl_pipeline_spark.streaming.incremental import run_incremental
+from github_etl_pipeline_spark.streaming.incremental import changed_pol_paths
 
 
 @pytest.fixture()
@@ -17,46 +21,10 @@ def dim_agg(spark):
     return prepare_dim(dim)
 
 
-def test_incremental_two_runs(spark, tmp_path, dim_agg):
-    corpus = tmp_path / "corpus"
-    corpus.mkdir()
-    ckpt = tmp_path / "ckpt"
-    store = tmp_path / "store"
-
-    (corpus / "Pool_0201_941.pol").write_text("100\n200\n")
-    n1 = run_incremental(spark, corpus, ckpt, store, dim_agg)
-    assert n1 >= 1
-    got1 = {r.source_file: r.size for r in read_store(spark, store).collect()}
-    assert got1 == {"Pool_0201_941.pol": 2}
-
-    # second run with a NEW file: only it is processed; old record preserved
-    (corpus / "Pool_0201_395.pol").write_text("50\n")
-    n2 = run_incremental(spark, corpus, ckpt, store, dim_agg)
-    assert n2 >= 1
-    got2 = {r.source_file: r.size for r in read_store(spark, store).collect()}
-    assert got2 == {"Pool_0201_941.pol": 2, "Pool_0201_395.pol": 1}
-
-    # third run, nothing new -> no batches with data, store unchanged
-    n3 = run_incremental(spark, corpus, ckpt, store, dim_agg)
-    got3 = {r.source_file: r.size for r in read_store(spark, store).collect()}
-    assert got3 == got2
-
-
-def test_incremental_kpis_match_batch(spark, tmp_path, dim_agg):
-    corpus = tmp_path / "corpus"
-    corpus.mkdir()
-    (corpus / "Pool_0201_941.pol").write_text("0\n100\n200\n300\n")
-    run_incremental(spark, corpus, tmp_path / "ck", tmp_path / "st", dim_agg)
-    row = spark.read.parquet(str(tmp_path / "st")).first()
-    # size=4, total=600, bet=25: rtp = 600/(4*25)*100 = 600.0
-    assert row.size == 4 and row.rtp == 600.0 and row.hit_frequency == 75.0
-
-
 def test_incremental_mtime_reprocesses_in_place_edit(spark, tmp_path, dim_agg):
     """The (path, mtime)-keyed ledger (run_incremental_mtime) must match
     the reference's git-diff change model: an IN-PLACE edit of an
-    already-processed file is detected and its KPI row updated — the
-    case the path-keyed streaming checkpoint cannot see."""
+    already-processed file is detected and its KPI row updated."""
     import os
     import time
 
@@ -149,18 +117,29 @@ def _git(repo, *args):
     )
 
 
-def test_incremental_git_processes_last_commit_churn(spark, tmp_path, dim_agg):
-    """run_incremental_git is the reference's LITERAL change log
+def _cli_run(spark, repo, out):
+    """One default CLI run over ``repo`` into ``out``: the number of files
+    it processed, or -1 when the last commit changed no .pol file it reads
+    (the full-scan fallback), and the upserted JSON document as
+    ``{source_file: size}``."""
+    assert main(["--repo-root", str(repo), "--output-dir", str(out), "--cpus", "8"]) == 0
+    n = json.loads((out / "_pipeline_summary.json").read_text())["files_processed"]
+    if changed_pol_paths(spark, repo) is None:
+        n = -1
+    doc = json.loads((out / "all_pools_data.json").read_text())
+    return n, {k: v["size"] for k, v in doc.items()}
+
+
+def test_incremental_git_processes_last_commit_churn(spark, tmp_path):
+    """The CLI's default run is the reference's LITERAL change log
     (etl/extract.py:55-80,160-211): one `git diff --name-only HEAD~1
     HEAD` call decides the file set — edited files re-processed,
     deleted files skipped, files outside the scan subdir ignored,
     full-scan fallback when the diff has no .pol files."""
-    from github_etl_pipeline_spark.streaming.incremental import run_incremental_git
-
     repo = tmp_path / "repo_g"
     pools = repo / "samples" / "pools2"
     pools.mkdir(parents=True)
-    store = tmp_path / "store_g"
+    out = tmp_path / "out_g"
 
     (pools / "Pool_0201_941.pol").write_text("100\n200\n")
     (pools / "Pool_0201_395.pol").write_text("50\n")
@@ -170,8 +149,8 @@ def test_incremental_git_processes_last_commit_churn(spark, tmp_path, dim_agg):
     _git(repo, "commit", "-qm", "c1")
 
     # single-commit repo: HEAD~1 does not exist -> git fails -> full scan
-    assert run_incremental_git(spark, repo, store, dim_agg=dim_agg) == -1
-    got1 = {r.source_file: r.size for r in read_store(spark, store).collect()}
+    n, got1 = _cli_run(spark, repo, out)
+    assert n == -1
     assert got1 == {
         "Pool_0201_941.pol": 2,
         "Pool_0201_395.pol": 1,
@@ -187,10 +166,10 @@ def test_incremental_git_processes_last_commit_churn(spark, tmp_path, dim_agg):
     _git(repo, "add", "-A")
     _git(repo, "commit", "-qm", "c2")
 
-    assert run_incremental_git(spark, repo, store, dim_agg=dim_agg) == 1
-    got2 = {r.source_file: r.size for r in read_store(spark, store).collect()}
-    # edited row upserted in place; untouched + deleted rows preserved
-    # (the reference never deletes store entries: upsert-only JSON)
+    n, got2 = _cli_run(spark, repo, out)
+    assert n == 1
+    # edited record upserted in place; untouched + deleted records
+    # preserved (the reference never deletes entries: upsert-only JSON)
     assert got2 == {
         "Pool_0201_941.pol": 4,
         "Pool_0201_395.pol": 1,
@@ -202,24 +181,22 @@ def test_incremental_git_processes_last_commit_churn(spark, tmp_path, dim_agg):
     (repo / "README.md").write_text("r")
     _git(repo, "add", "-A")
     _git(repo, "commit", "-qm", "c3")
-    assert run_incremental_git(spark, repo, store, dim_agg=dim_agg) == -1
-    got3 = {r.source_file: r.size for r in read_store(spark, store).collect()}
-    assert got3 == got2  # 777 row survives as history (upsert semantics)
+    n, got3 = _cli_run(spark, repo, out)
+    assert n == -1
+    assert got3 == got2  # 777 record survives as history (upsert semantics)
 
 
-def test_incremental_git_fallback_sees_in_place_edit(spark, tmp_path, dim_agg):
+def test_incremental_git_fallback_sees_in_place_edit(spark, tmp_path):
     """ADVICE r9 (medium): the FULL-SCAN fallback must also refresh the
     scan dir's cached file statuses. Sequence: full scan reads the corpus
     (statuses cached by the session FileStatusCache, TTL=-1), a later
     commit edits a .pol IN PLACE, the newest commit touches no .pol ->
     fallback re-reads the whole corpus — which must see the edited file
     at its NEW length, not the pinned stale one."""
-    from github_etl_pipeline_spark.streaming.incremental import run_incremental_git
-
     repo = tmp_path / "repo_f"
     pools = repo / "samples" / "pools2"
     pools.mkdir(parents=True)
-    store = tmp_path / "store_f"
+    out = tmp_path / "out_f"
 
     f = pools / "Pool_0201_941.pol"
     f.write_text("100\n200\n")
@@ -228,8 +205,9 @@ def test_incremental_git_fallback_sees_in_place_edit(spark, tmp_path, dim_agg):
     _git(repo, "commit", "-qm", "c1")
 
     # run 1: single-commit repo -> full scan; caches the file's status
-    assert run_incremental_git(spark, repo, store, dim_agg=dim_agg) == -1
-    assert read_store(spark, store).first().size == 2
+    n, got = _cli_run(spark, repo, out)
+    assert n == -1
+    assert got == {"Pool_0201_941.pol": 2}
 
     # commit 2 edits the file in place (NOT processed — simulates a
     # missed run); commit 3 touches no .pol -> the next run falls back
@@ -240,82 +218,32 @@ def test_incremental_git_fallback_sees_in_place_edit(spark, tmp_path, dim_agg):
     _git(repo, "add", "-A")
     _git(repo, "commit", "-qm", "c3 no pol")
 
-    assert run_incremental_git(spark, repo, store, dim_agg=dim_agg) == -1
-    got = {r.source_file: r.size for r in read_store(spark, store).collect()}
+    n, got = _cli_run(spark, repo, out)
+    assert n == -1
     assert got == {"Pool_0201_941.pol": 5}, (
         "fallback must read the edited file at its new length, not the "
         "FileStatusCache-pinned stale one"
     )
 
 
-def test_incremental_git_base_ref_covers_multi_commit_gap(spark, tmp_path, dim_agg):
-    """ADVICE r9 (low): the default HEAD~1 diff assumes run-once-per-
-    commit; a caller that missed a commit passes the last-processed ref
-    as base_ref and the diff covers the whole gap."""
-    from github_etl_pipeline_spark.streaming.incremental import run_incremental_git
-
-    repo = tmp_path / "repo_b"
-    pools = repo / "samples" / "pools2"
-    pools.mkdir(parents=True)
-    store = tmp_path / "store_b"
-
-    (pools / "Pool_0201_941.pol").write_text("100\n")
-    _git(repo, "init", "-q")
-    _git(repo, "add", "-A")
-    _git(repo, "commit", "-qm", "c1")
-    assert run_incremental_git(spark, repo, store, dim_agg=dim_agg) == -1
-
-    # two commits land between runs, each adding one pool
-    (pools / "Pool_0201_395.pol").write_text("50\n60\n")
-    _git(repo, "add", "-A")
-    _git(repo, "commit", "-qm", "c2")
-    (pools / "Pool_0201_777.pol").write_text("1\n2\n3\n")
-    _git(repo, "add", "-A")
-    _git(repo, "commit", "-qm", "c3")
-
-    # default HEAD~1 sees only c3's churn (the documented reference
-    # cadence assumption) ...
-    assert run_incremental_git(spark, repo, store, dim_agg=dim_agg) == 1
-    got = {r.source_file: r.size for r in read_store(spark, store).collect()}
-    assert got == {"Pool_0201_941.pol": 1, "Pool_0201_777.pol": 3}
-
-    # ... while base_ref covering the gap processes BOTH commits' files
-    assert (
-        run_incremental_git(
-            spark, repo, store, dim_agg=dim_agg, base_ref="HEAD~2"
-        )
-        == 2
-    )
-    got2 = {r.source_file: r.size for r in read_store(spark, store).collect()}
-    assert got2 == {
-        "Pool_0201_941.pol": 1,
-        "Pool_0201_395.pol": 2,
-        "Pool_0201_777.pol": 3,
-    }
-
-
-def test_incremental_git_out_of_subdir_match_projects_repo_relative(
-    spark, tmp_path, dim_agg
-):
+def test_incremental_git_out_of_subdir_match_projects_repo_relative(spark, tmp_path):
     """ADVICE r9 (low): the subdir filter is a reference-faithful posix
     SUBSTRING test (etl/extract.py:176-180), so vendor/samples/pools2/x.pol
     matches — its source_file must project relative to repo_root
     (mirroring the reference's relative_to(repo_root), etl/extract.py:125),
     never as a leaked absolute path."""
-    from github_etl_pipeline_spark.streaming.incremental import run_incremental_git
-
     repo = tmp_path / "repo_v"
     pools = repo / "samples" / "pools2"
     pools.mkdir(parents=True)
     vendor = repo / "vendor" / "samples" / "pools2"
     vendor.mkdir(parents=True)
-    store = tmp_path / "store_v"
+    out = tmp_path / "out_v"
 
     (pools / "Pool_0201_941.pol").write_text("100\n")
     _git(repo, "init", "-q")
     _git(repo, "add", "-A")
     _git(repo, "commit", "-qm", "c1")
-    assert run_incremental_git(spark, repo, store, dim_agg=dim_agg) == -1
+    assert _cli_run(spark, repo, out)[0] == -1
 
     # commit 2 adds an OUT-OF-SUBDIR file that still matches the
     # substring filter
@@ -323,44 +251,40 @@ def test_incremental_git_out_of_subdir_match_projects_repo_relative(
     _git(repo, "add", "-A")
     _git(repo, "commit", "-qm", "c2 vendor")
 
-    assert run_incremental_git(spark, repo, store, dim_agg=dim_agg) == 1
-    got = {r.source_file: r.size for r in read_store(spark, store).collect()}
+    n, got = _cli_run(spark, repo, out)
+    assert n == 1
     assert got == {
         "Pool_0201_941.pol": 1,
         "vendor/samples/pools2/Pool_0201_395.pol": 2,
     }
 
 
-def test_incremental_git_out_of_subdir_in_place_edit_not_stale(
-    spark, tmp_path, dim_agg
-):
+def test_incremental_git_out_of_subdir_in_place_edit_not_stale(spark, tmp_path):
     """ADVICE r10 (low): refreshByPath(scan_dir) only drops cached file
     statuses UNDER the scan subdir, but out-of-subdir substring matches
     (vendor/samples/pools2/x.pol) are read from outside that prefix —
     an in-place edit of one must not be read at its stale
     FileStatusCache-pinned length on the next run."""
-    from github_etl_pipeline_spark.streaming.incremental import run_incremental_git
-
     repo = tmp_path / "repo_vs"
     pools = repo / "samples" / "pools2"
     pools.mkdir(parents=True)
     vendor = repo / "vendor" / "samples" / "pools2"
     vendor.mkdir(parents=True)
-    store = tmp_path / "store_vs"
+    out = tmp_path / "out_vs"
 
     (pools / "Pool_0201_941.pol").write_text("100\n")
     _git(repo, "init", "-q")
     _git(repo, "add", "-A")
     _git(repo, "commit", "-qm", "c1")
-    assert run_incremental_git(spark, repo, store, dim_agg=dim_agg) == -1
+    assert _cli_run(spark, repo, out)[0] == -1
 
     # commit 2 adds the vendor pool; processing it caches its status
     vf = vendor / "Pool_0201_395.pol"
     vf.write_text("50\n60\n")
     _git(repo, "add", "-A")
     _git(repo, "commit", "-qm", "c2 vendor add")
-    assert run_incremental_git(spark, repo, store, dim_agg=dim_agg) == 1
-    got = {r.source_file: r.size for r in read_store(spark, store).collect()}
+    n, got = _cli_run(spark, repo, out)
+    assert n == 1
     assert got["vendor/samples/pools2/Pool_0201_395.pol"] == 2
 
     # commit 3 edits it IN PLACE (longer) — the next run re-reads it and
@@ -368,44 +292,36 @@ def test_incremental_git_out_of_subdir_in_place_edit_not_stale(
     vf.write_text("50\n60\n70\n80\n90\n")
     _git(repo, "add", "-A")
     _git(repo, "commit", "-qm", "c3 vendor edit")
-    assert run_incremental_git(spark, repo, store, dim_agg=dim_agg) == 1
-    got = {r.source_file: r.size for r in read_store(spark, store).collect()}
+    n, got = _cli_run(spark, repo, out)
+    assert n == 1
     assert got["vendor/samples/pools2/Pool_0201_395.pol"] == 5, (
         "out-of-subdir in-place edit read at stale cached length"
     )
 
 
-def test_incremental_git_outside_repo_falls_back(spark, tmp_path, dim_agg):
+def test_incremental_git_outside_repo_falls_back(spark, tmp_path):
     """No git repo at all -> changed_paths_from_git returns None -> the
-    full-scan fallback still produces a complete store (S3)."""
-    from github_etl_pipeline_spark.streaming.incremental import (
-        changed_paths_from_git,
-        run_incremental_git,
-    )
+    full-scan fallback still produces a complete document (S3)."""
+    from github_etl_pipeline_spark.streaming.incremental import changed_paths_from_git
 
     root = tmp_path / "plain"
     pools = root / "samples" / "pools2"
     pools.mkdir(parents=True)
     (pools / "Pool_0201_941.pol").write_text("100\n")
     assert changed_paths_from_git(root) is None
-    assert run_incremental_git(spark, root, tmp_path / "store_p", dim_agg=dim_agg) == -1
-    got = {
-        r.source_file: r.size
-        for r in read_store(spark, tmp_path / "store_p").collect()
-    }
+    n, got = _cli_run(spark, root, tmp_path / "out_p")
+    assert n == -1
     assert got == {"Pool_0201_941.pol": 1}
 
 
-def test_incremental_git_skips_excluded_changes(spark, tmp_path, dim_agg):
+def test_incremental_git_skips_excluded_changes(spark, tmp_path):
     """A changed .pol under an excluded directory is not processed, and a
     diff whose only .pol change is excluded takes the full-scan fallback
     (the reference filters before deciding, etl/extract.py:197-199)."""
-    from github_etl_pipeline_spark.streaming.incremental import run_incremental_git
-
     repo = tmp_path / "repo_x"
     pools = repo / "samples" / "pools2"
     (pools / "node_modules").mkdir(parents=True)
-    store = tmp_path / "store_x"
+    out = tmp_path / "out_x"
 
     (pools / "Pool_0201_941.pol").write_text("100\n")
     _git(repo, "init", "-q")
@@ -415,28 +331,26 @@ def test_incremental_git_skips_excluded_changes(spark, tmp_path, dim_agg):
     (pools / "node_modules" / "Pool_0201_111.pol").write_text("1\n2\n")
     _git(repo, "add", "-A")
     _git(repo, "commit", "-qm", "c2 excluded only")
-    assert run_incremental_git(spark, repo, store, dim_agg=dim_agg) == -1
+    assert _cli_run(spark, repo, out)[0] == -1
 
     (pools / "node_modules" / "Pool_0201_111.pol").write_text("1\n2\n3\n")
     (pools / "Pool_0201_395.pol").write_text("50\n")
     _git(repo, "add", "-A")
     _git(repo, "commit", "-qm", "c3 mixed")
-    assert run_incremental_git(spark, repo, store, dim_agg=dim_agg) == 1
-    got = {r.source_file: r.size for r in read_store(spark, store).collect()}
+    n, got = _cli_run(spark, repo, out)
+    assert n == 1
     assert got == {"Pool_0201_941.pol": 1, "Pool_0201_395.pol": 1}
 
 
 def test_incremental_reprocesses_edit_under_percent_escaped_root(spark, tmp_path, dim_agg):
     """A literal ``%25`` in a directory name is part of the name: the
-    mtime churn read and the git-mode read take each changed path as the
-    file system names it, never percent-decoded a second time."""
+    mtime churn read and the CLI's changed-files read take each changed
+    path as the file system names it, never percent-decoded a second
+    time."""
     import os
     import time
 
-    from github_etl_pipeline_spark.streaming.incremental import (
-        run_incremental_git,
-        run_incremental_mtime,
-    )
+    from github_etl_pipeline_spark.streaming.incremental import run_incremental_mtime
 
     corpus = tmp_path / "root %25 x"
     corpus.mkdir()
@@ -459,11 +373,11 @@ def test_incremental_reprocesses_edit_under_percent_escaped_root(spark, tmp_path
     _git(repo, "init", "-q")
     _git(repo, "add", "-A")
     _git(repo, "commit", "-qm", "c1")
-    git_store = tmp_path / "store_pct_git"
-    assert run_incremental_git(spark, repo, git_store, dim_agg=dim_agg) == -1
+    git_out = tmp_path / "out_pct_git"
+    assert _cli_run(spark, repo, git_out)[0] == -1
     g.write_text("100\n200\n300\n400\n")
     _git(repo, "add", "-A")
     _git(repo, "commit", "-qm", "c2 edit")
-    assert run_incremental_git(spark, repo, git_store, dim_agg=dim_agg) == 1
-    got = {r.source_file: r.size for r in read_store(spark, git_store).collect()}
+    n, got = _cli_run(spark, repo, git_out)
+    assert n == 1
     assert got == {"Pool_0201_941.pol": 4}
