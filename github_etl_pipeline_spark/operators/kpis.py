@@ -19,11 +19,11 @@ Execution shape (the 100-TB story): no Spark operator sees a line.
 one Arrow pass at the scan leaf, so ~1M lines/pool reach Spark as the
 pool's few dozen distinct texts (~30 in the reference corpus), and the
 tokenizer runs once per distinct text. ``pool_distribution`` regroups
-those counts by ``(source_file, game_win)`` (a plain ``parse_pol_lines``
-frame is counted there instead). The key is ``source_file`` alone, in
-the URI form the scan lists it in. ONE per-pool aggregate over that distribution
-yields the pool stats and collects the pool's valid ``(game_win, cnt)``
-pairs; the key is decoded and the other pool key columns come from
+those counts by ``(source_file, game_win)``; a ``parse_pol_lines`` frame
+carries the same ``cnt``, and a row without one counts once. The key is
+``source_file`` alone, in the URI form the scan lists it in. ONE per-pool
+aggregate over that distribution yields the pool stats and collects the
+pool's valid ``(game_win, cnt)`` pairs; the key is decoded and the other pool key columns come from
 ``sources.pol.pool_identity`` once per pool; after the broadcast join
 of the prepared dimension (a local relation: broadcasting it is one
 small job, a ``BroadcastExchange`` over a ``LocalTableScan``),

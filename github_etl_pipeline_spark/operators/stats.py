@@ -11,10 +11,16 @@ One row per pool with:
   value_distribution array<struct(bucket, count, pct)>             (R14)
   first_k / last_k   array<long> in file order                     (R15)
 
-Execution shape: same single (pool, game_win, type_code, bucket) style
-aggregates as the KPI path — everything reduces via partial aggregation
-before shuffling; the first/last-k sample is a window over a top-k-
-filtered projection, not a full sort.
+Execution shape: the input is ``sources.pol``'s one reader, a row per
+distinct valid text of a pool file with its line count ``cnt``, so every
+aggregate is weighted by ``cnt`` (the median is ``percentile(game_win,
+0.5, cnt)``, what ``median`` gives on per-line rows) and no operator sees
+a line. Three aggregates — per pool, per (pool, type_code) and per (pool,
+bucket) — are joined on the pool. The per-pool one also collects the
+pool's ``(game_win, cnt)`` pairs, for a two-pass standard deviation, and
+each text's first and last ``K`` line indexes, whose ``K`` smallest and
+largest give first_k and last_k. The pairs list holds one element per
+distinct text and the index list at most ``2 * K``, never one per line.
 """
 
 from __future__ import annotations
@@ -23,69 +29,81 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from github_etl_pipeline_spark.functions.rounding import rounder
-from github_etl_pipeline_spark.sources.pol import POOL_KEY_COLS, decode_uri_path, pool_identity
+from github_etl_pipeline_spark.sources.pol import (
+    K,
+    POOL_KEY_COLS,
+    decode_uri_path,
+    pool_identity,
+)
 
 # README.md:94-98 bucket edges: 0-500, 501-1000, 1001-2000, then wider
 BUCKET_EDGES = [500, 1000, 2000, 5000, 10000]
 
 
-def _bucket_expr(col):
-    """The R14 value bucket of an integer ``col``: ``<0``, then one
-    ``lo-hi`` label per edge, then ``10001+``."""
-    c = F.col(col) if isinstance(col, str) else col
-    out = F.when(c < 0, "<0")
-    lo = 0
+def _bucket_expr(col: str) -> str:
+    """SQL text: the R14 value bucket of an integer column ``col``:
+    ``<0``, then one ``lo-hi`` label per edge, then ``10001+``."""
+    out, lo = f"CASE WHEN {col} < 0 THEN '<0'", 0
     for hi in BUCKET_EDGES:
-        out = out.when(c <= hi, f"{lo}-{hi}")
+        out += f" WHEN {col} <= {hi} THEN '{lo}-{hi}'"
         lo = hi + 1
-    return out.otherwise(f"{BUCKET_EDGES[-1] + 1}+")
+    return f"{out} ELSE '{lo}+' END"
 
 
-def pool_extended_stats(parsed: DataFrame, k: int = 10, rounding: str = "bankers") -> DataFrame:
-    """parsed — output of ``parse_pol_lines(..., keep_invalid=False)`` with
-    an ``_order`` column when first/last-k sampling is wanted (see
-    ``parse_pol_lines``'s ``with_order`` flag)."""
+def pool_extended_stats(parsed: DataFrame, rounding: str = "bankers") -> DataFrame:
+    """parsed — ``parse_pol_lines(read_pol_lines(...))``: the valid texts
+    of each pool file with their ``cnt`` and ``positions``."""
     rnd = rounder(rounding)
-
+    n = F.col("total_records")
+    mean = F.col("total_sum") / n
     # keyed on source_file alone (URI form); the other pool key columns
     # are derived from it once per pool at the end, as in pool_kpis
     summary = parsed.groupBy("source_file").agg(
-        F.count(F.lit(1)).alias("total_records"),
-        F.sum("game_win").alias("total_sum"),
+        F.expr("sum(cnt) AS total_records"),
+        F.expr("sum(game_win * cnt) AS total_sum"),
         F.min("game_win").alias("min_value"),
         F.max("game_win").alias("max_value"),
-        rnd(F.avg("game_win"), 2).alias("avg_value"),
-        F.median("game_win").alias("median_value"),
-        rnd(F.stddev("game_win"), 2).alias("std_value"),
+        F.expr("percentile(game_win, 0.5, cnt) AS median_value"),
         F.count_distinct("type_code").alias("unique_types"),
+        F.expr("collect_list(struct(game_win, cnt)) AS _dist"),
+        F.expr(
+            "array_sort(flatten(collect_list(transform(positions, p -> struct(p, game_win)))))"
+            " AS _at"
+        ),
+    )
+    # two-pass sample standard deviation over the (game_win, cnt) pairs;
+    # square via multiplication, not pow(), as in pool_kpis' volatility
+    squares = F.aggregate(
+        "_dist",
+        F.lit(0.0),
+        lambda acc, x: acc + x["cnt"] * (x["game_win"] - mean) * (x["game_win"] - mean),
+    )
+    summary = summary.select(
+        "source_file",
+        "total_records",
+        "total_sum",
+        "min_value",
+        "max_value",
+        rnd(mean, 2).alias("avg_value"),
+        "median_value",
+        F.when(n > 1, rnd(F.sqrt(squares / (n - 1)), 2)).alias("std_value"),
+        "unique_types",
+        "_at",
     )
 
     # R12 + R13 from ONE (pool, type_code) aggregate
-    td = parsed.where(F.col("type_code").isNotNull()).groupBy("source_file", "type_code").agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum("game_win").alias("tsum"),
-        F.min("game_win").alias("tmin"),
-        F.max("game_win").alias("tmax"),
-        rnd(F.avg("game_win"), 2).alias("tavg"),
+    td = parsed.where("type_code IS NOT NULL").groupBy("source_file", "type_code").agg(
+        F.expr("sum(cnt) AS cnt"),
+        F.expr("sum(game_win * cnt) AS total"),
+        F.min("game_win").alias("min"),
+        F.max("game_win").alias("max"),
     )
     type_stats = td.groupBy("source_file").agg(
-        F.map_from_entries(
-            F.array_sort(F.collect_list(F.struct("type_code", "cnt")))
-        ).alias("type_distribution"),
-        F.reverse(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("cnt"),
-                        F.col("type_code"),
-                        F.col("tsum").alias("total"),
-                        F.col("tmin").alias("min"),
-                        F.col("tmax").alias("max"),
-                        F.col("tavg").alias("avg"),
-                    )
-                )
-            )
-        ).alias("_ts"),
+        F.expr(
+            "map_from_entries(array_sort(collect_list(struct(type_code, cnt))))"
+            " AS type_distribution"
+        ),
+        F.expr("reverse(array_sort(collect_list(struct(cnt, type_code, total, min, max)))) AS _ts"),
         F.sum("cnt").alias("_typed_records"),
     )
     type_stats = type_stats.select(
@@ -99,18 +117,18 @@ def pool_extended_stats(parsed: DataFrame, k: int = 10, rounding: str = "bankers
                 s["total"].alias("total"),
                 s["min"].alias("min"),
                 s["max"].alias("max"),
-                s["avg"].alias("avg"),
+                rnd(s["total"] / s["cnt"], 2).alias("avg"),
                 F.round(s["cnt"] * 100.0 / F.col("_typed_records"), 2).alias("pct"),
             ),
         ).alias("type_statistics"),
     )
 
     # R14 histogram from one (pool, bucket) aggregate
-    vb = parsed.groupBy("source_file", _bucket_expr("game_win").alias("bucket")).agg(
-        F.count(F.lit(1)).alias("cnt")
+    vb = parsed.groupBy("source_file", F.expr(f"{_bucket_expr('game_win')} AS bucket")).agg(
+        F.expr("sum(cnt) AS cnt")
     )
     hist = vb.groupBy("source_file").agg(
-        F.array_sort(F.collect_list(F.struct("bucket", "cnt"))).alias("_hb"),
+        F.expr("array_sort(collect_list(struct(bucket, cnt))) AS _hb"),
         F.sum("cnt").alias("_n"),
     )
     hist = hist.select(
@@ -126,38 +144,15 @@ def pool_extended_stats(parsed: DataFrame, k: int = 10, rounding: str = "bankers
     )
 
     out = summary.join(type_stats, "source_file", "left").join(hist, "source_file", "left")
-
-    if "_order" in parsed.columns:
-        wf = Window.partitionBy("source_file").orderBy(F.col("_order").asc())
-        wl = Window.partitionBy("source_file").orderBy(F.col("_order").desc())
-        ranked = parsed.select(
-            "source_file",
-            "game_win",
-            "_order",
-            F.row_number().over(wf).alias("_rf"),
-            F.row_number().over(wl).alias("_rl"),
-        ).where((F.col("_rf") <= k) | (F.col("_rl") <= k))
-        samples = ranked.groupBy("source_file").agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.when(F.col("_rf") <= k, F.struct("_order", "game_win")))
-                ),
-                lambda s: s["game_win"],
-            ).alias("first_k"),
-            F.reverse(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.when(F.col("_rl") <= k, F.struct("_rl", "game_win")))
-                    ),
-                    lambda s: s["game_win"],
-                )
-            ).alias("last_k"),
-        )
-        out = out.join(samples, "source_file", "left")
-
     # per-pool output keys are decoded paths, as in pool_kpis
     out = pool_identity(out.withColumn("source_file", decode_uri_path("source_file")))
-    return out.select(*POOL_KEY_COLS, *[c for c in out.columns if c not in POOL_KEY_COLS])
+    # R15: the game_win of the pool's K first and K last valid lines
+    return out.selectExpr(
+        *POOL_KEY_COLS,
+        *[c for c in out.columns if c not in POOL_KEY_COLS and c != "_at"],
+        f"transform(slice(_at, 1, {K}), s -> s.game_win) AS first_k",
+        f"transform(slice(_at, greatest(size(_at) - {K - 1}, 1), {K}), s -> s.game_win) AS last_k",
+    )
 
 
 def streak_summary(

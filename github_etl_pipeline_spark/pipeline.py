@@ -54,11 +54,10 @@ def run_pipeline(
     # one scan: blank and invalid lines count under game_win NULL, so raw
     # line counts AND size-0 records for unparseable files come out of the
     # same aggregate (no separate inventory pass over the data)
-    reader = spark.read.format("binaryFile")
     if paths is None:
-        raw, fallback_root = scan_pol_files(reader, str(scan_dir)), None
+        raw, fallback_root = scan_pol_files(spark, str(scan_dir)), None
     else:
-        raw, fallback_root = reader.load(paths), str(repo_root)
+        raw, fallback_root = spark.read.format("binaryFile").load(paths), str(repo_root)
     counted = count_pol_files(raw, str(scan_dir), fallback_root=fallback_root)
 
     if dim is None:

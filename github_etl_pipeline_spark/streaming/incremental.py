@@ -75,7 +75,7 @@ def run_incremental_mtime(
     # contract, so drop cached listings under the scan root first.
     spark.catalog.refreshByPath(scan_dir)
     # metadata-only listing: binaryFile with content pruned reads no bytes
-    listing = scan_pol_files(spark.read.format("binaryFile"), scan_dir).select(
+    listing = scan_pol_files(spark, scan_dir).select(
         F.col("path"), F.col("modificationTime").alias("mtime")
     )
     ledger_path = Path(ledger_path)
@@ -96,7 +96,7 @@ def run_incremental_mtime(
         n_changed = listing.count()
         if n_changed == 0:
             return 0
-        raw = scan_pol_files(spark.read.format("binaryFile"), scan_dir)
+        raw = scan_pol_files(spark, scan_dir)
     # a merge into an existing store runs two actions over the records
     # (the touched buckets, then the write): persist the pool-sized
     # records so the scan and shuffle under them run once

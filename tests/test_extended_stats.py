@@ -13,8 +13,7 @@ from github_etl_pipeline_spark.sources.pol import parse_pol_lines, read_pol_line
 @pytest.fixture(scope="module")
 def stats_row(spark):
     lines = read_pol_lines(spark, "/root/reference/samples/pools2")
-    parsed = parse_pol_lines(lines, with_order=True)
-    df = pool_extended_stats(parsed)
+    df = pool_extended_stats(parse_pol_lines(lines))
     rows = [r for r in df.collect() if r.source_file == "Pool_0201_395.pol"]
     assert len(rows) == 1
     return rows[0]
@@ -96,6 +95,18 @@ SMALL_POOL = [
 # longer than 2k lines, with one blank and one invalid line inside
 LONG_POOL = [f"{(i * 37) % 3000 + 1} TB{i % 3 + 1}" for i in range(2500)]
 LONG_POOL[1200:1200] = ["", "x TB1"]
+# a leading UTF-8 BOM: the reference decodes utf-8, keeps U+FEFF and so
+# drops the first line
+BOM_POOL = ["\ufeff300 TB1", "200 TB2", "300 TB1"]
+# not valid UTF-8, so read as latin-1: a non-ASCII type code
+LATIN1_POOL = ["100 T\xe91", "200 T\xe91", "50 TB1", "notanint \xe9"]
+# one text repeated at the head and the tail between other values, its
+# lines ended by "\r\n", "\r" and "\n" in turn
+MIXED_POOL = [
+    *["7 TB1" if i % 2 == 0 else f"{100 + i} TB2" for i in range(30)],
+    *[f"{i} TF1" for i in range(500, 540)],
+    *["7 TB1" if i % 2 == 0 else f"{200 + i} TB3" for i in range(30)],
+]
 
 
 def _parse(line):
@@ -176,14 +187,20 @@ def test_extended_stats_hand_worked_corpus(spark, tmp_path):
         "Pool_0201_395.pol": SMALL_POOL,
         "Pool_0300_941.pol": LONG_POOL,
         "Pool_0400_292.pol": ["-5 TB1", "100 TB1"],
+        "Pool_0500_941.pol": BOM_POOL,
+        "Pool_0600_292.pol": LATIN1_POOL,
+        "Pool_0700_395.pol": MIXED_POOL,
     }
     for name, lines in corpus.items():
-        (tmp_path / name).write_text("\n".join(lines) + "\n")
+        if name == "Pool_0600_292.pol":
+            data = "".join(f"{line}\n" for line in lines).encode("latin-1")
+        else:
+            ends = ("\r\n", "\r", "\n") if name == "Pool_0700_395.pol" else ("\n",)
+            data = "".join(f"{line}{ends[i % len(ends)]}" for i, line in enumerate(lines))
+            data = data.encode("utf-8")
+        (tmp_path / name).write_bytes(data)
     lines = read_pol_lines(spark, str(tmp_path))
-    got = {
-        r.source_file: r
-        for r in pool_extended_stats(parse_pol_lines(lines, with_order=True)).collect()
-    }
+    got = {r.source_file: r for r in pool_extended_stats(parse_pol_lines(lines)).collect()}
     assert set(got) == set(corpus)
     for name, lines in corpus.items():
         r, want = got[name], _expected(lines)
@@ -210,6 +227,11 @@ def test_extended_stats_hand_worked_corpus(spark, tmp_path):
     assert [
         (b.bucket, b["count"]) for b in got["Pool_0400_292.pol"].value_distribution
     ] == [("0-500", 1), ("<0", 1)]
+    assert got["Pool_0500_941.pol"].total_records == 2
+    assert dict(got["Pool_0600_292.pol"].type_distribution) == {"T\xe91": 2, "TB1": 1}
+    mixed = got["Pool_0700_395.pol"]
+    assert list(mixed.first_k) == [7, 101, 7, 103, 7, 105, 7, 107, 7, 109]
+    assert list(mixed.last_k) == [7, 221, 7, 223, 7, 225, 7, 227, 7, 229]
 
 
 def test_bm25_ranked_retrieval_matches_reference_formula(spark):

@@ -1,10 +1,11 @@
-"""The per-file line counter (``sources.pol.count_pol_files``): parity with
-the line-level text path on a hostile corpus, through the batch pipeline,
-the CLI and the mtime runner, the one intended output change (a leading
-BOM), and the design it depends on: workers need not import the package,
-a file is read whole or not at all, and the Arrow node sits at the scan
-leaf."""
+"""The one pool reader (``sources.pol.count_pol_files``): its counts
+against a plain-Python rendition of the reference's read and parse rules
+on a hostile and a generated corpus, through the batch pipeline, the CLI
+and the mtime runner, the leading-BOM rule, and the design it depends on:
+workers need not import the package, a file is read whole or not at all,
+and the Arrow node sits at the scan leaf."""
 
+import importlib
 import json
 import os
 import re
@@ -21,16 +22,12 @@ from github_etl_pipeline_spark.operators.kpis import pool_distribution
 from github_etl_pipeline_spark.pipeline import run_pipeline
 from github_etl_pipeline_spark.sinks.upsert import read_store
 from github_etl_pipeline_spark.sources.lookup import prepare_dim
-from github_etl_pipeline_spark.sources.pol import (
-    count_pol_files,
-    parse_pol_lines,
-    read_pol_lines,
-    scan_pol_files,
-)
+from github_etl_pipeline_spark.sources.pol import count_pol_files, parse_pol_lines, scan_pol_files
 from github_etl_pipeline_spark.streaming.incremental import (
     changed_pol_paths,
     run_incremental_mtime,
 )
+from test_pol_parse import _reference_decode_chain
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DIM_SCHEMA = "Game string, Game_id string, Pool_id string, Bet double"
@@ -100,27 +97,115 @@ def _cli(root, out):
     return _document(out)
 
 
-def test_counts_match_the_text_line_path(spark, hostile):
-    raw = scan_pol_files(spark.read.format("binaryFile"), str(hostile))
-    counted = count_pol_files(raw, str(hostile))
-    got = {
-        (r.source_file, r.game_win): r.cnt
-        for r in pool_distribution(counted, ["source_file"]).collect()
+#: Where the Python rules below (``str.split``, ``int``) and Spark's (``trim``,
+#: a ``\s+`` split, ``try_cast``) part ways, by byte; no corpus here holds
+#: one in such a place. Each line maps to its (Python, Spark) game_win.
+#:   * ISO controls 0x00-0x08, 0x0e-0x1b and 0x7f next to a number:
+#:     ``try_cast`` strips them, ``int`` fails.
+#:   * 0x09, 0x0b and 0x0c before the first token: ``str.split`` skips
+#:     them; ``trim`` strips only spaces, so the first token is empty.
+#:   * 0x1c-0x1f, and 0x85 and 0xa0 of a latin-1 file: whitespace to
+#:     ``str.split``, not to ``\s``.
+#:   * ``_`` between digits and non-ASCII decimal digits: ``int`` reads
+#:     them, ``try_cast`` does not.
+P1_DIFFERENCES = {
+    "\x005 X 1": (None, 6),
+    "5 X 1\x7f": (5, 6),
+    "\t5 X 1": (6, None),
+    "5 X\x1c1": (6, 5),
+    "5\xa0 X 1": (6, None),
+    "1_000": (1000, None),
+    "\u0663": (3, None),
+}
+
+
+def _int64(token):
+    try:
+        value = int(token)
+    except ValueError:
+        return None
+    return value if -(2**63) <= value < 2**63 else None
+
+
+def _python_game_win(line: str):
+    """P1 in plain Python (etl/transform.py:61-95), with the int64 rule:
+    a token or a sum that leaves int64 is not a number."""
+    toks = line.split()
+    win = _int64(toks[0]) if toks else None
+    if win is None:
+        return None
+    add = _int64(toks[2]) if len(toks) > 2 else None
+    return _int64(win + (add or 0))
+
+
+def _python_counts(files: dict[str, bytes]):
+    """Per file ``(line_count, size, total_win)`` and per ``(file,
+    game_win)`` line counts, by ``bytes.splitlines`` and the reference's
+    decode chain (CR and LF are the same byte in UTF-8 and latin-1)."""
+    per_file, dist = {}, {}
+    for rel, data in files.items():
+        if not data:  # Spark's listing leaves 0-byte files out
+            continue
+        text = _reference_decode_chain(data)
+        codec = "utf-8" if text == data.decode("utf-8", "replace") else "latin-1"
+        wins = [_python_game_win(line.decode(codec)) for line in data.splitlines()]
+        valid = [w for w in wins if w is not None]
+        per_file[rel] = (len(wins), len(valid), sum(valid) if valid else None)
+        for w in wins:
+            dist[(rel, w)] = dist.get((rel, w), 0) + 1
+    return per_file, dist
+
+
+def _spark_counts(spark, root):
+    counted = count_pol_files(scan_pol_files(spark, str(root)), str(root))
+    per_file = counted.groupBy("source_file").agg(
+        F.expr("sum(cnt) AS line_count"),
+        F.expr("coalesce(sum(CASE WHEN game_win IS NOT NULL THEN cnt END), 0) AS size"),
+        F.expr("sum(game_win * cnt) AS total_win"),
+        F.count("*").alias("texts"),
+    )
+    dist = pool_distribution(counted, ["source_file"]).collect()
+    return {r.source_file: r for r in per_file.collect()}, {
+        (r.source_file, r.game_win): r.cnt for r in dist
     }
-    lines = parse_pol_lines(read_pol_lines(spark, str(hostile)), keep_invalid=True)
-    want = {
-        (r.source_file, r.game_win): r.cnt
-        for r in pool_distribution(lines, ["source_file"]).collect()
-    }
-    assert got == want
-    # every line counted, one row per distinct text
-    per_file = counted.groupBy("source_file").agg(F.sum("cnt").alias("n"), F.count("*").alias("r"))
-    rows = {r.source_file: r for r in per_file.collect()}
-    assert {k: r.n for k, r in rows.items()} == KEPT
-    distinct = {k: len(set(v.splitlines())) for k, v in HOSTILE.items() if k in KEPT}
-    assert {k: r.r for k, r in rows.items()} == distinct
+
+
+def _plan_corpus(root, monkeypatch):
+    """A small ``perfbench`` corpus (FIXTURES A1/A2) written under ``root``."""
+    monkeypatch.syspath_prepend(os.path.join(REPO, "perfbench"))
+    pol_corpus = importlib.import_module("pol_corpus")
+    files = pol_corpus.plan_corpus(3, 4, 800)
+    pol_corpus.write_corpus(str(root), files, 3)
+    return {f.rel_path: (root / f.rel_path).read_bytes() for f in files}
+
+
+def test_counts_match_a_python_oracle(spark, hostile, tmp_path, monkeypatch):
+    generated = _plan_corpus(tmp_path / "gen", monkeypatch)
+    for root, files in ((hostile, HOSTILE), (tmp_path / "gen", generated)):
+        want_files, want_dist = _python_counts(
+            {k: v for k, v in files.items() if not k.startswith((".git/", "etl/"))}
+        )
+        got_files, got_dist = _spark_counts(spark, root)
+        assert {k: (r.line_count, r.size, r.total_win) for k, r in got_files.items()} == want_files
+        assert got_dist == want_dist
+        # one row per distinct text, whatever terminator ends its lines
+        texts = {k: len(set(files[k].splitlines())) for k in want_files}
+        assert {k: r.texts for k, r in got_files.items()} == texts
     # the int64 edge: both overflowing sums count as lines, not as wins
-    assert got[("Pool_0107_941.pol", None)] == 2 and got[("Pool_0107_941.pol", 4)] == 1
+    assert _spark_counts(spark, hostile)[1][("Pool_0107_941.pol", None)] == 2
+
+
+def test_p1_differences_are_where_they_are_named(spark):
+    lines = list(P1_DIFFERENCES)
+    df = spark.createDataFrame(
+        [(line, f"Pool_{i}_941.pol") for i, line in enumerate(lines)],
+        "value string, source_file string",
+    )
+    spark_wins = {
+        int(r.pool_id): r.game_win for r in parse_pol_lines(df, keep_invalid=True).collect()
+    }
+    got = {line: (_python_game_win(line), spark_wins[i]) for i, line in enumerate(lines)}
+    assert got == P1_DIFFERENCES
 
 
 def test_incremental_runners_store_the_batch_records(spark, tmp_path, hostile, dim, monkeypatch):
@@ -167,8 +252,7 @@ def test_incremental_runners_store_the_batch_records(spark, tmp_path, hostile, d
 
 def test_leading_bom_stays_in_the_first_line(spark, tmp_path, dim):
     """The reference decodes utf-8 and keeps U+FEFF, so ``int()`` drops
-    the first line; the per-file pass does the same. Hadoop's line reader
-    strips the BOM, so the text path still parses that line."""
+    the first line; the one reader does the same."""
     (tmp_path / "c").mkdir()
     (tmp_path / "c" / "Pool_0100_941.pol").write_bytes("\ufeff42 BOM\n7\n".encode("utf-8"))
     pools, _ = run_pipeline(spark, tmp_path / "c", dim=dim, output_dir=tmp_path / "out")
@@ -176,8 +260,6 @@ def test_leading_bom_stays_in_the_first_line(spark, tmp_path, dim):
     assert (row.size, row.total_win, row.line_count) == (1, 7, 2)
     doc = json.loads((tmp_path / "out" / "all_pools_data.json").read_text())
     assert doc["Pool_0100_941.pol"]["size"] == 1
-    text = parse_pol_lines(read_pol_lines(spark, str(tmp_path / "c")))
-    assert sorted(r.game_win for r in text.collect()) == [7, 42]
 
 
 def test_workers_do_not_import_the_package(tmp_path):
@@ -271,7 +353,7 @@ def test_one_python_worker_daemon_per_session(spark, hostile):
     difference between the RDD and SQL runners, so no second daemon is
     started (and compiled) for the other runner."""
     assert len(spark.createDataFrame(DIM_ROWS, DIM_SCHEMA).collect()) == len(DIM_ROWS)
-    raw = scan_pol_files(spark.read.format("binaryFile"), str(hostile))
+    raw = scan_pol_files(spark, str(hostile))
     assert count_pol_files(raw, str(hostile)).count() > 0
     jvm = spark.sparkContext._gateway.proc.pid
     assert len(_daemon_children(jvm)) == 1

@@ -104,14 +104,14 @@ def _reference_decode_chain(raw: bytes) -> str:
 
 
 def test_any_encoding_scan_matches_reference_chain(spark, tmp_path):
-    from github_etl_pipeline_spark.sources.pol import read_pol_lines_any_encoding
+    from github_etl_pipeline_spark.sources.pol import read_pol_lines
 
     latin1_content = "100 Té1\n200 ABC\nnotanint é\n515\n"
     (tmp_path / "Pool_0201_395.pol").write_bytes(latin1_content.encode("latin-1"))
     (tmp_path / "Pool_0202_941.pol").write_bytes(b"300 TB1\n400\n")
     (tmp_path / "Pool_0203_941.pol").write_bytes("﻿42 BOM\n7\n".encode("utf-8"))
 
-    lines = read_pol_lines_any_encoding(spark, str(tmp_path))
+    lines = read_pol_lines(spark, str(tmp_path))
     enc = {r.file_name: r.encoding for r in lines.select("file_name", "encoding").distinct().collect()}
     assert enc == {
         "Pool_0201_395.pol": "latin-1",
@@ -119,9 +119,12 @@ def test_any_encoding_scan_matches_reference_chain(spark, tmp_path):
         "Pool_0203_941.pol": "utf-8",
     }
 
-    # decoded text must equal the reference chain byte-for-byte
+    # decoded text must equal the reference chain byte-for-byte (one row
+    # per distinct text, its lines counted in cnt)
     got = sorted(
-        (r.file_name, r.value) for r in lines.select("file_name", "value").collect()
+        (r.file_name, r.value)
+        for r in lines.select("file_name", "value", "cnt").collect()
+        for _ in range(r.cnt)
     )
     expect = []
     for f in tmp_path.glob("*.pol"):
@@ -133,7 +136,9 @@ def test_any_encoding_scan_matches_reference_chain(spark, tmp_path):
     parsed = parse_pol_lines(lines)
     wins = {
         r.pool_id: sorted(
-            x.game_win for x in parsed.where(F.col("pool_id") == r.pool_id).collect()
+            x.game_win
+            for x in parsed.where(F.col("pool_id") == r.pool_id).collect()
+            for _ in range(x.cnt)
         )
         for r in parsed.select("pool_id").distinct().collect()
     }

@@ -13,11 +13,7 @@ from github_etl_pipeline_spark.operators.stats import pool_extended_stats
 from github_etl_pipeline_spark.pipeline import run_pipeline
 from github_etl_pipeline_spark.sinks.upsert import read_store
 from github_etl_pipeline_spark.sources.lookup import prepare_dim
-from github_etl_pipeline_spark.sources.pol import (
-    parse_pol_lines,
-    read_pol_lines,
-    read_pol_lines_any_encoding,
-)
+from github_etl_pipeline_spark.sources.pol import parse_pol_lines, read_pol_lines
 from github_etl_pipeline_spark.streaming.incremental import run_incremental_mtime
 
 DIM_ROWS = [("G", "9493", "201", 25.0)]
@@ -48,7 +44,7 @@ def test_excluded_dirs_are_skipped_by_every_reader(spark, tmp_path, dim):
     data = json.loads((out / "all_pools_data.json").read_text())
     assert {k: v["size"] for k, v in data.items()} == want
 
-    lines = read_pol_lines_any_encoding(spark, str(root))
+    lines = read_pol_lines(spark, str(root))
     assert {r.source_file for r in lines.select("source_file").distinct().collect()} == set(want)
 
     # the CLI's default run (a full scan outside a git work-tree)

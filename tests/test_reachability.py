@@ -37,10 +37,9 @@ PKG = "github_etl_pipeline_spark"
 # Each is a root, so the helpers it uses stay with it.
 KEPT = {
     "pool_extended_stats": (
-        "the paper's R10/R12-R15 per-pool statistics surface; ROADMAP item 3 "
-        "plans it onto the served path"
+        "the paper's R10/R12-R15 per-pool statistics surface, read through "
+        "the one pool reader"
     ),
-    "read_pol_lines_any_encoding": "the paper's S4 encoding fallback chain",
     "assert_dim_unambiguous": "an input check on the outside game lookup",
     "embedding_dup_pairs": (
         "the exact pairwise reference that the LSH embedding-dedup tests "
@@ -301,6 +300,37 @@ def test_scripts_import_names_that_exist():
                     broken.append(f"{mod.path.relative_to(REPO)}:{node.lineno} {node.module}.{a.name}")
     assert checked > 0
     assert not broken, "imports that no longer resolve:\n  " + "\n  ".join(broken)
+
+
+def _text_reads(tree: ast.AST, in_sources: bool):
+    """Line numbers in ``tree`` of a Spark text-source read, and in a
+    ``sources/`` module of a ``monotonically_increasing_id`` call."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            func, args = node.func, [*node.args, *(k.value for k in node.keywords)]
+            text_arg = any(isinstance(a, ast.Constant) and a.value == "text" for a in args)
+            by_format = text_arg and func.attr in ("format", "load")
+            by_text = func.attr == "text" and getattr(func.value, "attr", None) == "read"
+            if by_format or by_text:
+                yield node.lineno
+        if in_sources and (
+            getattr(node, "attr", getattr(node, "id", None)) == "monotonically_increasing_id"
+            or isinstance(node, ast.Constant)
+            and "monotonically_increasing_id(" in str(node.value)
+        ):
+            yield node.lineno
+
+
+def test_pool_bytes_have_one_reader():
+    """``sources.pol.count_pol_files`` is the one reader of pool files:
+    no package module reads through Spark's text source, and no line
+    order in ``sources/`` comes from ``monotonically_increasing_id``."""
+    found = [
+        f"{path.relative_to(REPO)}:{line}"
+        for path in sorted((REPO / PKG).rglob("*.py"))
+        for line in _text_reads(ast.parse(path.read_text()), path.parent.name == "sources")
+    ]
+    assert not found, "text-source reads or scan-order ids:\n  " + "\n  ".join(found)
 
 
 def test_package_import_loads_only_the_served_operators():

@@ -157,11 +157,26 @@ def test_run_pipeline_job_budget(spark, tmp_path, monkeypatch):
     dim4 = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), dim.schema)
     prepared = []
     assert _count_jobs(spark, lambda: prepared.append(prepare_dim(dim4))) == 1
-    counted = count_pol_files(scan_pol_files(spark.read.format("binaryFile"), str(d)), str(d))
+    counted = count_pol_files(scan_pol_files(spark, str(d)), str(d))
     build = lambda: pool_kpis(counted, dim_agg=prepared[0])  # noqa: E731
     assert _count_jobs(spark, build) == 0
     calls = _count_py4j_calls(spark, monkeypatch, build)
     assert calls <= 250, f"{calls} py4j calls to build pool_kpis"  # measured 190
+
+
+def test_count_pol_files_py4j_budget(spark, tmp_path, monkeypatch):
+    """The reader's plan is SQL text: building it takes ~80 py4j calls
+    (measured 77, warm), against 243 built from Column calls. The lower
+    of two builds is bounded, so a Python garbage collection that
+    detaches JVM objects during one build does not count."""
+    from github_etl_pipeline_spark.sources.pol import count_pol_files, scan_pol_files
+
+    d, _ = _surface_corpus(spark, tmp_path)
+    raw = scan_pol_files(spark, str(d))
+    count_pol_files(raw, str(d))  # warm
+    build = lambda: count_pol_files(raw, str(d))  # noqa: E731
+    calls = min(_count_py4j_calls(spark, monkeypatch, build) for _ in range(2))
+    assert calls <= 100, f"{calls} py4j calls to build count_pol_files"
 
 
 def _strip_times(doc):

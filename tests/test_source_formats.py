@@ -1,6 +1,6 @@
 """Generic source-format coverage: the engine's scan layer is Spark's
 DataFrame readers, so JSON and CSV corpora drop in beside parquet and
-the .pol text source with no engine changes. These tests lock exact
+the .pol binaryFile source with no engine changes. These tests lock exact
 row-level roundtrip fidelity (write from the driver parquet, read back
 with an explicit schema — never inferred, so zero-padded ids and long
 sums survive, SURVEY §7 'hard parts' (d))."""

@@ -77,7 +77,7 @@ def test_incremental_mtime_first_run_is_directory_scan(spark, tmp_path, dim_agg)
 
     # the full-scan read (the batch scan) is rooted at the scan dir: its
     # FileScan location lists exactly one root path, not per-file paths
-    raw = scan_pol_files(spark.read.format("binaryFile"), str(corpus))
+    raw = scan_pol_files(spark, str(corpus))
     plan = raw._jdf.queryExecution().executedPlan().toString()
     loc = plan.split("Location:")[1].split("PartitionFilters")[0]
     # ONE root path in the file index (the directory), not one per file
