@@ -20,28 +20,12 @@ Design principles (see README):
     values per million-row pool).
 
 Public API mirrors the reference's 3-stage seam (etl/__init__.py:8-18):
-extract -> transform -> load, with DataFrame as the IR between stages.
+extract -> transform -> load, with DataFrame as the IR between stages:
+``sources.pol`` reads, ``operators.kpis`` and ``operators.rollup``
+transform, ``pipeline.run_pipeline`` writes. Import a name from its
+module (``from github_etl_pipeline_spark.session import get_spark``):
+this module imports nothing, because every Python worker runs it first
+when its daemon starts (``python -m github_etl_pipeline_spark.worker_daemon``).
 """
-
-from github_etl_pipeline_spark.session import get_spark
-from github_etl_pipeline_spark.sources.pol import (
-    read_pol_lines,
-    parse_pol_lines,
-)
-from github_etl_pipeline_spark.sources.lookup import load_game_lookup, prepare_dim
-from github_etl_pipeline_spark.operators.kpis import pool_kpis
-from github_etl_pipeline_spark.operators.rollup import aggregated_summary
-from github_etl_pipeline_spark.pipeline import run_pipeline
-
-__all__ = [
-    "get_spark",
-    "read_pol_lines",
-    "parse_pol_lines",
-    "load_game_lookup",
-    "prepare_dim",
-    "pool_kpis",
-    "aggregated_summary",
-    "run_pipeline",
-]
 
 __version__ = "0.1.0"

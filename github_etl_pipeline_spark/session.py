@@ -80,16 +80,37 @@ def get_spark(
         # factory by environment, and the SQL runners (mapInArrow, pandas
         # UDFs) add SPARK_SIMPLIFIED_TRACEBACK to theirs while the RDD
         # runner (a list-built createDataFrame) does not, so a session
-        # doing both starts two daemons, one after the other. Each cold
-        # daemon compiles pyspark from $SPARK_HOME/python/lib/pyspark.zip
-        # (1.2-1.4 s on a 4-core host). With this off, the first
-        # mapInArrow after a Python-RDD job took 1.06 s instead of 2.21 s.
-        # The cost: a failing UDF's traceback keeps PySpark's own frames.
+        # doing both starts two daemons, one after the other. With this
+        # off, the first 4-task mapInArrow after a Python-RDD job took
+        # 0.49-0.57 s instead of 0.72-0.86 s (workers on the installed
+        # pyspark, see _worker_conf; 3 runs each, 4-core host). The cost:
+        # a failing UDF's traceback keeps PySpark's own frames.
         .config("spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled", "false")
     )
-    for key, value in (extra_conf or {}).items():
+    for key, value in {**(extra_conf or {}), **_worker_conf(extra_conf or {})}.items():
         builder = builder.config(key, value)
     return builder.getOrCreate()
+
+
+def _worker_conf(extra_conf: dict[str, str]) -> dict[str, str]:
+    """The settings that start the Python workers through
+    ``worker_daemon``, from the driver's installed pyspark (that module
+    says why). The worker path carries this package's parent directory
+    (the daemon's own module) and the installed pyspark's, ahead of any
+    caller value. Empty when the driver's own pyspark comes from a zip:
+    then the zip is the only pyspark there is."""
+    import pyspark
+
+    site = os.path.dirname(os.path.dirname(os.path.abspath(pyspark.__file__)))
+    if not os.path.isdir(site):
+        return {}
+    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    key = "spark.executorEnv.PYTHONPATH"
+    paths = [here, site, *extra_conf.get(key, "").split(os.pathsep)]
+    return {
+        "spark.python.daemon.module": "github_etl_pipeline_spark.worker_daemon",
+        key: os.pathsep.join(dict.fromkeys(p for p in paths if p)),
+    }
 
 
 def local_frame(spark: SparkSession, rows: Iterable[tuple], schema: StructType) -> DataFrame:

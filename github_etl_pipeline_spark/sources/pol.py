@@ -39,7 +39,9 @@ texts with ``decode(value, 'ISO-8859-1')``.
 
 P1 lenient tokenizer (etl/transform.py:61-95): split on whitespace,
 ``int(tok0)`` else drop the line, add tok2 when it is an int, NULL when
-the sum leaves int64 — ``split`` + ``try_cast`` + ``try_add``.
+the sum leaves int64 — ``regexp_extract_all`` + ``try_cast`` +
+``try_add``. Python's ``int`` also reads ``_`` between digits and
+non-ASCII decimal digits; no rule here does.
 """
 
 from __future__ import annotations
@@ -134,16 +136,26 @@ def decode_uri_path(path: str) -> Column:
 
 
 # the P1 rules as SQL text over a decoded line ``value``: the tokenizer
-# (whitespace split), ``int(tok0)`` plus tok2 when it is an int (NULL when
-# tok0 is not an int, as the reference drops that line, or when the sum
-# leaves int64), and the type code (second token)
-_TOKENS = r"split(trim(value), '\\s+')"
+# (the runs of non-whitespace, whitespace being the characters
+# ``str.isspace`` accepts), ``int(tok0)`` plus tok2 when it is an int (NULL
+# when tok0 is not an int, as the reference drops that line, or when the
+# sum leaves int64), and the type code (second token). A token is an int
+# when it is a sign and ASCII digits: ``try_cast`` alone would also strip
+# ISO control characters around the digits, which ``int`` rejects.
+_SPACE = (
+    r"\\t\\n\\x0b\\f\\r\\x1c-\\x20\\x85\\xa0\\u1680"
+    r"\\u2000-\\u200a\\u2028\\u2029\\u202f\\u205f\\u3000"
+)
+_TOKENS = f"regexp_extract_all(value, '[^{_SPACE}]+', 0)"
+
+
+def _int_token(i: int) -> str:
+    return f"try_cast(regexp_extract(get({_TOKENS}, {i}), '^[+-]?[0-9]+$', 0) AS BIGINT)"
+
+
 _PARSED = {
-    "game_win": (
-        f"try_add(try_cast(get({_TOKENS}, 0) AS BIGINT), "
-        f"coalesce(try_cast(get({_TOKENS}, 2) AS BIGINT), 0))"
-    ),
-    "type_code": f"nullif(get({_TOKENS}, 1), '')",
+    "game_win": f"try_add({_int_token(0)}, coalesce({_int_token(2)}, 0))",
+    "type_code": f"get({_TOKENS}, 1)",
 }
 
 

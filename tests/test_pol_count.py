@@ -97,25 +97,25 @@ def _cli(root, out):
     return _document(out)
 
 
-#: Where the Python rules below (``str.split``, ``int``) and Spark's (``trim``,
-#: a ``\s+`` split, ``try_cast``) part ways, by byte; no corpus here holds
-#: one in such a place. Each line maps to its (Python, Spark) game_win.
-#:   * ISO controls 0x00-0x08, 0x0e-0x1b and 0x7f next to a number:
-#:     ``try_cast`` strips them, ``int`` fails.
-#:   * 0x09, 0x0b and 0x0c before the first token: ``str.split`` skips
-#:     them; ``trim`` strips only spaces, so the first token is empty.
-#:   * 0x1c-0x1f, and 0x85 and 0xa0 of a latin-1 file: whitespace to
-#:     ``str.split``, not to ``\s``.
-#:   * ``_`` between digits and non-ASCII decimal digits: ``int`` reads
-#:     them, ``try_cast`` does not.
+#: Where the Python rules below (``str.split``, ``int``) and Spark's
+#: (``sources.pol._PARSED``) part ways; no corpus here holds one. Each line
+#: maps to its (Python, Spark) game_win. ``int`` reads ``_`` between digits
+#: and non-ASCII decimal digits (Unicode category Nd); Spark reads only a
+#: sign and ASCII digits.
 P1_DIFFERENCES = {
-    "\x005 X 1": (None, 6),
-    "5 X 1\x7f": (5, 6),
-    "\t5 X 1": (6, None),
-    "5 X\x1c1": (6, 5),
-    "5\xa0 X 1": (6, None),
     "1_000": (1000, None),
     "\u0663": (3, None),
+}
+#: Lines where Spark's rules once parted from Python's, with the game_win
+#: both give now: a tab before the first token, ISO controls next to a
+#: number (``try_cast`` strips them, ``int`` does not), and separators
+#: that ``str.split`` splits on but ``\s`` does not.
+P1_AGREEMENTS = {
+    "\t5 X 1": 6,
+    "\x005 X 1": None,
+    "5 X 1\x7f": 5,
+    "5 X\x1c1": 6,
+    "5\xa0 X 1": 6,
 }
 
 
@@ -196,7 +196,12 @@ def test_counts_match_a_python_oracle(spark, hostile, tmp_path, monkeypatch):
 
 
 def test_p1_differences_are_where_they_are_named(spark):
-    lines = list(P1_DIFFERENCES)
+    """Spark's tokenizer agrees with ``str.split``/``int`` on every line
+    of a sweep that puts each character up to U+3000 (past the last
+    whitespace character) around and between tokens, except where
+    ``P1_DIFFERENCES`` names the rule."""
+    sweep = [t.format(c=chr(i)) for i in range(0x3001) for t in ("5{c}X{c}1", "{c}5 X 1{c}")]
+    lines = [*P1_DIFFERENCES, *P1_AGREEMENTS, *sweep]
     df = spark.createDataFrame(
         [(line, f"Pool_{i}_941.pol") for i, line in enumerate(lines)],
         "value string, source_file string",
@@ -205,7 +210,13 @@ def test_p1_differences_are_where_they_are_named(spark):
         int(r.pool_id): r.game_win for r in parse_pol_lines(df, keep_invalid=True).collect()
     }
     got = {line: (_python_game_win(line), spark_wins[i]) for i, line in enumerate(lines)}
-    assert got == P1_DIFFERENCES
+    assert {line: got[line] for line in P1_DIFFERENCES} == P1_DIFFERENCES
+    assert {line: got[line] for line in P1_AGREEMENTS} == {
+        line: (win, win) for line, win in P1_AGREEMENTS.items()
+    }
+    differ = {line for line, (py, sp) in got.items() if py != sp}
+    digits = [chr(i) for i in range(0x80, 0x3001) if chr(i).isdecimal()]  # a first token
+    assert differ == set(P1_DIFFERENCES) | {f"{c}5 X 1{c}" for c in digits}
 
 
 def test_incremental_runners_store_the_batch_records(spark, tmp_path, hostile, dim, monkeypatch):
@@ -263,10 +274,11 @@ def test_leading_bom_stays_in_the_first_line(spark, tmp_path, dim):
 
 
 def test_workers_do_not_import_the_package(tmp_path):
-    """The Arrow function ships by value: a driver whose cwd is not the
-    repo root, with the repo only on its own ``sys.path``, runs the
-    pipeline (a module-level function fails on the workers with
-    ``ModuleNotFoundError``)."""
+    """A driver whose cwd is not the repo root, with the repo only on its
+    own ``sys.path``, runs the pipeline. The Arrow function still ships
+    by value, so its tasks import nothing of the package; the worker
+    daemon, a module of the package, is found through the
+    ``spark.executorEnv.PYTHONPATH`` that ``get_spark`` passes."""
     corpus = tmp_path / "corpus"
     _write(corpus, {"Pool_0100_941.pol": b"1\n2\n", "a/Pool_0101_395.pol": b"3\n"})
     code = (
@@ -328,8 +340,8 @@ def test_the_arrow_node_sits_on_the_binary_scan(spark, hostile, dim):
     assert not any("FileScan text" in ln for ln in plan), "\n".join(plan)
 
 
-def _daemon_children(pid: int) -> list[int]:
-    """Pids of the ``pyspark.daemon`` processes whose parent is ``pid``."""
+def _daemon_children(pid: int, module: str) -> list[int]:
+    """Pids of the processes running daemon ``module`` whose parent is ``pid``."""
     found = []
     for entry in os.listdir("/proc"):
         if not entry.isdigit():
@@ -341,7 +353,7 @@ def _daemon_children(pid: int) -> list[int]:
                 cmdline = f.read()
         except OSError:  # the process exited while being read
             continue
-        if ppid == pid and b"pyspark.daemon" in cmdline:
+        if ppid == pid and module.encode() in cmdline.split(b"\0"):
             found.append(int(entry))
     return found
 
@@ -351,9 +363,10 @@ def test_one_python_worker_daemon_per_session(spark, hostile):
     """A Python-RDD job (the collect of a list-built frame) and the Arrow
     line counter share one worker daemon: the session sets no environment
     difference between the RDD and SQL runners, so no second daemon is
-    started (and compiled) for the other runner."""
+    started for the other runner."""
     assert len(spark.createDataFrame(DIM_ROWS, DIM_SCHEMA).collect()) == len(DIM_ROWS)
     raw = scan_pol_files(spark, str(hostile))
     assert count_pol_files(raw, str(hostile)).count() > 0
     jvm = spark.sparkContext._gateway.proc.pid
-    assert len(_daemon_children(jvm)) == 1
+    module = spark.sparkContext.getConf().get("spark.python.daemon.module", "pyspark.daemon")
+    assert len(_daemon_children(jvm, module)) == 1

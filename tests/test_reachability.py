@@ -1,17 +1,15 @@
 """Every public definition in the package is reached from something that
-serves it: the query registry, the CLI, the top-level ``__all__``, or a
-script outside the package (``bench.py``, ``__spark_entry__.py``,
-``tools/``, ``perfbench/``).
+serves it: the query registry, the CLI, or a script outside the package
+(``bench.py``, ``__spark_entry__.py``, ``tools/``, ``perfbench/``).
 
 The scan is static (``ast``), so it needs no Spark session. It counts only
-real references: names, attributes, imports and the top-level ``__all__``
-strings; docstrings and comments never count, and tests are not roots.
+real references: names, attributes and imports; docstrings and comments
+never count, and tests are not roots.
 
 - Roots: the whole of each script outside the package; every
   ``@register`` builder; every definition in ``__main__.py``; the
   module-level statements of every package module (other than its
-  ``def``/``class``/``import`` statements); the names of the top-level
-  ``__all__``; and ``KEPT``.
+  ``def``/``class``/``import`` statements); and ``KEPT``.
 - A module-level ``import`` binds a name; it is not a use. A reference to
   the bound name resolves through it (and through any re-export chain) to
   the definition it names.
@@ -216,15 +214,6 @@ class _Scan:
             for name, node in mod.defs.items():
                 if mod.name == f"{PKG}.__main__" or _is_registered(node):
                     roots.add((mod.name, name))
-        top = self.modules[PKG]
-        for stmt in top.statements:
-            if isinstance(stmt, ast.Assign) and any(
-                isinstance(t, ast.Name) and t.id == "__all__" for t in stmt.targets
-            ):
-                for elt in stmt.value.elts:
-                    target = self.resolve(PKG, elt.value)
-                    if target and target[0] == "def":
-                        roots.add((target[1], target[2]))
         for name in self.kept:
             roots.add(self.find(name))
         return roots
@@ -267,7 +256,7 @@ def _is_registered(node) -> bool:
 def test_every_public_definition_is_reached():
     unreached = _Scan().unreached()
     assert not unreached, (
-        "public definitions that no registry query, CLI, __all__ name, script "
+        "public definitions that no registry query, CLI, script "
         "or KEPT entry reaches (delete them, or serve them):\n  " + "\n  ".join(unreached)
     )
 

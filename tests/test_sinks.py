@@ -119,16 +119,25 @@ def _count_jobs(spark, fn):
 
 
 def _count_py4j_calls(spark, monkeypatch, fn):
-    """py4j commands the driver sends to the JVM while ``fn()`` runs."""
+    """py4j commands that ``fn()`` sends to the JVM: those its thread
+    sends, less the detach commands (``m\nd\n…``) that a garbage
+    collection or py4j's cleaner sends for JVM objects freed meanwhile,
+    whoever built them."""
     import gc
+    import threading
 
+    from py4j.protocol import MEMORY_COMMAND_NAME, MEMORY_DEL_SUBCOMMAND_NAME
+
+    detach = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
     calls = []
+    builder = threading.get_ident()
 
-    def counting(*args, **kwargs):
-        calls.append(1)
-        return send(*args, **kwargs)
+    def counting(command, *args, **kwargs):
+        if threading.get_ident() == builder and not command.startswith(detach):
+            calls.append(1)
+        return send(command, *args, **kwargs)
 
     gc.collect()
     with monkeypatch.context() as m:
